@@ -270,10 +270,6 @@ def _decode_table(bits: list[int], vals: list[int]) -> list[tuple[int, int]]:
     return lut
 
 
-def _extend(v: int, s: int) -> int:
-    return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
-
-
 def decode_jpeg(data: bytes) -> np.ndarray:
     """Decode a baseline single-component JPEG produced by
     ``encode_jpeg`` (or any grayscale baseline encoder without restart

@@ -40,12 +40,3 @@ def decode_lossy(data: bytes) -> np.ndarray:
 
 def is_lossy(data: bytes) -> bool:
     return data[:4] == _MARKER
-
-
-def decode_real_jpeg(data: bytes) -> np.ndarray:
-    """Real JPEG path — the round-1 NotImplementedError stub is retired:
-    baseline JPEG entropy coding is implemented in pure numpy
-    (``codecs/jpeg.py``, interop-verified against javax.imageio)."""
-    from .jpeg import decode_jpeg
-
-    return decode_jpeg(data)

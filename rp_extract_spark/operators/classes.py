@@ -29,14 +29,6 @@ def normalize_key(col: Column, strip_path: bool = True, strip_ext: bool = True,
     return out
 
 
-def align_features_and_classes(
-    features: DataFrame, classes: DataFrame, key: str = "id"
-) -> DataFrame:
-    """Inner equi-join features x labels; the (small) class relation is
-    broadcast (reference: dict lookup, classes_io.py:340-386)."""
-    return features.join(F.broadcast(classes), on=key, how="inner")
-
-
 def match_report(
     features: DataFrame, classes: DataFrame, key: str = "id"
 ) -> dict[str, DataFrame]:

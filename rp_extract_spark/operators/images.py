@@ -10,7 +10,9 @@ Design rules shared by every operator here:
   operator is a stateless scan; grouping (dedup) happens AFTER the
   hash scan on 8-byte values, so image bytes never cross an exchange;
 - per-record error isolation (err column) — one corrupt blob never
-  kills a 100-TB scan;
+  kills a 100-TB scan. ``_prims.arrow_stage`` is the single home of
+  that rule (projection, batch loop, err row); each operator supplies
+  only its per-record function, decoding through ``_prims.gray``;
 - deterministic, integer-first math so every transform is exactly
   recomputable by a SQL engine over the relational pixel view
   (operators/multimodal.image_pixels) — the oracle contract.
@@ -39,7 +41,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..codecs import decode_image, encode_png, to_gray
+from .._prims import arrow_stage, gray, moments
+from ..codecs import encode_png
 from .multimodal import block_mean_resize
 
 # 32-point DCT-II basis: M[u, y] = cos(pi * (2y+1) * u / 64). Plain
@@ -47,6 +50,26 @@ from .multimodal import block_mean_resize
 _DCT32 = np.cos(
     np.pi * (2 * np.arange(32)[None, :] + 1) * np.arange(32)[:, None] / 64.0
 )
+
+
+def _png_row(px: np.ndarray) -> dict:
+    """The (bytes, w, h, fmt) fields of a re-encoded grayscale PNG."""
+    out = np.ascontiguousarray(px, dtype=np.uint8)
+    return {"bytes": encode_png(out), "w": out.shape[1], "h": out.shape[0],
+            "fmt": "png"}
+
+
+def _same_shape(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    if a.shape != b.shape:
+        raise ValueError(f"shape mismatch {a.shape} vs {b.shape}")
+    return a, b
+
+
+def _md5_digits(*parts) -> list[int]:
+    """The 32 hex digits of ``md5(':'.join(parts))`` as ints — the
+    per-record draw key of the seeded augmentations."""
+    k = hashlib.md5(":".join(map(str, parts)).encode()).hexdigest()
+    return [int(c, 16) for c in k]
 
 
 def _pack_bits64(bits: np.ndarray) -> int:
@@ -99,33 +122,11 @@ def image_hashes(images: DataFrame) -> DataFrame:
     scan; 3 perceptual hashes per decode (the decode dominates, so
     computing all three costs ~the same as one)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, data, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                try:
-                    px = to_gray(decode_image(bytes(data), fmt)).astype(np.uint8)
-                    rows.append(
-                        {
-                            "image_id": iid,
-                            "ahash": ahash64(px),
-                            "dhash": dhash64(px),
-                            "phash": phash64(px),
-                            "err": None,
-                        }
-                    )
-                except Exception as e:  # noqa: BLE001
-                    rows.append(
-                        {
-                            "image_id": iid, "ahash": None, "dhash": None,
-                            "phash": None, "err": f"{type(e).__name__}: {e}",
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in HASH_SCHEMA.fields])
+    def fn(data, fmt):
+        px = gray(data, fmt)
+        return {"ahash": ahash64(px), "dhash": dhash64(px), "phash": phash64(px)}
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(run, HASH_SCHEMA)
+    return arrow_stage(images, ["image_id"], ["bytes", "fmt"], HASH_SCHEMA, fn)
 
 
 def phash_dedup(
@@ -180,28 +181,12 @@ def streaming_image_dedup(
         ]
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            vals = []
-            for data, fmt in zip(b["bytes"].values, b["fmt"].values):
-                try:
-                    px = to_gray(decode_image(bytes(data), fmt)).astype(np.uint8)
-                    vals.append(kernel(px))
-                except Exception:  # noqa: BLE001
-                    vals.append(None)
-            yield pd.DataFrame(
-                {
-                    "image_id": b["image_id"],
-                    hash_type: pd.array(vals, dtype="Int64"),
-                    ts_col: b[ts_col],
-                }
-            )
+    def fn(data, fmt):
+        return {hash_type: kernel(gray(data, fmt))}
 
-    hashed = (
-        images.select("image_id", "bytes", "fmt", ts_col)
-        .mapInPandas(run, schema)
-        .filter(F.col(hash_type).isNotNull())
-    )
+    hashed = arrow_stage(
+        images, ["image_id", ts_col], ["bytes", "fmt"], schema, fn
+    ).filter(F.col(hash_type).isNotNull())
     return streaming_dedup(
         hashed,
         key_col=hash_type,
@@ -239,46 +224,24 @@ def image_stats(images: DataFrame) -> DataFrame:
     floats bit-for-bit: mean = px_sum/n, variance = px_sq_sum/n -
     mean^2 (that exact expression order), entropy = -sum p*log2(p)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, data, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                try:
-                    px = to_gray(decode_image(bytes(data), fmt)).astype(np.uint8)
-                    h, w = px.shape
-                    flat = px.ravel().astype(np.int64)
-                    n = int(flat.size)
-                    s = int(flat.sum())
-                    sq = int((flat * flat).sum())
-                    mean = s / n
-                    var = sq / n - mean * mean
-                    counts = np.bincount(flat, minlength=256)
-                    p = counts[counts > 0] / n
-                    ent = float(-(p * np.log2(p)).sum())
-                    rows.append(
-                        {
-                            "image_id": iid, "w": w, "h": h, "n_px": n,
-                            "px_sum": s, "px_sq_sum": sq,
-                            "px_min": int(flat.min()), "px_max": int(flat.max()),
-                            "mean": mean, "variance": var,
-                            "entropy_bits": ent, "err": None,
-                        }
-                    )
-                except Exception as e:  # noqa: BLE001
-                    rows.append(
-                        {
-                            "image_id": iid, "w": None, "h": None, "n_px": None,
-                            "px_sum": None, "px_sq_sum": None, "px_min": None,
-                            "px_max": None, "mean": None, "variance": None,
-                            "entropy_bits": None,
-                            "err": f"{type(e).__name__}: {e}",
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in STATS_SCHEMA.fields])
+    def fn(data, fmt):
+        px = gray(data, fmt)
+        h, w = px.shape
+        flat = px.ravel().astype(np.int64)
+        n = int(flat.size)
+        s = int(flat.sum())
+        sq = int((flat * flat).sum())
+        mean = s / n
+        counts = np.bincount(flat, minlength=256)
+        p = counts[counts > 0] / n
+        return {
+            "w": w, "h": h, "n_px": n, "px_sum": s, "px_sq_sum": sq,
+            "px_min": int(flat.min()), "px_max": int(flat.max()),
+            "mean": mean, "variance": sq / n - mean * mean,
+            "entropy_bits": float(-(p * np.log2(p)).sum()),
+        }
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(run, STATS_SCHEMA)
+    return arrow_stage(images, ["image_id"], ["bytes", "fmt"], STATS_SCHEMA, fn)
 
 
 def decontaminate_images(
@@ -366,50 +329,28 @@ def image_gradients(images: DataFrame) -> DataFrame:
     flat captures — the standard drop rule a vision-corpus curation
     pass applies before feature extraction)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, data, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                try:
-                    px = to_gray(decode_image(bytes(data), fmt)).astype(np.int64)
-                    c = px[1:-1, 1:-1]
-                    gx = px[1:-1, 2:] - px[1:-1, :-2]
-                    gy = px[2:, 1:-1] - px[:-2, 1:-1]
-                    lap = (
-                        4 * c
-                        - px[1:-1, 2:] - px[1:-1, :-2]
-                        - px[2:, 1:-1] - px[:-2, 1:-1]
-                    )
-                    n = int(c.size)
-                    lap_sq = int((lap * lap).sum())
-                    rows.append(
-                        {
-                            "image_id": iid,
-                            "n_interior": n,
-                            "abs_gx_sum": int(np.abs(gx).sum()),
-                            "abs_gy_sum": int(np.abs(gy).sum()),
-                            "lap_sq_sum": lap_sq,
-                            "sharpness": lap_sq / n if n else 0.0,
-                            "err": None,
-                        }
-                    )
-                except Exception as e:  # noqa: BLE001
-                    rows.append(
-                        {
-                            "image_id": iid, "n_interior": None,
-                            "abs_gx_sum": None, "abs_gy_sum": None,
-                            "lap_sq_sum": None, "sharpness": None,
-                            "err": f"{type(e).__name__}: {e}",
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in GRADIENT_SCHEMA.fields]
-            )
+    def fn(data, fmt):
+        px = gray(data, fmt, np.int64)
+        c = px[1:-1, 1:-1]
+        gx = px[1:-1, 2:] - px[1:-1, :-2]
+        gy = px[2:, 1:-1] - px[:-2, 1:-1]
+        lap = (
+            4 * c
+            - px[1:-1, 2:] - px[1:-1, :-2]
+            - px[2:, 1:-1] - px[:-2, 1:-1]
+        )
+        n = int(c.size)
+        lap_sq = int((lap * lap).sum())
+        return {
+            "n_interior": n,
+            "abs_gx_sum": int(np.abs(gx).sum()),
+            "abs_gy_sum": int(np.abs(gy).sum()),
+            "lap_sq_sum": lap_sq,
+            "sharpness": lap_sq / n if n else 0.0,
+        }
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        run, GRADIENT_SCHEMA
+    return arrow_stage(
+        images, ["image_id"], ["bytes", "fmt"], GRADIENT_SCHEMA, fn
     )
 
 
@@ -426,45 +367,20 @@ def equalize_images(images: DataFrame) -> DataFrame:
     constant image (n == m) maps to 0. Emits re-encoded PNGs,
     error-isolated per record."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, data, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                try:
-                    px = to_gray(decode_image(bytes(data), fmt)).astype(np.int64)
-                    n = px.size
-                    cdf = np.cumsum(np.bincount(px.ravel(), minlength=256))
-                    m = int(cdf[int(px.min())])
-                    denom = n - m
-                    if denom > 0:
-                        lut = ((cdf - m) * 510 + denom) // (2 * denom)
-                    else:
-                        lut = np.zeros(256, dtype=np.int64)
-                    out = lut[px].astype(np.uint8)
-                    rows.append(
-                        {
-                            "image_id": iid,
-                            "bytes": encode_png(np.ascontiguousarray(out)),
-                            "w": out.shape[1], "h": out.shape[0],
-                            "fmt": "png", "err": None,
-                        }
-                    )
-                except Exception as e:  # noqa: BLE001
-                    rows.append(
-                        {
-                            "image_id": iid, "bytes": None, "w": None,
-                            "h": None, "fmt": None,
-                            "err": f"{type(e).__name__}: {e}",
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in TRANSFORMED_SCHEMA.fields]
-            )
+    def fn(data, fmt):
+        px = gray(data, fmt, np.int64)
+        n = px.size
+        cdf = np.cumsum(np.bincount(px.ravel(), minlength=256))
+        m = int(cdf[int(px.min())])
+        denom = n - m
+        if denom > 0:
+            lut = ((cdf - m) * 510 + denom) // (2 * denom)
+        else:
+            lut = np.zeros(256, dtype=np.int64)
+        return _png_row(lut[px])
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        run, TRANSFORMED_SCHEMA
+    return arrow_stage(
+        images, ["image_id"], ["bytes", "fmt"], TRANSFORMED_SCHEMA, fn
     )
 
 
@@ -525,36 +441,11 @@ def transform_images(
             )
         return px[y0 : y0 + crop_h, x0 : x0 + crop_w]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, data, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                try:
-                    px = to_gray(decode_image(bytes(data), fmt)).astype(np.uint8)
-                    out = np.ascontiguousarray(apply(px))
-                    rows.append(
-                        {
-                            "image_id": iid, "bytes": encode_png(out),
-                            "w": out.shape[1], "h": out.shape[0],
-                            "fmt": "png", "err": None,
-                        }
-                    )
-                except Exception as e:  # noqa: BLE001
-                    rows.append(
-                        {
-                            "image_id": iid, "bytes": None, "w": None,
-                            "h": None, "fmt": None,
-                            "err": f"{type(e).__name__}: {e}",
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in TRANSFORMED_SCHEMA.fields]
-            )
+    def fn(data, fmt):
+        return _png_row(apply(gray(data, fmt)))
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        run, TRANSFORMED_SCHEMA
+    return arrow_stage(
+        images, ["image_id"], ["bytes", "fmt"], TRANSFORMED_SCHEMA, fn
     )
 
 
@@ -597,7 +488,7 @@ def tile_images(
                 b["image_id"].values, b["bytes"].values, b["fmt"].values
             ):
                 try:
-                    px = to_gray(decode_image(bytes(data), fmt)).astype(np.uint8)
+                    px = gray(data, fmt)
                     h, w = px.shape
                     for ty in range(h // tile_h):
                         for tx in range(w // tile_w):
@@ -675,28 +566,14 @@ def phash_dedup_verified(
 
     kernel = {"ahash": ahash64, "dhash": dhash64, "phash": phash64}[hash_type]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, data, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                try:
-                    px = to_gray(decode_image(bytes(data), fmt)).astype(np.uint8)
-                    g = block_mean_resize(px, grid, grid).astype(np.int32)
-                    rows.append(
-                        {"image_id": iid, "__h": kernel(px),
-                         "__grid": g.ravel().tolist()}
-                    )
-                except Exception:  # noqa: BLE001
-                    rows.append({"image_id": iid, "__h": None, "__grid": None})
-            yield pd.DataFrame(rows, columns=["image_id", "__h", "__grid"])
+    def fn(data, fmt):
+        px = gray(data, fmt)
+        g = block_mean_resize(px, grid, grid).astype(np.int32)
+        return {"__h": kernel(px), "__grid": g.ravel().tolist()}
 
-    hashed = (
-        images.select("image_id", "bytes", "fmt")
-        .mapInPandas(run, GRID_HASH_SCHEMA)
-        .filter(F.col("__h").isNotNull())
-    )
+    hashed = arrow_stage(
+        images, ["image_id"], ["bytes", "fmt"], GRID_HASH_SCHEMA, fn
+    ).filter(F.col("__h").isNotNull())
     cand = hamming64_candidates(
         hashed.select("image_id", "__h"), "__h", "image_id", max_hamming
     )
@@ -877,38 +754,19 @@ def image_entropy(images: DataFrame) -> DataFrame:
     replays (cross-engine drift ~1e-12, six orders below the 1e-6
     comparison grain used by the driver query)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, data, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                try:
-                    px = to_gray(decode_image(bytes(data), fmt)).astype(np.uint8)
-                    c = np.bincount(px.ravel(), minlength=256).astype(np.float64)
-                    nz = c[c > 0]
-                    n = float(px.size)
-                    ent = float(np.log(n) - float(np.sum(nz * np.log(nz))) / n)
-                    rows.append(
-                        {
-                            "image_id": iid,
-                            "n_px": int(px.size),
-                            "n_distinct": int(nz.size),
-                            "entropy": ent,
-                            "err": None,
-                        }
-                    )
-                except Exception as e:  # noqa: BLE001
-                    rows.append(
-                        {
-                            "image_id": iid, "n_px": None, "n_distinct": None,
-                            "entropy": None, "err": f"{type(e).__name__}: {e}",
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in ENTROPY_SCHEMA.fields])
+    def fn(data, fmt):
+        px = gray(data, fmt)
+        c = np.bincount(px.ravel(), minlength=256).astype(np.float64)
+        nz = c[c > 0]
+        n = float(px.size)
+        return {
+            "n_px": int(px.size),
+            "n_distinct": int(nz.size),
+            "entropy": float(np.log(n) - float(np.sum(nz * np.log(nz))) / n),
+        }
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        run, ENTROPY_SCHEMA
+    return arrow_stage(
+        images, ["image_id"], ["bytes", "fmt"], ENTROPY_SCHEMA, fn
     )
 
 
@@ -957,42 +815,19 @@ def letterbox_images(
     no shuffle; at 100 TB this is the standard pre-batch transform
     stage running entirely inside the decode pass."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, data, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                try:
-                    px = to_gray(decode_image(bytes(data), fmt)).astype(np.uint8)
-                    h, w = px.shape
-                    nw, nh, pl, pt = letterbox_geometry(w, h, out_w, out_h)
-                    inner = block_mean_resize(px, nh, nw)
-                    canvas = np.full((out_h, out_w), fill, dtype=np.uint8)
-                    canvas[pt:pt + nh, pl:pl + nw] = inner
-                    rows.append(
-                        {
-                            "image_id": iid, "bytes": encode_png(canvas),
-                            "w": out_w, "h": out_h, "inner_w": nw,
-                            "inner_h": nh, "pad_left": pl, "pad_top": pt,
-                            "fmt": "png", "err": None,
-                        }
-                    )
-                except Exception as e:  # noqa: BLE001
-                    rows.append(
-                        {
-                            "image_id": iid, "bytes": None, "w": None,
-                            "h": None, "inner_w": None, "inner_h": None,
-                            "pad_left": None, "pad_top": None, "fmt": None,
-                            "err": f"{type(e).__name__}: {e}",
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in LETTERBOX_SCHEMA.fields]
-            )
+    def fn(data, fmt):
+        px = gray(data, fmt)
+        h, w = px.shape
+        nw, nh, pl, pt = letterbox_geometry(w, h, out_w, out_h)
+        canvas = np.full((out_h, out_w), fill, dtype=np.uint8)
+        canvas[pt:pt + nh, pl:pl + nw] = block_mean_resize(px, nh, nw)
+        return {
+            **_png_row(canvas), "inner_w": nw, "inner_h": nh,
+            "pad_left": pl, "pad_top": pt,
+        }
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        run, LETTERBOX_SCHEMA
+    return arrow_stage(
+        images, ["image_id"], ["bytes", "fmt"], LETTERBOX_SCHEMA, fn
     )
 
 
@@ -1081,50 +916,21 @@ def augment_moments(
     w-1-x, rot reads row h-1-y. One decode scan, error-isolated."""
     planned = plan_epoch_augment(images, seed=seed, epoch=epoch)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, data, fmt, fl, rt in zip(
-                b["image_id"].values, b["bytes"].values,
-                b["fmt"].values, b["flip_h"].values, b["rot180"].values,
-            ):
-                try:
-                    px = to_gray(decode_image(bytes(data), fmt)).astype(
-                        np.int64
-                    )
-                    if fl:
-                        px = px[:, ::-1]
-                    if rt:
-                        px = np.rot90(px, 2)
-                    h, w = px.shape
-                    xs = np.arange(w, dtype=np.int64)
-                    ys = np.arange(h, dtype=np.int64)
-                    rows.append(
-                        {
-                            "image_id": iid, "flip_h": int(fl),
-                            "rot180": int(rt), "w": w, "h": h,
-                            "m0": int(px.sum()),
-                            "mx": int((px.sum(axis=0) * xs).sum()),
-                            "my": int((px.sum(axis=1) * ys).sum()),
-                            "err": None,
-                        }
-                    )
-                except Exception as e:  # noqa: BLE001
-                    rows.append(
-                        {
-                            "image_id": iid, "flip_h": int(fl),
-                            "rot180": int(rt), "w": None, "h": None,
-                            "m0": None, "mx": None, "my": None,
-                            "err": f"{type(e).__name__}: {e}",
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in AUGMENT_SCHEMA.fields]
-            )
+    def fn(data, fmt, fl, rt):
+        px = gray(data, fmt, np.int64)
+        if fl:
+            px = px[:, ::-1]
+        if rt:
+            px = np.rot90(px, 2)
+        return moments(px)
 
-    return planned.select(
-        "image_id", "bytes", "fmt", "flip_h", "rot180"
-    ).mapInPandas(run, AUGMENT_SCHEMA)
+    return arrow_stage(
+        planned,
+        ["image_id", "flip_h", "rot180"],
+        ["bytes", "fmt", "flip_h", "rot180"],
+        AUGMENT_SCHEMA,
+        fn,
+    )
 
 
 def image_moments(
@@ -1152,47 +958,12 @@ def image_moments(
         T.StructField("err", T.StringType(), True),
     ]
     schema = T.StructType(fields)
-    names = [f.name for f in schema.fields]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for t in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values,
-                *[b[c].values for c in carry],
-            ):
-                iid, data, fmt, cv = t[0], t[1], t[2], t[3:]
-                base = {"image_id": iid, **dict(zip(carry, cv))}
-                try:
-                    if data is None:
-                        raise ValueError("quarantined row (bytes is NULL)")
-                    px = to_gray(decode_image(bytes(data), fmt)).astype(
-                        np.int64
-                    )
-                    h, w = px.shape
-                    xs = np.arange(w, dtype=np.int64)
-                    ys = np.arange(h, dtype=np.int64)
-                    rows.append(
-                        {
-                            **base, "w": w, "h": h,
-                            "m0": int(px.sum()),
-                            "mx": int((px.sum(axis=0) * xs).sum()),
-                            "my": int((px.sum(axis=1) * ys).sum()),
-                            "err": None,
-                        }
-                    )
-                except Exception as e:  # noqa: BLE001
-                    rows.append(
-                        {
-                            **base, "w": None, "h": None, "m0": None,
-                            "mx": None, "my": None,
-                            "err": f"{type(e).__name__}: {e}",
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=names)
+    def fn(data, fmt):
+        return moments(gray(data, fmt, np.int64))
 
-    return images.select("image_id", "bytes", "fmt", *carry).mapInPandas(
-        run, schema
+    return arrow_stage(
+        images, ["image_id", *carry], ["bytes", "fmt"], schema, fn
     )
 
 
@@ -1257,48 +1028,14 @@ def mixup_images(
     the input (every scan/source here carries them)."""
     pairs = _pair_by_shape(images, seed=seed, epoch=epoch)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for bt in batches:
-            rows = []
-            for aid, ab, af, bid, bb, bf in zip(
-                bt["a_id"].values, bt["a_bytes"].values, bt["a_fmt"].values,
-                bt["b_id"].values, bt["b_bytes"].values, bt["b_fmt"].values,
-            ):
-                try:
-                    pa = to_gray(decode_image(bytes(ab), af)).astype(np.int64)
-                    pb = to_gray(decode_image(bytes(bb), bf)).astype(np.int64)
-                    if pa.shape != pb.shape:
-                        raise ValueError(
-                            f"shape mismatch {pa.shape} vs {pb.shape}"
-                        )
-                    px = (pa + pb) // 2
-                    h, w = px.shape
-                    xs = np.arange(w, dtype=np.int64)
-                    ys = np.arange(h, dtype=np.int64)
-                    rows.append(
-                        {
-                            "a_id": aid, "b_id": bid, "w": w, "h": h,
-                            "m0": int(px.sum()),
-                            "mx": int((px.sum(axis=0) * xs).sum()),
-                            "my": int((px.sum(axis=1) * ys).sum()),
-                            "err": None,
-                        }
-                    )
-                except Exception as e:  # noqa: BLE001
-                    rows.append(
-                        {
-                            "a_id": aid, "b_id": bid, "w": None, "h": None,
-                            "m0": None, "mx": None, "my": None,
-                            "err": f"{type(e).__name__}: {e}",
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in MIXUP_SCHEMA.fields]
-            )
+    def fn(ab, af, bb, bf):
+        pa, pb = _same_shape(gray(ab, af, np.int64), gray(bb, bf, np.int64))
+        return moments((pa + pb) // 2)
 
-    return pairs.select(
-        "a_id", "a_bytes", "a_fmt", "b_id", "b_bytes", "b_fmt"
-    ).mapInPandas(run, MIXUP_SCHEMA)
+    return arrow_stage(
+        pairs, ["a_id", "b_id"], ["a_bytes", "a_fmt", "b_bytes", "b_fmt"],
+        MIXUP_SCHEMA, fn,
+    )
 
 
 def rrc_geometry(
@@ -1350,48 +1087,20 @@ def random_resized_crop(
     the full canvas is SQL-replayable. One Arrow decode scan, no
     shuffle, error-isolated."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, data, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                try:
-                    px = to_gray(decode_image(bytes(data), fmt)).astype(
-                        np.uint8
-                    )
-                    h, w = px.shape
-                    k = hashlib.md5(
-                        f"{iid}:{int(seed)}:{int(epoch)}".encode()
-                    ).hexdigest()
-                    d = tuple(int(c, 16) for c in k[:4])
-                    x0, y0, cw, ch = rrc_geometry(w, h, d)
-                    yi = y0 + (np.arange(out_h)[:, None] * ch) // out_h
-                    xi = x0 + (np.arange(out_w)[None, :] * cw) // out_w
-                    out = np.ascontiguousarray(px[yi, xi])
-                    rows.append(
-                        {
-                            "image_id": iid, "bytes": encode_png(out),
-                            "w": out_w, "h": out_h, "x0": x0, "y0": y0,
-                            "crop_w": cw, "crop_h": ch,
-                            "fmt": "png", "err": None,
-                        }
-                    )
-                except Exception as e:  # noqa: BLE001
-                    rows.append(
-                        {
-                            "image_id": iid, "bytes": None, "w": None,
-                            "h": None, "x0": None, "y0": None,
-                            "crop_w": None, "crop_h": None, "fmt": None,
-                            "err": f"{type(e).__name__}: {e}",
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in RRC_SCHEMA.fields]
-            )
+    def fn(iid, data, fmt):
+        px = gray(data, fmt)
+        h, w = px.shape
+        d = _md5_digits(iid, int(seed), int(epoch))[:4]
+        x0, y0, cw, ch = rrc_geometry(w, h, d)
+        yi = y0 + (np.arange(out_h)[:, None] * ch) // out_h
+        xi = x0 + (np.arange(out_w)[None, :] * cw) // out_w
+        return {
+            **_png_row(px[yi, xi]), "x0": x0, "y0": y0,
+            "crop_w": cw, "crop_h": ch,
+        }
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        run, RRC_SCHEMA
+    return arrow_stage(
+        images, ["image_id"], ["image_id", "bytes", "fmt"], RRC_SCHEMA, fn
     )
 
 
@@ -1445,60 +1154,23 @@ def cutmix_images(
     error-isolated."""
     pairs = _pair_by_shape(images, seed=seed, epoch=epoch)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for bt in batches:
-            rows = []
-            for aid, ab, af, bid, bb, bf in zip(
-                bt["a_id"].values, bt["a_bytes"].values, bt["a_fmt"].values,
-                bt["b_id"].values, bt["b_bytes"].values, bt["b_fmt"].values,
-            ):
-                try:
-                    pa = to_gray(decode_image(bytes(ab), af)).astype(np.int64)
-                    pb = to_gray(decode_image(bytes(bb), bf)).astype(np.int64)
-                    if pa.shape != pb.shape:
-                        raise ValueError(
-                            f"shape mismatch {pa.shape} vs {pb.shape}"
-                        )
-                    h, w = pa.shape
-                    k = hashlib.md5(
-                        f"{aid}:{bid}:{int(seed)}:{int(epoch)}".encode()
-                    ).hexdigest()
-                    d = tuple(int(c, 16) for c in k[:4])
-                    x0, y0, cw, ch = cutmix_geometry(w, h, d)
-                    px = pa.copy()
-                    px[y0 : y0 + ch, x0 : x0 + cw] = pb[
-                        y0 : y0 + ch, x0 : x0 + cw
-                    ]
-                    xs = np.arange(w, dtype=np.int64)
-                    ys = np.arange(h, dtype=np.int64)
-                    rows.append(
-                        {
-                            "a_id": aid, "b_id": bid, "w": w, "h": h,
-                            "x0": x0, "y0": y0, "cut_w": cw, "cut_h": ch,
-                            "patch_area": int(cw) * int(ch),
-                            "m0": int(px.sum()),
-                            "mx": int((px.sum(axis=0) * xs).sum()),
-                            "my": int((px.sum(axis=1) * ys).sum()),
-                            "err": None,
-                        }
-                    )
-                except Exception as e:  # noqa: BLE001
-                    rows.append(
-                        {
-                            "a_id": aid, "b_id": bid, "w": None, "h": None,
-                            "x0": None, "y0": None, "cut_w": None,
-                            "cut_h": None, "patch_area": None, "m0": None,
-                            "mx": None, "my": None,
-                            "err": f"{type(e).__name__}: {e}",
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in CUTMIX_SCHEMA.fields]
-            )
+    def fn(aid, bid, ab, af, bb, bf):
+        pa, pb = _same_shape(gray(ab, af, np.int64), gray(bb, bf, np.int64))
+        h, w = pa.shape
+        d = _md5_digits(aid, bid, int(seed), int(epoch))[:4]
+        x0, y0, cw, ch = cutmix_geometry(w, h, d)
+        px = pa.copy()
+        px[y0 : y0 + ch, x0 : x0 + cw] = pb[y0 : y0 + ch, x0 : x0 + cw]
+        return {
+            "x0": x0, "y0": y0, "cut_w": cw, "cut_h": ch,
+            "patch_area": int(cw) * int(ch), **moments(px),
+        }
 
-    return pairs.select(
-        "a_id", "a_bytes", "a_fmt", "b_id", "b_bytes", "b_fmt"
-    ).mapInPandas(run, CUTMIX_SCHEMA)
+    return arrow_stage(
+        pairs, ["a_id", "b_id"],
+        ["a_id", "b_id", "a_bytes", "a_fmt", "b_bytes", "b_fmt"],
+        CUTMIX_SCHEMA, fn,
+    )
 
 
 JITTER_SCHEMA = T.StructType(
@@ -1532,50 +1204,19 @@ def color_jitter(
     one). One Arrow decode scan, no shuffle, error-isolated; verify
     downstream with ``image_moments(carry_cols=('bright','contrast'))``."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, data, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                try:
-                    px = to_gray(decode_image(bytes(data), fmt)).astype(
-                        np.int64
-                    )
-                    h, w = px.shape
-                    k = hashlib.md5(
-                        f"{iid}:{int(seed)}:{int(epoch)}".encode()
-                    ).hexdigest()
-                    bright = int(k[0], 16) * 4 - 30
-                    contrast = 8 + int(k[1], 16)
-                    out = (
-                        (px * contrast) // 16
-                        + 128
-                        - (128 * contrast) // 16
-                        + bright
-                    )
-                    out = np.clip(out, 0, 255).astype(np.uint8)
-                    rows.append(
-                        {
-                            "image_id": iid, "bytes": encode_png(out),
-                            "w": w, "h": h, "bright": bright,
-                            "contrast": contrast, "fmt": "png", "err": None,
-                        }
-                    )
-                except Exception as e:  # noqa: BLE001
-                    rows.append(
-                        {
-                            "image_id": iid, "bytes": None, "w": None,
-                            "h": None, "bright": None, "contrast": None,
-                            "fmt": None, "err": f"{type(e).__name__}: {e}",
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in JITTER_SCHEMA.fields]
-            )
+    def fn(iid, data, fmt):
+        px = gray(data, fmt, np.int64)
+        k = _md5_digits(iid, int(seed), int(epoch))
+        bright = k[0] * 4 - 30
+        contrast = 8 + k[1]
+        out = (px * contrast) // 16 + 128 - (128 * contrast) // 16 + bright
+        return {
+            **_png_row(np.clip(out, 0, 255)),
+            "bright": bright, "contrast": contrast,
+        }
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        run, JITTER_SCHEMA
+    return arrow_stage(
+        images, ["image_id"], ["image_id", "bytes", "fmt"], JITTER_SCHEMA, fn
     )
 
 
@@ -1651,56 +1292,27 @@ def mosaic_images(
     Arrow stage, error-isolated."""
     quads = _quad_by_shape(images, seed=seed, epoch=epoch)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for bt in batches:
-            rows = []
-            for (aid, ab, af, bid, bb, bf, cid, cb, cf, did, db, dfm) in zip(
-                bt["a_id"].values, bt["a_bytes"].values, bt["a_fmt"].values,
-                bt["b_id"].values, bt["b_bytes"].values, bt["b_fmt"].values,
-                bt["c_id"].values, bt["c_bytes"].values, bt["c_fmt"].values,
-                bt["d_id"].values, bt["d_bytes"].values, bt["d_fmt"].values,
-            ):
-                try:
-                    ims = [
-                        to_gray(decode_image(bytes(x), f)).astype(np.int64)
-                        for x, f in ((ab, af), (bb, bf), (cb, cf), (db, dfm))
-                    ]
-                    if len({im.shape for im in ims}) != 1:
-                        raise ValueError("shape mismatch inside quad")
-                    h, w = ims[0].shape
-                    k = hashlib.md5(
-                        f"{aid}:{bid}:{cid}:{did}:{int(seed)}:{int(epoch)}"
-                        .encode()).hexdigest()
-                    cx, cy = mosaic_geometry(
-                        w, h, int(k[0], 16), int(k[1], 16))
-                    px = ims[3].copy()
-                    px[:cy, :cx] = ims[0][:cy, :cx]
-                    px[:cy, cx:] = ims[1][:cy, cx:]
-                    px[cy:, :cx] = ims[2][cy:, :cx]
-                    xs = np.arange(w, dtype=np.int64)
-                    ys = np.arange(h, dtype=np.int64)
-                    rows.append({
-                        "a_id": aid, "b_id": bid, "c_id": cid, "d_id": did,
-                        "w": w, "h": h, "cx": cx, "cy": cy,
-                        "m0": int(px.sum()),
-                        "mx": int((px.sum(axis=0) * xs).sum()),
-                        "my": int((px.sum(axis=1) * ys).sum()),
-                        "err": None,
-                    })
-                except Exception as e:  # noqa: BLE001
-                    rows.append({
-                        "a_id": aid, "b_id": bid, "c_id": cid, "d_id": did,
-                        "w": None, "h": None, "cx": None, "cy": None,
-                        "m0": None, "mx": None, "my": None,
-                        "err": f"{type(e).__name__}: {e}",
-                    })
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in MOSAIC_SCHEMA.fields])
+    tags = "abcd"
 
-    return quads.select(
-        "a_id", "a_bytes", "a_fmt", "b_id", "b_bytes", "b_fmt",
-        "c_id", "c_bytes", "c_fmt", "d_id", "d_bytes", "d_fmt",
-    ).mapInPandas(run, MOSAIC_SCHEMA)
+    def fn(*v):
+        ims = [gray(v[4 + 2 * i], v[5 + 2 * i], np.int64) for i in range(4)]
+        if len({im.shape for im in ims}) != 1:
+            raise ValueError("shape mismatch inside quad")
+        h, w = ims[0].shape
+        k = _md5_digits(*v[:4], int(seed), int(epoch))
+        cx, cy = mosaic_geometry(w, h, k[0], k[1])
+        px = ims[3].copy()
+        px[:cy, :cx] = ims[0][:cy, :cx]
+        px[:cy, cx:] = ims[1][:cy, cx:]
+        px[cy:, :cx] = ims[2][cy:, :cx]
+        return {"cx": cx, "cy": cy, **moments(px)}
+
+    ids = [f"{t}_id" for t in tags]
+    return arrow_stage(
+        quads, ids,
+        ids + [f"{t}_{c}" for t in tags for c in ("bytes", "fmt")],
+        MOSAIC_SCHEMA, fn,
+    )
 
 
 MAE_MASK_SCHEMA = T.StructType(
@@ -1737,51 +1349,33 @@ def mae_mask(
     if not 0 <= mask_num <= mask_den or mask_den < 1:
         raise ValueError(f"bad mask ratio {mask_num}/{mask_den}")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for bt in batches:
-            rows = []
-            for iid, data, fmt in zip(
-                bt["image_id"].values, bt["bytes"].values, bt["fmt"].values
-            ):
-                try:
-                    px = to_gray(decode_image(bytes(data), fmt)).astype(
-                        np.int64)
-                    h, w = px.shape
-                    gy, gx = h // patch, w // patch
-                    n = gy * gx
-                    if n == 0:
-                        raise ValueError("image smaller than one patch")
-                    sums = (
-                        px[: gy * patch, : gx * patch]
-                        .reshape(gy, patch, gx, patch)
-                        .sum(axis=(1, 3))
-                        .reshape(-1)
-                    )
-                    order = sorted(
-                        range(n),
-                        key=lambda j: (hashlib.md5(
-                            f"{iid}:{int(seed)}:{int(epoch)}:{j}".encode()
-                        ).hexdigest(), j),
-                    )
-                    m = (n * mask_num) // mask_den
-                    masked = set(order[:m])
-                    msum = int(sum(int(sums[j]) for j in masked))
-                    rows.append({
-                        "image_id": iid, "n_patches": n, "n_masked": m,
-                        "visible_sum": int(sums.sum()) - msum,
-                        "masked_sum": msum, "err": None,
-                    })
-                except Exception as e:  # noqa: BLE001
-                    rows.append({
-                        "image_id": iid, "n_patches": None, "n_masked": None,
-                        "visible_sum": None, "masked_sum": None,
-                        "err": f"{type(e).__name__}: {e}",
-                    })
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in MAE_MASK_SCHEMA.fields])
+    def fn(iid, data, fmt):
+        px = gray(data, fmt, np.int64)
+        h, w = px.shape
+        gy, gx = h // patch, w // patch
+        n = gy * gx
+        if n == 0:
+            raise ValueError("image smaller than one patch")
+        sums = (
+            px[: gy * patch, : gx * patch]
+            .reshape(gy, patch, gx, patch)
+            .sum(axis=(1, 3))
+            .reshape(-1)
+        )
+        order = sorted(
+            range(n),
+            key=lambda j: (_md5_digits(iid, int(seed), int(epoch), j), j),
+        )
+        m = (n * mask_num) // mask_den
+        msum = int(sum(int(sums[j]) for j in order[:m]))
+        return {
+            "n_patches": n, "n_masked": m,
+            "visible_sum": int(sums.sum()) - msum, "masked_sum": msum,
+        }
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        run, MAE_MASK_SCHEMA)
+    return arrow_stage(
+        images, ["image_id"], ["image_id", "bytes", "fmt"], MAE_MASK_SCHEMA, fn
+    )
 
 
 PHOTOMETRIC_SCHEMA = T.StructType(
@@ -1829,57 +1423,28 @@ def photometric_images(
     'post_bits', 'inv'))`` — position-sensitive moments witness the
     applied mapping pixel-by-pixel."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, data, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                try:
-                    px = to_gray(decode_image(bytes(data), fmt)).astype(
-                        np.int64
-                    )
-                    h, w = px.shape
-                    k = hashlib.md5(
-                        f"{iid}:{int(seed)}:{int(epoch)}:pm".encode()
-                    ).hexdigest()
-                    sol = int(k[0], 16) % 2
-                    sol_thr = int(k[1:3], 16)
-                    post = int(k[3], 16) % 2
-                    post_bits = (3 + int(k[4], 16) % 2) if post else 0
-                    inv = int(k[5], 16) % 2
-                    out = px
-                    if sol:
-                        out = np.where(out >= sol_thr, 255 - out, out)
-                    if post_bits:
-                        m = 1 << (8 - post_bits)
-                        out = (out // m) * m
-                    if inv:
-                        out = 255 - out
-                    rows.append(
-                        {
-                            "image_id": iid,
-                            "bytes": encode_png(out.astype(np.uint8)),
-                            "w": w, "h": h, "sol": sol, "sol_thr": sol_thr,
-                            "post_bits": post_bits, "inv": inv,
-                            "fmt": "png", "err": None,
-                        }
-                    )
-                except Exception as e:  # noqa: BLE001
-                    rows.append(
-                        {
-                            "image_id": iid, "bytes": None, "w": None,
-                            "h": None, "sol": None, "sol_thr": None,
-                            "post_bits": None, "inv": None, "fmt": None,
-                            "err": f"{type(e).__name__}: {e}",
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in PHOTOMETRIC_SCHEMA.fields]
-            )
+    def fn(iid, data, fmt):
+        out = gray(data, fmt, np.int64)
+        k = _md5_digits(iid, int(seed), int(epoch), "pm")
+        sol = k[0] % 2
+        sol_thr = k[1] * 16 + k[2]
+        post_bits = (3 + k[4] % 2) if k[3] % 2 else 0
+        inv = k[5] % 2
+        if sol:
+            out = np.where(out >= sol_thr, 255 - out, out)
+        if post_bits:
+            m = 1 << (8 - post_bits)
+            out = (out // m) * m
+        if inv:
+            out = 255 - out
+        return {
+            **_png_row(out), "sol": sol, "sol_thr": sol_thr,
+            "post_bits": post_bits, "inv": inv,
+        }
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        run, PHOTOMETRIC_SCHEMA
+    return arrow_stage(
+        images, ["image_id"], ["image_id", "bytes", "fmt"],
+        PHOTOMETRIC_SCHEMA, fn,
     )
 
 
@@ -1926,80 +1491,37 @@ def detect_borders(images: DataFrame) -> DataFrame:
     None-bytes rows yield err rows). At 100 TB this runs inside the
     decode pass; only 10 small integers per image leave the stage."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, data, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                base = {"image_id": iid}
-                try:
-                    if data is None:
-                        raise ValueError("quarantined row (bytes is NULL)")
-                    px = to_gray(decode_image(bytes(data), fmt)).astype(
-                        np.int64
-                    )
-                    h, w = px.shape
-                    nc_rows = np.nonzero(
-                        px.min(axis=1) != px.max(axis=1)
-                    )[0]
-                    if nc_rows.size == 0:
-                        rows.append(
-                            {
-                                **base, "w": w, "h": h, "border_top": h,
-                                "border_bottom": 0, "border_left": 0,
-                                "border_right": 0, "crop_w": 0,
-                                "crop_h": 0, "m0_crop": 0, "err": None,
-                            }
-                        )
-                        continue
-                    top = int(nc_rows[0])
-                    bottom = int(h - 1 - nc_rows[-1])
-                    band = px[top:h - bottom]
-                    nc_cols = np.nonzero(
-                        band.min(axis=0) != band.max(axis=0)
-                    )[0]
-                    if nc_cols.size == 0:
-                        rows.append(
-                            {
-                                **base, "w": w, "h": h, "border_top": top,
-                                "border_bottom": bottom, "border_left": w,
-                                "border_right": 0, "crop_w": 0,
-                                "crop_h": h - top - bottom, "m0_crop": 0,
-                                "err": None,
-                            }
-                        )
-                        continue
-                    left = int(nc_cols[0])
-                    right = int(w - 1 - nc_cols[-1])
-                    crop = band[:, left:w - right]
-                    rows.append(
-                        {
-                            **base, "w": w, "h": h, "border_top": top,
-                            "border_bottom": bottom, "border_left": left,
-                            "border_right": right,
-                            "crop_w": w - left - right,
-                            "crop_h": h - top - bottom,
-                            "m0_crop": int(crop.sum()), "err": None,
-                        }
-                    )
-                except Exception as e:  # noqa: BLE001
-                    rows.append(
-                        {
-                            **base, "w": None, "h": None,
-                            "border_top": None, "border_bottom": None,
-                            "border_left": None, "border_right": None,
-                            "crop_w": None, "crop_h": None,
-                            "m0_crop": None,
-                            "err": f"{type(e).__name__}: {e}",
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in BORDER_SCHEMA.fields]
-            )
+    def fn(data, fmt):
+        px = gray(data, fmt, np.int64)
+        h, w = px.shape
+        nc_rows = np.nonzero(px.min(axis=1) != px.max(axis=1))[0]
+        if nc_rows.size == 0:
+            return {
+                "w": w, "h": h, "border_top": h, "border_bottom": 0,
+                "border_left": 0, "border_right": 0, "crop_w": 0,
+                "crop_h": 0, "m0_crop": 0,
+            }
+        top = int(nc_rows[0])
+        bottom = int(h - 1 - nc_rows[-1])
+        band = px[top:h - bottom]
+        nc_cols = np.nonzero(band.min(axis=0) != band.max(axis=0))[0]
+        if nc_cols.size == 0:
+            return {
+                "w": w, "h": h, "border_top": top, "border_bottom": bottom,
+                "border_left": w, "border_right": 0, "crop_w": 0,
+                "crop_h": h - top - bottom, "m0_crop": 0,
+            }
+        left = int(nc_cols[0])
+        right = int(w - 1 - nc_cols[-1])
+        return {
+            "w": w, "h": h, "border_top": top, "border_bottom": bottom,
+            "border_left": left, "border_right": right,
+            "crop_w": w - left - right, "crop_h": h - top - bottom,
+            "m0_crop": int(band[:, left:w - right].sum()),
+        }
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        run, BORDER_SCHEMA
+    return arrow_stage(
+        images, ["image_id"], ["bytes", "fmt"], BORDER_SCHEMA, fn
     )
 
 
@@ -2040,49 +1562,19 @@ def random_erasing(
     if not 0 <= int(fill) <= 255:
         raise ValueError("fill must be a byte value")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, data, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                try:
-                    px = to_gray(decode_image(bytes(data), fmt)).astype(
-                        np.int64
-                    )
-                    h, w = px.shape
-                    k = hashlib.md5(
-                        f"{iid}:{int(seed)}:{int(epoch)}:re".encode()
-                    ).hexdigest()
-                    d = tuple(int(c, 16) for c in k[:4])
-                    x0, y0, ew, eh = cutmix_geometry(w, h, d)
-                    out = px.copy()
-                    out[y0:y0 + eh, x0:x0 + ew] = int(fill)
-                    rows.append(
-                        {
-                            "image_id": iid,
-                            "bytes": encode_png(out.astype(np.uint8)),
-                            "w": w, "h": h, "x0": x0, "y0": y0,
-                            "erase_w": ew, "erase_h": eh,
-                            "fmt": "png", "err": None,
-                        }
-                    )
-                except Exception as e:  # noqa: BLE001
-                    rows.append(
-                        {
-                            "image_id": iid, "bytes": None, "w": None,
-                            "h": None, "x0": None, "y0": None,
-                            "erase_w": None, "erase_h": None,
-                            "fmt": None,
-                            "err": f"{type(e).__name__}: {e}",
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in ERASE_SCHEMA.fields]
-            )
+    def fn(iid, data, fmt):
+        out = gray(data, fmt, np.int64)
+        h, w = out.shape
+        d = _md5_digits(iid, int(seed), int(epoch), "re")[:4]
+        x0, y0, ew, eh = cutmix_geometry(w, h, d)
+        out[y0:y0 + eh, x0:x0 + ew] = int(fill)
+        return {
+            **_png_row(out), "x0": x0, "y0": y0,
+            "erase_w": ew, "erase_h": eh,
+        }
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        run, ERASE_SCHEMA
+    return arrow_stage(
+        images, ["image_id"], ["image_id", "bytes", "fmt"], ERASE_SCHEMA, fn
     )
 
 
@@ -2130,51 +1622,23 @@ def image_pair_sse(
     # missing counterparts, not just decode failures)
     j = ja.join(jb, "image_id", "full")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for iid, ab, af, bb, bf in zip(
-                batch["image_id"].values, batch["__ab"].values,
-                batch["__af"].values, batch["__bb"].values,
-                batch["__bf"].values,
-            ):
-                try:
-                    if ab is None or bb is None:
-                        side = "a" if ab is None else "b"
-                        raise ValueError(f"missing in {side}")
-                    pa = to_gray(decode_image(bytes(ab), af)).astype(
-                        np.int64
-                    )
-                    pb = to_gray(decode_image(bytes(bb), bf)).astype(
-                        np.int64
-                    )
-                    if pa.shape != pb.shape:
-                        raise ValueError(
-                            f"shape mismatch {pa.shape} vs {pb.shape}"
-                        )
-                    h, w = pa.shape
-                    n_px = int(pa.size)
-                    sse = int(((pa - pb) ** 2).sum())
-                    rows.append(
-                        {
-                            "image_id": iid, "w": w, "h": h,
-                            "n_px": n_px, "sse": sse,
-                            "mse_u": (sse * g) // n_px, "err": None,
-                        }
-                    )
-                except Exception as e:  # noqa: BLE001
-                    rows.append(
-                        {
-                            "image_id": iid, "w": None, "h": None,
-                            "n_px": None, "sse": None, "mse_u": None,
-                            "err": f"{type(e).__name__}: {e}",
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in PAIR_SSE_SCHEMA.fields]
-            )
+    def fn(ab, af, bb, bf):
+        # after the full join an absent side has NULL fmt; a present
+        # row with NULL bytes is quarantined by gray()
+        if af is None or bf is None:
+            raise ValueError(f"missing in {'a' if af is None else 'b'}")
+        pa, pb = _same_shape(gray(ab, af, np.int64), gray(bb, bf, np.int64))
+        h, w = pa.shape
+        n_px = int(pa.size)
+        sse = int(((pa - pb) ** 2).sum())
+        return {
+            "w": w, "h": h, "n_px": n_px, "sse": sse,
+            "mse_u": (sse * g) // n_px,
+        }
 
-    return j.mapInPandas(run, PAIR_SSE_SCHEMA)
+    return arrow_stage(
+        j, ["image_id"], ["__ab", "__af", "__bb", "__bf"], PAIR_SSE_SCHEMA, fn
+    )
 
 
 AUTOCONTRAST_SCHEMA = T.StructType(
@@ -2203,46 +1667,15 @@ def image_autocontrast(images: DataFrame) -> DataFrame:
 
     One Arrow decode scan, no shuffle, error-isolated."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, data, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                try:
-                    px = to_gray(decode_image(bytes(data), fmt)).astype(
-                        np.int64
-                    )
-                    h, w = px.shape
-                    lo = int(px.min())
-                    hi = int(px.max())
-                    if hi > lo:
-                        out = ((px - lo) * 255) // (hi - lo)
-                    else:
-                        out = px
-                    rows.append(
-                        {
-                            "image_id": iid,
-                            "bytes": encode_png(out.astype(np.uint8)),
-                            "w": w, "h": h, "lo": lo, "hi": hi,
-                            "fmt": "png", "err": None,
-                        }
-                    )
-                except Exception as e:  # noqa: BLE001
-                    rows.append(
-                        {
-                            "image_id": iid, "bytes": None, "w": None,
-                            "h": None, "lo": None, "hi": None,
-                            "fmt": None,
-                            "err": f"{type(e).__name__}: {e}",
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in AUTOCONTRAST_SCHEMA.fields]
-            )
+    def fn(data, fmt):
+        px = gray(data, fmt, np.int64)
+        lo = int(px.min())
+        hi = int(px.max())
+        out = ((px - lo) * 255) // (hi - lo) if hi > lo else px
+        return {**_png_row(out), "lo": lo, "hi": hi}
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        run, AUTOCONTRAST_SCHEMA
+    return arrow_stage(
+        images, ["image_id"], ["bytes", "fmt"], AUTOCONTRAST_SCHEMA, fn
     )
 
 
@@ -2279,29 +1712,11 @@ def orbit_hashes(images: DataFrame) -> DataFrame:
     the D4-canonical dHash per image (8 cheap 8x9 anchor resizes per
     decode; the decode dominates)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, data, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                try:
-                    px = to_gray(decode_image(bytes(data), fmt)).astype(np.uint8)
-                    rows.append(
-                        {"image_id": iid, "ohash": orbit_dhash64(px),
-                         "err": None}
-                    )
-                except Exception as e:  # noqa: BLE001
-                    rows.append(
-                        {"image_id": iid, "ohash": None,
-                         "err": f"{type(e).__name__}: {e}"}
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in ORBIT_SCHEMA.fields]
-            )
+    def fn(data, fmt):
+        return {"ohash": orbit_dhash64(gray(data, fmt))}
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        run, ORBIT_SCHEMA
+    return arrow_stage(
+        images, ["image_id"], ["bytes", "fmt"], ORBIT_SCHEMA, fn
     )
 
 
@@ -2385,42 +1800,17 @@ def audit_image_meta(images: DataFrame) -> DataFrame:
     manifest). Arrow stage, embarrassingly parallel; only the verdict
     columns leave it."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, data, fmt, dw, dh in zip(
-                b["image_id"].values,
-                b["bytes"].values,
-                b["fmt"].values,
-                b["w"].values,
-                b["h"].values,
-            ):
-                dw = None if pd.isna(dw) else int(dw)
-                dh = None if pd.isna(dh) else int(dh)
-                try:
-                    px = to_gray(decode_image(bytes(data), fmt))
-                    rh, rw = int(px.shape[0]), int(px.shape[1])
-                    ok = int(dw == rw and dh == rh)
-                    rows.append(
-                        {
-                            "image_id": iid, "decl_w": dw, "decl_h": dh,
-                            "real_w": rw, "real_h": rh, "meta_ok": ok,
-                            "err": None,
-                        }
-                    )
-                except Exception as e:  # noqa: BLE001
-                    rows.append(
-                        {
-                            "image_id": iid, "decl_w": dw, "decl_h": dh,
-                            "real_w": None, "real_h": None,
-                            "meta_ok": None,
-                            "err": f"{type(e).__name__}: {e}",
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in META_AUDIT_SCHEMA.fields]
-            )
+    def fn(data, fmt, dw, dh):
+        rh, rw = gray(data, fmt).shape
+        return {"real_w": rw, "real_h": rh, "meta_ok": int(dw == rw and dh == rh)}
 
-    return images.select("image_id", "bytes", "fmt", "w", "h").mapInPandas(
-        run, META_AUDIT_SCHEMA
+    decl = images.select(
+        "image_id", "bytes", "fmt",
+        F.col("w").alias("decl_w"), F.col("h").alias("decl_h"),
     )
+    return arrow_stage(
+        decl, ["image_id", "decl_w", "decl_h"],
+        ["bytes", "fmt", "decl_w", "decl_h"], META_AUDIT_SCHEMA, fn,
+    )
+
+

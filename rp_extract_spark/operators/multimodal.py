@@ -20,7 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..codecs import decode_image, encode_png, to_gray
+from .._prims import QUARANTINED, arrow_stage, gray
+from ..codecs import encode_png
 
 
 def block_mean_resize(gray: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
@@ -46,31 +47,12 @@ RESIZED_SCHEMA = T.StructType(
 def resize_images(images: DataFrame, out_h: int = 64, out_w: int = 64) -> DataFrame:
     """Decode → block-mean resize → re-encode PNG; error-isolated."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out_bytes, errs = [], []
-            for data, fmt in zip(b["bytes"].values, b["fmt"].values):
-                try:
-                    px = to_gray(decode_image(bytes(data), fmt)).astype(np.uint8)
-                    small = block_mean_resize(px, out_h, out_w)
-                    out_bytes.append(encode_png(small))
-                    errs.append(None)
-                except Exception as e:  # noqa: BLE001
-                    out_bytes.append(None)
-                    errs.append(f"{type(e).__name__}: {e}")
-            yield pd.DataFrame(
-                {
-                    "image_id": b["image_id"],
-                    "bytes": out_bytes,
-                    "w": out_w,
-                    "h": out_h,
-                    "fmt": "png",
-                    "err": errs,
-                }
-            )
+    def fn(data, fmt):
+        small = block_mean_resize(gray(data, fmt), out_h, out_w)
+        return {"bytes": encode_png(small), "w": out_w, "h": out_h, "fmt": "png"}
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        run, RESIZED_SCHEMA
+    return arrow_stage(
+        images, ["image_id"], ["bytes", "fmt"], RESIZED_SCHEMA, fn
     )
 
 
@@ -97,7 +79,10 @@ def decode_audio(data: bytes) -> tuple[int, np.ndarray]:
     (the remaining Annex B.7 tables are published constants this
     sandbox cannot source or verify — see codecs/_mp3_tables.py).
     Other compressed formats (AAC etc.) raise and land in the err
-    column."""
+    column. A NULL payload (a row quarantined upstream) raises."""
+    if data is None:
+        raise ValueError(QUARANTINED)
+    data = bytes(data)
     if data[:4] == b"RIFF":
         from ..codecs.wav import decode_wav
 
@@ -123,43 +108,20 @@ def decode_audio(data: bytes) -> tuple[int, np.ndarray]:
     )
 
 
-# retained name for round-1 compatibility: now only the non-WAV branch
-decode_audio_stub = decode_audio
-
-
 def analyze_audio(clips: DataFrame) -> DataFrame:
     """Audio analysis stage: WAV rows decode + featurize for real
     (n_samples, samplerate, RMS over normalized samples); compressed
     rows are error-isolated per record."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for cid, data in zip(b["clip_id"].values, b["bytes"].values):
-                try:
-                    sr, samples = decode_audio(bytes(data))
-                    rows.append(
-                        {
-                            "clip_id": cid,
-                            "n_samples": len(samples),
-                            "samplerate": sr,
-                            "rms": float(np.sqrt(np.mean(samples**2))),
-                            "err": None,
-                        }
-                    )
-                except Exception as e:  # noqa: BLE001
-                    rows.append(
-                        {
-                            "clip_id": cid,
-                            "n_samples": None,
-                            "samplerate": None,
-                            "rms": None,
-                            "err": f"{type(e).__name__}: {e}",
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in AUDIO_FEATURE_SCHEMA.fields])
+    def fn(data):
+        sr, samples = decode_audio(data)
+        return {
+            "n_samples": len(samples),
+            "samplerate": sr,
+            "rms": float(np.sqrt(np.mean(samples**2))),
+        }
 
-    return clips.select("clip_id", "bytes").mapInPandas(run, AUDIO_FEATURE_SCHEMA)
+    return arrow_stage(clips, ["clip_id"], ["bytes"], AUDIO_FEATURE_SCHEMA, fn)
 
 
 FRAME_SCHEMA = T.StructType(
@@ -277,46 +239,19 @@ def extract_features_audio(clips: DataFrame) -> DataFrame:
     from ..functions.audio import auto_resample
     from ..functions.segmentation import segment_plan
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for cid, data in zip(b["clip_id"].values, b["bytes"].values):
-                try:
-                    sr, samples = decode_audio(bytes(data))
-                    # wav_read auto-resample rule: non-11/22/44 kHz → 44.1
-                    sr, samples = auto_resample(samples, sr)
-                    plan = segment_plan(np.asarray(samples).shape[0], sr)
-                    feats = extract_audio_features(samples, sr)
-                    rows.append(
-                        {
-                            "clip_id": cid,
-                            "samplerate": sr,
-                            "n_segments": plan["n_segments"],
-                            "rp": feats["rp"].tolist(),
-                            "ssd": feats["ssd"].tolist(),
-                            "rh": feats["rh"].tolist(),
-                            "mvd": feats["mvd"].tolist(),
-                            "tssd": feats["tssd"].tolist(),
-                            "trh": feats["trh"].tolist(),
-                            "err": None,
-                        }
-                    )
-                except Exception as e:  # noqa: BLE001
-                    rows.append(
-                        {
-                            "clip_id": cid, "samplerate": None,
-                            "n_segments": None, "rp": None, "ssd": None,
-                            "rh": None, "mvd": None, "tssd": None,
-                            "trh": None, "err": f"{type(e).__name__}: {e}",
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in AUDIO_DESCRIPTOR_SCHEMA.fields]
-            )
+    def fn(data):
+        sr, samples = decode_audio(data)
+        # wav_read auto-resample rule: non-11/22/44 kHz → 44.1
+        sr, samples = auto_resample(samples, sr)
+        plan = segment_plan(np.asarray(samples).shape[0], sr)
+        feats = extract_audio_features(samples, sr)
+        return {
+            "samplerate": sr,
+            "n_segments": plan["n_segments"],
+            **{k: feats[k].tolist() for k in ("rp", "ssd", "rh", "mvd", "tssd", "trh")},
+        }
 
-    return clips.select("clip_id", "bytes").mapInPandas(
-        run, AUDIO_DESCRIPTOR_SCHEMA
-    )
+    return arrow_stage(clips, ["clip_id"], ["bytes"], AUDIO_DESCRIPTOR_SCHEMA, fn)
 
 
 PIXEL_SCHEMA = T.StructType(
@@ -346,7 +281,7 @@ def image_pixels(images: DataFrame) -> DataFrame:
                     # error-isolated upstream row (e.g. resize_images
                     # quarantine output): skip, never abort the stage
                     continue
-                px = to_gray(decode_image(bytes(data), fmt)).astype(np.uint8)
+                px = gray(data, fmt)
                 h, w = px.shape
                 yy, xx = np.mgrid[0:h, 0:w]
                 ids.extend([iid] * (h * w))
@@ -405,40 +340,20 @@ def quality_gate_audio(
     the only derived float (callers round it for comparison). One
     Arrow scan, no shuffle, per-record error isolation."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for cid, data in zip(b["clip_id"].values, b["bytes"].values):
-                try:
-                    sr, samples = decode_audio(bytes(data))
-                    a = np.abs(samples.astype(np.float64, copy=False))
-                    rows.append(
-                        {
-                            "clip_id": cid,
-                            "n_samples": len(samples),
-                            "samplerate": sr,
-                            "n_clipped": int((a >= clip_thresh).sum()),
-                            "n_silent": int((a <= silence_thresh).sum()),
-                            "peak": float(a.max()) if len(a) else 0.0,
-                            "rms": float(np.sqrt(np.mean(samples.astype(np.float64) ** 2)))
-                            if len(samples) else 0.0,
-                            "err": None,
-                        }
-                    )
-                except Exception as e:  # noqa: BLE001
-                    rows.append(
-                        {
-                            "clip_id": cid, "n_samples": None,
-                            "samplerate": None, "n_clipped": None,
-                            "n_silent": None, "peak": None, "rms": None,
-                            "err": f"{type(e).__name__}: {e}",
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in AUDIO_GATE_SCHEMA.fields]
-            )
+    def fn(data):
+        sr, samples = decode_audio(data)
+        a = np.abs(samples.astype(np.float64, copy=False))
+        return {
+            "n_samples": len(samples),
+            "samplerate": sr,
+            "n_clipped": int((a >= clip_thresh).sum()),
+            "n_silent": int((a <= silence_thresh).sum()),
+            "peak": float(a.max()) if len(a) else 0.0,
+            "rms": float(np.sqrt(np.mean(samples.astype(np.float64) ** 2)))
+            if len(samples) else 0.0,
+        }
 
-    s = clips.select("clip_id", "bytes").mapInPandas(run, AUDIO_GATE_SCHEMA)
+    s = arrow_stage(clips, ["clip_id"], ["bytes"], AUDIO_GATE_SCHEMA, fn)
     cn, cd = max_clip_ratio
     sn, sd = max_silence_ratio
     n = F.col("n_samples")
@@ -513,8 +428,7 @@ def dedup_frames(
                                  "g": None, "err": err})
                     continue
                 try:
-                    px = to_gray(decode_image(bytes(fb), "jpeg"))
-                    sig = block_mean_resize(px, grid, grid)
+                    sig = block_mean_resize(gray(fb, "jpeg"), grid, grid)
                     rows.append(
                         {"video_id": vid, "frame_idx": int(idx),
                          "g": [int(v) for v in sig.ravel()], "err": None}
@@ -586,35 +500,13 @@ def fingerprint_audio(clips: DataFrame, id_col: str = "clip_id") -> DataFrame:
     embarrassingly parallel; only (id, 8-byte fp) leaves it — clip
     bytes never shuffle."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            # the select below renames id_col -> clip_id BEFORE this
-            # stage, so the batch column is always "clip_id"
-            for cid, data in zip(b["clip_id"].values, b["bytes"].values):
-                try:
-                    _, samples = decode_audio(bytes(data))
-                    rows.append(
-                        {
-                            "clip_id": cid,
-                            "fp": audio_fingerprint64(samples),
-                            "n_samples": int(len(samples)),
-                            "err": None,
-                        }
-                    )
-                except Exception as e:  # noqa: BLE001
-                    rows.append(
-                        {
-                            "clip_id": cid, "fp": None, "n_samples": None,
-                            "err": f"{type(e).__name__}: {e}",
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in AUDIO_FP_SCHEMA.fields]
-            )
+    def fn(data):
+        _, samples = decode_audio(data)
+        return {"fp": audio_fingerprint64(samples), "n_samples": int(len(samples))}
 
-    return clips.select(F.col(id_col).alias("clip_id"), "bytes").mapInPandas(
-        run, AUDIO_FP_SCHEMA
+    return arrow_stage(
+        clips.select(F.col(id_col).alias("clip_id"), "bytes"),
+        ["clip_id"], ["bytes"], AUDIO_FP_SCHEMA, fn,
     )
 
 

@@ -1,10 +1,10 @@
 """Text-analysis operators for corpus curation (documents table).
 
-Language-ID (stopword-hit heuristic), quality scoring (length /
-punctuation / stopword ratios), token counting (whitespace + BPE-ish
-regex), and document fingerprinting. All pure ``pyspark.sql.functions``
-expressions — whole-stage codegen, no Python — so every one of them is
-also expressible as the DuckDB oracle SQL used by the driver.
+The ``analyze_documents`` battery (token counts, BPE-ish units,
+stopword-hit language guess, punctuation / stopword ratios, md5
+fingerprint), BM25 retrieval and the corpus statistics built on them.
+Every emitted value is also expressible as the DuckDB oracle SQL used
+by the driver.
 """
 
 from __future__ import annotations
@@ -38,67 +38,6 @@ def token_count(text: Column) -> Column:
     return F.when(F.length(F.trim(text)) == 0, 0).otherwise(
         F.size(tokens_col(text))
     )
-
-
-def bpe_ish_token_count(text: Column) -> Column:
-    """Sub-word-ish token count: words + digit runs + punctuation marks
-    counted separately (a cheap stand-in for BPE tokenizers)."""
-    # count word chunks of <=4 chars as 1, longer words as ceil(len/4)
-    toks = tokens_col(text)
-    per_word = F.transform(toks, lambda t: F.ceil(F.length(t) / 4.0))
-    words = F.aggregate(per_word, F.lit(0).cast("bigint"), lambda a, x: a + x)
-    puncts = F.length(text) - F.length(
-        F.regexp_replace(text, r"[\.,;:!\?\(\)\[\]]", "")
-    )
-    return words + puncts
-
-
-def punct_ratio(text: Column) -> Column:
-    n_punct = F.length(text) - F.length(
-        F.regexp_replace(text, r"[\.,;:!\?\(\)\[\]\"']", "")
-    )
-    return n_punct / F.greatest(F.length(text), F.lit(1))
-
-
-def _sw_array(lang: str) -> Column:
-    return F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-
-
-def _stopword_hits(toks: Column, lang: str) -> Column:
-    arr = _sw_array(lang)
-    return F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
-
-
-def stopword_ratio(text: Column, lang: str = "en") -> Column:
-    toks = tokens_col(text)
-    # count every occurrence (not just distinct hits)
-    return _stopword_hits(toks, lang) / F.greatest(F.size(toks), F.lit(1))
-
-
-def lang_id(text: Column) -> Column:
-    """Heuristic language id: language whose stopwords hit most tokens;
-    'und' (undetermined) when nothing hits."""
-    toks = tokens_col(text)
-    scores = [(lang, _stopword_hits(toks, lang)) for lang in STOPWORDS]
-    best_score = F.greatest(*[s for _, s in scores])
-    out = F.lit("und")
-    # reversed so earlier languages win ties deterministically
-    for lang, s in reversed(scores):
-        out = F.when((s == best_score) & (best_score > 0), lang).otherwise(out)
-    return out
-
-
-def quality_score(text: Column) -> Column:
-    """Composite quality in [0,1]: rewards mid-length docs, real
-    sentence punctuation, and function-word presence; penalizes
-    over-punctuated or fragmentary text."""
-    n_tok = token_count(text)
-    len_score = F.least(n_tok / F.lit(100.0), F.lit(1.0))
-    stop = stopword_ratio(text)
-    stop_score = F.least(stop * 5.0, F.lit(1.0))
-    punct = punct_ratio(text)
-    punct_pen = F.when(punct > 0.1, 0.5).otherwise(1.0)
-    return F.round((0.5 * len_score + 0.5 * stop_score) * punct_pen, 6)
 
 
 def fingerprint(text: Column) -> Column:

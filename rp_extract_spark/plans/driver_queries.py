@@ -12,6 +12,7 @@ cross-engine summation order could differ.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -2353,6 +2354,7 @@ ORACLES["logreg_classify"] = _logreg_oracle_sql(iters=8, lr=2.0)
 
 
 _GTZAN_BASENAME = "/root/reference/models/GTZAN"
+_GTZAN_MODEL = _GTZAN_BASENAME + ".model.pkl"
 
 
 def _svm_oracle_sql() -> str:
@@ -2406,6 +2408,9 @@ def q_svm_classify(spark, sf):
     folded weights, decisions, argmax tie rule and genre labels."""
     from ..sources.sklearn_models import classify_vectors, load_reference_model
 
+    if not os.path.isfile(_GTZAN_MODEL):
+        raise FileNotFoundError(
+            f"svm_classify needs the reference GTZAN model {_GTZAN_MODEL}")
     model = load_reference_model(_GTZAN_BASENAME)
     # one parquet file = one split: spread so the 228-dim feature
     # synthesis + Arrow scoring stage runs on every core (round 6)
@@ -2430,7 +2435,10 @@ def q_svm_classify(spark, sf):
 
 
 QUERIES["svm_classify"] = q_svm_classify
-ORACLES["svm_classify"] = _svm_oracle_sql()
+# the oracle folds the model's weights into SQL literals, so it exists
+# only where the reference model does
+if os.path.isfile(_GTZAN_MODEL):
+    ORACLES["svm_classify"] = _svm_oracle_sql()
 
 
 def q_mp3_decode(spark, sf):

@@ -21,53 +21,11 @@ def flagship(
     spark: SparkSession,
     n_images: int = 200,
     seed: int = 42,
-    salt: int = 1,
-    narrow: bool = False,
 ) -> DataFrame:
-    """Two physical strategies for the same result:
-
-    * default: extract first, then as-of + windows — ONE hash exchange
-      on entity_id carries the wide feature vectors (see PLANS.md);
-    * ``narrow=True``: run the as-of join + sessionization on the
-      narrow key stream (entity_id, ts, image_id) first, then join the
-      tiny enrichment back by image_id and extract last — the wide
-      vectors never enter ANY exchange. At 10^12 rows pair this with
-      an image table bucketed by image_id (sources/feature_store) so
-      the enrichment join is also exchange-free.
-    """
+    """Extract first, then as-of + windows — ONE hash exchange on
+    entity_id carries the wide feature vectors (see PLANS.md)."""
     images = images_df(spark, n_images, seed=seed)
     captions = captions_df(spark, n_images, seed=seed)
-
-    if narrow:
-        keys = images.select("entity_id", "ts", "image_id")
-        k_asof = asof_join(
-            keys, captions, on="entity_id", left_ts="ts",
-            right_ts="caption_ts", values=["caption"], suffix="_asof",
-            salt=salt,
-        )
-        enrich = sessionize(
-            k_asof, gap_seconds=1800, tiebreak=("image_id",)
-        ).select("image_id", "caption_asof", "matched_ts_asof", "session_id")
-        # persist: two consumers (narrow rp0 projection + final join)
-        # must not re-run the kernel. At 10^12 scale this persist is the
-        # bucketed feature-store write (sources/feature_store).
-        feats, _bad = quarantine(extract_features(images))
-        feats = feats.persist()
-        # lag stack over scalars only: project rp0 narrow, window it,
-        # join back — the wide vectors never enter an exchange
-        rp0 = feats.select(
-            "entity_id", "ts", "image_id", F.element_at("rp", 1).alias("rp0")
-        )
-        rp0 = lag_lead_stack(rp0, "rp0", lags=(1,), tiebreak=("image_id",)).select(
-            "image_id", "rp0_lag1"
-        )
-        out = feats.join(enrich, "image_id").join(rp0, "image_id")
-        return out.select(
-            "entity_id", "ts", "image_id", "rp", "ssd", "rh", "caption",
-            "caption_asof",
-            F.col("matched_ts_asof").alias("caption_asof_ts"),
-            "rp0_lag1", "session_id",
-        )
 
     feats, _bad = quarantine(extract_features(images))
     joined = asof_join(
@@ -78,7 +36,6 @@ def flagship(
         right_ts="caption_ts",
         values=["caption"],
         suffix="_asof",
-        salt=salt,
     )
     with_ctx = sessionize(
         lag_lead_stack(

@@ -62,13 +62,6 @@ def test_photometric_matches_independent_replay(spark):
     assert len(covered) >= 4
 
 
-def test_photometric_error_isolation(spark):
-    df = spark.createDataFrame(
-        [("bad", None, "png")], "image_id string, bytes binary, fmt string")
-    rows = photometric_images(df).collect()
-    assert rows[0].err is not None and rows[0].bytes is None
-
-
 def test_photometric_is_shuffle_free(spark):
     plan = photometric_images(formula_images_df(spark, 4))._jdf\
         .queryExecution().executedPlan().toString()
@@ -112,13 +105,6 @@ def test_detect_borders_degenerate_contracts(spark):
     assert (c.border_top, c.border_bottom, c.border_left,
             c.border_right, c.crop_w, c.crop_h, c.m0_crop) == (
         0, 0, 8, 0, 0, 6, 0)
-
-
-def test_detect_borders_quarantine(spark):
-    df = spark.createDataFrame(
-        [("bad", None, "png")], "image_id string, bytes binary, fmt string")
-    r = detect_borders(df).collect()[0]
-    assert r.err is not None and r.m0_crop is None
 
 
 # --------------------------------------------------- confusion report

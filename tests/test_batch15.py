@@ -50,14 +50,6 @@ def test_autocontrast_flat_image_identity(spark):
     assert np.array_equal(decode_image(bytes(r.bytes), "png"), flat)
 
 
-def test_autocontrast_quarantines_corrupt(spark):
-    df = spark.createDataFrame(
-        [("bad", bytearray(b"junk"), "png")],
-        "image_id string, bytes binary, fmt string")
-    r = image_autocontrast(df).collect()[0]
-    assert r.err is not None and r.bytes is None
-
-
 # -------------------------------------------------- index_webdataset
 
 

@@ -91,15 +91,6 @@ def test_image_entropy_known_histograms(spark):
     assert out["t0"]["n_px"] == out["t1"]["n_px"] == 64
 
 
-def test_image_entropy_error_isolated(spark):
-    df = spark.createDataFrame(
-        [("bad", bytearray(b"nope"), "png")],
-        "image_id string, bytes binary, fmt string",
-    )
-    r = image_entropy(df).collect()[0]
-    assert r["entropy"] is None and r["err"] is not None
-
-
 # ------------------------------------------------------------ letterbox
 
 

@@ -6,7 +6,11 @@ compares row count, column names, and an order-insensitive value hash
 (values canonicalized: floats rounded to 9 significant-ish digits,
 timestamps to ISO strings, columns sorted by name, rows sorted).
 
+Rows-only queries (no oracle) print their Spark-side value hash, so two
+checkouts can be compared query by query.
+
 Usage: python tools/check_oracle.py [--sf /root/testdata/sf0.01] [--only name]
+       [--cores N]  (default: os.cpu_count())
 """
 
 from __future__ import annotations
@@ -60,7 +64,7 @@ def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
     ap.add_argument("--only", default=None)
-    ap.add_argument("--cores", type=int, default=8)
+    ap.add_argument("--cores", type=int, default=os.cpu_count())
     args = ap.parse_args()
 
     import duckdb
@@ -93,7 +97,8 @@ def main():
             continue
         dt = time.time() - t0
         if name not in oracles:
-            print(f"ok?  {name}: rows-only {len(rows)} rows ({dt:.1f}s)")
+            print(f"ok?  {name}: rows-only {len(rows)} rows "
+                  f"hash {value_hash(cols, rows)} ({dt:.1f}s)")
             if len(rows) == 0:
                 print(f"WARN {name}: zero rows")
             continue
