@@ -652,7 +652,7 @@ def roc_points(
         .persist()  # three consumers (min/max, bucket totals, the
         # returned cumsum) of the corpus-wide aggregation; the
         # per-score table is domain-bounded — leak-until-evict, the
-        # documented pack_sequences policy (determinism never depends
+        # policy documented in _prims.global_rank (determinism never depends
         # on the cache: the bucket id is value-computed)
     )
     mm = s.agg(
@@ -735,7 +735,7 @@ def average_precision(
     cost of <grain⁻¹ per-term bias, documented, identical on both
     engines), then ``ap_u = sum(term) div P``.
 
-    Scale shape — the stratified_split two-level global rank: range-
+    Scale shape — the _prims.global_rank two-level rank: range-
     partition by (score DESC, id ASC) so the sort is per-partition,
     P-row driver base offsets for both rank and cumulative-positive
     counts, no global window. cum_pos·grain <= n·grain needs n <= 9·10^12

@@ -16,12 +16,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .._prims import global_rank, spread
 from .text import fingerprint, token_count
-
-# below this many input partitions, pack_batches skips the two-level
-# rank machinery (see its docstring) — a partition is the skew unit,
-# so a narrow input cannot have a bucket wider than one partition
-_PACK_SMALL_PARTS = 4
 
 
 def pack_sequences(
@@ -29,55 +25,26 @@ def pack_sequences(
     text_col: str = "text",
     id_col: str = "doc_id",
     budget: int = 1024,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Concatenate-and-chunk sequence assignment (the standard LLM
     pretraining packing): documents are laid out in ``id_col`` order
     into one token stream; ``seq_id = start_offset // budget`` is the
     fixed-budget training sequence each document STARTS in.
 
-    Scale path — a distributed prefix sum, NOT a global window (an
-    unpartitioned window moves the corpus to one task): range-partition
-    by id, cumsum per partition (window partitioned by partition id,
-    fully parallel), then add broadcast per-partition base offsets
-    (P rows). Returns (id, n_tokens, start_offset, seq_id)."""
-    spark = df.sparkSession
-    n_parts = num_partitions or spark.sparkContext.defaultParallelism
-    t = df.select(
-        F.col(id_col), token_count(F.col(text_col)).alias("n_tokens")
-    ).repartitionByRange(n_parts, F.col(id_col))
-    # persist: __pid feeds both the cumsum window and the per-partition
-    # base-offset agg; the cache pins one partition placement for both
-    # consumers under every exchange-reuse config (2 narrow columns)
-    t = t.withColumn("__pid", F.spark_partition_id()).persist()
-    # per-partition running total (parallel: window is partitioned).
-    # ROWS frame, not the default RANGE: duplicate ids must not share a
-    # peer-inclusive total (it would overlap their token spans).
-    w = (Window.partitionBy("__pid").orderBy(id_col)
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    t = t.withColumn("__local_end", F.sum("n_tokens").over(w))
-    # base offset per partition: exclusive prefix sum over P rows
-    parts = t.groupBy("__pid").agg(F.max("__local_end").alias("__psum"))
-    # Spark logs "No Partition Defined for Window" for wp below — that
-    # warning is EXPECTED and benign: the unpartitioned window runs over
-    # the P-row bases table (one row per data partition, P ~ cluster
-    # cores), never over the data. This is the broadcast-prefix-sum
-    # design; do not "fix" it by partitioning the window.
-    wp = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    bases = parts.select(
-        "__pid", F.coalesce(F.sum("__psum").over(wp), F.lit(0)).alias("__base")
-    )  # P rows only — the single-partition window is over partition COUNT
-    out = t.join(F.broadcast(bases), "__pid").select(
+    A distributed prefix sum (``_prims.global_rank``), never a global
+    window. Returns (id, n_tokens, start_offset, seq_id)."""
+    t = global_rank(
+        df.select(F.col(id_col), token_count(F.col(text_col)).alias("n_tokens")),
+        [id_col],
+        sums=["n_tokens"],
+    )
+    start = F.col("__cum_n_tokens") - F.col("n_tokens")
+    return t.select(
         F.col(id_col),
         "n_tokens",
-        (F.col("__base") + F.col("__local_end") - F.col("n_tokens"))
-        .alias("start_offset"),
-        F.floor(
-            (F.col("__base") + F.col("__local_end") - F.col("n_tokens"))
-            / F.lit(budget)
-        ).cast("long").alias("seq_id"),
+        start.alias("start_offset"),
+        F.floor(start / F.lit(budget)).cast("long").alias("seq_id"),
     )
-    return out
 
 
 def corpus_report(
@@ -127,7 +94,7 @@ def exact_order_stats(
     1-indexed rank ``k = floor(p*(n-1)) + 1`` in (value, id) order —
     deterministic under ties, replayable as one SQL row_number.
 
-    Scale shape — the stratified_split two-level rank: range-partition
+    Scale shape — the _prims.global_rank two-level rank: range-partition
     by (value, id) so the sort is per-partition (the terasort shape,
     never one reducer), collect the P-row partition-count table to
     compute exclusive base offsets driver-side, and — since each target
@@ -369,44 +336,12 @@ def stratified_split(
     """Deterministic stratified train/val/test assignment: within each
     label, rank by id and cut at floor(n * cumulative_fraction) — every
     label contributes proportionally, the split is reproducible and
-    engine-independent (no RNG).
+    engine-independent (no RNG). A NULL label is one stratum.
 
-    Scale path — two-level rank, the pack_sequences prefix-sum
-    technique: range-partition by (label, id) so ONE dominant label
-    spreads over many partitions (a plain window partitioned by label
-    would put 90% of a skewed corpus on one reducer), rank locally per
-    (label, partition) — fully parallel — then add broadcast exclusive
-    per-label partition base counts (labels × partitions rows)."""
-    spark = df.sparkSession
-    n_parts = spark.sparkContext.defaultParallelism
-    # persist: the partition-id column feeds TWO consumers (the rank
-    # window and the base-count agg); correctness requires both to see
-    # the SAME partition placement, which exchange reuse usually
-    # guarantees but a cache guarantees under every config
-    t = df.repartitionByRange(
-        n_parts, F.col(label_col), F.col(id_col)
-    ).withColumn("__pid", F.spark_partition_id()).persist()
-    wl = Window.partitionBy(label_col, "__pid").orderBy(F.col(id_col).asc())
-    counts = t.groupBy(label_col, "__pid").agg(
-        F.count(F.lit(1)).alias("__c")
-    )
-    wp = (
-        Window.partitionBy(label_col)
-        .orderBy("__pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )  # labels × partitions rows only — tiny
-    bases = counts.select(
-        label_col,
-        "__pid",
-        F.coalesce(F.sum("__c").over(wp), F.lit(0)).alias("__base"),
-    )
-    totals = counts.groupBy(label_col).agg(F.sum("__c").alias("__n"))
-    ranked = (
-        t.withColumn("__lrn", F.row_number().over(wl))
-        .join(F.broadcast(bases), [label_col, "__pid"])
-        .join(F.broadcast(totals), label_col)
-        .withColumn("__rn", F.col("__base") + F.col("__lrn"))
-    )
+    The per-label rank is ``_prims.global_rank``, so one dominant label
+    never lands on one reducer. Returns the label column first, then
+    the other input columns, then ``split``."""
+    ranked = global_rank(df, [id_col], groups=[label_col])
     expr = None
     cum = 0.0
     for name, frac in fractions[:-1]:
@@ -415,8 +350,9 @@ def stratified_split(
         expr = F.when(cond, name) if expr is None else expr.when(cond, name)
     split = (F.lit(fractions[-1][0]) if expr is None
              else expr.otherwise(fractions[-1][0]))
-    return ranked.withColumn("split", split).drop(
-        "__pid", "__lrn", "__base", "__rn", "__n"
+    return ranked.select(
+        label_col, *[c for c in df.columns if c != label_col],
+        split.alias("split"),
     )
 
 
@@ -496,9 +432,7 @@ def _ngram_rows_py(
                         grams_out.append(g)
             yield pd.DataFrame({id_col: ids_out, "__g": grams_out})
 
-    from .dedup import _spread_cpu_stage
-
-    return _spread_cpu_stage(df.select(id_col, text_col)).mapInPandas(
+    return spread(df.select(id_col, text_col)).mapInPandas(
         run, schema
     )
 
@@ -563,8 +497,6 @@ def contamination_report(
     that are astronomically unlikely AND would reproduce identically
     in any SQL engine), and the corpus gram stage is spread across
     cores first (one small parquet file = one split otherwise)."""
-    from .dedup import _spread_cpu_stage
-
     # gram strings from the Arrow pass (exact ngram_col parity, round
     # 6); md5 digests in Spark over the same strings, so digest joins
     # are unchanged. Per-doc gram dedup upstream of .distinct() is
@@ -609,13 +541,12 @@ def sequences_table(
     text_col: str = "text",
     id_col: str = "doc_id",
     budget: int = 1024,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Materialized view of ``pack_sequences``: one row per training
     sequence with its member documents in stream order and the token
     total — (seq_id, doc_ids, n_docs, total_tokens). One exchange on
     seq_id after the distributed prefix sum."""
-    packed = pack_sequences(df, text_col, id_col, budget, num_partitions)
+    packed = pack_sequences(df, text_col, id_col, budget)
     return (
         packed.groupBy("seq_id")
         .agg(
@@ -1134,9 +1065,7 @@ def _apply_bpe_arrow(
             )
             yield pdf
 
-    from .dedup import _spread_cpu_stage
-
-    return _spread_cpu_stage(df).mapInPandas(run, out_schema)
+    return spread(df).mapInPandas(run, out_schema)
 
 
 def bpe_vocab(df: DataFrame, merges: DataFrame,
@@ -1397,11 +1326,8 @@ def epoch_shuffle(
     shard. md5, not xxhash64, for cross-engine reproducibility (the
     hash_sample precedent).
 
-    Scale shape: NO global sort on one reducer — rows range-partition
-    by the shuffle key, each partition ranks locally, and broadcast
-    per-partition base counts lift local ranks to global positions
-    (the pack_sequences / stratified_split two-level-rank technique;
-    the only unpartitioned window runs over the P-row counts table)."""
+    The position is ``_prims.global_rank`` over the shuffle key, never
+    a global sort on one reducer."""
     key = F.md5(
         F.concat_ws(
             ":",
@@ -1410,27 +1336,8 @@ def epoch_shuffle(
             F.lit(str(int(epoch))),
         )
     )
-    t = (
-        df.withColumn("__k", key)
-        .repartitionByRange("__k", id_col)
-        .withColumn("__pid", F.spark_partition_id())
-        .persist()  # __pid feeds both the local rank and the base
-        # counts; the cache pins one partition placement for both
-        # (leak-until-evict, the documented pack_sequences policy)
-    )
-    local = t.withColumn(
-        "__r",
-        F.row_number().over(
-            Window.partitionBy("__pid").orderBy("__k", id_col)
-        ),
-    )
-    counts = t.groupBy("__pid").agg(F.count("*").alias("__c"))
-    wp = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    bases = counts.select(
-        "__pid", F.coalesce(F.sum("__c").over(wp), F.lit(0)).alias("__base")
-    )
-    pos = F.col("__base") + F.col("__r") - 1
-    return local.join(F.broadcast(bases), "__pid").select(
+    pos = F.col("__rn") - 1
+    return global_rank(df.withColumn("__k", key), ["__k", id_col]).select(
         *[F.col(c) for c in df.columns],
         pos.alias("pos"),
         (pos % n_shards).cast("int").alias("shard"),
@@ -1445,7 +1352,6 @@ def pack_batches(
     seed: int = 0,
     epoch: int = 0,
     drop_partial: bool = True,
-    two_level: bool | None = None,
 ) -> DataFrame:
     """Deterministic bucketed batch packing — the data-loader step
     between aspect bucketing / sharding and the training loop: within
@@ -1455,24 +1361,11 @@ def pack_batches(
     ``batch_size``; the trailing partial batch per bucket is dropped
     when ``drop_partial`` (standard trainer behavior — a short batch
     changes the effective learning rate). Adds ``batch_idx`` (per
-    bucket, 0-based) and ``slot`` (position in the batch).
+    bucket, 0-based) and ``slot`` (position in the batch). A NULL
+    bucket value packs as one bucket.
 
-    Scale path — the stratified_split two-level rank: range-partition
-    by (buckets, key) so ONE dominant bucket spreads over many
-    partitions, rank locally per (bucket, partition) fully parallel,
-    then lift with broadcast exclusive base counts (buckets x
-    partitions rows). Never a bucket-partitioned global window at
-    scale.
-
-    ``two_level=None`` auto-selects: inputs narrower than
-    ``_PACK_SMALL_PARTS`` partitions take the plain bucket-partitioned
-    window instead (identical results — same order key, same rank —
-    but one window stage instead of repartition+persist+2 windows+2
-    broadcast joins; the adaptive-edge-caching lesson: pinned
-    partition machinery on toy inputs costs 3-5 s of pure stage
-    overhead). Skew only matters when a bucket exceeds one partition,
-    which a <= ``_PACK_SMALL_PARTS``-partition input cannot."""
-    bcols = [F.col(c) for c in bucket_cols]
+    The per-bucket rank is ``_prims.global_rank``, so one dominant
+    bucket never lands on one reducer."""
     key = F.md5(
         F.concat_ws(
             ":",
@@ -1481,59 +1374,18 @@ def pack_batches(
             F.lit(str(int(epoch))),
         )
     )
-    if two_level is None:
-        two_level = df.rdd.getNumPartitions() > _PACK_SMALL_PARTS
-    if not two_level:
-        wl1 = Window.partitionBy(*bucket_cols).orderBy("__k", id_col)
-        wn = Window.partitionBy(*bucket_cols)
-        ranked = (
-            df.withColumn("__k", key)
-            .withColumn("__rn", F.row_number().over(wl1) - 1)
-            .withColumn("__n", F.count(F.lit(1)).over(wn))
-        )
-    else:
-        n_parts = df.sparkSession.sparkContext.defaultParallelism
-        t = (
-            df.withColumn("__k", key)
-            .repartitionByRange(
-                n_parts, *bcols, F.col("__k"), F.col(id_col)
-            )
-            .withColumn("__pid", F.spark_partition_id())
-            .persist()  # __pid feeds the rank window AND the base counts
-            # (leak-until-evict, the documented pack_sequences policy)
-        )
-        wl = Window.partitionBy(*bucket_cols, "__pid").orderBy("__k", id_col)
-        counts = t.groupBy(*bucket_cols, "__pid").agg(
-            F.count(F.lit(1)).alias("__c")
-        )
-        wp = (
-            Window.partitionBy(*bucket_cols)
-            .orderBy("__pid")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        bases = counts.select(
-            *bucket_cols,
-            "__pid",
-            F.coalesce(F.sum("__c").over(wp), F.lit(0)).alias("__base"),
-        )
-        totals = counts.groupBy(*bucket_cols).agg(F.sum("__c").alias("__n"))
-        ranked = (
-            t.withColumn("__lrn", F.row_number().over(wl))
-            .join(F.broadcast(bases), [*bucket_cols, "__pid"])
-            .join(F.broadcast(totals), list(bucket_cols))
-            .withColumn("__rn", F.col("__base") + F.col("__lrn") - 1)
-        )
+    ranked = global_rank(
+        df.withColumn("__k", key), ["__k", id_col], groups=bucket_cols
+    )
+    rn = F.col("__rn") - 1
     if drop_partial:
         ranked = ranked.filter(
-            F.col("__rn")
-            < F.floor(F.col("__n") / F.lit(batch_size)) * F.lit(batch_size)
+            rn < F.floor(F.col("__n") / F.lit(batch_size)) * F.lit(batch_size)
         )
     return ranked.select(
         *[F.col(c) for c in df.columns],
-        F.floor(F.col("__rn") / F.lit(batch_size))
-        .cast("long")
-        .alias("batch_idx"),
-        (F.col("__rn") % F.lit(batch_size)).cast("int").alias("slot"),
+        F.floor(rn / F.lit(batch_size)).cast("long").alias("batch_idx"),
+        (rn % F.lit(batch_size)).cast("int").alias("slot"),
     )
 
 
@@ -1586,8 +1438,8 @@ def pk_batches(
         epoch=epoch,
         drop_partial=True,
     ).persist()  # two consumers: the class-batch stats collect and the
-    # returned join (leak-until-evict, the documented pack_sequences
-    # policy — the caller's action reads from cache)
+    # returned join (leak-until-evict, the _prims.global_rank policy —
+    # the caller's action reads from cache)
     cb = packed.groupBy(label_col, "batch_idx").agg(
         F.count(F.lit(1)).alias("__ck")
     )
@@ -1820,15 +1672,10 @@ def plan_shard_packing(
     most one sample, and every engine replaying the same cumsum gets
     identical boundaries.
 
-    Scale path — the pack_sequences distributed prefix sum, never a
-    global window: range-partition by the order key, cumsum per
-    partition (window partitioned by __pid, fully parallel), lift with
-    broadcast exclusive per-partition totals (P rows). Returns
-    (id, size, start_offset, shard_id)."""
+    The prefix sum is ``_prims.global_rank``, never a global window.
+    Returns (id, size, start_offset, shard_id)."""
     if target_size < 1:
         raise ValueError(f"target_size must be >= 1, got {target_size}")
-    spark = df.sparkSession
-    n_parts = spark.sparkContext.defaultParallelism
     order_key = (
         F.md5(
             F.concat_ws(
@@ -1838,36 +1685,21 @@ def plan_shard_packing(
         if shuffle
         else F.col(id_col).cast("string")
     )
-    t = df.select(
-        F.col(id_col),
-        F.col(size_col).cast("long").alias("size"),
-        order_key.alias("__k"),
-    ).repartitionByRange(n_parts, F.col("__k"), F.col(id_col))
-    # persist: __pid feeds the cumsum window AND the base-total agg —
-    # both must see one partition placement (pack_sequences policy)
-    t = t.withColumn("__pid", F.spark_partition_id()).persist()
-    w = (
-        Window.partitionBy("__pid")
-        .orderBy("__k", id_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    t = global_rank(
+        df.select(
+            F.col(id_col),
+            F.col(size_col).cast("long").alias("size"),
+            order_key.alias("__k"),
+        ),
+        ["__k", id_col],
+        sums=["size"],
     )
-    t = t.withColumn("__local_end", F.sum("size").over(w))
-    parts = t.groupBy("__pid").agg(F.max("__local_end").alias("__psum"))
-    # benign "No Partition Defined for Window": runs over P rows only
-    wp = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    bases = parts.select(
-        "__pid",
-        F.coalesce(F.sum("__psum").over(wp), F.lit(0)).alias("__base"),
-    )
-    return t.join(F.broadcast(bases), "__pid").select(
+    start = F.col("__cum_size") - F.col("size")
+    return t.select(
         F.col(id_col),
         "size",
-        (F.col("__base") + F.col("__local_end") - F.col("size"))
-        .alias("start_offset"),
-        F.floor(
-            (F.col("__base") + F.col("__local_end") - F.col("size"))
-            / F.lit(int(target_size))
-        ).cast("long").alias("shard_id"),
+        start.alias("start_offset"),
+        F.floor(start / F.lit(int(target_size))).cast("long").alias("shard_id"),
     )
 
 
@@ -1891,10 +1723,9 @@ def temperature_resample(
     rounded, so within +/-1) and pinned by two integer square compares
     — the repeat_factor_sampling discipline; no float decides a
     boundary. Scale: a K-row class table (window over K rows,
-    broadcast back) + the stratified_split two-level rank on
-    (label, md5) so one dominant class never lands on one reducer.
+    broadcast back) + ``_prims.global_rank`` on (label, md5) so one
+    dominant class never lands on one reducer.
     Returns (id, label, target, repeats, copy_idx)."""
-    spark = df.sparkSession
     counts = df.groupBy(label_col).agg(F.count(F.lit(1)).alias("__n"))
     wt = Window.rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing)
@@ -1912,37 +1743,21 @@ def temperature_resample(
             tgt.alias("__t"),
         )
         .select(
-            label_col, "__n", F.col("__t").alias("target"),
+            label_col, F.col("__t").alias("target"),
             # integer division (div), never double-divide-then-cast:
             # a 2^53-scale target would round before the cast floors
             F.expr("__t div __n").alias("__full"),
             (F.col("__t") % F.col("__n")).alias("__rem"),
         )
     )
-    n_parts = spark.sparkContext.defaultParallelism
     h = F.md5(F.concat(F.col(id_col).cast("string"), F.lit(f":{seed}")))
-    t = (
-        df.select(F.col(id_col), F.col(label_col))
-        .withColumn("__h", h)
-        .repartitionByRange(n_parts, F.col(label_col), F.col("__h"),
-                            F.col(id_col))
-        .withColumn("__pid", F.spark_partition_id())
-        .persist()  # __pid feeds the rank window AND the base counts
+    ranked = global_rank(
+        df.select(F.col(id_col), F.col(label_col)).withColumn("__h", h),
+        ["__h", id_col],
+        groups=[label_col],
     )
-    wl = Window.partitionBy(label_col, "__pid").orderBy(
-        F.col("__h").asc(), F.col(id_col).asc())
-    pc = t.groupBy(label_col, "__pid").agg(F.count(F.lit(1)).alias("__c"))
-    wp = (Window.partitionBy(label_col).orderBy("__pid")
-          .rowsBetween(Window.unboundedPreceding, -1))
-    bases = pc.select(
-        label_col, "__pid",
-        F.coalesce(F.sum("__c").over(wp), F.lit(0)).alias("__base"))
-    ranked = (
-        t.withColumn("__lrn", F.row_number().over(wl))
-        .join(F.broadcast(bases), [label_col, "__pid"])
-        .withColumn("__rn", F.col("__base") + F.col("__lrn"))
-    )
-    out = (
+    # an inner join: a NULL label has no target row and is dropped
+    return (
         ranked.join(F.broadcast(targets), label_col)
         .withColumn(
             "repeats",
@@ -1958,7 +1773,6 @@ def temperature_resample(
         )
         .withColumn("copy_idx", F.col("copy_idx").cast("int"))
     )
-    return out
 
 
 def repeat_factor_sampling(
@@ -1992,7 +1806,7 @@ def repeat_factor_sampling(
         )
     counts = df.groupBy(label_col).agg(F.count(F.lit(1)).alias("__n"))
     # corpus total via an unpartitioned window over the K-row class
-    # table (benign: K classes, never data; the pack_sequences policy).
+    # table (benign: K classes, never data; see _prims.global_rank).
     # NB the total column must NOT be a case-variant of "__n" — Spark
     # resolves column names case-insensitively, so withColumn("__N")
     # silently REPLACES "__n".
@@ -2194,9 +2008,7 @@ def wordpiece_apply(
                 }
             )
 
-    from .dedup import _spread_cpu_stage
-
-    return _spread_cpu_stage(df.select(id_col, text_col)).mapInPandas(
+    return spread(df.select(id_col, text_col)).mapInPandas(
         run, out_schema
     )
 
@@ -2220,8 +2032,8 @@ def winsorize(
     Values land on the micro-integer grid floor(v*grain + 1/2).
 
     Scale path: one row_number window per group partition (the
-    per-group sort; a single dominant group calls for the two-level
-    rank of stratified_split — documented trade), a K-row-per-group
+    per-group sort; a single dominant group calls for
+    _prims.global_rank — documented trade), a K-row-per-group
     bound table joined back broadcast, and the clip itself row-local.
     Returns (group, id, value_u, lo_u, hi_u, clipped_u).
     """

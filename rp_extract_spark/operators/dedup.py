@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .._prims import spread
+
 logger = logging.getLogger(__name__)
 
 # Mersenne prime field 2^61-1 for universal hashing
@@ -182,7 +184,7 @@ def winnow_fingerprints(
 
     The per-gram md5 stage is CPU-bound — spread across cores first
     (one small parquet file = one split = one task otherwise; the
-    _spread_cpu_stage lesson), and the gram-hash array is materialized
+    ``_prims.spread`` lesson), and the gram-hash array is materialized
     in its own projection so the window-minima expressions reference
     it instead of re-deriving the md5 array per use."""
     from .curation import ngram_col
@@ -192,7 +194,7 @@ def winnow_fingerprints(
         grams,
         lambda g: F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long"),
     )
-    hashed = _spread_cpu_stage(df.select(F.col(id_col), F.col(text_col))).select(
+    hashed = spread(df.select(F.col(id_col), F.col(text_col))).select(
         F.col(id_col), h_expr.alias("__h")
     )
     h = F.col("__h")
@@ -531,20 +533,7 @@ def minhash_signatures(
             ).astype(np.int64)
             yield pd.DataFrame({id_col: b[id_col], "signature": list(sigs)})
 
-    return _spread_cpu_stage(df.select(id_col, text_col)).mapInPandas(run, schema)
-
-
-def _spread_cpu_stage(df: DataFrame) -> DataFrame:
-    """A CPU-bound Python stage over a SMALL input (one parquet file =
-    one split) would otherwise run on a single core — measured 4.7 s
-    single-task vs ~0.4 s spread for sf0.1 minhash signatures.
-    Round-robin repartition up to defaultParallelism; inputs that are
-    already at least that parallel pass through untouched (at real
-    scale the scan has thousands of splits and this is a no-op)."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
-        return df
-    return df.repartition(target)
+    return spread(df.select(id_col, text_col)).mapInPandas(run, schema)
 
 
 def propagate_min_ids(
@@ -897,7 +886,7 @@ def simhash_signatures(
                                             token_hash)}
             )
 
-    return _spread_cpu_stage(df.select(id_col, text_col)).mapInPandas(run, schema)
+    return spread(df.select(id_col, text_col)).mapInPandas(run, schema)
 
 
 def simhash_dedup(
@@ -1278,7 +1267,7 @@ def hamming64_dedup_incremental(
         .persist()  # TWO consumers (the residue anti-join and the
         # final union) — without the cache the exploded band join, the
         # operator's dominant cost, runs twice; narrow (id, hash, rep)
-        # rows, leak-until-evict (the pack_batches policy)
+        # rows, leak-until-evict (the _prims.global_rank policy)
     )
     resid = new.join(
         matched.select(F.col(id_col).alias("__mid")),
@@ -1417,7 +1406,7 @@ def dedup_substrings(
             yield pd.DataFrame({id_col: ids, "pos": poss, "__d": ds})
 
     grams = (
-        _spread_cpu_stage(df.select(id_col, text_col))
+        spread(df.select(id_col, text_col))
         .mapInPandas(gram_rows, gram_schema)
         .persist()
     )

@@ -25,6 +25,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from .._prims import spread
+
 logger = logging.getLogger(__name__)
 
 
@@ -208,12 +210,10 @@ def knn_join(
             }
         )
 
-    from .dedup import _spread_cpu_stage
-
     c = corpus.select(
         F.col(corpus_id), F.col(vec_col).cast("array<double>").alias("__cv")
     )
-    cand = _spread_cpu_stage(c).mapInPandas(local_topk, cand_schema)
+    cand = spread(c).mapInPandas(local_topk, cand_schema)
     order = (
         [F.col("score").asc(), F.col(corpus_id).asc()]
         if asc
@@ -1481,8 +1481,6 @@ def knn_label_spread(
     then span k rows, the vote groupBy spans <= distinct-label rows
     per query. Zero-norm rows are excluded on both sides (the ANSI
     division rule). Returns (id, pred_label, votes, n_neighbors)."""
-    from .dedup import _spread_cpu_stage
-
     q_rows = (
         unlabeled.select(
             F.col(id_col).alias("__qid"),
@@ -1571,7 +1569,7 @@ def knn_label_spread(
         F.col("__s").desc(), F.col("__cid").asc()
     )
     nn = (
-        _spread_cpu_stage(c)
+        spread(c)
         .mapInPandas(local_topk, cand_schema)
         .withColumn("__r", F.row_number().over(w))
         .filter(F.col("__r") <= int(k))
@@ -1653,8 +1651,6 @@ def dim_truncation_recall(
     sf1.0) with ~0.5 GFLOP of BLAS. Gallery rows with NULL/mismatched
     vectors never rank (the old plan's NULL dots ordered last).
     Returns (q_id, n_overlap, k)."""
-    from .dedup import _spread_cpu_stage
-
     spark = queries.sparkSession
     id_type = queries.schema[id_col].dataType
     q_rows = queries.select(id_col, vec_col).collect()
@@ -1739,7 +1735,7 @@ def dim_truncation_recall(
             }
         )
 
-    cand = _spread_cpu_stage(gallery.select(id_col, vec_col)).mapInPandas(
+    cand = spread(gallery.select(id_col, vec_col)).mapInPandas(
         local_topk, cand_schema
     )
     wf = Window.partitionBy("q_id").orderBy(

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .._prims import spread
+
 # minimal public stopword lists (top function words per language)
 STOPWORDS = {
     "en": ["the", "and", "of", "to", "in", "is", "that", "it", "was", "for"],
@@ -133,9 +135,7 @@ def analyze_documents(df: DataFrame, text_col: str = "text") -> DataFrame:
                 o[k] = pd.Series(v, index=b.index, dtype="object")
             yield o[names]
 
-    from .dedup import _spread_cpu_stage
-
-    base = _spread_cpu_stage(df).mapInPandas(counts, out_schema)
+    base = spread(df).mapInPandas(counts, out_schema)
     stop = F.col("__ad_hits") / F.greatest(F.col("__ad_nraw"), F.lit(1))
     punct = F.col("__ad_npq") / F.greatest(F.length(t), F.lit(1))
     len_score = F.least(F.col("n_tokens") / F.lit(100.0), F.lit(1.0))
@@ -264,9 +264,7 @@ def redact_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
             o["text_redacted"] = redacted
             yield o[names]
 
-    from .dedup import _spread_cpu_stage
-
-    return _spread_cpu_stage(df).mapInPandas(redact, out_schema)
+    return spread(df).mapInPandas(redact, out_schema)
 
 
 def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -348,9 +346,7 @@ def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
             o["__rs_ng"] = pd.Series(ng_l, index=b.index, dtype="object")
             yield o[names]
 
-    from .dedup import _spread_cpu_stage
-
-    with_counts = _spread_cpu_stage(df).mapInPandas(counts, out_schema)
+    with_counts = spread(df).mapInPandas(counts, out_schema)
     n = F.col("__rs_n")
     nl = F.col("__rs_nl")
     dup_token_frac = F.when(n == 0, F.lit(0.0)).otherwise(
@@ -612,9 +608,7 @@ def hash_embed(
                 cnts.append(c)
             yield pd.DataFrame({id_col: ids, "__cnts": cnts})
 
-    from .dedup import _spread_cpu_stage
-
-    vecs = _spread_cpu_stage(df.select(id_col, text_col)).mapInPandas(
+    vecs = spread(df.select(id_col, text_col)).mapInPandas(
         bucket_counts, cnt_schema
     )
     v = F.transform(F.col("__cnts"), lambda x: x.cast("double"))

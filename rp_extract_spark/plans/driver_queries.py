@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .._prims import spread
 from ..operators.asof import asof_join
 from ..operators.classes import label_encode, prune_min_instances
 from ..operators.similarity import topk_similar
@@ -28,16 +29,6 @@ from ..operators.windows import forward_fill, lag_lead_stack, sessionize
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Round-robin a one-split scan across cores before a CPU-bound
-    Python stage — one parquet file is one task otherwise (the
-    _spread_cpu_stage lesson; round 6 applied it to the audio clip
-    synthesis stages, which ran single-core)."""
-    from ..operators.dedup import _spread_cpu_stage
-
-    return _spread_cpu_stage(df)
 
 
 # ---------------------------------------------------------------- aggs
@@ -1530,7 +1521,7 @@ def q_audio_roundtrip(spark, sf):
                 }
             )
 
-    clips = _spread(e.select("vec_id", "embedding")).mapInPandas(
+    clips = spread(e.select("vec_id", "embedding")).mapInPandas(
         gen, "clip_id string, bytes binary"
     )
     out = analyze_audio(clips)
@@ -2414,7 +2405,7 @@ def q_svm_classify(spark, sf):
     model = load_reference_model(_GTZAN_BASENAME)
     # one parquet file = one split: spread so the 228-dim feature
     # synthesis + Arrow scoring stage runs on every core (round 6)
-    docs = _spread(_t(spark, sf, "documents").select("doc_id"))
+    docs = spread(_t(spark, sf, "documents").select("doc_id"))
     j = F.sequence(F.lit(0), F.lit(227))
     feat = docs.withColumn(
         "features",
@@ -2865,7 +2856,7 @@ def q_chunk_documents(spark, sf):
     generate_series + list slicing."""
     from ..operators.curation import chunk_documents
 
-    d = _spread(_t(spark, sf, "documents"))  # 1-split scan (round 6)
+    d = spread(_t(spark, sf, "documents"))  # 1-split scan (round 6)
     return chunk_documents(d, chunk_size=40, overlap=8).orderBy(
         "doc_id", "chunk_idx"
     )
@@ -3409,7 +3400,7 @@ def q_flac_decode(spark, sf):
                 }
             )
 
-    clips = _spread(e.select("vec_id", "embedding")).mapInPandas(
+    clips = spread(e.select("vec_id", "embedding")).mapInPandas(
         gen, "clip_id string, bytes binary"
     )
     out = analyze_audio(clips)
@@ -4789,7 +4780,7 @@ def q_audio_quality_gate(spark, sf):
                 blobs.append(encode_wav(a, 8000, samplewidth=4))
             yield pd.DataFrame({"clip_id": ids, "bytes": blobs})
 
-    clips = _spread(e.select("vec_id", "embedding")).mapInPandas(
+    clips = spread(e.select("vec_id", "embedding")).mapInPandas(
         gen, "clip_id string, bytes binary"
     )
     g = quality_gate_audio(clips)
@@ -6361,7 +6352,7 @@ def q_span_corruption(spark, sf):
     the exact mask set."""
     from ..operators.text import span_corruption_plan
 
-    d = _spread(_t(spark, sf, "documents"))  # 1-split scan (round 6)
+    d = spread(_t(spark, sf, "documents"))  # 1-split scan (round 6)
     return span_corruption_plan(d, "text", "doc_id", span=3,
                                 mask_num=15, mask_den=100,
                                 seed=9).orderBy("doc_id")
@@ -7267,7 +7258,7 @@ def q_mlm_plan(spark, sf):
     masked-char sums witness the exact mask set."""
     from ..operators.text import mlm_mask_plan
 
-    d = _spread(_t(spark, sf, "documents"))  # 1-split scan (round 6)
+    d = spread(_t(spark, sf, "documents"))  # 1-split scan (round 6)
     return mlm_mask_plan(d, "text", "doc_id", seed=11).orderBy("doc_id")
 
 
@@ -7682,7 +7673,7 @@ def q_coreset(spark, sf):
     ties break by id on both engines."""
     from ..operators.similarity import coreset_kcenter
 
-    e = _spread(_t(spark, sf, "embeddings"))  # 1-split scan; each of
+    e = spread(_t(spark, sf, "embeddings"))  # 1-split scan; each of
     # the k argmax rounds re-scans it (round 6)
     return coreset_kcenter(e, k=6).orderBy("rank")
 
@@ -8363,7 +8354,7 @@ def q_mmr_select(spark, sf):
     (objective DESC, id ASC) tiebreak."""
     from ..operators.similarity import mmr_select
 
-    e = _spread(_t(spark, sf, "embeddings"))  # 1-split scan; each
+    e = spread(_t(spark, sf, "embeddings"))  # 1-split scan; each
     # MMR pick re-scans it (round 6)
     key = F.md5(F.concat(F.col("vec_id").cast("string"), F.lit(":mmr")))
     scored = e.withColumn(
@@ -9156,7 +9147,7 @@ def q_audio_dedup(spark, sf):
                 blobs.append(encode_wav(p, 8000, samplewidth=4))
             yield pd.DataFrame({"clip_id": ids, "bytes": blobs})
 
-    clips = _spread(e.select("vec_id", "embedding")).mapInPandas(
+    clips = spread(e.select("vec_id", "embedding")).mapInPandas(
         gen, "clip_id string, bytes binary"
     )
     out = audio_dedup(clips, max_hamming=2)
@@ -9818,7 +9809,7 @@ def q_normalize_text(spark, sf):
     from ..operators.text import normalize_text
 
     d = _t(spark, sf, "documents")
-    noisy = _spread(d).select(
+    noisy = spread(d).select(
         "doc_id", F.expr(_NOISY_TEXT_SQL.format(CHR="char")).alias("text")
     )  # 1-split scan: the 6 regex passes ran on ~2 cores (round 6)
     return normalize_text(noisy).orderBy("doc_id")

@@ -20,6 +20,13 @@ from pyspark.sql import SparkSession
 ARROW_BATCH_ROWS = 1024
 
 
+def _default_driver_memory() -> str:
+    """24g, capped at half the host's physical RAM (local mode runs
+    every executor inside the driver JVM)."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(24 << 10, ram_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "rp_extract_spark",
     cores: int | None = None,
@@ -47,7 +54,8 @@ def get_spark(
         .config(
             "spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS)
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra or {}).items():

@@ -24,8 +24,7 @@ def _docs(spark, n=100, seed=11):
 
 def test_pack_sequences_matches_serial_cumsum(spark):
     d = _docs(spark)
-    out = {r.doc_id: r for r in pack_sequences(d, budget=64,
-                                               num_partitions=4).collect()}
+    out = {r.doc_id: r for r in pack_sequences(d, budget=64).collect()}
     toks = {r.doc_id: r.n_tokens for r in d.select(
         "doc_id", F.when(F.length(F.trim("text")) == 0, 0)
         .otherwise(F.size(F.split(F.lower(F.trim("text")), r"\s+")))
@@ -42,7 +41,7 @@ def test_pack_sequences_no_global_window(spark):
     """The prefix sum must not funnel the corpus through one task: the
     only single-partition window runs over the P-row partition sums."""
     d = _docs(spark, n=200)
-    out = pack_sequences(d, budget=128, num_partitions=8)
+    out = pack_sequences(d, budget=128)
     plan = out._jdf.queryExecution().executedPlan().toString()
     # the data window is partitioned by the partition id
     assert "__pid" in plan
@@ -53,9 +52,9 @@ def test_pack_sequences_no_global_window(spark):
 def test_pack_sequences_partition_count_invariant(spark):
     d = _docs(spark, n=150, seed=3)
     a = {(r.doc_id, r.start_offset, r.seq_id)
-         for r in pack_sequences(d, budget=100, num_partitions=2).collect()}
+         for r in pack_sequences(d.coalesce(1), budget=100).collect()}
     b = {(r.doc_id, r.start_offset, r.seq_id)
-         for r in pack_sequences(d, budget=100, num_partitions=13).collect()}
+         for r in pack_sequences(d.repartition(13), budget=100).collect()}
     assert a == b
 
 
@@ -109,10 +108,8 @@ def test_sequences_table_members_in_stream_order(spark):
     from rp_extract_spark.operators.curation import sequences_table
 
     d = _docs(spark, n=60, seed=5)
-    rows = {r.seq_id: r for r in sequences_table(d, budget=100,
-                                                 num_partitions=5).collect()}
-    packed = {r.doc_id: r for r in pack_sequences(d, budget=100,
-                                                  num_partitions=5).collect()}
+    rows = {r.seq_id: r for r in sequences_table(d, budget=100).collect()}
+    packed = {r.doc_id: r for r in pack_sequences(d, budget=100).collect()}
     # members listed in stream (offset) order; totals add up
     for seq_id, r in rows.items():
         offs = [packed[i].start_offset for i in r.doc_ids]

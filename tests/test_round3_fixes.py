@@ -336,7 +336,7 @@ def test_pack_sequences_duplicate_ids_do_not_overlap(spark):
     rows = [("a", "w1 w2 w3"), ("a", "u1 u2"), ("b", "v1"),
             ("b", "x1 x2 x3 x4")]
     df = spark.createDataFrame(rows, "doc_id string, text string")
-    out = pack_sequences(df, budget=4, num_partitions=2).collect()
+    out = pack_sequences(df, budget=4).collect()
     spans = sorted((r.start_offset, r.n_tokens) for r in out)
     pos = 0
     for start, n in spans:

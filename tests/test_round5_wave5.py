@@ -414,18 +414,42 @@ def test_repeat_factor_boundary_is_integer_decided(spark):
     assert reps["b"] == 2  # 40/30 = 1.33, ceil-sqrt = 2
 
 
-def test_pack_batches_small_path_equals_two_level(spark):
+def test_null_group_ranks_as_one_group(spark):
+    """A NULL bucket / label is one group, as SQL PARTITION BY makes it,
+    whatever the input partitioning."""
+    from pyspark.sql.window import Window
+
+    from rp_extract_spark.operators.curation import stratified_split
+
     df = spark.createDataFrame(
-        [(f"d{i:02d}", i % 3) for i in range(23)], "id string, bk int"
+        [(f"d{i:02d}", None if i < 14 else i % 3) for i in range(40)],
+        "id string, bk int",
     )
-    fast = pack_batches(
-        df, ("bk",), "id", batch_size=4, seed=9, epoch=2, two_level=False
-    ).collect()
-    full = pack_batches(
-        df, ("bk",), "id", batch_size=4, seed=9, epoch=2, two_level=True
-    ).collect()
     key = lambda r: (r["id"], r["bk"], r["batch_idx"], r["slot"])  # noqa: E731
-    assert sorted(map(key, fast)) == sorted(map(key, full))
-    # auto mode picks SOMETHING correct on a toy input
-    auto = pack_batches(df, ("bk",), "id", batch_size=4, seed=9, epoch=2)
-    assert sorted(map(key, auto.collect())) == sorted(map(key, full))
+    narrow, wide = (
+        sorted(map(key, pack_batches(d, ("bk",), "id", batch_size=4,
+                                     seed=9, epoch=2).collect()),
+               key=repr)
+        for d in (df.coalesce(1), df.repartition(8))
+    )
+    assert narrow == wide
+    # 14 NULL-bucket rows pack into 3 full batches of 4
+    assert sorted((b, s) for _, bk, b, s in narrow if bk is None) == [
+        (b, s) for b in range(3) for s in range(4)
+    ]
+
+    lab = spark.createDataFrame(
+        [(i, None if i < 10 else i % 3) for i in range(40)],
+        "vec_id long, label int",
+    )
+    w = Window.partitionBy("label")
+    rn, n = F.row_number().over(w.orderBy("vec_id")), F.count("*").over(w)
+    want = lab.select(
+        "vec_id",
+        F.when(rn <= F.floor(n * 0.8), "train")
+        .when(rn <= F.floor(n * 0.9), "val")
+        .otherwise("test").alias("split"),
+    )
+    got = stratified_split(lab).select("vec_id", "split").collect()
+    assert len(got) == 40
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want.collect()))

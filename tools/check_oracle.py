@@ -72,8 +72,10 @@ def main():
     import __spark_entry__ as entrymod
     from rp_extract_spark.session import get_spark
 
+    # no console progress bar: it shares lines with the PASS/FAIL output
     spark = get_spark("check-oracle", cores=args.cores,
-                      extra={"spark.driver.memory": "16g"})
+                      extra={"spark.driver.memory": "16g",
+                             "spark.ui.showConsoleProgress": "false"})
     con = duckdb.connect()
     for t in TABLES:
         p = f"{args.sf}/{t}.parquet"
