@@ -9,8 +9,8 @@ corpus curation.
 Scale notes: signatures are computed in one Arrow-batched pandas UDF
 pass (vectorized numpy per batch); candidate generation is a single
 explode + shuffle on (band, bucket); representative election is the
-classic min-id propagation (one groupBy + one self-join), avoiding any
-driver-side pair materialization.
+classic min-id propagation over the verified edge set, replayed on the
+driver while the edge set is small (propagate_min_ids).
 """
 
 from __future__ import annotations
@@ -32,9 +32,10 @@ logger = logging.getLogger(__name__)
 # Mersenne prime field 2^61-1 for universal hashing
 _MERSENNE = (1 << 61) - 1
 
-# propagate_min_ids: below this edge count the pre-partitioned persisted
-# edge copies cost more (pinned partition width defeats AQE coalescing)
-# than the per-round shuffles they avoid
+# propagate_min_ids: below this edge count the edges are collected once
+# and the rounds replay in numpy on the driver (each distributed round
+# is ~14 small jobs of fixed latency); at or above it they stay on the
+# cluster as two persisted copies pre-partitioned by id and by bucket
 _BIG_EDGE_THRESHOLD = 2_000_000
 
 
@@ -546,42 +547,50 @@ def propagate_min_ids(
     graph by iterated min-label propagation: every id converges to the
     smallest id in its component (= transitive duplicate group).
 
-    Per-round fixed cost is kept minimal — this loop is the only
-    serial (driver-coordinated) part of the dedup pipeline, so at high
-    parallelism its stage latency bounds scaling efficiency:
+    The algorithm: labels are seeded with the one-hop bucket-min (min
+    id per bucket, then min over an id's buckets); each round takes
+    the bucket-min hop over the current labels, then one pointer
+    halving (rep := label(rep)), which contracts chains geometrically.
+    Converges in O(log(component diameter)) rounds — duplicate chains
+    A~B~C with no shared bucket for (A, C) land in one group, which
+    one-hop election cannot do. Stops early when a round changes no
+    label and logs each round's change count; after ``max_iters``
+    rounds without convergence it logs a WARNING and returns the
+    refinement reached (``max_iters=0`` is the one-hop seed alone).
 
-    - the edge set is checkpointed once, and — when it is LARGE —
-      additionally persisted TWICE pre-partitioned by id and by
-      bucket, so per-round joins/aggs on the edge side reuse the
-      cached exchange with zero new shuffle (InMemoryRelation
-      preserves outputPartitioning; localCheckpoint does NOT through
-      the Python API — verified via explain). 2x edge storage is the
-      explicit trade for the per-round edge shuffles. For SMALL edge
-      sets the pre-partitioned copies are skipped: their pinned
-      partition count defeats AQE's partition coalescing and every
-      tiny stage pays full-width task launch (measured 3x slower at
-      sf0.1), while AQE-coalesced re-shuffles of a small checkpoint
-      are nearly free;
-    - labels are seeded with the one-hop bucket-min (round 0 needs no
-      join against identity labels);
-    - the convergence count is a scan of the already-checkpointed
-      round result carrying its previous label (no extra shuffle join
-      per round).
+    The edge set is checkpointed once; one aggregate over it counts the
+    edges and rejects NULL ids (``ValueError``). Edges in a NULL bucket
+    join nothing, so an id seen only in NULL buckets gets no label.
 
-    Labels are localCheckpoint'ed per round so iteration i+1's plan
-    does not re-execute iteration i. Converges in
-    O(log(component diameter)) rounds — duplicate chains A~B~C with no
-    shared bucket for (A, C) land in one group, which one-hop election
-    cannot do. Stops early when a round changes no label; logs
-    per-round change counts (the loop is data-dependent, so the action
-    per round is inherent)."""
+    - Below ``_BIG_EDGE_THRESHOLD`` edges the checkpoint is collected
+      once through Arrow (int64 ids stay exact) and the same rounds
+      replay in numpy on the driver, with the same per-round log lines
+      and the same stopping rule. A distributed round is ~14 small
+      jobs whose fixed latency dwarfs the work on such inputs.
+    - At or above it the edges stay on the cluster, persisted TWICE
+      pre-partitioned by id and by bucket, so per-round joins/aggs on
+      the edge side reuse the cached exchange with zero new shuffle
+      (InMemoryRelation preserves outputPartitioning; localCheckpoint
+      does NOT through the Python API — verified via explain). Labels
+      are localCheckpoint'ed per round so iteration i+1's plan does
+      not re-execute iteration i, and the convergence count scans the
+      checkpointed round result carrying its previous label.
+
+    Returns (id, rep_id) with the input's id type and nullability;
+    ``rep_id`` has the same type and is nullable."""
     e = edges.select(F.col(id_col).alias("__id"),
                      F.col(bucket_col).alias("__bk")).localCheckpoint()
-    if e.count() >= _BIG_EDGE_THRESHOLD:
-        e_by_id = e.repartition("__id").persist()
-        e_by_bk = e_by_id.repartition("__bk").persist()
-    else:
-        e_by_id = e_by_bk = e
+    n_edges, n_null = e.agg(
+        F.count(F.lit(1)), F.count_if(F.col("__id").isNull())
+    ).first()
+    if n_null:
+        raise ValueError(
+            f"propagate_min_ids: {n_null} edge(s) have a NULL {id_col!r}"
+        )
+    if n_edges < _BIG_EDGE_THRESHOLD:
+        return _propagate_on_driver(e, id_col, max_iters)
+    e_by_id = e.repartition("__id").persist()
+    e_by_bk = e_by_id.repartition("__bk").persist()
     # seed = one hop: min id per bucket, then min over an id's buckets
     # (every id is a member of its own buckets, so seed <= id)
     labels = (
@@ -592,7 +601,9 @@ def propagate_min_ids(
         .agg(F.min("__bmin").alias("rep_id"))
         .localCheckpoint()
     )
-    for it in range(max_iters):
+
+    def round_() -> int:
+        nonlocal labels
         bucket_min = (
             e_by_id.join(labels, "__id")
             .groupBy("__bk")
@@ -622,24 +633,88 @@ def propagate_min_ids(
             .select("__id", "__old", F.coalesce("__rep2", "rep_id").alias("rep_id"))
             .localCheckpoint()
         )
-        changed = new_labels.filter(F.col("rep_id") != F.col("__old")).count()
         labels = new_labels.drop("__old")
-        logger.info("propagate_min_ids round %d: %d labels changed", it + 1, changed)
-        if changed == 0:
-            break
-    else:
-        if max_iters > 0:  # max_iters=0 is the documented one-hop mode
-            logger.warning(
-                "propagate_min_ids: not converged after %d rounds (deep dup "
-                "chain); labels are a refinement of the true components",
-                max_iters,
-            )
-    # labels is checkpointed (materialized, lineage-free), so the
-    # cached edge copies can be released before returning
-    if e_by_id is not e:
+        return new_labels.filter(F.col("rep_id") != F.col("__old")).count()
+
+    try:
+        _min_id_rounds(round_, max_iters)
+    finally:
+        # labels is checkpointed (materialized, lineage-free), so the
+        # cached edge copies can be released before returning
         e_by_id.unpersist()
         e_by_bk.unpersist()
     return labels.select(F.col("__id").alias(id_col), "rep_id")
+
+
+def _min_id_rounds(round_, max_iters: int) -> None:
+    """The propagate_min_ids round loop shared by both paths: run
+    ``round_`` (returns the labels it changed) until a round changes
+    none, logging every round; WARNING when ``max_iters`` rounds did
+    not converge (``max_iters=0`` is the documented one-hop mode)."""
+    for it in range(max_iters):
+        changed = round_()
+        logger.info("propagate_min_ids round %d: %d labels changed", it + 1, changed)
+        if changed == 0:
+            return
+    if max_iters > 0:
+        logger.warning(
+            "propagate_min_ids: not converged after %d rounds (deep dup "
+            "chain); labels are a refinement of the true components",
+            max_iters,
+        )
+
+
+def _propagate_on_driver(e: DataFrame, id_col: str, max_iters: int) -> DataFrame:
+    """propagate_min_ids on a collected (__id, __bk) edge set: the same
+    seed, rounds, log lines and stopping rule, in numpy. Ids and
+    buckets become dense codes (ids in sort order, so a min over codes
+    is a min over ids) and each bucket-min hop is two segmented
+    ``np.minimum.reduceat`` passes over edges pre-sorted by bucket and
+    by id."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    f = e.schema["__id"]
+    t = e.filter(F.col("__bk").isNotNull()).toArrow()
+    uniq = pc.unique(t.column("__id"))
+    uniq = uniq.take(pc.sort_indices(uniq))
+    idc = pc.index_in(t.column("__id"), value_set=uniq).to_numpy()
+    bkc = pc.index_in(t.column("__bk"), value_set=pc.unique(t.column("__bk"))).to_numpy()
+    by_bk, by_id = np.argsort(bkc, kind="stable"), np.argsort(idc, kind="stable")
+    id_by_bk, bk_by_id = idc[by_bk], bkc[by_id]
+
+    def starts(sorted_codes: np.ndarray) -> np.ndarray:
+        return np.flatnonzero(np.diff(sorted_codes, prepend=-1))
+
+    bk_starts, id_starts = starts(bkc[by_bk]), starts(idc[by_id])
+
+    def hop(lab: np.ndarray) -> np.ndarray:
+        """min over an id's buckets of each bucket's min label (<= lab:
+        every id is a member of its own buckets)."""
+        bmin = np.minimum.reduceat(lab[id_by_bk], bk_starts)
+        return np.minimum.reduceat(bmin[bk_by_id], id_starts)
+
+    labels = hop(np.arange(len(uniq)))
+
+    def round_() -> int:
+        nonlocal labels
+        hopped = hop(labels)
+        new = hopped[hopped]  # pointer halving
+        changed = int(np.count_nonzero(new != labels))
+        labels = new
+        return changed
+
+    _min_id_rounds(round_, max_iters)
+    out = pa.table({id_col: uniq, "rep_id": uniq.take(pa.array(labels))})
+    schema = T.StructType([
+        T.StructField(id_col, f.dataType, f.nullable),
+        T.StructField("rep_id", f.dataType, True),
+    ])
+    spark = e.sparkSession
+    # one Arrow batch per partition: cap the width at the core count
+    return spark.createDataFrame(out, schema).coalesce(
+        spark.sparkContext.defaultParallelism
+    )
 
 
 def banded_signatures(
@@ -717,18 +792,48 @@ def minhash_lsh_dedup(
     # Jaccard >= threshold filters out LSH false positives BEFORE the
     # component merge — the standard candidates->verify->union-find
     # near-dup pipeline (verification cost is per candidate pair only).
-    # Hot-bucket cap: a degenerate bucket (e.g. a 100k-member exact-
-    # duplicate group — precisely what dedup exists to find) must not
-    # build an O(n^2) all-pairs join. All-pairs only among the first
-    # ``max_bucket_size`` ids per (band, bucket); every OVERFLOW member
-    # gets TWO linear star edges instead — to the bucket's min-id
-    # member (rank 1) and to the LAST in-cap member (rank = cap) — so
-    # true duplicates beyond the cap still verify and merge even when
-    # the bucket min is a lower-id NON-duplicate LSH collider (in a
-    # dup-dominated bucket the cap'th member is almost surely a group
-    # member). Candidate count stays O(n * cap) per bucket. Recall is
-    # heuristic, not guaranteed: a bucket whose first ``cap`` ids are
-    # ALL colliders can still strand overflow duplicates.
+    # Three caches, each read by two or more consumers: the banded
+    # signatures (colliding-bucket count, ranked head, star anchors —
+    # the signature UDF would otherwise run once per consumer), the
+    # candidate pairs (gram prune + pair join) and the candidate grams
+    # (both pair sides). propagate_min_ids materializes its labels, so
+    # all three are released before returning.
+    cached = [banded.persist()]
+    try:
+        cand = _lsh_candidates(banded, id_col, max_bucket_size).persist()
+        cached.append(cand)
+        g = _candidate_grams(df, cand, text_col, id_col, jaccard_n).persist()
+        cached.append(g)
+        verified = _pair_jaccard(cand, g, id_col).filter(
+            F.col("jaccard") >= verify_jaccard
+        )
+        edges = verified.select(
+            F.explode(F.array("id_a", "id_b")).alias(id_col),
+            F.xxhash64("id_a", "id_b").alias("__bk"),
+        ).unionByName(
+            df.select(F.col(id_col), F.xxhash64(id_col, F.lit(-1)).alias("__bk"))
+        )  # singletons keep themselves
+        return propagate_min_ids(edges, id_col, "__bk", max_iters=max_iters)
+    finally:
+        for c in reversed(cached):
+            c.unpersist()
+
+
+def _lsh_candidates(banded: DataFrame, id_col: str, max_bucket_size: int) -> DataFrame:
+    """Candidate pairs (id_a > id_b) sharing a (band, bucket).
+
+    Hot-bucket cap: a degenerate bucket (e.g. a 100k-member exact-
+    duplicate group — precisely what dedup exists to find) must not
+    build an O(n^2) all-pairs join. All-pairs only among the first
+    ``max_bucket_size`` ids per (band, bucket); every OVERFLOW member
+    gets TWO linear star edges instead — to the bucket's min-id member
+    (rank 1) and to the LAST in-cap member (rank = cap) — so true
+    duplicates beyond the cap still verify and merge even when the
+    bucket min is a lower-id NON-duplicate LSH collider (in a
+    dup-dominated bucket the cap'th member is almost surely a group
+    member). Candidate count stays O(n * cap) per bucket. Recall is
+    heuristic, not guaranteed: a bucket whose first ``cap`` ids are
+    ALL colliders can still strand overflow duplicates."""
     from pyspark.sql.window import Window
 
     # singleton buckets can never produce a pair (the all-pairs join
@@ -755,7 +860,7 @@ def minhash_lsh_dedup(
         .join(anchors, ["band", "bucket"])
         .select(F.col(id_col).alias("id_a"), "id_b")
     )
-    cand = (
+    return (
         head.alias("a")
         .join(head.alias("b"), ["band", "bucket"])
         .filter(F.col(f"a.{id_col}") > F.col(f"b.{id_col}"))
@@ -764,25 +869,7 @@ def minhash_lsh_dedup(
         )
         .unionByName(star)
         .distinct()
-        # two consumers inside ngram_jaccard (candidate-id semi-join
-        # prune + the pair join) — regenerating candidates costs a
-        # window + self-join; bounded at O(n * cap) rows
-        .persist()
     )
-    verified = ngram_jaccard(df, cand, text_col, id_col, n=jaccard_n).filter(
-        F.col("jaccard") >= verify_jaccard
-    )
-    edge_bk = F.xxhash64("id_a", "id_b")
-    edges = (
-        verified.select(F.col("id_a").alias(id_col), edge_bk.alias("__bk"))
-        .unionByName(
-            verified.select(F.col("id_b").alias(id_col), edge_bk.alias("__bk"))
-        )
-        .unionByName(
-            df.select(F.col(id_col), F.xxhash64(id_col, F.lit(-1)).alias("__bk"))
-        )  # singletons keep themselves
-    )
-    return propagate_min_ids(edges, id_col, "__bk", max_iters=max_iters)
 
 
 def _mix64(h: np.ndarray) -> np.ndarray:
@@ -1056,12 +1143,22 @@ def ngram_jaccard(
     """Exact word-n-gram Jaccard for candidate pairs (id_a, id_b) —
     the verification stage after LSH candidate generation. JVM-side:
     ngrams via transform over token sequence, intersection/union via
-    array functions. Gram arrays are built ONLY for documents that
-    appear in a candidate pair (semi-join prune — round 6): the gram
-    HOF is the expensive step and candidates are a tiny fraction of
-    the corpus, so computing grams corpus-wide burned ~the whole
-    verify budget (33.9s of the 40.7s minhash_dedup_verified wall at
-    sf1.0 was corpus-wide gram construction for 2.6k pairs)."""
+    array functions. One row per input pair whose two documents exist
+    (duplicate pairs give duplicate rows)."""
+    return _pair_jaccard(pairs, _candidate_grams(df, pairs, text_col, id_col, n), id_col)
+
+
+def _candidate_grams(
+    df: DataFrame, pairs: DataFrame, text_col: str, id_col: str, n: int
+) -> DataFrame:
+    """(id, distinct word-n-gram array) for the documents named in
+    ``pairs``. Built ONLY for documents that appear in a candidate pair
+    (semi-join prune — round 6): the gram HOF is the expensive step and
+    candidates are a tiny fraction of the corpus, so computing grams
+    corpus-wide burned ~the whole verify budget (33.9s of the 40.7s
+    minhash_dedup_verified wall at sf1.0 was corpus-wide gram
+    construction for 2.6k pairs). The HOF runs after ``_prims.spread``:
+    a one-split input would otherwise build every array in one task."""
     toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
     grams = F.array_distinct(
         F.transform(
@@ -1069,19 +1166,21 @@ def ngram_jaccard(
             lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
         )
     )
-    ids = (
-        pairs.select(F.col("id_a").alias(id_col))
-        .unionByName(pairs.select(F.col("id_b").alias(id_col)))
-        .distinct()
+    ids = pairs.select(F.explode(F.array("id_a", "id_b")).alias(id_col)).distinct()
+    return (
+        spread(df.select(id_col, text_col))
+        .join(ids, id_col, "left_semi")
+        .select(F.col(id_col), grams.alias("grams"))
     )
-    g = df.join(ids, id_col, "left_semi").select(
-        F.col(id_col), grams.alias("grams")
-    )
-    a = pairs.join(g.withColumnRenamed(id_col, "id_a"), "id_a").withColumnRenamed(
-        "grams", "grams_a"
-    )
-    ab = a.join(g.withColumnRenamed(id_col, "id_b"), "id_b").withColumnRenamed(
-        "grams", "grams_b"
+
+
+def _pair_jaccard(pairs: DataFrame, g: DataFrame, id_col: str) -> DataFrame:
+    """(id_a, id_b, jaccard) from the ``_candidate_grams`` table ``g``,
+    which both pair sides read."""
+    ab = pairs.join(
+        g.select(F.col(id_col).alias("id_a"), F.col("grams").alias("grams_a")), "id_a"
+    ).join(
+        g.select(F.col(id_col).alias("id_b"), F.col("grams").alias("grams_b")), "id_b"
     )
     inter = F.size(F.array_intersect("grams_a", "grams_b"))
     union = F.size(F.array_union("grams_a", "grams_b"))
