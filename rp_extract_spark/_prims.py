@@ -8,6 +8,11 @@
 - ``global_rank``: exact ordered positions and running sums without a
   global window (segment positions, batch and shard offsets).
 - ``spread``: round-robin a one-split input before a CPU-bound stage.
+- ``collect_bounded``: a driver collect of a side assumed small, with
+  one cap.
+- ``broadcast_topk``: exact per-query top-k of a small query side
+  against a corpus — the collected queries ride the task closure, each
+  task scores its corpus rows with numpy and keeps its local top-k.
 """
 
 from __future__ import annotations
@@ -16,14 +21,21 @@ from collections.abc import Callable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.window import Window
 
 from .codecs import decode_image, to_gray
 
 QUARANTINED = "quarantined row (bytes is NULL)"
+
+# most rows any operator collects to the driver: a kNN query side
+# (which rides every task closure) or a K-row model table
+COLLECT_CAP = 100_000
 
 
 def arrow_stage(
@@ -163,3 +175,133 @@ def spread(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
+
+
+def collect_bounded(df: DataFrame, op: str) -> list[Row]:
+    """``df.collect()`` for a side the caller assumes small. At most
+    ``COLLECT_CAP + 1`` rows reach the driver; holding more than
+    ``COLLECT_CAP`` raises a ``ValueError`` naming ``op`` and the cap
+    instead of exhausting driver memory."""
+    rows = df.limit(COLLECT_CAP + 1).collect()
+    if len(rows) > COLLECT_CAP:
+        raise ValueError(
+            f"{op}: more than {COLLECT_CAP} rows to collect on the driver "
+            f"(_prims.COLLECT_CAP)"
+        )
+    return rows
+
+
+def broadcast_topk(
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    score: Callable[[np.ndarray, np.ndarray], Sequence[np.ndarray]],
+    score_cols: Sequence[str],
+    op: str,
+) -> DataFrame:
+    """Each task's top-``k`` corpus rows per query: the candidate
+    table a caller finishes with its own ``row_number`` window over
+    (score DESC, corpus id ASC), partitioned by query id.
+
+    ``queries`` is (id, vector, *keys) and ``corpus`` is (id, vector,
+    *payload), vectors ``array<double>``. The query side is collected
+    once through ``collect_bounded`` (``op`` names the caller in its
+    error) and rides the task closure: rows with a NULL vector are
+    dropped, the query dimension is the length of the first remaining
+    vector, and rows of another length are dropped. Ids keep their
+    column's type. ``score(c, q)`` maps the task's (rows x dim) corpus
+    matrix and the (queries x dim) query matrix to one (rows x
+    queries) float64 matrix per name in ``score_cols``; higher ranks
+    first. A pair's score must not depend on which other rows share
+    its task: a BLAS GEMM's float bits do (they move with the matrix
+    shape), so float scores use einsum or row-wise sums, and GEMM only
+    where every sum is an exact integer.
+
+    Corpus-row policy, the one every operator on this stage inherits:
+    a row ranks only when its vector is non-NULL and has the query
+    dimension, and a (query, row) pair only when its score is not NaN
+    (cosine against a zero-norm vector, a NULL element) and, for every
+    query key column, the corpus column of the same name is non-NULL
+    on both sides and differs (SQL ``q.key <> c.key``). Other rows
+    and pairs never rank and are never emitted.
+
+    Output: (query id, corpus id, *payload, *score_cols), per task and
+    query the top-``k`` pairs under (score DESC, corpus id ASC, NULL
+    first) for each score column, a pair in several of those sets
+    once. Scores are emitted exactly as compared.
+
+    Why the caller's window over this union is exact: fix a query and
+    a score column, and let T be the true top-k under that order over
+    the whole corpus. A row of T has fewer than k rows ahead of it in
+    the corpus, hence fewer than k in its own task, so it is in its
+    task's local top-k: T is inside the union. Every other union row
+    has all k rows of T ahead of it. So ranking the union by the same
+    order and keeping ranks <= k returns exactly T in order, for any
+    partitioning of the corpus. The task orders ids as Spark does
+    (Arrow's byte order for strings, NULL first) and compares the
+    bits the window sees, so only rows that share both score and id
+    can straddle the cut."""
+    qf, cf = queries.schema.fields, corpus.schema.fields
+    keys = [f.name for f in qf[2:]]
+    schema = T.StructType(
+        [T.StructField(qf[0].name, qf[0].dataType),
+         T.StructField(cf[0].name, cf[0].dataType)]
+        + [T.StructField(f.name, f.dataType) for f in cf[2:]]
+        + [T.StructField(c, T.DoubleType()) for c in score_cols]
+    )
+    rows = [r for r in collect_bounded(queries, op) if r[1] is not None]
+    if not rows:
+        return queries.sparkSession.createDataFrame([], schema)
+    dim = len(rows[0][1])
+    rows = [r for r in rows if len(r[1]) == dim]
+    qm = np.array([r[1] for r in rows], dtype=np.float64)
+    q_ids = pa.array([r[0] for r in rows],
+                     type=to_arrow_type(qf[0].dataType))
+    q_keys = {n: [r[n] for r in rows] for n in keys}
+    nq, kk = len(rows), int(k)
+
+    def local_topk(
+        batches: Iterator[pa.RecordBatch],
+    ) -> Iterator[pa.RecordBatch]:
+        batches = list(batches)
+        if not batches:
+            return
+        t = pa.Table.from_batches(batches)
+        has_dim = pc.equal(pc.list_value_length(t.column(1)), dim)
+        t = t.filter(pc.fill_null(has_dim, False))
+        n = t.num_rows
+        if n == 0:
+            return
+        cols = [c.combine_chunks() for c in t.columns]
+        cm = cols[1].flatten().to_numpy(zero_copy_only=False).reshape(n, dim)
+        id_order = pc.rank(
+            cols[0], sort_keys="ascending", null_placement="at_start",
+            tiebreaker="dense",
+        ).to_numpy()
+        keep = np.ones((n, nq), dtype=bool)
+        for name in keys:
+            codes = pd.factorize(np.array(
+                q_keys[name] + t.column(name).to_pylist(), dtype=object
+            ))[0]
+            qc, cc = codes[:nq], codes[nq:, None]
+            keep &= (cc != qc) & (cc >= 0) & (qc >= 0)
+        mats = score(cm, qm)
+        picks = []
+        for s in mats:
+            ok = keep & ~np.isnan(s)
+            for j in range(nq):
+                r = np.flatnonzero(ok[:, j])
+                top = r[np.lexsort((id_order[r], -s[r, j]))[:kk]]
+                picks.append(j * n + top)
+        pair = np.unique(np.concatenate(picks))
+        if pair.size == 0:
+            return
+        qi, ri = np.divmod(pair, n)
+        yield pa.RecordBatch.from_arrays(
+            [q_ids.take(qi), cols[0].take(ri)]
+            + [c.take(ri) for c in cols[2:]]
+            + [pa.array(s[ri, qi]) for s in mats],
+            names=schema.fieldNames(),
+        )
+
+    return spread(corpus).mapInArrow(local_topk, schema)

@@ -5,9 +5,9 @@ The reference pickles an sklearn SVM; the engine-side equivalents are
 the relational pieces: z-score standardization (classes.zscore), label
 encoding (classes.label_encode), fold assignment, and a
 nearest-centroid model — train = one groupBy producing an element-wise
-mean vector per class (a tiny broadcastable dimension), predict = a
-broadcast cross join + arg-min distance. Everything scales: the model
-is K rows; scoring is one scan with JVM-side arithmetic.
+mean vector per class (a tiny broadcastable dimension), predict = the
+collected K-row model + a per-batch numpy arg-min distance. Everything
+scales: the model is K rows; scoring is one scan.
 """
 
 from __future__ import annotations
@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from .similarity import _dot
+from .._prims import collect_bounded
 
 
 def _sq_dist(a: Column, b: Column) -> Column:
@@ -70,31 +70,35 @@ def predict_centroids(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Nearest-centroid prediction. Round 6: the K-row model is
-    collected and the squared distances computed per Arrow batch with
-    numpy (replacing the crossJoin x K + interpreted HOF distance +
-    per-id rank window — zero shuffle now). The argmin replicates the
-    old (__d ASC, centroid_label ASC) window exactly: centroids are
-    laid out in ascending label order and np.argmin returns the first
-    minimum, so bit-equal distances break to the smallest label;
-    near-tie robustness across summation orders is the same
-    fixture-margin contract the DuckDB oracles already rely on."""
+    """Nearest-centroid prediction: (id, predicted_label, distance),
+    ``predicted_label`` in the type of ``centroid_label``. The K-row
+    model is collected (``_prims.collect_bounded``) and the squared
+    distances computed per Arrow batch with numpy — one scan, zero
+    shuffle. The argmin replicates a (distance ASC, centroid_label ASC)
+    window exactly: centroids are laid out in ascending label order
+    and np.argmin returns the first minimum, so bit-equal distances
+    break to the smallest label; near-tie robustness across summation
+    orders is the fixture-margin contract the DuckDB oracles rely on.
+    Rows whose vector is NULL or not the centroid dimension get no
+    row — the corpus-row policy of ``_prims.broadcast_topk``."""
     import numpy as np
     import pandas as pd
 
-    rows = sorted(centroids.collect(), key=lambda r: r["centroid_label"])
+    rows = sorted(collect_bounded(centroids, "predict_centroids"),
+                  key=lambda r: r["centroid_label"])
     id_type = df.schema[id_col].dataType
     out_schema = T.StructType(
         [
             T.StructField(id_col, id_type),
-            T.StructField("predicted_label", T.StringType()),
+            T.StructField("predicted_label",
+                          centroids.schema["centroid_label"].dataType),
             T.StructField("distance", T.DoubleType()),
         ]
     )
     spark = df.sparkSession
     if not rows:
         return spark.createDataFrame([], out_schema)
-    labels = np.array([r["centroid_label"] for r in rows])
+    labels = np.array([r["centroid_label"] for r in rows], dtype=object)
     cmat = np.array([r["centroid"] for r in rows], dtype=np.float64)
     dim = cmat.shape[1]
 
@@ -320,8 +324,10 @@ def train_logreg_ovr(
     order changes at the float ulp level only — the oracle retrains in
     DuckDB with its own order, so ranks/rounded outputs are
     margin-protected exactly as before. Features are augmented with a
-    constant-1 bias dimension. Returns (class_label, weights) with
-    len(weights) == dim+1."""
+    constant-1 bias dimension. Rows with a NULL vector are skipped; a
+    vector whose length differs from the first row's raises a
+    ``ValueError`` with the count of such rows. Returns (class_label,
+    weights) with len(weights) == dim+1."""
     import numpy as np
     import pandas as pd
 
@@ -342,7 +348,15 @@ def train_logreg_ovr(
         dim = len(first["__v"])
         classes = sorted(r["__y"] for r in pts.select("__y").distinct().collect())
         cindex = {c: i for i, c in enumerate(classes)}
-        n_total = pts.count()
+        n_total, n_ragged = pts.agg(
+            F.count(F.lit(1)),
+            F.count(F.when(F.size("__v") != dim, 1)),
+        ).first()
+        if n_ragged:
+            raise ValueError(
+                f"train_logreg_ovr: {n_ragged} rows have a vector length "
+                f"other than {dim - 1} (the first row's)"
+            )
         weights = np.zeros((len(classes), dim))
         eye = np.eye(len(classes))
         for _ in range(iters):
@@ -391,17 +405,19 @@ def predict_logreg(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Arg-max OvR score (w.x with the bias dimension appended), with
-    a deterministic class-label tiebreak. Round 6: the K-row model is
-    collected and scoring is one Arrow-batched BLAS pass per task —
-    one scan, ZERO shuffle (replaces the crossJoin x classes + HOF
-    fold + per-id rank window). The argmax replicates the old
+    a deterministic class-label tiebreak. The K-row model is collected
+    (``_prims.collect_bounded``) and scoring is one Arrow-batched BLAS
+    pass per task — one scan, zero shuffle. The argmax replicates a
     (score DESC, class_label ASC) window exactly: classes are laid out
     in ascending label order and np.argmax returns the first maximum,
-    so bit-equal score ties break to the smallest label."""
+    so bit-equal score ties break to the smallest label. Rows whose
+    vector is NULL or not the model dimension get no row — the
+    corpus-row policy of ``_prims.broadcast_topk``."""
     import numpy as np
     import pandas as pd
 
-    rows = sorted(model.collect(), key=lambda r: r["class_label"])
+    rows = sorted(collect_bounded(model, "predict_logreg"),
+                  key=lambda r: r["class_label"])
     id_type = df.schema[id_col].dataType
     out_schema = T.StructType(
         [

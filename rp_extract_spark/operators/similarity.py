@@ -8,8 +8,11 @@ DataFrame-native operators:
   vector: JVM-side ``zip_with``/``aggregate`` arithmetic (no Python in
   the scan), ``orderBy(limit)`` (Spark's TakeOrdered = distributed
   top-k, no full sort at scale).
-* ``knn_join`` — batch of queries × corpus with per-query top-k via
-  window ``row_number`` (broadcast the small query side).
+* ``knn_join``, ``hard_negatives``, ``knn_label_spread``,
+  ``dim_truncation_recall`` — batch of queries × corpus with per-query
+  top-k: one ``_prims.broadcast_topk`` pass (the collected query side
+  rides the task closure, numpy scores, each task's local top-k), then
+  an exact ``row_number`` window over the candidate union.
 * ``lsh_topk`` — random-hyperplane LSH bucketing as the 100-TB path:
   probe only the query's bucket (plus optional neighbor buckets).
 """
@@ -25,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from .._prims import spread
+from .._prims import broadcast_topk
 
 logger = logging.getLogger(__name__)
 
@@ -118,6 +121,27 @@ def topk_similar(
     return df.orderBy(*order).limit(k)
 
 
+def _cosine(c: np.ndarray, q: np.ndarray) -> tuple[np.ndarray]:
+    """``broadcast_topk`` score: the (rows x queries) cosine matrix;
+    NaN against a zero-norm vector, so such pairs never rank. einsum,
+    not ``c @ q.T`` (GEMM bits depend on the task: see
+    ``broadcast_topk``)."""
+    cn = np.sqrt((c * c).sum(axis=1))
+    qn = np.sqrt((q * q).sum(axis=1))
+    with np.errstate(invalid="ignore"):
+        return (np.einsum("ij,kj->ik", c, q) / (cn[:, None] * qn[None, :]),)
+
+
+def _neg_euclidean(c: np.ndarray, q: np.ndarray) -> tuple[np.ndarray]:
+    """``broadcast_topk`` score: minus the euclidean distance, so the
+    nearest row ranks first; negation is exact, callers negate back."""
+    d = np.empty((c.shape[0], q.shape[0]))
+    for j in range(q.shape[0]):
+        diff = c - q[j]
+        d[:, j] = -np.sqrt((diff * diff).sum(axis=1))
+    return (d,)
+
+
 def knn_join(
     queries: DataFrame,
     corpus: DataFrame,
@@ -127,101 +151,35 @@ def knn_join(
     k: int = 5,
     metric: str = "cosine",
 ) -> DataFrame:
-    """For each query row, its k nearest corpus rows. The query side
-    rides the task closure (assumed small — eval/anchor batches).
+    """For each query row, its k nearest corpus rows: (query_id,
+    corpus_id, score, rank), rank by (score best-first, corpus_id ASC).
 
-    Round 6: one Arrow-batched pass over the corpus computes the score
-    matrix with BLAS and emits each task's local top-k per query; the
-    global rank window runs on that tiny candidate union, which
-    provably reproduces the full crossJoin ranking (every true top-k
-    row is a local top-k row of its task, and any union row outside
-    the true top-k has all k true winners ranked above it). Float
-    scores shift at the ulp level vs the old interpreted HOF sum
-    order — the same fixture-margin contract the DuckDB oracles
-    already rely on. Corpus rows with NULL/mismatched vectors never
-    rank (the old NULL scores ordered last)."""
-    import pandas as pd
-
-    asc = metric != "cosine"
-    q_rows = queries.select(
-        F.col(query_id), F.col(vec_col).cast("array<double>").alias("__qv")
-    ).collect()
-    valid = [r for r in q_rows if r["__qv"] is not None]
-    qid_type = queries.schema[query_id].dataType
-    cid_type = corpus.schema[corpus_id].dataType
-    cand_schema = T.StructType(
-        [
-            T.StructField(query_id, qid_type),
-            T.StructField(corpus_id, cid_type),
-            T.StructField("score", T.DoubleType()),
-        ]
+    The query side is assumed small (eval/anchor batches): one
+    ``_prims.broadcast_topk`` pass scores the corpus with numpy per
+    task and keeps each task's local top-k, and a ``row_number``
+    window over that candidate union gives the exact global ranks.
+    Float scores differ from SQL's interpreted sum order at the ulp
+    level — the fixture-margin contract the DuckDB oracles rely on.
+    Corpus rows with a NULL or wrong-dimension vector, and cosine
+    pairs with a zero-norm vector, never rank (``broadcast_topk``'s
+    corpus-row policy)."""
+    v = F.col(vec_col).cast("array<double>").alias("__v")
+    cand = broadcast_topk(
+        queries.select(F.col(query_id), v),
+        corpus.select(F.col(corpus_id), v),
+        k,
+        _cosine if metric == "cosine" else _neg_euclidean,
+        ("__s",),
+        "knn_join",
     )
-    spark = queries.sparkSession
-    if not valid:
-        return spark.createDataFrame([], cand_schema).withColumn(
-            "rank", F.lit(1)
-        ).filter(F.lit(False))
-    dim = len(valid[0]["__qv"])
-    valid = [r for r in valid if len(r["__qv"]) == dim]
-    q_ids = [r[query_id] for r in valid]
-    qm = np.array([r["__qv"] for r in valid], dtype=np.float64)
-    qn = np.sqrt((qm * qm).sum(axis=1))
-    kk = int(k)
-
-    def local_topk(batches):
-        cids: list[np.ndarray] = []
-        cvs: list[np.ndarray] = []
-        for b in batches:
-            vals = b["__cv"].values
-            ok = np.array(
-                [v is not None and len(v) == dim for v in vals], dtype=bool
-            )
-            if not ok.any():
-                continue
-            cids.append(b[corpus_id].values[ok])
-            cvs.append(
-                np.stack([np.asarray(v, dtype=np.float64) for v in vals[ok]])
-            )
-        if not cids:
-            return
-        cid = np.concatenate(cids)
-        cm = np.concatenate(cvs)
-        if metric == "cosine":
-            cn = np.sqrt((cm * cm).sum(axis=1))
-            d = (cm @ qm.T) / (cn[:, None] * qn[None, :])
-        else:
-            d = np.empty((cm.shape[0], qm.shape[0]))
-            for j in range(qm.shape[0]):
-                diff = cm - qm[j]
-                d[:, j] = np.sqrt((diff * diff).sum(axis=1))
-        sel_q, sel_c = [], []
-        for j in range(len(q_ids)):
-            key = d[:, j] if asc else -d[:, j]
-            order = np.lexsort((cid, key))[:kk]
-            sel_q.append(np.full(order.size, j, dtype=np.int64))
-            sel_c.append(order)
-        qi = np.concatenate(sel_q)
-        ci = np.concatenate(sel_c)
-        yield pd.DataFrame(
-            {
-                query_id: [q_ids[i] for i in qi],
-                corpus_id: cid[ci],
-                "score": d[ci, qi],
-            }
-        )
-
-    c = corpus.select(
-        F.col(corpus_id), F.col(vec_col).cast("array<double>").alias("__cv")
+    w = Window.partitionBy(query_id).orderBy(
+        F.col("__s").desc(), F.col(corpus_id).asc()
     )
-    cand = spread(c).mapInPandas(local_topk, cand_schema)
-    order = (
-        [F.col("score").asc(), F.col(corpus_id).asc()]
-        if asc
-        else [F.col("score").desc(), F.col(corpus_id).asc()]
-    )
-    w = Window.partitionBy(query_id).orderBy(*order)
-    return cand.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
+    score = F.col("__s") if metric == "cosine" else -F.col("__s")
+    return (
+        cand.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(query_id, corpus_id, score.alias("score"), "rank")
     )
 
 
@@ -238,14 +196,15 @@ def hard_negatives(
     """Hard-negative mining for contrastive / metric training: for each
     query, the k most cosine-similar corpus rows whose label DIFFERS
     from the query's — the highest-loss negatives a triplet or InfoNCE
-    sampler wants. Same-id rows are excluded independently of the
-    label test (a query must never mine itself).
+    sampler wants. Same-id rows (ids compared as strings) are excluded
+    independently of the label test (a query must never mine itself);
+    a NULL label on either side excludes the pair, as SQL ``<>`` does.
 
-    Scale shape: the knn_join pattern — the query side is broadcast
-    (assumed small: an anchor batch, not the corpus), the corpus scans
-    once, per-query top-k via a ranked window partitioned by query id
-    (each group is one query's candidates — the partition count equals
-    the anchor count, never one reducer for everything). For
+    Scale shape: the knn_join pattern — the query side is collected
+    (assumed small: an anchor batch, not the corpus) and
+    ``_prims.broadcast_topk`` applies both exclusions as its key mask
+    before each task's local cut; a ``row_number`` window per query
+    finishes. Zero-norm rows on either side never rank. For
     corpus-scale query sides, route through the IVF/PQ serve path
     (ivf_probe/pq_topk) and apply the label filter to its candidates.
 
@@ -253,37 +212,28 @@ def hard_negatives(
     ranks deterministic and SQL-replayable; scores stay float and are
     NOT emitted (the 1e-6-grain boundary risk of arbitrary cosines —
     ranks are margin-protected, grid values are not)."""
-    # zero-norm embeddings (padding / failed-encode rows) cannot be
-    # ranked and would hit cosine_col's division under ANSI mode
-    # (Spark 4 default: DIVIDE_BY_ZERO aborts the job) — exclude them
-    # from both sides
-    q = queries.select(
-        F.col(query_id),
-        F.col(query_label).alias("__ql"),
-        F.col(vec_col).cast("array<double>").alias("__qv"),
-    ).filter(_norm(F.col("__qv")) > 0)
-    c = corpus.select(
-        F.col(corpus_id),
-        F.col(corpus_label).alias("__cl"),
-        F.col(vec_col).cast("array<double>").alias("__cv"),
-    ).filter(_norm(F.col("__cv")) > 0)
-    joined = c.crossJoin(F.broadcast(q)).filter(
-        (F.col("__cl") != F.col("__ql"))
-        & (F.col(corpus_id).cast("string") != F.col(query_id).cast("string"))
+    v = F.col(vec_col).cast("array<double>").alias("__v")
+    cand = broadcast_topk(
+        queries.select(
+            F.col(query_id), v, F.col(query_label).alias("__l"),
+            F.col(query_id).cast("string").alias("__k"),
+        ),
+        corpus.select(
+            F.col(corpus_id), v, F.col(corpus_label).alias("__l"),
+            F.col(corpus_id).cast("string").alias("__k"),
+        ),
+        k,
+        _cosine,
+        ("__s",),
+        "hard_negatives",
     )
-    score = cosine_col(F.col("__cv"), F.col("__qv"))
     w = Window.partitionBy(query_id).orderBy(
-        score.desc(), F.col(corpus_id).asc()
+        F.col("__s").desc(), F.col(corpus_id).asc()
     )
     return (
-        joined.withColumn("rank", F.row_number().over(w))
+        cand.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(
-            query_id,
-            corpus_id,
-            F.col("__cl").alias("neg_label"),
-            "rank",
-        )
+        .select(query_id, corpus_id, F.col("__l").alias("neg_label"), "rank")
     )
 
 
@@ -1284,7 +1234,11 @@ def semdedup(
     kept set is bit-identical across engines — cross-engine sum-order
     drift (~1e-15 for dim-64 dots) sits ten orders below the grain.
 
-    Returns one row per input row: (id, cluster, cent_u, kept).
+    Returns one row per input row with a vector of the centroid
+    dimension: (id, cluster, cent_u, kept), cluster as a string. Rows
+    whose vector is NULL or of another length get no row — the
+    corpus-row policy of ``_prims.broadcast_topk``, inherited through
+    ``predict_centroids``.
     """
     from .classify import predict_centroids
 
@@ -1298,7 +1252,8 @@ def semdedup(
     )
     m = (
         base.join(assigned.select(
-            id_col, F.col("predicted_label").alias("cluster")), id_col)
+            id_col, F.col("predicted_label").cast("string").alias("cluster")),
+            id_col)
         .join(F.broadcast(cent), "cluster")
         .withColumn(
             "cent_u",
@@ -1469,110 +1424,32 @@ def knn_label_spread(
 
     Scale shape: the unlabeled side rides the task closure per serving
     batch (the knn_join contract — corpus-sized relabeling routes
-    through the IVF/PQ candidates instead); ONE Arrow-batched pass
-    over the labeled side computes the cosine matrix with BLAS and
-    emits each task's local top-k per query; the union of local
-    top-ks provably contains every global top-k set, and the global
-    rank window over that tiny candidate table reproduces the full
-    crossJoin ranking (any union row outside the true top-k has all k
-    true winners ranked above it). Float-cosine ranks rely on the
-    fixture-margin contract exactly as before (the oracle's DuckDB
-    cosine is already a third summation order). Per-query windows
-    then span k rows, the vote groupBy spans <= distinct-label rows
-    per query. Zero-norm rows are excluded on both sides (the ANSI
-    division rule). Returns (id, pred_label, votes, n_neighbors)."""
-    q_rows = (
-        unlabeled.select(
-            F.col(id_col).alias("__qid"),
-            F.col(vec_col).cast("array<double>").alias("__qv"),
-        )
-        .filter(_norm(F.col("__qv")) > 0)
-        .collect()
+    through the IVF/PQ candidates instead); one
+    ``_prims.broadcast_topk`` pass over the labeled side keeps each
+    task's local top-k, and the rank window over that candidate union
+    is exact. Float-cosine ranks rely on the fixture-margin contract
+    (the oracle's DuckDB cosine is a third summation order). Per-query
+    windows then span k rows, the vote groupBy spans <= distinct-label
+    rows per query. Zero-norm, NULL and wrong-dimension rows never
+    rank on either side (``broadcast_topk``'s corpus-row policy), so a
+    query without a ranked neighbor gets no row. Returns (id,
+    pred_label, votes, n_neighbors)."""
+    v = F.col(vec_col).cast("array<double>").alias("__v")
+    cand = broadcast_topk(
+        unlabeled.select(F.col(id_col).alias("__qid"), v),
+        labeled.select(
+            F.col(id_col).alias("__cid"), v, F.col(label_col).alias("__cl")
+        ),
+        k,
+        _cosine,
+        ("__s",),
+        "knn_label_spread",
     )
-    id_type = labeled.schema[id_col].dataType
-    label_type = labeled.schema[label_col].dataType
-    spark = labeled.sparkSession
-    if not q_rows:
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField(id_col, id_type),
-                    T.StructField("pred_label", label_type),
-                    T.StructField("votes", T.LongType(), False),
-                    T.StructField("n_neighbors", T.LongType(), False),
-                ]
-            ),
-        )
-    dim = len(q_rows[0]["__qv"])
-    q_ids = np.array([r["__qid"] for r in q_rows], dtype=np.int64)
-    qm = np.array([r["__qv"] for r in q_rows], dtype=np.float64)
-    qn = np.sqrt((qm * qm).sum(axis=1))
-    kk = int(k)
-
-    cand_schema = T.StructType(
-        [
-            T.StructField("__qid", id_type),
-            T.StructField("__cid", id_type),
-            T.StructField("__cl", label_type),
-            T.StructField("__s", T.DoubleType()),
-        ]
-    )
-
-    def local_topk(batches):
-        import pandas as pd
-
-        cids: list[np.ndarray] = []
-        cls: list[np.ndarray] = []
-        cvs: list[np.ndarray] = []
-        for b in batches:
-            vals = b["__cv"].values
-            ok = np.array(
-                [v is not None and len(v) == dim for v in vals], dtype=bool
-            )
-            if not ok.any():
-                continue
-            cids.append(b["__cid"].values[ok].astype(np.int64))
-            cls.append(b["__cl"].values[ok])
-            cvs.append(
-                np.stack([np.asarray(v, dtype=np.float64) for v in vals[ok]])
-            )
-        if not cids:
-            return
-        cid = np.concatenate(cids)
-        cl = np.concatenate(cls)
-        cm = np.concatenate(cvs)
-        cn = np.sqrt((cm * cm).sum(axis=1))
-        d = (cm @ qm.T) / (cn[:, None] * qn[None, :])
-        sel_q, sel_c = [], []
-        for j in range(len(q_ids)):
-            order = np.lexsort((cid, -d[:, j]))[:kk]
-            sel_q.append(np.full(order.size, j, dtype=np.int64))
-            sel_c.append(order)
-        qi = np.concatenate(sel_q)
-        ci = np.concatenate(sel_c)
-        yield pd.DataFrame(
-            {
-                "__qid": q_ids[qi],
-                "__cid": cid[ci],
-                "__cl": cl[ci],
-                "__s": d[ci, qi],
-            }
-        )
-
-    c = labeled.select(
-        F.col(id_col).alias("__cid"),
-        F.col(label_col).alias("__cl"),
-        F.col(vec_col).cast("array<double>").alias("__cv"),
-    ).filter(_norm(F.col("__cv")) > 0)
     w = Window.partitionBy("__qid").orderBy(
         F.col("__s").desc(), F.col("__cid").asc()
     )
-    nn = (
-        spread(c)
-        .mapInPandas(local_topk, cand_schema)
-        .withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") <= int(k))
+    nn = cand.withColumn("__r", F.row_number().over(w)).filter(
+        F.col("__r") <= int(k)
     )
     votes = nn.groupBy("__qid", "__cl").agg(
         F.count(F.lit(1)).alias("votes")
@@ -1635,108 +1512,34 @@ def dim_truncation_recall(
     SQL-replayable — raw float cosines at a rank cut carry boundary
     risk (the hard_negatives precedent). Self-matches excluded.
 
-    Scale path (round 6): the quantized query matrix rides the task
-    closure (eval sets are bounded — the same rows the old plan
-    broadcast); ONE Arrow-batched pass over the gallery computes all
-    dot products as a float64 GEMM — exact, because every product is
-    <= grain^2 = 1e12 and every partial sum <= dim*1e12 < 2^53, so
-    float64 arithmetic never rounds — and emits only each task's local
-    top-k per query per ranking. The union of local top-ks provably
-    contains both global top-k sets, and a global rank filter over a
-    candidate union is EXACT (any union row outside the true top-k has
-    all k true winners — union members — ranked above it), so the
-    window finish on the tiny candidate table reproduces the full
-    crossJoin ranking bit-for-bit. Replaces the old per-pair
-    interpreted HOF dot products (8M pairs x dim lambda evaluations at
-    sf1.0) with ~0.5 GFLOP of BLAS. Gallery rows with NULL/mismatched
-    vectors never rank (the old plan's NULL dots ordered last).
+    Scale path: the query side rides the task closure (eval sets are
+    bounded) and one ``_prims.broadcast_topk`` pass over the gallery
+    computes both rankings' dot products as float64 GEMMs — exact,
+    because every product is <= grain^2 = 1e12 and every partial sum
+    <= dim*1e12 < 2^53, so float64 arithmetic never rounds — keeping
+    each task's local top-k per query per ranking; the rank windows
+    over that candidate union are exact. Queries with a vector shorter
+    than ``trunc_dims`` rank nothing (n_overlap 0); gallery rows with
+    a NULL or wrong-dimension vector never rank (``broadcast_topk``'s
+    corpus-row policy). Every query row gets one output row.
     Returns (q_id, n_overlap, k)."""
-    spark = queries.sparkSession
-    id_type = queries.schema[id_col].dataType
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids_df = spark.createDataFrame(
-        [(r[0],) for r in q_rows],
-        T.StructType([T.StructField("q_id", id_type)]),
-    )
-    out_empty = q_ids_df.select(
-        "q_id",
-        F.lit(0).cast("int").alias("n_overlap"),
-        F.lit(int(k)).alias("k"),
-    )
-    valid = [
-        r for r in q_rows if r[1] is not None and len(r[1]) >= int(trunc_dims)
-    ]
-    if not valid:
-        return out_empty
-    dim = len(valid[0][1])
-    valid = [r for r in valid if len(r[1]) == dim]
-    q_ids = np.array([r[0] for r in valid], dtype=np.int64)
-    qm = np.floor(
-        np.array([r[1] for r in valid], dtype=np.float64) * grain + 0.5
-    )
-    qt = np.ascontiguousarray(qm[:, : int(trunc_dims)])
-    kk = int(k)
+    t = int(trunc_dims)
 
-    cand_schema = T.StructType(
-        [
-            T.StructField("q_id", id_type),
-            T.StructField("g_id", id_type),
-            T.StructField("__df", T.LongType()),
-            T.StructField("__dt", T.LongType()),
-        ]
-    )
+    def grid_dots(c, q):
+        cg, qg = np.floor(c * grain + 0.5), np.floor(q * grain + 0.5)
+        return cg @ qg.T, cg[:, :t] @ qg[:, :t].T  # exact: see docstring
 
-    def local_topk(batches):
-        import pandas as pd
-
-        gids: list[np.ndarray] = []
-        gvs: list[np.ndarray] = []
-        for b in batches:
-            vals = b[vec_col].values
-            ok = np.array(
-                [v is not None and len(v) == dim for v in vals], dtype=bool
-            )
-            if not ok.any():
-                continue
-            gids.append(b[id_col].values[ok].astype(np.int64))
-            gvs.append(
-                np.stack([np.asarray(v, dtype=np.float64) for v in vals[ok]])
-            )
-        if not gids:
-            return
-        gid = np.concatenate(gids)
-        gm = np.floor(np.concatenate(gvs) * grain + 0.5)
-        d_full = gm @ qm.T  # exact: see docstring
-        d_trunc = gm[:, : int(trunc_dims)] @ qt.T
-        sel_q, sel_g = [], []
-        for j in range(len(q_ids)):
-            mask = gid != q_ids[j]
-            rows = np.nonzero(mask)[0]
-            if rows.size == 0:
-                continue
-            for d in (d_full, d_trunc):
-                order = np.lexsort((gid[rows], -d[rows, j]))
-                sel = rows[order[:kk]]
-                sel_q.append(np.full(sel.size, j, dtype=np.int64))
-                sel_g.append(sel)
-        if not sel_q:
-            return
-        qi = np.concatenate(sel_q)
-        gi = np.concatenate(sel_g)
-        # dedup (a row can be local top-k in both rankings)
-        uniq = np.unique(qi * (gid.size + 1) + gi)
-        qi, gi = uniq // (gid.size + 1), uniq % (gid.size + 1)
-        yield pd.DataFrame(
-            {
-                "q_id": q_ids[qi],
-                "g_id": gid[gi],
-                "__df": d_full[gi, qi].astype(np.int64),
-                "__dt": d_trunc[gi, qi].astype(np.int64),
-            }
-        )
-
-    cand = spread(gallery.select(id_col, vec_col)).mapInPandas(
-        local_topk, cand_schema
+    v = F.col(vec_col).cast("array<double>").alias("__v")
+    key = F.col(id_col).cast("string").alias("__k")
+    cand = broadcast_topk(
+        queries.filter(F.size(vec_col) >= t).select(
+            F.col(id_col).alias("q_id"), v, key
+        ),
+        gallery.select(F.col(id_col).alias("g_id"), v, key),
+        k,
+        grid_dots,
+        ("__df", "__dt"),
+        "dim_truncation_recall",
     )
     wf = Window.partitionBy("q_id").orderBy(
         F.col("__df").desc(), F.col("g_id").asc()
@@ -1755,7 +1558,8 @@ def dim_truncation_recall(
     )
     counts = both.groupBy("q_id").agg(F.count(F.lit(1)).alias("n_overlap"))
     return (
-        q_ids_df.join(counts, "q_id", "left")
+        queries.select(F.col(id_col).alias("q_id"))
+        .join(counts, "q_id", "left")
         .select(
             "q_id",
             F.coalesce("n_overlap", F.lit(0)).cast("int").alias("n_overlap"),
