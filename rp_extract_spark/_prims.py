@@ -13,10 +13,15 @@
 - ``broadcast_topk``: exact per-query top-k of a small query side
   against a corpus — the collected queries ride the task closure, each
   task scores its corpus rows with numpy and keeps its local top-k.
+- ``md5_hex`` / ``md5_int``: the seeded-draw key (folds, splits,
+  shuffles, shard ranks, augmentations, sketches) and its hex digits
+  read as an integer, each replayable byte for byte in SQL;
+  ``md5_digits`` is the Python twin of the key.
 """
 
 from __future__ import annotations
 
+import hashlib
 from collections.abc import Callable, Iterator, Sequence
 
 import numpy as np
@@ -175,6 +180,50 @@ def spread(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
+
+
+def md5_hex(*parts, sep: str | None = None) -> Column:
+    """Spark ``md5`` of the key string the parts spell: 32 lowercase hex
+    digits. A ``Column`` part is cast to string; any other part is the
+    literal ``str(part)``.
+
+    ``sep=None`` joins the parts with ``concat``, so a NULL part gives a
+    NULL digest, as the oracles' ``md5(a || b)`` does. A ``sep`` joins
+    them with ``concat_ws``, which skips NULL parts:
+    ``md5_hex(NULL, 0, sep=":")`` hashes ``"0"`` where the oracles'
+    ``md5(a || ':' || b)`` is NULL. The two forms agree on non-NULL
+    keys. ``md5_digits`` is the Python twin of the ``sep=":"`` form."""
+    cols = [
+        p.cast("string") if isinstance(p, Column) else F.lit(str(p))
+        for p in parts
+    ]
+    if sep is None:
+        return F.md5(F.concat(*cols))
+    return F.md5(F.concat_ws(sep, *cols))
+
+
+def md5_int(hex: Column, start: int = 1, digits: int = 15) -> Column:
+    """``digits`` hex digits of ``hex`` from 1-based ``start``, read as
+    a bigint: ``conv(substring(hex, start, digits), 16, 10)``.
+
+    The oracles replay it as ``CAST('0x' || substr(hex, start, digits)
+    AS BIGINT)``. 16^15 < 2^63, so at most 15 digits the value is
+    sign-safe and the two engines agree; more digits raise. A
+    fixed-width lowercase-hex prefix compares as a string the same way
+    it compares as a number, so threshold samplers compare
+    ``substring(hex, 1, 8)`` with a hex literal and skip the
+    conversion."""
+    if not 1 <= digits <= 15:
+        raise ValueError(f"md5_int: digits must be in [1, 15], got {digits}")
+    return F.conv(F.substring(hex, start, digits), 16, 10).cast("long")
+
+
+def md5_digits(*parts) -> list[int]:
+    """The 32 hex digits of ``md5(':'.join(map(str, parts)))`` as ints —
+    ``md5_hex(*parts, sep=":")`` computed in Python, the per-record draw
+    key of the seeded augmentations."""
+    k = hashlib.md5(":".join(map(str, parts)).encode()).hexdigest()
+    return [int(c, 16) for c in k]
 
 
 def collect_bounded(df: DataFrame, op: str) -> list[Row]:

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from .._prims import collect_bounded
+from .._prims import collect_bounded, md5_hex, md5_int
 
 
 def _sq_dist(a: Column, b: Column) -> Column:
@@ -36,9 +36,7 @@ def assign_folds(df: DataFrame, id_col: str, k: int = 5,
     recompute (the driver-oracle discipline: DuckDB has md5 but not
     xxhash64); both are uniform and reproducible."""
     if fold_fn == "md5":
-        h = F.conv(
-            F.substring(F.md5(F.col(id_col).cast("string")), 1, 15), 16, 10
-        ).cast("long")
+        h = md5_int(md5_hex(F.col(id_col)))
         return df.withColumn(out, F.pmod(h, F.lit(k)))
     return df.withColumn(out, F.pmod(F.xxhash64(F.col(id_col)), F.lit(k)))
 

@@ -16,7 +16,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .._prims import global_rank, spread
+from .._prims import collect_bounded, global_rank, md5_hex, md5_int, spread
 from .text import fingerprint, token_count
 
 
@@ -303,9 +303,7 @@ def group_split(
     fracs = [float(f) for _, f in fractions]
     if any(f < 0 for f in fracs) or abs(sum(fracs) - 1.0) > 1e-9:
         raise ValueError("fractions must be non-negative and sum to 1")
-    h = F.substring(
-        F.md5(F.concat(F.col(group_col).cast("string"),
-                       F.lit(f":{seed}"))), 1, 8)
+    h = F.substring(md5_hex(F.col(group_col), f":{seed}"), 1, 8)
     expr = None
     cum = 0.0
     for name, frac in fractions[:-1]:
@@ -505,13 +503,13 @@ def contamination_report(
         _ngram_rows_py(benchmark, text_col, bench_id_col, n)
         .select(
             F.col(bench_id_col).alias("bench_id"),
-            F.md5("__g").alias("__g"),
+            md5_hex(F.col("__g")).alias("__g"),
         )
         .distinct()
     )
     cgrams = (
         _ngram_rows_py(corpus, text_col, id_col, n)
-        .select(id_col, F.md5("__g").alias("__g"))
+        .select(id_col, md5_hex(F.col("__g")).alias("__g"))
         .distinct()
     )
     hits = (
@@ -957,7 +955,8 @@ def apply_bpe(
     from .text import nonempty_tokens_col
 
     ranked = [
-        (m["lhs"], m["rhs"]) for m in merges.orderBy("rank").collect()
+        (m["lhs"], m["rhs"])
+        for m in collect_bounded(merges.orderBy("rank"), "apply_bpe")
     ]
     if len(ranked) > chained_max:
         return _apply_bpe_arrow(df, ranked, text_col, out_col)
@@ -1130,7 +1129,7 @@ def apply_bpe_ids(
     document gets ``[]``/0."""
     if vocab is None:
         vocab = bpe_vocab(df, merges, text_col)
-    vrows = vocab.collect()
+    vrows = collect_bounded(vocab, "apply_bpe_ids")
     enc = apply_bpe(df, merges, text_col)
     if vrows:
         vmap = F.create_map(
@@ -1181,8 +1180,7 @@ def hash_sample(
         # means keep everything, so skip the filter entirely
         return df
     thr = format(int(rate * 16**8), "08x")
-    h = F.substring(F.md5(F.concat(F.col(key_col).cast("string"),
-                                   F.lit(salt))), 1, 8)
+    h = F.substring(md5_hex(F.col(key_col), salt), 1, 8)
     return df.filter(h < F.lit(thr))
 
 
@@ -1301,9 +1299,7 @@ def mix_corpus(
     thr_df = df.sparkSession.createDataFrame(
         rows, f"{source_col} string, __thr string, rate double"
     )
-    h = F.substring(
-        F.md5(F.concat(F.col(id_col).cast("string"), F.lit(salt))), 1, 8
-    )
+    h = F.substring(md5_hex(F.col(id_col), salt), 1, 8)
     return (
         df.join(F.broadcast(thr_df), source_col)
         .filter(h < F.col("__thr"))
@@ -1328,14 +1324,7 @@ def epoch_shuffle(
 
     The position is ``_prims.global_rank`` over the shuffle key, never
     a global sort on one reducer."""
-    key = F.md5(
-        F.concat_ws(
-            ":",
-            F.col(id_col).cast("string"),
-            F.lit(str(int(seed))),
-            F.lit(str(int(epoch))),
-        )
-    )
+    key = md5_hex(F.col(id_col), int(seed), int(epoch), sep=":")
     pos = F.col("__rn") - 1
     return global_rank(df.withColumn("__k", key), ["__k", id_col]).select(
         *[F.col(c) for c in df.columns],
@@ -1366,14 +1355,7 @@ def pack_batches(
 
     The per-bucket rank is ``_prims.global_rank``, so one dominant
     bucket never lands on one reducer."""
-    key = F.md5(
-        F.concat_ws(
-            ":",
-            F.col(id_col).cast("string"),
-            F.lit(str(int(seed))),
-            F.lit(str(int(epoch))),
-        )
-    )
+    key = md5_hex(F.col(id_col), int(seed), int(epoch), sep=":")
     ranked = global_rank(
         df.withColumn("__k", key), ["__k", id_col], groups=bucket_cols
     )
@@ -1462,15 +1444,9 @@ def pk_batches(
         )
     rounds = min(int(r["__nb"]) for r in stats)
     grp = (c_classes // int(p)) * int(p)
-    rkey = F.md5(
-        F.concat_ws(
-            ":",
-            F.col(label_col).cast("string"),
-            F.col("batch_idx").cast("string"),
-            F.lit(str(int(seed))),
-            F.lit(str(int(epoch))),
-            F.lit("pk"),
-        )
+    rkey = md5_hex(
+        F.col(label_col), F.col("batch_idx"), int(seed), int(epoch), "pk",
+        sep=":",
     )
     wr = Window.partitionBy("batch_idx").orderBy(rkey, F.col(label_col))
     sel = (
@@ -1535,22 +1511,12 @@ def group_folds(
     ``group_col`` matches lands in the SAME fold, so composing with a
     near-duplicate component label (phash_dedup / semdedup rep ids)
     guarantees no duplicate pair ever straddles a train/validation
-    boundary during CV. fold = conv(md5(group:seed) 15-hex) mod k —
-    F.conv on 15 hex chars == DuckDB CAST('0x'||..) (the assign_folds
-    md5 discipline); zero-shuffle stateless projection."""
+    boundary during CV. fold = ``_prims.md5_int(md5(group:seed))`` mod
+    k (its docstring holds the SQL parity argument); zero-shuffle
+    stateless projection."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col(group_col).cast("string"), F.lit(f":{int(seed)}")
-                )
-            ),
-            1, 15,
-        ),
-        16, 10,
-    ).cast("long")
+    h = md5_int(md5_hex(F.col(group_col), f":{int(seed)}"))
     return df.withColumn(fold_col, F.pmod(h, F.lit(int(k))).cast("int"))
 
 
@@ -1577,14 +1543,7 @@ def rendezvous_assign(
     cand = F.array(
         *[
             F.struct(
-                F.md5(
-                    F.concat_ws(
-                        ":",
-                        F.col(id_col).cast("string"),
-                        F.lit(str(w)),
-                        F.lit(str(int(seed))),
-                    )
-                ).alias("h"),
+                md5_hex(F.col(id_col), w, int(seed), sep=":").alias("h"),
                 F.lit(w).alias("w"),
             )
             for w in range(int(workers))
@@ -1632,24 +1591,16 @@ def plan_loader_shards(
     a stateless pure projection (no window, no shuffle — the manifest
     can be petabyte-wide and this is still metadata-speed), balanced in
     expectation across ranks, reshuffle-stable and engine-independent
-    (the hash_sample / epoch_shuffle key discipline: Spark
-    F.conv(15 hex chars, 16, 10) == DuckDB CAST('0x' || ... AS
-    BIGINT)). Every rank derives its own batch list independently —
-    no coordinator."""
+    (the hash_sample / epoch_shuffle key discipline; ``_prims.md5_int``
+    holds the SQL parity argument). Every rank derives its own batch
+    list independently — no coordinator."""
     if world_size < 1:
         raise ValueError(f"world_size must be >= 1, got {world_size}")
-    key = F.md5(
-        F.concat_ws(
-            ":",
-            *[F.col(c).cast("string") for c in bucket_cols],
-            F.col(batch_col).cast("string"),
-            F.lit(str(int(seed))),
-        )
+    key = md5_hex(
+        *[F.col(c) for c in bucket_cols], F.col(batch_col), int(seed),
+        sep=":",
     )
-    rank = (
-        F.conv(F.substring(key, 1, 15), 16, 10).cast("long")
-        % F.lit(int(world_size))
-    ).cast("int")
+    rank = (md5_int(key) % F.lit(int(world_size))).cast("int")
     return manifest.withColumn("rank", rank)
 
 
@@ -1677,11 +1628,7 @@ def plan_shard_packing(
     if target_size < 1:
         raise ValueError(f"target_size must be >= 1, got {target_size}")
     order_key = (
-        F.md5(
-            F.concat_ws(
-                ":", F.col(id_col).cast("string"), F.lit(str(int(seed)))
-            )
-        )
+        md5_hex(F.col(id_col), int(seed), sep=":")
         if shuffle
         else F.col(id_col).cast("string")
     )
@@ -1750,7 +1697,7 @@ def temperature_resample(
             (F.col("__t") % F.col("__n")).alias("__rem"),
         )
     )
-    h = F.md5(F.concat(F.col(id_col).cast("string"), F.lit(f":{seed}")))
+    h = md5_hex(F.col(id_col), f":{seed}")
     ranked = global_rank(
         df.select(F.col(id_col), F.col(label_col)).withColumn("__h", h),
         ["__h", id_col],
@@ -1868,7 +1815,8 @@ def mix_schedule(
     corpus-sized, so the global sort is a K-row collect + one explode.
     Returns (step 1..N, source, copy_idx)."""
     rows = sorted(
-        (str(r[source_col]), int(r[weight_col])) for r in weights.collect()
+        (str(r[source_col]), int(r[weight_col]))
+        for r in collect_bounded(weights, "mix_schedule")
     )
     if not rows:
         raise ValueError("weights is empty")
@@ -2255,9 +2203,7 @@ def learning_curve_plan(
         raise ValueError("only the last rate may be 1.0")
     if rs[-1] < 1.0:
         rs = rs + [1.0]
-    h = F.substring(
-        F.md5(F.concat(F.col(key_col).cast("string"), F.lit(salt))), 1, 8
-    )
+    h = F.substring(md5_hex(F.col(key_col), salt), 1, 8)
     bucket = F.lit(len(rs) - 1)
     for i in range(len(rs) - 2, -1, -1):
         thr = format(int(rs[i] * 16**8), "08x")

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .._prims import spread
+from .._prims import md5_hex, md5_int, spread
 
 logger = logging.getLogger(__name__)
 
@@ -44,7 +44,7 @@ def exact_dedup(df: DataFrame, cols: Sequence[str], id_col: str) -> DataFrame:
     group defined by exact equality on ``cols``. The group key and join
     key is a 128-bit hash of the columns, not the raw values — shuffling
     32-byte digests instead of long text is the scale-safe shape."""
-    fp = F.md5(F.to_json(F.struct(*[F.col(c) for c in cols])))
+    fp = md5_hex(F.to_json(F.struct(*[F.col(c) for c in cols])))
     hashed = df.withColumn("__fp", fp)
     reps = hashed.groupBy("__fp").agg(F.min(id_col).alias("__rep"))
     return (
@@ -100,7 +100,7 @@ def priority_dedup(
     Priority must be non-NULL (NULL sorts first in Spark and last in
     SQL engines — the kmv NULL rule); raise upstream defaults
     explicitly rather than relying on engine NULL order."""
-    fp = F.md5(F.to_json(F.struct(*[F.col(c) for c in cols])))
+    fp = md5_hex(F.to_json(F.struct(*[F.col(c) for c in cols])))
     hashed = df.withColumn("__fp", fp)
     reps = hashed.groupBy("__fp").agg(
         F.min(F.struct(F.col(priority_col), F.col(id_col))).alias("__w")
@@ -135,7 +135,7 @@ def dedup_paragraphs(
     paras = F.split(F.col(text_col), _re_escape(sep))
     hashed = df.select(
         F.col(id_col), F.posexplode(paras).alias("pos", "__p")
-    ).select(id_col, "pos", F.md5("__p").alias("__d"))
+    ).select(id_col, "pos", md5_hex(F.col("__p")).alias("__d"))
     winners = hashed.groupBy("__d").agg(
         F.min(F.struct(F.col(id_col).alias("i"), F.col("pos").alias("p")))
         .alias("w")
@@ -191,10 +191,7 @@ def winnow_fingerprints(
     from .curation import ngram_col
 
     grams = ngram_col(F.col(text_col), k)
-    h_expr = F.transform(
-        grams,
-        lambda g: F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long"),
-    )
+    h_expr = F.transform(grams, lambda g: md5_int(md5_hex(g)))
     hashed = spread(df.select(F.col(id_col), F.col(text_col))).select(
         F.col(id_col), h_expr.alias("__h")
     )

@@ -72,7 +72,7 @@ def pagerank_fixed(
         # agg on the node key replaces a separate agg + left join (one
         # fewer exchange per iteration; iterative jobs pay a fixed
         # barrier per round, so per-round stage count IS the scaling
-        # bound — measured in tools/bench_scaling_graph.py)
+        # bound — BENCH/BASELINE.md, "Graph (PageRank) scaling")
         r = (
             contrib.unionByName(zero)
             .groupBy("node")

@@ -32,7 +32,6 @@ same 64 bits both for Spark and for the closed-form SQL replay):
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import numpy as np
@@ -41,7 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .._prims import arrow_stage, gray, moments
+from .._prims import arrow_stage, gray, md5_digits, md5_hex, md5_int, moments
 from ..codecs import encode_png
 from .multimodal import block_mean_resize
 
@@ -63,13 +62,6 @@ def _same_shape(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     if a.shape != b.shape:
         raise ValueError(f"shape mismatch {a.shape} vs {b.shape}")
     return a, b
-
-
-def _md5_digits(*parts) -> list[int]:
-    """The 32 hex digits of ``md5(':'.join(parts))`` as ints — the
-    per-record draw key of the seeded augmentations."""
-    k = hashlib.md5(":".join(map(str, parts)).encode()).hexdigest()
-    return [int(c, 16) for c in k]
 
 
 def _pack_bits64(bits: np.ndarray) -> int:
@@ -871,17 +863,10 @@ def plan_epoch_augment(
     (0/1): hex digit 1 parity and hex digit 2 parity of
     ``md5(image_id:seed:epoch)``. Pure projection — no shuffle, no
     Python."""
-    key = F.md5(
-        F.concat_ws(
-            ":",
-            F.col("image_id").cast("string"),
-            F.lit(str(int(seed))),
-            F.lit(str(int(epoch))),
-        )
-    )
+    key = md5_hex(F.col("image_id"), int(seed), int(epoch), sep=":")
 
     def hexd(i: int):
-        return F.conv(F.substring(key, i, 1), 16, 10).cast("int")
+        return md5_int(key, i, 1).cast("int")
 
     return images.withColumn("flip_h", (hexd(1) % 2).cast("int")).withColumn(
         "rot180", (hexd(2) % 2).cast("int")
@@ -1090,7 +1075,7 @@ def random_resized_crop(
     def fn(iid, data, fmt):
         px = gray(data, fmt)
         h, w = px.shape
-        d = _md5_digits(iid, int(seed), int(epoch))[:4]
+        d = md5_digits(iid, int(seed), int(epoch))[:4]
         x0, y0, cw, ch = rrc_geometry(w, h, d)
         yi = y0 + (np.arange(out_h)[:, None] * ch) // out_h
         xi = x0 + (np.arange(out_w)[None, :] * cw) // out_w
@@ -1157,7 +1142,7 @@ def cutmix_images(
     def fn(aid, bid, ab, af, bb, bf):
         pa, pb = _same_shape(gray(ab, af, np.int64), gray(bb, bf, np.int64))
         h, w = pa.shape
-        d = _md5_digits(aid, bid, int(seed), int(epoch))[:4]
+        d = md5_digits(aid, bid, int(seed), int(epoch))[:4]
         x0, y0, cw, ch = cutmix_geometry(w, h, d)
         px = pa.copy()
         px[y0 : y0 + ch, x0 : x0 + cw] = pb[y0 : y0 + ch, x0 : x0 + cw]
@@ -1206,7 +1191,7 @@ def color_jitter(
 
     def fn(iid, data, fmt):
         px = gray(data, fmt, np.int64)
-        k = _md5_digits(iid, int(seed), int(epoch))
+        k = md5_digits(iid, int(seed), int(epoch))
         bright = k[0] * 4 - 30
         contrast = 8 + k[1]
         out = (px * contrast) // 16 + 128 - (128 * contrast) // 16 + bright
@@ -1299,7 +1284,7 @@ def mosaic_images(
         if len({im.shape for im in ims}) != 1:
             raise ValueError("shape mismatch inside quad")
         h, w = ims[0].shape
-        k = _md5_digits(*v[:4], int(seed), int(epoch))
+        k = md5_digits(*v[:4], int(seed), int(epoch))
         cx, cy = mosaic_geometry(w, h, k[0], k[1])
         px = ims[3].copy()
         px[:cy, :cx] = ims[0][:cy, :cx]
@@ -1364,7 +1349,7 @@ def mae_mask(
         )
         order = sorted(
             range(n),
-            key=lambda j: (_md5_digits(iid, int(seed), int(epoch), j), j),
+            key=lambda j: (md5_digits(iid, int(seed), int(epoch), j), j),
         )
         m = (n * mask_num) // mask_den
         msum = int(sum(int(sums[j]) for j in order[:m]))
@@ -1425,7 +1410,7 @@ def photometric_images(
 
     def fn(iid, data, fmt):
         out = gray(data, fmt, np.int64)
-        k = _md5_digits(iid, int(seed), int(epoch), "pm")
+        k = md5_digits(iid, int(seed), int(epoch), "pm")
         sol = k[0] % 2
         sol_thr = k[1] * 16 + k[2]
         post_bits = (3 + k[4] % 2) if k[3] % 2 else 0
@@ -1565,7 +1550,7 @@ def random_erasing(
     def fn(iid, data, fmt):
         out = gray(data, fmt, np.int64)
         h, w = out.shape
-        d = _md5_digits(iid, int(seed), int(epoch), "re")[:4]
+        d = md5_digits(iid, int(seed), int(epoch), "re")[:4]
         x0, y0, ew, eh = cutmix_geometry(w, h, d)
         out[y0:y0 + eh, x0:x0 + ew] = int(fill)
         return {

@@ -23,6 +23,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .._prims import md5_hex, md5_int
+
 
 def pending_only(todo: DataFrame, done: DataFrame, key: str = "image_id") -> DataFrame:
     """Anti-join resume: rows of ``todo`` whose key is absent in ``done``."""
@@ -274,7 +276,7 @@ def row_diff(
     scale rule; the wide columns stay at their scan. All four category
     rows are always present (n=0 when empty), so downstream checks can
     key on them unconditionally."""
-    dig = F.md5(F.to_json(F.struct(*[F.col(c) for c in cols])))
+    dig = md5_hex(F.to_json(F.struct(*[F.col(c) for c in cols])))
     a = old.select(F.col(id_col).alias("__id"), dig.alias("__da"))
     b = new.select(F.col(id_col).alias("__id"), dig.alias("__db"))
     j = a.join(b, "__id", "full")
@@ -323,9 +325,7 @@ def dataset_fingerprint(
         if i:
             parts.append(sep)
         parts.append(F.coalesce(F.col(c).cast("string"), nul))
-    dig = F.conv(
-        F.substring(F.md5(F.concat(*parts)), 1, 15), 16, 10
-    ).cast("long")
+    dig = md5_int(md5_hex(*parts))
     aggs = [
         F.count(F.lit(1)).alias("n"),
         F.sum(dig.cast("decimal(38,0)")).alias("__s"),

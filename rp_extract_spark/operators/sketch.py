@@ -23,11 +23,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .._prims import md5_hex, md5_int
+
 
 def _cms_bucket(key: Column, j: int, width: int) -> Column:
-    h = F.md5(F.concat(key.cast("string"), F.lit(f"\x1ecms{j}")))
-    return (F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
-            % F.lit(width))
+    return md5_int(md5_hex(key, f"\x1ecms{j}"), digits=8) % F.lit(width)
 
 
 def count_min_sketch(
@@ -104,9 +104,8 @@ def cms_estimate(
     )
 
 
-# 16^15 — the KMV hash space: 15 hex chars of md5 as an integer, the
-# exact F.conv(...,16,10) == CAST('0x'||... AS BIGINT) identity the
-# assign_folds/hash_sample oracles established (60 bits, sign-safe)
+# 16^15 — the KMV hash space: ``_prims.md5_int``'s 15 hex digits of
+# md5 as an integer (60 bits; the SQL parity argument is written there)
 _KMV_SPACE = 16 ** 15
 
 
@@ -139,12 +138,7 @@ def kmv_distinct(
     if k < 2:
         raise ValueError("k must be >= 2")
     spark = df.sparkSession
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.col(key_col).cast("string"),
-                           F.lit(f"\x1e{salt}"))), 1, 15),
-        16, 10,
-    ).cast("long")
+    h = md5_int(md5_hex(F.col(key_col), f"\x1e{salt}"))
     tail = (
         df.filter(F.col(key_col).isNotNull())  # NULL keys hash to NULL
         # and would sort NULLS-FIRST in Spark vs NULLS-LAST in SQL —
@@ -167,9 +161,7 @@ def kmv_distinct(
 
 
 def _bloom_pos(key: Column, j: int, m_bits: int, salt: str) -> Column:
-    h = F.md5(F.concat(key.cast("string"), F.lit(f"\x1e{salt}{j}")))
-    return (F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
-            % F.lit(m_bits))
+    return md5_int(md5_hex(key, f"\x1e{salt}{j}"), digits=8) % F.lit(m_bits)
 
 
 def bloom_build(
@@ -297,12 +289,7 @@ def hll_distinct(
     m = 1 << p
     w_bits = 60 - p
     grain = 1_000_000
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.col(key_col).cast("string"),
-                           F.lit(f"\x1e{salt}"))), 1, 15),
-        16, 10,
-    ).cast("long")
+    h = md5_int(md5_hex(F.col(key_col), f"\x1e{salt}"))
     sfx = F.lpad(F.bin(F.expr(f"__h div {m}")), w_bits, "0")
     pos = F.instr(sfx, "1")
     regs = (

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .._prims import spread
+from .._prims import md5_hex, md5_int, spread
 
 # minimal public stopword lists (top function words per language)
 STOPWORDS = {
@@ -45,7 +45,7 @@ def token_count(text: Column) -> Column:
 def fingerprint(text: Column) -> Column:
     """Deterministic content fingerprint of whitespace-normalized
     lowercased text (md5 — portable to the DuckDB oracle)."""
-    return F.md5(F.regexp_replace(F.lower(F.trim(text)), r"\s+", " "))
+    return md5_hex(F.regexp_replace(F.lower(F.trim(text)), r"\s+", " "))
 
 
 def analyze_documents(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -753,8 +753,7 @@ def span_corruption_plan(
         F.count(F.lit(1)).alias("__nt"),
     )
     w = Window.partitionBy(id_col).orderBy(
-        F.md5(F.concat(F.col(id_col).cast("string"), F.lit(":"),
-                       F.col("__b").cast("string"), F.lit(f":{seed}"))),
+        md5_hex(F.col(id_col), ":", F.col("__b"), f":{seed}"),
         F.col("__b"),
     )
     wc = Window.partitionBy(id_col)
@@ -809,18 +808,8 @@ def mlm_mask_plan(
         F.posexplode(nonempty_tokens_col(F.col(text_col)))
         .alias("pos", "w"),
     )
-    key = F.md5(
-        F.concat(
-            F.col(id_col).cast("string"), F.lit(":"),
-            F.col("pos").cast("string"), F.lit(f":{int(seed)}"),
-        )
-    )
-    akey = F.md5(
-        F.concat(
-            F.col(id_col).cast("string"), F.lit(":"),
-            F.col("pos").cast("string"), F.lit(f":{int(seed)}:a"),
-        )
-    )
+    key = md5_hex(F.col(id_col), ":", F.col("pos"), f":{int(seed)}")
+    akey = md5_hex(F.col(id_col), ":", F.col("pos"), f":{int(seed)}:a")
     wperm = Window.partitionBy(id_col).orderBy(key, F.col("pos"))
     wc = Window.partitionBy(id_col)
     ranked = (
@@ -831,7 +820,7 @@ def mlm_mask_plan(
             F.expr(f"(__nt * {int(mask_num)}) div {int(mask_den)}"))
         .withColumn(
             "__act",
-            F.conv(F.substring(akey, 1, 2), 16, 10).cast("int") % 10)
+            md5_int(akey, 1, 2).cast("int") % 10)
     )
     m = F.col("__r") <= F.col("__nm")
     return ranked.groupBy(id_col).agg(

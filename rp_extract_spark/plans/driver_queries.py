@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .._prims import spread
+from .._prims import md5_hex, md5_int, spread
 from ..operators.asof import asof_join
 from ..operators.classes import label_encode, prune_min_instances
 from ..operators.similarity import topk_similar
@@ -5294,8 +5294,8 @@ FROM r WHERE rn < (n // 4) * 4 ORDER BY image_id
 def q_epoch_augment(spark, sf):
     """Per-epoch hash-decided augmentation (flip_h then rot180),
     fully ORACLED via position-sensitive integer moments: decisions are
-    md5 hex-digit parities (Spark F.conv(hex,16,10) == DuckDB
-    CAST('0x'||hex AS INT)); the transformed image's m0/mx/my are
+    md5 hex-digit parities (``_prims.md5_int``, which DuckDB replays
+    as CAST('0x'||hex AS INT)); the transformed image's m0/mx/my are
     exact int64 sums DuckDB recomputes from the source-coordinate map
     (flip XOR rot reads column w-1-x, rot reads row h-1-y). m0 is
     flip/rot-invariant; mx/my witness the geometry was APPLIED."""
@@ -5626,10 +5626,10 @@ FROM cells GROUP BY i ORDER BY image_id
 
 def q_loader_shards(spark, sf):
     """Distributed-loader shard assignment over the batch manifest,
-    fully ORACLED: rank = md5(bucket:batch:seed) mod world — Spark's
-    F.conv(15 hex chars, 16, 10) equals DuckDB's CAST('0x'||hex AS
-    BIGINT) (the assign_folds/hash_sample discipline); a stateless
-    projection every rank can evaluate independently, no coordinator."""
+    fully ORACLED: rank = md5(bucket:batch:seed) mod world, its digits
+    read by ``_prims.md5_int`` (which holds the SQL parity argument); a
+    stateless projection every rank can evaluate independently, no
+    coordinator."""
     from ..operators.curation import (
         collate_manifest,
         pack_batches,
@@ -6645,7 +6645,8 @@ ORACLES["retrieval_recall"] = ORACLE_RETRIEVAL_RECALL
 def q_photometric(spark, sf):
     """Photometric augmentation (solarize → posterize → invert), fully
     ORACLED pixel-by-pixel: decisions are md5 hex digits of the
-    ``image_id:seed:epoch:pm`` key (F.conv == CAST('0x'..) parity),
+    ``image_id:seed:epoch:pm`` key (``_prims.md5_digits``, read back
+    in SQL with CAST('0x'..)),
     every mapping is exact integer (floor divisions over non-negative
     values only — the color_jitter rule), and the applied result is
     witnessed by position-sensitive image moments DuckDB recomputes
@@ -6787,8 +6788,8 @@ def q_confusion_eval(spark, sf):
     from ..operators.classify import classification_report
 
     d = _t(spark, sf, "documents").filter(F.col("lang").isNotNull())
-    key = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":ce")))
-    digit = F.conv(F.substring(key, 1, 1), 16, 10).cast("int") % 4
+    key = md5_hex(F.col("doc_id"), ":ce")
+    digit = md5_int(key, 1, 1).cast("int") % 4
     p = d.select(
         F.col("lang").alias("label"),
         F.when(digit != 0, F.col("lang"))
@@ -6830,6 +6831,26 @@ FROM rep ORDER BY cls
 """
 
 
+def _md5_scored(spark, sf, salt, score, label, keep=()):
+    """The md5 score/label fixture of the ranking-metric queries, over
+    documents with a non-NULL doc_id: ``score`` = 5 hex digits of
+    md5(doc_id || salt) mod 1000001, and ``label`` = 1 when the next 2
+    digits × 3922 fall below it (score-correlated labels, so every
+    metric is informative). The ``keep`` columns ride along."""
+    d = _t(spark, sf, "documents").filter(F.col("doc_id").isNotNull())
+    key = md5_hex(F.col("doc_id"), salt)
+    return d.select(
+        *keep,
+        (md5_int(key, 1, 5) % 1000001).alias(score),
+        md5_int(key, 6, 2).alias("__v"),
+    ).select(
+        *keep,
+        score,
+        F.when(F.col("__v") * 3922 < F.col(score), F.lit(1))
+        .otherwise(F.lit(0)).alias(label),
+    )
+
+
 def q_calibration(spark, sf):
     """Reliability diagram + ECE, fully ORACLED: confidences and
     correctness bits derive from md5 hex fields (confidence-correlated
@@ -6838,19 +6859,8 @@ def q_calibration(spark, sf):
     — the one deferred division per value rule, no floats anywhere."""
     from ..operators.classify import calibration_bins
 
-    d = _t(spark, sf, "documents").filter(F.col("doc_id").isNotNull())
-    key = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":cal")))
-    s1 = d.select(
-        (F.conv(F.substring(key, 1, 5), 16, 10).cast("long") % 1000001)
-        .alias("conf_u"),
-        F.conv(F.substring(key, 6, 2), 16, 10).cast("long").alias("__v"),
-    )
-    s2 = s1.select(
-        "conf_u",
-        F.when(F.col("__v") * 3922 < F.col("conf_u"), F.lit(1))
-        .otherwise(F.lit(0)).alias("correct"),
-    )
-    return calibration_bins(s2, "conf_u", "correct").orderBy("bin")
+    s = _md5_scored(spark, sf, ":cal", "conf_u", "correct")
+    return calibration_bins(s, "conf_u", "correct").orderBy("bin")
 
 
 ORACLE_CALIBRATION = """
@@ -6950,17 +6960,7 @@ def q_auc_roc(spark, sf):
     integers on both engines (Python big int / DuckDB HUGEINT)."""
     from ..operators.classify import auc_roc
 
-    d = _t(spark, sf, "documents").filter(F.col("doc_id").isNotNull())
-    key = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":auc")))
-    s = d.select(
-        (F.conv(F.substring(key, 1, 5), 16, 10).cast("long") % 1000001)
-        .alias("score_u"),
-        F.conv(F.substring(key, 6, 2), 16, 10).cast("long").alias("__v"),
-    ).select(
-        "score_u",
-        F.when(F.col("__v") * 3922 < F.col("score_u"), F.lit(1))
-        .otherwise(F.lit(0)).alias("label"),
-    )
+    s = _md5_scored(spark, sf, ":auc", "score_u", "label")
     return auc_roc(s, "score_u", "label")
 
 
@@ -7001,19 +7001,7 @@ def q_avg_precision(spark, sf):
     identical order with an explicit ROWS frame."""
     from ..operators.classify import average_precision
 
-    d = _t(spark, sf, "documents").filter(F.col("doc_id").isNotNull())
-    key = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":ap")))
-    s = d.select(
-        F.col("doc_id"),
-        (F.conv(F.substring(key, 1, 5), 16, 10).cast("long") % 1000001)
-        .alias("score_u"),
-        F.conv(F.substring(key, 6, 2), 16, 10).cast("long").alias("__v"),
-    ).select(
-        "doc_id",
-        "score_u",
-        F.when(F.col("__v") * 3922 < F.col("score_u"), F.lit(1))
-        .otherwise(F.lit(0)).alias("label"),
-    )
+    s = _md5_scored(spark, sf, ":ap", "score_u", "label", keep=("doc_id",))
     return average_precision(s, "score_u", "label", "doc_id")
 
 
@@ -7206,17 +7194,7 @@ def q_roc_points(spark, sf):
     rate is one integer floor division at the 1e-6 grain."""
     from ..operators.classify import roc_points
 
-    d = _t(spark, sf, "documents").filter(F.col("doc_id").isNotNull())
-    key = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":auc")))
-    s = d.select(
-        (F.conv(F.substring(key, 1, 5), 16, 10).cast("long") % 1000001)
-        .alias("score_u"),
-        F.conv(F.substring(key, 6, 2), 16, 10).cast("long").alias("__v"),
-    ).select(
-        "score_u",
-        F.when(F.col("__v") * 3922 < F.col("score_u"), F.lit(1))
-        .otherwise(F.lit(0)).alias("label"),
-    )
+    s = _md5_scored(spark, sf, ":auc", "score_u", "label")
     return roc_points(s, "score_u", "label").orderBy(
         F.col("score").desc()
     )
@@ -7800,7 +7778,7 @@ def q_vocab_coverage(spark, sf):
         d.select(
             F.explode(nonempty_tokens_col(F.col("text"))).alias("token")
         )
-        .filter(F.substring(F.md5(F.col("token")), 1, 1) < "c")
+        .filter(F.substring(md5_hex(F.col("token")), 1, 1) < "c")
     )
     return vocab_coverage(d, vocab, top_n=10).orderBy("rank")
 
@@ -8261,11 +8239,7 @@ def q_fuzzy_match(spark, sf):
         F.explode(nonempty_tokens_col(F.col("text"))).alias("w")
     ).distinct().persist()  # vocabulary-sized; feeds both join sides —
     # unpersisted, the corpus explode+distinct ran twice (round 6)
-    p = (
-        F.conv(F.substring(F.md5(F.concat(F.col("w"), F.lit(":fz"))),
-                           1, 1), 16, 10).cast("int")
-        % F.length("w")
-    )
+    p = md5_int(md5_hex(F.col("w"), ":fz"), 1, 1).cast("int") % F.length("w")
     corrupted = vocab.filter(F.length("w") >= 2).select(
         F.col("w").alias("src_token"),
         F.concat(
@@ -8356,10 +8330,8 @@ def q_mmr_select(spark, sf):
 
     e = spread(_t(spark, sf, "embeddings"))  # 1-split scan; each
     # MMR pick re-scans it (round 6)
-    key = F.md5(F.concat(F.col("vec_id").cast("string"), F.lit(":mmr")))
     scored = e.withColumn(
-        "rel_u",
-        F.conv(F.substring(key, 1, 5), 16, 10).cast("long") % 1000001,
+        "rel_u", md5_int(md5_hex(F.col("vec_id"), ":mmr"), 1, 5) % 1000001
     )
     return mmr_select(scored, k=5).orderBy("rank")
 
@@ -8456,9 +8428,7 @@ def q_shuffle_audit(spark, sf):
 
     d = _t(spark, sf, "documents").select(
         F.pmod(F.col("doc_id"), F.lit(8)).cast("int").alias("shard"),
-        F.md5(
-            F.concat(F.col("doc_id").cast("string"), F.lit(":sa"))
-        ).alias("ord"),
+        md5_hex(F.col("doc_id"), ":sa").alias("ord"),
         "lang",
     )
     return shard_shuffle_audit(d, "shard", "ord", "lang").orderBy(
@@ -8644,21 +8614,7 @@ def q_annotator_vote(spark, sf):
         )
         .select(
             "doc_id",
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.col("doc_id").cast("string"),
-                            F.lit(":"),
-                            F.col("a").cast("string"),
-                        )
-                    ),
-                    1,
-                    1,
-                ),
-                16,
-                10,
-            )
+            md5_int(md5_hex(F.col("doc_id"), ":", F.col("a")), 1, 1)
             .cast("int")
             .alias("dg"),
             F.pmod(F.col("doc_id"), F.lit(5)).cast("int").alias("t"),
@@ -9505,7 +9461,7 @@ def q_text_curation(spark, sf):
     d3 = d2.withColumn(
         "n_tokens", F.size(nonempty_tokens_col(F.col("text")))
     ).filter(F.col("n_tokens") >= 20)
-    d4 = d3.withColumn("__h", F.md5(F.col("doc_id").cast("string")))
+    d4 = d3.withColumn("__h", md5_hex(F.col("doc_id")))
     # cap per HOST (7 in the fixture), not per registered domain — the
     # two-label rule folds every host into example.com, which would
     # leave the cap the only visible stage
@@ -9559,14 +9515,7 @@ def q_ndcg(spark, sf):
     from ..operators.classify import ndcg_at_k
 
     e = _t(spark, sf, "events").filter(F.col("value").isNotNull())
-    rel = (
-        F.conv(
-            F.substring(F.md5(F.col("event_id").cast("string")), 1, 1),
-            16,
-            10,
-        ).cast("long")
-        % 4
-    )
+    rel = md5_int(md5_hex(F.col("event_id")), 1, 1) % 4
     scored = e.select("user_id", "event_id", "value", rel.alias("rel"))
     return ndcg_at_k(
         scored,
@@ -9666,14 +9615,7 @@ ORACLES["learning_curve"] = ORACLE_LEARNING_CURVE
 # content-sensitive integer digest used by the format-roundtrip
 # queries: any corrupted byte in write->read breaks the equality
 def _content_agg(df):
-    dig = (
-        F.conv(
-            F.substring(F.md5(F.coalesce(F.col("text"), F.lit(""))), 1, 15),
-            16,
-            10,
-        ).cast("long")
-        % 1000000000
-    )
+    dig = md5_int(md5_hex(F.coalesce(F.col("text"), F.lit("")))) % 1000000000
     return (
         df.groupBy("lang")
         .agg(
@@ -9897,12 +9839,7 @@ def q_conformal(spark, sf):
     from ..operators.classify import conformal_thresholds
 
     e = _t(spark, sf, "embeddings")
-    score = (
-        F.conv(
-            F.substring(F.md5(F.col("vec_id").cast("string")), 1, 5), 16, 10
-        ).cast("long")
-        % 100000
-    ) / 100.0
+    score = (md5_int(md5_hex(F.col("vec_id")), 1, 5) % 100000) / 100.0
     scored = e.select("vec_id", "label", score.alias("score"))
     return conformal_thresholds(
         scored, group_col="label", score_col="score", id_col="vec_id"

@@ -319,7 +319,8 @@ def near_dup_images_df(spark: SparkSession, n: int) -> DataFrame:
     at many groups distinct groups collide to identical or near-Hamming
     images and chain into deep components (observed at n=2000:
     propagate_min_ids hits its round cap). Scale benchmarks use
-    seeded-random bases instead (tools/bench_scaling_phash.py)."""
+    seeded-random bases instead (BENCH/BASELINE.md, "Image-dedup
+    scaling")."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:

@@ -79,5 +79,24 @@ def load_reference():
     spec = importlib.util.spec_from_file_location("ref_rp_extract", REFERENCE_PATH)
     mod = importlib.util.module_from_spec(spec)
     sys.modules["ref_rp_extract"] = mod
-    spec.loader.exec_module(mod)
+    try:
+        spec.loader.exec_module(mod)
+    except BaseException:
+        # a half-imported module would answer every later call with an
+        # AttributeError instead of the error that names REFERENCE_PATH
+        del sys.modules["ref_rp_extract"]
+        raise
     return mod
+
+
+class _Reference:
+    """The reference module, imported on the first attribute read. A
+    test module that binds it imports without the reference, so its
+    reference-free tests still run, and each test that reads it fails
+    with the error that names ``REFERENCE_PATH``."""
+
+    def __getattr__(self, name):
+        return getattr(load_reference(), name)
+
+
+ref = _Reference()

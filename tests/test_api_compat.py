@@ -5,10 +5,8 @@ import numpy as np
 import pytest
 
 from rp_extract_spark import available_feature_types, rp_extract
-from tests.reference_oracle import load_reference
+from tests.reference_oracle import ref
 from tests.test_audio_parity import _signal
-
-ref = load_reference()
 
 
 def test_docstring_call_pattern():

@@ -13,9 +13,7 @@ from rp_extract_spark.functions.audio import (
     extract_audio_features,
     extract_audio_segment_features,
 )
-from tests.reference_oracle import load_reference
-
-ref = load_reference()
+from tests.reference_oracle import ref
 
 
 def _signal(seconds: float, samplerate: int, seed: int = 0) -> np.ndarray:

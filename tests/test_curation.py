@@ -444,3 +444,32 @@ def test_contamination_report_counts(spark):
     assert out[100].n_contaminated_docs == 2
     assert out[100].n_hits == 3   # doc1x1 gram + doc2x2 grams
     assert out[200].n_contaminated_docs == 0 and out[200].n_hits == 0
+
+
+def test_model_table_collects_are_bounded(spark, monkeypatch):
+    from rp_extract_spark import _prims
+    from rp_extract_spark.operators.curation import (
+        apply_bpe,
+        apply_bpe_ids,
+        mix_schedule,
+        train_bpe,
+    )
+
+    monkeypatch.setattr(_prims, "COLLECT_CAP", 3)
+    corpus = spark.createDataFrame(
+        [("low low lower newest newest newest widest",)], "text string")
+    merges = train_bpe(corpus, n_merges=4, min_count=1)
+    assert merges.count() == 4
+    with pytest.raises(ValueError, match=r"^apply_bpe: more than 3 rows"):
+        apply_bpe(corpus, merges)
+    vocab = spark.createDataFrame(
+        [(t, i) for i, t in enumerate("lowe")], "token string, token_id int")
+    with pytest.raises(ValueError, match=r"^apply_bpe_ids: more than 3"):
+        apply_bpe_ids(corpus, merges.limit(3), vocab)
+    weights = spark.createDataFrame(
+        [(s, 1) for s in "abcd"], "source string, weight long")
+    with pytest.raises(ValueError, match=r"^mix_schedule: more than 3"):
+        mix_schedule(weights)
+    # at the cap: runs
+    assert apply_bpe(corpus, merges.orderBy("rank").limit(3)).count() == 1
+    assert mix_schedule(weights.limit(3)).count() == 3

@@ -11,9 +11,8 @@ import pytest
 from rp_extract_spark.functions import kernel
 from rp_extract_spark.functions.stats import stat_features
 
-from .reference_oracle import load_reference
+from .reference_oracle import ref
 
-ref = load_reference()
 rng = np.random.default_rng(7)
 
 

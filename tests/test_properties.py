@@ -12,9 +12,8 @@ from rp_extract_spark.functions.kernel import (
 )
 from rp_extract_spark.functions.stats import stat_features
 
-from .reference_oracle import load_reference
+from .reference_oracle import ref
 
-ref = load_reference()
 
 gray_images = arrays(
     np.uint8,
