@@ -9,7 +9,7 @@ Output: {"metric": "feature_asof_rows_per_sec", "value": N,
          "unit": "rows/sec", "queries": {name: sec, ...}, "sf": ...}
 
 Scaling-efficiency evidence (N vs 4N cores) lives in
-``tools/bench_scaling.py`` → ``BENCH/BASELINE.md``.
+``BENCH/BASELINE.md``.
 """
 
 from __future__ import annotations

@@ -10,12 +10,15 @@ Scale notes: signatures are computed in one Arrow-batched pandas UDF
 pass (vectorized numpy per batch); candidate generation is a single
 explode + shuffle on (band, bucket); representative election is the
 classic min-id propagation over the verified edge set, replayed on the
-driver while the edge set is small (propagate_min_ids).
+driver while the edge set is small (propagate_min_ids). Verified
+MinHash dedup below the same bound does candidates, Jaccard and
+components on the driver after one collect of the banded signatures.
 """
 
 from __future__ import annotations
 
 import logging
+import re
 from collections.abc import Iterator, Sequence
 from functools import lru_cache
 
@@ -35,8 +38,16 @@ _MERSENNE = (1 << 61) - 1
 # propagate_min_ids: below this edge count the edges are collected once
 # and the rounds replay in numpy on the driver (each distributed round
 # is ~14 small jobs of fixed latency); at or above it they stay on the
-# cluster as two persisted copies pre-partitioned by id and by bucket
+# cluster as two persisted copies pre-partitioned by id and by bucket.
+# Verified minhash_lsh_dedup finishes on the driver below this many
+# banded rows (and capped candidate pairs).
 _BIG_EDGE_THRESHOLD = 2_000_000
+# ... and below this many bytes of candidate-document text. The driver's
+# Python gram sets take ~24 bytes per text byte (measured at 100-1000
+# word documents), so at most ~1.6 GB; 4 cores, 4g driver, 125k
+# 300-word documents: driver path 84 s with 2.2 GB Python + 2.9 GB JVM
+# tree at 87 MB of candidate text, Spark plan 763 s with 5.0 GB JVM tree
+_DRIVER_TEXT_BYTES = 64 << 20
 
 
 def exact_dedup(df: DataFrame, cols: Sequence[str], id_col: str) -> DataFrame:
@@ -662,21 +673,35 @@ def _min_id_rounds(round_, max_iters: int) -> None:
 
 
 def _propagate_on_driver(e: DataFrame, id_col: str, max_iters: int) -> DataFrame:
-    """propagate_min_ids on a collected (__id, __bk) edge set: the same
-    seed, rounds, log lines and stopping rule, in numpy. Ids and
+    """propagate_min_ids on a collected (__id, __bk) edge set. Ids and
     buckets become dense codes (ids in sort order, so a min over codes
-    is a min over ids) and each bucket-min hop is two segmented
-    ``np.minimum.reduceat`` passes over edges pre-sorted by bucket and
-    by id."""
-    import pyarrow as pa
+    is a min over ids) for ``_min_id_labels``."""
     import pyarrow.compute as pc
 
-    f = e.schema["__id"]
     t = e.filter(F.col("__bk").isNotNull()).toArrow()
-    uniq = pc.unique(t.column("__id"))
-    uniq = uniq.take(pc.sort_indices(uniq))
+    uniq = _sorted_unique(t.column("__id"))
     idc = pc.index_in(t.column("__id"), value_set=uniq).to_numpy()
     bkc = pc.index_in(t.column("__bk"), value_set=pc.unique(t.column("__bk"))).to_numpy()
+    labels = _min_id_labels(idc, bkc, len(uniq), max_iters)
+    return _labels_frame(e.sparkSession, e.schema["__id"], id_col, uniq, labels)
+
+
+def _sorted_unique(ids):
+    """The distinct values of an Arrow id column in sort order: an id's
+    index here is its dense code."""
+    import pyarrow.compute as pc
+
+    uniq = pc.unique(ids)
+    return uniq.take(pc.sort_indices(uniq))
+
+
+def _min_id_labels(idc: np.ndarray, bkc: np.ndarray, n_ids: int,
+                   max_iters: int) -> np.ndarray:
+    """The propagate_min_ids seed, rounds, log lines and stopping rule
+    in numpy, over (id code, bucket code) edges in which every id code
+    in ``range(n_ids)`` occurs. Each bucket-min hop is two segmented
+    ``np.minimum.reduceat`` passes over the edges pre-sorted by bucket
+    and by id. Returns each id code's label code."""
     by_bk, by_id = np.argsort(bkc, kind="stable"), np.argsort(idc, kind="stable")
     id_by_bk, bk_by_id = idc[by_bk], bkc[by_id]
 
@@ -691,7 +716,7 @@ def _propagate_on_driver(e: DataFrame, id_col: str, max_iters: int) -> DataFrame
         bmin = np.minimum.reduceat(lab[id_by_bk], bk_starts)
         return np.minimum.reduceat(bmin[bk_by_id], id_starts)
 
-    labels = hop(np.arange(len(uniq)))
+    labels = hop(np.arange(n_ids))
 
     def round_() -> int:
         nonlocal labels
@@ -702,12 +727,20 @@ def _propagate_on_driver(e: DataFrame, id_col: str, max_iters: int) -> DataFrame
         return changed
 
     _min_id_rounds(round_, max_iters)
+    return labels
+
+
+def _labels_frame(spark, field: T.StructField, id_col: str, uniq,
+                  labels: np.ndarray) -> DataFrame:
+    """(id, rep_id) from the sorted unique ids and their label codes;
+    the id keeps ``field``'s type and nullability, rep_id is nullable."""
+    import pyarrow as pa
+
     out = pa.table({id_col: uniq, "rep_id": uniq.take(pa.array(labels))})
     schema = T.StructType([
-        T.StructField(id_col, f.dataType, f.nullable),
-        T.StructField("rep_id", f.dataType, True),
+        T.StructField(id_col, field.dataType, field.nullable),
+        T.StructField("rep_id", field.dataType, True),
     ])
-    spark = e.sparkSession
     # one Arrow batch per partition: cap the width at the core count
     return spark.createDataFrame(out, schema).coalesce(
         spark.sparkContext.defaultParallelism
@@ -772,6 +805,15 @@ def minhash_lsh_dedup(
     the first ``max_bucket_size`` ids of a bucket are all
     non-duplicate colliders).
 
+    Verified calls with fewer than ``_BIG_EDGE_THRESHOLD`` banded rows
+    (documents x bands) finish on the driver (``_verified_on_driver``):
+    one Arrow collect of the banded rows, candidates and Jaccard in
+    numpy/Python over Spark's own ``lower(trim(text))``, the components
+    in numpy. At or above it the candidates, grams, Jaccard and
+    components stay Spark joins. Both give the same rows and log
+    records; each verified call logs one INFO record (``_VERIFY_LOG``)
+    with the path taken and its bucket and pair counts.
+
     ``token_hash='md5'`` switches the word-token hash to the
     SQL-recomputable md5-prefix form (the simhash oracle-mode
     convention) so an external engine can rebuild the signatures and
@@ -789,21 +831,45 @@ def minhash_lsh_dedup(
     # Jaccard >= threshold filters out LSH false positives BEFORE the
     # component merge — the standard candidates->verify->union-find
     # near-dup pipeline (verification cost is per candidate pair only).
-    # Three caches, each read by two or more consumers: the banded
-    # signatures (colliding-bucket count, ranked head, star anchors —
-    # the signature UDF would otherwise run once per consumer), the
-    # candidate pairs (gram prune + pair join) and the candidate grams
-    # (both pair sides). propagate_min_ids materializes its labels, so
-    # all three are released before returning.
+    # The banded signatures are cached (the signature UDF would
+    # otherwise run once per consumer): counted, then collected once
+    # by the driver finish, or read by the bucket sizes, ranked head
+    # and star anchors of the Spark plan. The Spark plan also caches
+    # the colliding bucket sizes (logged counts + candidate join), the
+    # candidate pairs (count, gram prune, pair join), the candidate
+    # grams (both pair sides) and the verified pairs (count + edges).
+    # The labels are materialized, so every cache is released before
+    # returning.
     cached = [banded.persist()]
     try:
-        cand = _lsh_candidates(banded, id_col, max_bucket_size).persist()
+        n_banded = banded.count()
+        if n_banded < _BIG_EDGE_THRESHOLD:
+            out = _verified_on_driver(df, banded, text_col, id_col, bands, jaccard_n,
+                                      verify_jaccard, max_bucket_size, max_iters)
+            if out is not None:
+                return out
+        # (band, bucket, __n) of the colliding buckets (>= 2 members):
+        # the logged counts and _lsh_candidates read it
+        sizes = (
+            banded.groupBy("band", "bucket")
+            .agg(F.count(F.lit(1)).alias("__n"))
+            .filter(F.col("__n") >= 2)
+            .persist()
+        )
+        cached.append(sizes)
+        n_multi, n_over = sizes.agg(
+            F.count(F.lit(1)), F.count_if(F.col("__n") > max_bucket_size)
+        ).first()
+        cand = _lsh_candidates(banded, sizes, id_col, max_bucket_size).persist()
         cached.append(cand)
         g = _candidate_grams(df, cand, text_col, id_col, jaccard_n).persist()
         cached.append(g)
         verified = _pair_jaccard(cand, g, id_col).filter(
             F.col("jaccard") >= verify_jaccard
-        )
+        ).persist()
+        cached.append(verified)
+        logger.info(_VERIFY_LOG, "spark", n_banded, n_multi, n_over, cand.count(),
+                    verified.count())
         edges = verified.select(
             F.explode(F.array("id_a", "id_b")).alias(id_col),
             F.xxhash64("id_a", "id_b").alias("__bk"),
@@ -816,8 +882,131 @@ def minhash_lsh_dedup(
             c.unpersist()
 
 
-def _lsh_candidates(banded: DataFrame, id_col: str, max_bucket_size: int) -> DataFrame:
-    """Candidate pairs (id_a > id_b) sharing a (band, bucket).
+# one INFO record per verified minhash_lsh_dedup call, on either path
+_VERIFY_LOG = (
+    "minhash_lsh_dedup verify: path=%s banded_rows=%d colliding_buckets=%d "
+    "overflow_buckets=%d candidate_pairs=%d verified_pairs=%d"
+)
+
+# Java's \s, which Spark's split(..., '\s+') uses: ASCII whitespace
+# only — Python's \s also splits on NBSP, U+2028, \x1c-\x1f, ...
+_JAVA_WS = re.compile(r"[ \t\n\x0B\f\r]+")
+
+
+def _word_grams(text: str | None, n: int) -> frozenset[str]:
+    """Driver twin of one ``_candidate_grams`` row, given the text's
+    Spark ``lower(trim(text))``: Java's ``\\s`` split keeping leading
+    and trailing empty tokens (``split(..., -1)``), n-grams joined by
+    one space, one gram of all the tokens when there are fewer than n.
+    A NULL text gives Spark's answer for it, the one empty gram."""
+    toks = _JAVA_WS.split(text or "")
+    return frozenset(" ".join(toks[i:i + n]) for i in range(max(len(toks) - n, 0) + 1))
+
+
+def _verified_on_driver(df, banded, text_col, id_col, bands, n, threshold, cap,
+                        max_iters) -> DataFrame | None:
+    """The verified ``minhash_lsh_dedup`` from the cached ``banded``
+    table on, on the driver: one Arrow collect of the banded rows,
+    ``_bucket_pairs`` for the candidates, one Spark job summing the
+    bytes of the candidate documents' ``lower(trim(text))`` and one
+    fetching it, ``_word_grams`` Jaccard per pair, then
+    ``_min_id_labels`` over the verified pairs plus one singleton
+    bucket per id. Same rows, schema and log records as the Spark
+    plan; a pair of duplicate ids verifies when any pair of their
+    texts does, as the Spark pair join does. Returns None, having
+    logged nothing, when the capped pairs reach ``_BIG_EDGE_THRESHOLD``
+    before their distinct or the candidate text reaches
+    ``_DRIVER_TEXT_BYTES``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    t = banded.toArrow()
+    ids = t.column(id_col)
+    if ids.null_count:
+        raise ValueError(
+            f"propagate_min_ids: {ids.null_count // bands} edge(s) have a NULL {id_col!r}"
+        )
+    uniq = _sorted_unique(ids)
+    idc = pc.index_in(ids, value_set=uniq).to_numpy().astype(np.int64)
+    pairs = _bucket_pairs(idc, t.column("band").to_numpy(),
+                          t.column("bucket").to_numpy(), cap, len(uniq))
+    if pairs is None:
+        return None
+    a, b, n_multi, n_over = pairs
+    spark = df.sparkSession
+    grams: dict[int, list[frozenset[str]]] = {}
+    if len(a):
+        want = spark.createDataFrame(
+            pa.table({id_col: uniq.take(pa.array(np.union1d(a, b)))}),
+            T.StructType([df.schema[id_col]]),
+        )
+        texts = df.select(
+            F.col(id_col), F.lower(F.trim(F.col(text_col))).alias("__t")
+        ).join(F.broadcast(want), id_col, "left_semi")
+        if (texts.agg(F.sum(F.octet_length("__t"))).first()[0] or 0) >= _DRIVER_TEXT_BYTES:
+            return None
+        rows = texts.toArrow()
+        codes = pc.index_in(rows.column(id_col), value_set=uniq).to_numpy()
+        for c, text in zip(codes.tolist(), rows.column("__t").to_pylist()):
+            grams.setdefault(c, []).append(_word_grams(text, n))
+
+    def jaccard(x: frozenset, y: frozenset) -> float:
+        """``_pair_jaccard``'s inter / (union, or 1 when empty)."""
+        inter = len(x & y)
+        return inter / ((len(x) + len(y) - inter) or 1)
+
+    # text pairs passing per candidate pair (> 1 only for repeated ids)
+    hits = np.array([
+        sum(jaccard(x, y) >= threshold for x in grams.get(i, ()) for y in grams.get(j, ()))
+        for i, j in zip(a.tolist(), b.tolist())
+    ], dtype=np.int64)
+    logger.info(_VERIFY_LOG, "driver", len(t), n_multi, n_over, len(a), int(hits.sum()))
+    va, vb = a[hits > 0], b[hits > 0]
+    # edges: every id in its own singleton bucket, each verified pair in one
+    own, pair_bk = np.arange(len(uniq)), len(uniq) + np.arange(len(va))
+    labels = _min_id_labels(np.concatenate([own, va, vb]),
+                            np.concatenate([own, pair_bk, pair_bk]), len(uniq), max_iters)
+    return _labels_frame(spark, df.schema[id_col], id_col, uniq, labels)
+
+
+def _bucket_pairs(idc: np.ndarray, band: np.ndarray, bucket: np.ndarray, cap: int,
+                  n_ids: int):
+    """numpy twin of ``_lsh_candidates`` over dense int64 id codes (code
+    order = id order): the distinct candidate (a, b) code pairs as two
+    arrays, plus the colliding (>= 2 members) and overflow (> ``cap``)
+    bucket counts. Within each colliding (band, bucket), sorted by id:
+    all pairs a > b among the first ``cap`` members, and every later
+    member paired with the rank-1 and rank-``cap`` members. None when
+    those pairs number ``_BIG_EDGE_THRESHOLD`` or more before the
+    distinct."""
+    order = np.lexsort((idc, bucket, band))
+    code, band, bucket = idc[order], band[order], bucket[order]
+    new = np.ones(len(code), dtype=bool)
+    new[1:] = (band[1:] != band[:-1]) | (bucket[1:] != bucket[:-1])
+    start = np.flatnonzero(new)
+    size = np.diff(np.r_[start, len(code)])
+    row_start, row_size = np.repeat(start, size), np.repeat(size, size)
+    rank = np.arange(len(code)) - row_start  # 0-based, in id order
+    # a head row pairs with every head row before it in its bucket
+    k = np.where((row_size >= 2) & (rank < cap), rank, 0)
+    star = np.flatnonzero((row_size >= 2) & (rank >= cap))
+    anchors = [0, cap - 1] if cap >= 1 else [0]
+    if int(k.sum()) + len(anchors) * len(star) >= _BIG_EDGE_THRESHOLD:
+        return None
+    ha = np.repeat(np.arange(len(code)), k)
+    hb = np.repeat(row_start, k) + np.arange(len(ha)) - np.repeat(np.cumsum(k) - k, k)
+    ha, hb = code[ha], code[hb]
+    keep = ha > hb
+    pa_ = np.concatenate([ha[keep], np.tile(code[star], len(anchors))])
+    pb_ = np.concatenate([hb[keep], *(code[row_start[star] + r] for r in anchors)])
+    key = np.unique(pa_ * n_ids + pb_)
+    return key // n_ids, key % n_ids, int((size >= 2).sum()), int((size > cap).sum())
+
+
+def _lsh_candidates(banded: DataFrame, sizes: DataFrame, id_col: str,
+                    max_bucket_size: int) -> DataFrame:
+    """Candidate pairs (id_a > id_b) sharing a (band, bucket); ``sizes``
+    holds (band, bucket, __n) for the buckets with two or more members.
 
     Hot-bucket cap: a degenerate bucket (e.g. a 100k-member exact-
     duplicate group — precisely what dedup exists to find) must not
@@ -838,12 +1027,7 @@ def _lsh_candidates(banded: DataFrame, id_col: str, max_bucket_size: int) -> Dat
     # window to COLLIDING buckets first (round 6): one map-side-
     # combined count pass + a join that reuses the window's own
     # (band, bucket) exchange, in place of sorting every banded row
-    multi = (
-        banded.groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") >= 2)
-        .select("band", "bucket")
-    )
+    multi = sizes.select("band", "bucket")
     w = Window.partitionBy("band", "bucket").orderBy(F.col(id_col))
     ranked = banded.join(multi, ["band", "bucket"]).withColumn(
         "__rn", F.row_number().over(w)

@@ -12,8 +12,12 @@ cross-engine summation order could differ.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 from collections.abc import Callable
+from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -29,6 +33,20 @@ from ..operators.windows import forward_fill, lag_lead_stack, sessionize
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+@lru_cache(maxsize=None)
+def _scratch_root() -> str:
+    root = tempfile.mkdtemp(prefix="rp_driver_queries_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
+def _scratch_dir(prefix: str) -> str:
+    """A fresh directory for the files a query writes and reads back,
+    under one per-process directory removed at interpreter exit: the
+    returned DataFrame reads them lazily, so they outlive the call."""
+    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_root())
 
 
 # ---------------------------------------------------------------- aggs
@@ -1110,8 +1128,6 @@ def q_multilabel_roundtrip(spark, sf):
     back through read_multi_class_file (classes_io.py:60-110, label
     replacement + blank→0). The oracle recomputes the same matrix from
     documents directly, so the file roundtrip itself is under test."""
-    import os
-    import tempfile
 
     from ..sources.multilabel import read_multi_class_file, write_multi_class_table
 
@@ -1693,9 +1709,6 @@ def q_incremental_resume(spark, sf):
     full 500 — the anti-join must extract exactly the 200 new rows and
     the second re-run exactly 0 (idempotence). Returns the snapshot log
     with per-run row counts (rows-only; wall-clock fields excluded)."""
-    import os
-    import shutil
-    import tempfile
 
     from ..operators.resume import incremental_extract, list_snapshots, write_snapshot
 
@@ -2608,8 +2621,6 @@ def q_hdf5_roundtrip(spark, sf):
     checksums. The oracle recomputes the same values from the parquet
     directly, so the full byte-level h5 write/read path is what is
     under test."""
-    import os
-    import tempfile
 
     from ..sources.hdf5 import read_h5_features, write_h5_features
 
@@ -4706,17 +4717,16 @@ def q_webdataset_roundtrip(spark, sf):
     equality, so this verifies the full sink/scan fidelity, not just
     row counts (the hdf5_roundtrip pattern). Side effect: writes tar
     shards to a fresh temp dir each run."""
-    import tempfile
 
     from ..operators.images import image_stats
     from ..sources.images import formula_images_df
     from ..sources.webdataset import read_webdataset, write_webdataset
 
-    d = tempfile.mkdtemp(prefix="wds_roundtrip_")
+    d = _scratch_dir("wds_roundtrip_")
     write_webdataset(
         formula_images_df(spark, 12), d, shard_rows=5
     ).count()
-    back = read_webdataset(spark, d + "/*.tar").filter(F.col("err").isNull())
+    back = read_webdataset(spark, d).filter(F.col("err").isNull())
     imgs = back.select(
         F.col("key").alias("image_id"),
         F.col("data").alias("bytes"),
@@ -7412,7 +7422,6 @@ def q_webdataset_index(spark, sf):
     layout arithmetic. A wrong pad, header size, or member order
     breaks the integer equality. Side effect: writes a shard to a
     fresh temp dir each run."""
-    import tempfile
 
     from ..sources.webdataset import index_webdataset, write_webdataset
 
@@ -7427,12 +7436,12 @@ def q_webdataset_index(spark, sf):
         .repartition(1)
         .sortWithinPartitions("doc_id")
     )
-    out_dir = tempfile.mkdtemp(prefix="wds_index_")
+    out_dir = _scratch_dir("wds_index_")
     write_webdataset(
         d, out_dir, id_col="doc_id", data_col="payload",
         ext_col="ext", shard_rows=1_000_000,
     ).count()
-    idx = index_webdataset(spark, out_dir + "/*.tar")
+    idx = index_webdataset(spark, out_dir)
     return idx.filter(F.col("err").isNull()).select(
         "member", "offset", "data_offset", "size"
     ).orderBy("offset")
@@ -9644,9 +9653,8 @@ def q_orc_roundtrip(spark, sf):
     corrupted byte anywhere in the write->read chain breaks the
     equality (the webdataset_roundtrip pattern). Side effect: writes
     to a fresh temp dir each run."""
-    import tempfile
 
-    d = tempfile.mkdtemp(prefix="orc_roundtrip_")
+    d = _scratch_dir("orc_roundtrip_")
     _t(spark, sf, "documents").write.mode("overwrite").orc(d)
     return _content_agg(spark.read.orc(d))
 
@@ -9661,9 +9669,8 @@ def q_jsonl_roundtrip(spark, sf):
     The read-back uses the EXPLICIT source schema — inference would
     silently widen/narrow types, which is exactly the drift this
     query exists to catch. Side effect: temp dir per run."""
-    import tempfile
 
-    d = tempfile.mkdtemp(prefix="jsonl_roundtrip_")
+    d = _scratch_dir("jsonl_roundtrip_")
     docs = _t(spark, sf, "documents")
     docs.write.mode("overwrite").json(d)
     back = spark.read.schema(docs.schema).json(d)
@@ -9906,7 +9913,6 @@ def q_ivf_append(spark, sf):
     the FULL set with the same fixed centroids (the ivf_recall
     technique), so append-equals-rebuild is the compared claim. Side
     effect: temp dir per run."""
-    import tempfile
 
     from ..operators.similarity import ivf_append, ivf_build, ivf_write
     from ..operators.similarity import ivf_probe_stored
@@ -9918,7 +9924,7 @@ def q_ivf_append(spark, sf):
     )
     base = e.filter(F.col("vec_id") % 10 != 0)
     delta = e.filter(F.col("vec_id") % 10 == 0)
-    d = tempfile.mkdtemp(prefix="ivf_append_")
+    d = _scratch_dir("ivf_append_")
     ivf_write(ivf_build(base, cent), d)
     ivf_append(delta, cent, d)
     qv = [float(x) for x in e.filter(F.col("vec_id") == 7).first().embedding]

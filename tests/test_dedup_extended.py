@@ -156,10 +156,12 @@ _GRAPHS = {
 }
 
 
-def _propagate_run(caplog, edges, max_iters):
+def _logged_run(caplog, run):
+    """(sorted rows, schema, dedup log records) of the frame ``run()``
+    returns."""
     caplog.clear()
     with caplog.at_level(logging.INFO, logger=dedup.__name__):
-        out = propagate_min_ids(edges, max_iters=max_iters)
+        out = run()
         rows = sorted(out.collect())
     logs = [(r.levelname, r.getMessage()) for r in caplog.records
             if r.name == dedup.__name__]
@@ -175,9 +177,12 @@ def test_propagate_driver_matches_distributed(spark, caplog, monkeypatch,
     the non-convergence WARNING, for every round budget."""
     rows, ddl = _GRAPHS[graph]
     edges = spark.createDataFrame(rows, ddl)
-    driver = _propagate_run(caplog, edges, max_iters)
+    def run():
+        return propagate_min_ids(edges, max_iters=max_iters)
+
+    driver = _logged_run(caplog, run)
     monkeypatch.setattr(dedup, "_BIG_EDGE_THRESHOLD", 0)
-    distributed = _propagate_run(caplog, edges, max_iters)
+    distributed = _logged_run(caplog, run)
     assert driver[0] == distributed[0]
     assert driver[1] == distributed[1]
     assert driver[2] == distributed[2]
@@ -387,6 +392,191 @@ def test_minhash_verified_hot_bucket_star_edges(spark):
     m = {r.doc_id: r.rep_id for r in out.collect()}
     assert all(m[f"d{i:03d}"] == "d000" for i in range(40)), m
     assert m["zzz"] == "zzz"
+
+
+# ---------- verified minhash: driver finish vs the Spark plan ----------
+
+# every text the driver tokenizer twin must split exactly as Spark's
+# split(lower(trim(text)), '\s+') does
+_TOKENIZER_TEXTS = [
+    "a\tb\rc\nd\x0be\x0cf g",          # Java \s: tab, CR, LF, VT, FF
+    "\tlead tab", "trail tab\t",        # trim strips spaces only
+    "  spaced  out  ", " \t mixed \t ",
+    "nb\xa0sp x y", "line\u2028sep x y",  # Python \s, not Java \s
+    "fs\x1cgs\x1drs\x1eus\x1f z w",
+    "İstanbul İ x", "ΟΔΟΣ ΣΟΦΙΑΣ Σ",    # dotted I, final sigma
+    "", None, "one two", "One",         # empty, NULL, < n tokens
+]
+
+
+@pytest.mark.parametrize("n", [1, 3])
+def test_word_grams_twin_matches_spark(spark, n):
+    """The driver's gram sets equal Spark's ``_candidate_grams`` arrays
+    on whitespace, trim, case-mapping, empty and NULL edge cases."""
+    df = spark.createDataFrame(list(enumerate(_TOKENIZER_TEXTS)),
+                               "doc_id long, text string")
+    pairs = df.select(F.col("doc_id").alias("id_a"), F.col("doc_id").alias("id_b"))
+    want = {r.doc_id: r.grams
+            for r in dedup._candidate_grams(df, pairs, "text", "doc_id", n).collect()}
+    lowered = df.select("doc_id", F.lower(F.trim("text")).alias("t")).collect()
+    got = {r.doc_id: dedup._word_grams(r.t, n) for r in lowered}
+    assert len(want) == len(_TOKENIZER_TEXTS)
+    for i, grams in want.items():
+        assert len(grams) == len(set(grams))  # Spark's array is distinct
+        assert got[i] == frozenset(grams), (_TOKENIZER_TEXTS[i], got[i], grams)
+
+
+def _chain_docs(rng, n_chains, depth, n_single, words=60, vocab=400):
+    """Texts: ``n_chains`` near-duplicate chains of ``depth`` (two words
+    change per step), then ``n_single`` unrelated singletons."""
+    texts = []
+    for _ in range(n_chains):
+        w = rng.integers(0, vocab, words)
+        for _ in range(depth):
+            texts.append(" ".join(f"t{x}" for x in w))
+            w = w.copy()
+            w[rng.choice(words, 2, replace=False)] = rng.integers(0, vocab, 2)
+    texts += [" ".join(f"t{x}" for x in rng.integers(0, vocab, words))
+              for _ in range(n_single)]
+    return texts
+
+
+def _hot_collider_docs(spark):
+    """40 identical documents in buckets capped at 8, below the string
+    id of a near-duplicate that collides in their buckets but fails
+    the 0.9 check: the star anchor at rank 1 is that collider."""
+    words = [f"w{i}" for i in range(40)]
+    docs = [(f"d{i:03d}", " ".join(words)) for i in range(40)]
+    docs.append(("a000", " ".join(words[:37] + ["x1", "x2", "x3"])))
+    docs.append(("zzz", "totally different content about spark plans "
+                 "and parquet footers " * 4))
+    return spark.createDataFrame(docs, "doc_id string, text string")
+
+
+def _big_id_docs(spark):
+    rng = np.random.default_rng(5)
+    texts = _chain_docs(rng, 3, 6, 10)
+    ids = 2**62 + rng.permutation(len(texts))  # differ below float64 precision
+    return spark.createDataFrame([(int(i), t) for i, t in zip(ids, texts)],
+                                 "doc_id long, text string")
+
+
+def _dup_id_docs(spark):
+    """Repeated ids: one with two different texts, one with the same
+    text twice, one whose second text is a near-duplicate of another
+    document's."""
+    rng = np.random.default_rng(6)
+    texts = _chain_docs(rng, 2, 5, 6)
+    docs = [(i, t) for i, t in enumerate(texts)]
+    docs += [(3, texts[12]), (7, texts[7]), (12, texts[1])]
+    return spark.createDataFrame(docs, "doc_id int, text string")
+
+
+def _non_nullable_docs(spark):
+    texts = _chain_docs(np.random.default_rng(3), 2, 4, 4)
+    return spark.range(len(texts)).withColumnRenamed("id", "doc_id").join(
+        spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string"),
+        "doc_id")
+
+
+def _chain_case(seed):
+    def build(spark):
+        texts = _chain_docs(np.random.default_rng(seed), 4, 8, 20)
+        ids = np.random.default_rng(seed + 100).permutation(len(texts))
+        return spark.createDataFrame([(int(i), t) for i, t in zip(ids, texts)],
+                                     "doc_id long, text string")
+    return build
+
+
+_VERIFIED_CASES = {
+    "hot_collider": (_hot_collider_docs,
+                     dict(n_hashes=32, bands=8, verify_jaccard=0.9, max_bucket_size=8)),
+    "big_ids": (_big_id_docs, dict(verify_jaccard=0.7, max_bucket_size=3)),
+    "empty": (lambda spark: spark.createDataFrame([], "doc_id long, text string"),
+              dict(verify_jaccard=0.7)),
+    "dup_ids": (_dup_id_docs, dict(verify_jaccard=0.7, max_bucket_size=4)),
+    "non_nullable": (_non_nullable_docs, dict(verify_jaccard=0.7)),
+    "chains_it0": (_chain_case(1), dict(verify_jaccard=0.7, max_iters=0)),
+    "chains_it1": (_chain_case(1), dict(verify_jaccard=0.7, max_iters=1)),
+    "chains_it10": (_chain_case(1), dict(verify_jaccard=0.7, max_iters=10)),
+    "chains_cap2": (_chain_case(2), dict(verify_jaccard=0.6, max_bucket_size=2,
+                                         jaccard_n=2)),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_VERIFIED_CASES))
+def test_minhash_verified_driver_matches_spark(spark, caplog, monkeypatch, case):
+    """Below the bound the verified dedup finishes on the driver; with
+    the bound forced to 0 it runs the Spark plan. Both give the same
+    rows, schema (names, types, nullability) and log records, the one
+    verify record differing only in the path it names. Duplicate ids
+    match too: a pair of repeated ids verifies when any pair of their
+    texts does, on both paths."""
+    build, kw = _VERIFIED_CASES[case]
+    df = build(spark)
+
+    def run():
+        return minhash_lsh_dedup(df, **kw)
+
+    driver = _logged_run(caplog, run)
+    monkeypatch.setattr(dedup, "_BIG_EDGE_THRESHOLD", 0)
+    on_spark = _logged_run(caplog, run)
+    assert driver[0] == on_spark[0]
+    assert driver[1] == on_spark[1]
+    verify = [m for _, m in driver[2] if m.startswith("minhash_lsh_dedup verify")]
+    assert len(verify) == 1 and "path=driver" in verify[0]
+    assert driver[2] == [(lv, m.replace("path=spark", "path=driver"))
+                         for lv, m in on_spark[2]]
+    if case == "non_nullable":
+        assert not df.schema["doc_id"].nullable
+        assert not driver[1]["doc_id"].nullable
+    if case == "hot_collider":
+        # the collider heads overflow buckets and fails the check; every
+        # copy still reaches d000 through the rank-cap anchor
+        counts = dict(kv.split("=") for kv in verify[0].split(": ")[1].split())
+        assert int(counts["overflow_buckets"]) == 8
+        banded = dedup.banded_signatures(
+            dedup.minhash_signatures(df, n_hashes=32), n_hashes=32, bands=8)
+        heads = (banded.groupBy("band", "bucket")
+                 .agg(F.min("doc_id").alias("head"), F.count("*").alias("n"))
+                 .filter("n > 8").collect())
+        assert any(r.head == "a000" for r in heads), "fixture drifted"
+        m = dict(driver[0])
+        assert all(m[f"d{i:03d}"] == "d000" for i in range(40)), m
+        assert m["a000"] == "a000" and m["zzz"] == "zzz"
+
+
+@pytest.mark.parametrize("bound", ["text_bytes", "capped_pairs"])
+def test_minhash_verified_driver_hands_back(spark, caplog, monkeypatch, bound):
+    """Below the banded-row bound the driver finish still hands the call
+    to the Spark plan when the candidate texts reach
+    ``_DRIVER_TEXT_BYTES``, or when the capped pairs reach
+    ``_BIG_EDGE_THRESHOLD`` (40 copies x 16 bands: 640 banded rows,
+    12,480 pairs before the distinct): same rows, one spark record."""
+    df = _hot_collider_docs(spark)
+
+    def run():
+        return minhash_lsh_dedup(df, verify_jaccard=0.9)
+
+    driver = _logged_run(caplog, run)
+    if bound == "text_bytes":
+        monkeypatch.setattr(dedup, "_DRIVER_TEXT_BYTES", 0)
+    else:
+        monkeypatch.setattr(dedup, "_BIG_EDGE_THRESHOLD", 1000)
+    handed = _logged_run(caplog, run)
+    assert driver[:2] == handed[:2]
+    verify = [m for _, m in handed[2] if m.startswith("minhash_lsh_dedup verify")]
+    assert len(verify) == 1 and "path=spark banded_rows=672 " in verify[0]
+    assert [m for _, m in driver[2] if "path=driver banded_rows=672 " in m]
+
+
+@pytest.mark.usefixtures("edge_path")
+def test_minhash_verified_rejects_null_id(spark):
+    df = spark.createDataFrame(
+        [(1, "a b c d"), (None, "a b c d"), (None, "x y z"), (2, "q r s t")],
+        "doc_id long, text string")
+    with pytest.raises(ValueError, match=r"propagate_min_ids: 2 edge\(s\) have a NULL 'doc_id'"):
+        minhash_lsh_dedup(df, verify_jaccard=0.7)
 
 
 def test_dedup_paragraphs_first_occurrence_wins(spark):

@@ -96,3 +96,24 @@ def test_high_risk_inside_50_window():
 
 def test_oracles_subset_of_queries():
     assert set(ORACLES) <= set(QUERIES)
+
+
+def test_query_scratch_dirs_removed_at_exit(tmp_path):
+    """The directories queries write into share one per-process root,
+    which is gone once the process exits."""
+    import os
+    import subprocess
+    import sys
+
+    code = ("from rp_extract_spark.plans.driver_queries import _scratch_dir\n"
+            "a, b = _scratch_dir('x_'), _scratch_dir('y_')\n"
+            "assert a != b and os.path.dirname(a) == os.path.dirname(b)\n"
+            "open(os.path.join(a, 'f'), 'w').write('1')\n"
+            "print(os.path.dirname(a))\n")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", "import os\n" + code], cwd=root,
+                         capture_output=True, text=True, check=True,
+                         env={**os.environ, "TMPDIR": str(tmp_path)})
+    scratch = out.stdout.strip()
+    assert scratch.startswith(str(tmp_path))
+    assert not os.path.exists(scratch)

@@ -34,6 +34,15 @@ def test_roundtrip_bytes_exact(spark, tmp_path):
         assert r["ext"] == orig[k]["fmt"]
 
 
+def test_read_directory_equals_tar_glob(spark, tmp_path):
+    """A shard directory reads like its ``*.tar`` glob."""
+    write_webdataset(formula_images_df(spark, 7), str(tmp_path), shard_rows=3).collect()
+    by_dir = sorted(map(tuple, read_webdataset(spark, str(tmp_path)).collect()))
+    by_glob = sorted(map(tuple, read_webdataset(spark, str(tmp_path) + "/*.tar").collect()))
+    assert by_dir == by_glob
+    assert len(by_dir) == 7 and all(r[-1] is None for r in by_dir)
+
+
 def test_meta_json_members(spark, tmp_path):
     imgs = images_df(spark, 8, seed=3).select(
         "image_id", "bytes", "fmt", "caption", "entity_id"
