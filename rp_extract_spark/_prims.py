@@ -1,10 +1,12 @@
 """Physical shapes the operators share, each implemented once.
 
-- ``arrow_stage``: the per-record decode stage. Project the key and
-  input columns (so parquet prunes the rest), run one ``mapInPandas``
-  stage, call a per-record function, and isolate failures per record —
-  one corrupt blob yields an ``err`` row and never fails the batch
-  (the reference's decode loop, rp_extract_batch.py:421-425).
+- ``arrow_stage``: the per-record Python stage (decode, caption and
+  document passes). Project the key and input columns (so parquet
+  prunes the rest), run one ``mapInPandas`` stage, call a per-record
+  function. With an ``err`` field in the schema, failures are isolated
+  per record — one corrupt blob yields an ``err`` row and never fails
+  the batch (the reference's decode loop, rp_extract_batch.py:421-425);
+  without one, the exception fails the task.
 - ``global_rank``: exact ordered positions and running sums without a
   global window (segment positions, batch and shard offsets).
 - ``spread``: round-robin a one-split input before a CPU-bound stage.
@@ -52,10 +54,16 @@ def arrow_stage(
 ) -> DataFrame:
     """``df.select(*key_cols, *in_cols).mapInPandas(...)`` with one
     output row per input row: the ``key_cols`` values plus the value
-    fields of ``fn(*in_values)``, ``err`` NULL. When ``fn`` raises, the
-    row keeps its keys, ``err`` (if the schema has one) holds
-    ``"<ExceptionClass>: <message>"`` and every other field is NULL.
-    A column may be both a key and an input.
+    fields of ``fn(*in_values)`` (a field ``fn`` leaves out is NULL). A
+    column may be both a key and an input. A stage that emits k rows
+    per record returns an array field, which the caller expands with
+    ``explode``, ``inline`` or ``posexplode``.
+
+    When ``fn`` raises and the schema has an ``err`` field, the row
+    keeps its keys, ``err`` holds ``"<ExceptionClass>: <message>"``
+    and every other field is NULL. With no ``err`` field the exception
+    propagates and fails the task; a caller that drops bad records
+    adds an ``err`` field and filters on ``err IS NULL``.
 
     Key columns pass through as the batch's own series; value fields
     are object columns, so a nullable int64 (a 64-bit hash next to an
@@ -64,15 +72,19 @@ def arrow_stage(
     names = schema.fieldNames()
     values = [n for n in names if n not in key_cols]
     null_row = dict.fromkeys(values)
+    isolate = "err" in values
+
+    def one(iv) -> dict:
+        try:
+            return {**null_row, **fn(*iv)}
+        except Exception as e:  # noqa: BLE001
+            if not isolate:
+                raise
+            return {**null_row, "err": f"{type(e).__name__}: {e}"}
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
-            rows = []
-            for iv in zip(*[b[c].values for c in in_cols]):
-                try:
-                    rows.append({**null_row, **fn(*iv)})
-                except Exception as e:  # noqa: BLE001
-                    rows.append({**null_row, "err": f"{type(e).__name__}: {e}"})
+            rows = [one(iv) for iv in zip(*[b[c].values for c in in_cols])]
             out = pd.DataFrame(rows, columns=values, dtype=object)
             for c in key_cols:
                 out[c] = b[c].to_numpy()

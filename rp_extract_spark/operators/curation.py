@@ -14,10 +14,11 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from .._prims import collect_bounded, global_rank, md5_hex, md5_int, spread
-from .text import fingerprint, token_count
+from .._prims import arrow_stage, collect_bounded, global_rank, md5_hex, md5_int, spread
+from .text import fingerprint, nonempty_tokens_col, py_nonempty_tokens, token_count
 
 
 def pack_sequences(
@@ -377,8 +378,6 @@ def ngram_col(text, n: int):
     """Word n-grams of the lowercased text as space-joined strings
     (JVM sliding window; < n tokens -> empty array). Shared by
     decontaminate_ngram and its oracle discipline."""
-    from .text import nonempty_tokens_col
-
     toks = nonempty_tokens_col(text)
     size = F.size(toks)
     return F.when(
@@ -394,45 +393,27 @@ def _ngram_rows_py(
     df: DataFrame, text_col: str, id_col: str, n: int
 ) -> DataFrame:
     """(id, gram-string) rows — per-document DISTINCT word n-grams,
-    built in one Arrow-batched pass. The gram strings are exactly
-    ``ngram_col``'s (shared tokenizer: Java ``\\s`` class split of
-    lower(trim-ASCII-space(text)), empties dropped, grams joined by a
-    single space), so joins against them are interchangeable with the
-    HOF construction; Python string joins replace the interpreted
+    built in one ``arrow_stage`` pass and exploded. The gram strings
+    are exactly ``ngram_col``'s (``py_nonempty_tokens``, the twin of
+    its tokenizer, grams joined by a single space), so joins against
+    them are interchangeable with the HOF construction; Python string
+    joins replace the interpreted
     slice+concat_ws lambda per position, which dominated
     decontaminate_ngram's wall (round 6). Per-doc dedup is free here
     and only shrinks the explode (membership joins are unaffected).
     NULL text and docs shorter than ``n`` emit nothing, as before."""
-    import pandas as pd
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    schema = StructType([df.schema[id_col], StructField("__g", StringType())])
-
-    def run(batches):
-        import re
-
-        ws = re.compile(r"[ \t\n\x0b\f\r]+")  # Java \s, exactly
-        for b in batches:
-            ids_out: list = []
-            grams_out: list = []
-            for did, t in zip(b[id_col].values, b[text_col].values):
-                if t is None:
-                    continue
-                toks = [w for w in ws.split(t.lower().strip(" ")) if w]
-                if len(toks) < n:
-                    continue
-                seen = set()
-                for i in range(len(toks) - n + 1):
-                    g = " ".join(toks[i : i + n])
-                    if g not in seen:
-                        seen.add(g)
-                        ids_out.append(did)
-                        grams_out.append(g)
-            yield pd.DataFrame({id_col: ids_out, "__g": grams_out})
-
-    return spread(df.select(id_col, text_col)).mapInPandas(
-        run, schema
+    schema = T.StructType(
+        [df.schema[id_col], T.StructField("__gs", T.ArrayType(T.StringType()))]
     )
+
+    def run(t):
+        toks = py_nonempty_tokens(t) or ()
+        grams = (" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1))
+        return {"__gs": list(dict.fromkeys(grams))}
+
+    return arrow_stage(
+        spread(df.select(id_col, text_col)), [id_col], [text_col], schema, run
+    ).select(id_col, F.explode("__gs").alias("__g"))
 
 
 def decontaminate_ngram(
@@ -830,8 +811,6 @@ def train_bpe(
     order. Stops early when the best pair count falls below
     ``min_count``.  ``_stats`` (optional dict) is filled with
     ``{"passes": ..., "merges": ...}`` for job-count assertions."""
-    from .text import nonempty_tokens_col
-
     spark = df.sparkSession
     words = (
         df.select(F.explode(nonempty_tokens_col(F.col(text_col))).alias("w"))
@@ -928,143 +907,62 @@ def apply_bpe(
     merges: DataFrame,
     text_col: str = "text",
     out_col: str = "bpe_tokens",
-    chained_max: int = 0,
 ) -> DataFrame:
     """Tokenize the corpus with a learned merge list. Adds ``out_col``
     (array<string>) and ``n_{out_col}``.
 
-    Two physical paths with identical semantics (property-tested equal):
-
-    - ``len(merges) <= chained_max``: per whitespace token, split to
-      characters and apply the merges in rank order, each one literal
-      JVM replace on the symbol string — no Python in the data path,
-      but plan depth grows linearly with the merge count (whole-stage
-      codegen / expression-tree limits bite around a few hundred).
-    - otherwise (the DEFAULT since round 6 — chained_max=0): one
-      Arrow-batched ``mapInPandas`` stage applying the same literal
-      replaces per UNIQUE word with a per-batch memo — constant plan
-      depth regardless of vocabulary size, merge list shipped once per
-      task via the closure; the per-unique-word memo makes a Zipf
-      corpus nearly free, where the chained JVM path re-derives every
-      token occurrence through interpreted char-split + replace
-      expressions (measured 12.1s vs ~2s at sf1.0 with 3 merges).
-      The Python tokenizer mirrors the JVM one exactly (Java ``\\s``
-      class, trim of ASCII spaces only).
-
-    The merge list is a model table (tiny), collected and inlined."""
-    from .text import nonempty_tokens_col
-
-    ranked = [
-        (m["lhs"], m["rhs"])
-        for m in collect_bounded(merges.orderBy("rank"), "apply_bpe")
-    ]
-    if len(ranked) > chained_max:
-        return _apply_bpe_arrow(df, ranked, text_col, out_col)
-
-    def encode_token(t):
-        sym = _wrap_chars(t)
-        for lhs, rhs in ranked:
-            sym = F.replace(
-                sym,
-                F.lit(f"{_S}{lhs}{_S}  {_S}{rhs}{_S}"),
-                F.lit(f"{_S}{lhs}{rhs}{_S}"),
-            )
-        return F.transform(
-            F.split(sym, "  "), lambda s: F.translate(s, _S, "")
-        )
-
-    toks = F.filter(
-        nonempty_tokens_col(F.col(text_col)),
-        lambda w: F.translate(w, _S, "") != "",  # sentinel-only tokens
-    )
-    out = F.flatten(F.transform(toks, encode_token))
-    return df.withColumn(out_col, out).withColumn(
-        f"n_{out_col}", F.size(out)
-    )
-
-
-def _apply_bpe_arrow(
-    df: DataFrame,
-    ranked: "list[tuple[str, str]]",
-    text_col: str,
-    out_col: str,
-) -> DataFrame:
-    """Constant-plan-depth BPE encoder: the merge list travels in the
-    task closure; each Arrow batch encodes unique words once (corpus
-    word frequency follows Zipf — the memo hit rate is high)."""
-    from pyspark.sql.types import (
-        ArrayType,
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
+    One ``arrow_stage`` pass: per non-empty whitespace token (the
+    ``py_nonempty_tokens`` twin of the JVM tokenizer) with the ``_S``
+    sentinel removed, split to characters and apply the merges in rank
+    order, each one literal replace on the symbol string. Constant plan
+    depth regardless of the merge count (the merge list is a model
+    table — tiny — collected and shipped once per task in the closure),
+    and each unique word is encoded once per task (corpus word
+    frequency follows Zipf — the memo hit rate is high; a JVM plan of
+    per-occurrence char-split + replace expressions measured 12.1 s
+    against ~2 s at sf1.0 with 3 merges). NULL text gives NULL for
+    both columns."""
     reps = [
         (f"{_S}{lhs}{_S}  {_S}{rhs}{_S}", f"{_S}{lhs}{rhs}{_S}")
-        for lhs, rhs in ranked
+        for lhs, rhs in collect_bounded(
+            merges.orderBy("rank").select("lhs", "rhs"), "apply_bpe"
+        )
     ]
-    out_schema = StructType(
+    out_schema = T.StructType(
         list(df.schema.fields)
         + [
-            StructField(out_col, ArrayType(StringType())),
-            StructField(f"n_{out_col}", IntegerType()),
+            T.StructField(out_col, T.ArrayType(T.StringType())),
+            T.StructField(f"n_{out_col}", T.IntegerType()),
         ]
     )
+    # per-task word memo, capped: Zipf makes the hit rate high, but a
+    # huge unique-word tail (URLs, ids) must not grow it without bound
+    memo_cap = 1 << 20
+    memo: dict = {}
 
-    def run(batches):
-        import re
+    def enc_word(w):
+        got = memo.get(w)
+        if got is None:
+            sym = "  ".join(_S + c + _S for c in w)
+            for pat, rep in reps:
+                sym = sym.replace(pat, rep)
+            got = [p.replace(_S, "") for p in sym.split("  ")]
+            if len(memo) >= memo_cap:
+                memo.clear()
+            memo[w] = got
+        return got
 
-        # Java \s is exactly [ \t\n\x0B\f\r]; Python \s is wider
-        # (\x1c-\x1f, unicode spaces) — spell out the Java class so the
-        # Arrow path tokenizes identically to the JVM chained path.
-        ws = re.compile(r"[ \t\n\x0b\f\r]+")
-        # per-task word memo, capped: Zipf makes the hit rate high, but
-        # a huge unique-word tail (URLs, ids) must not grow it without
-        # bound for the task's lifetime
-        _MEMO_CAP = 1 << 20
-        memo: dict = {}
+    def run(t):
+        if t is None:
+            return {}
+        out = []
+        for w in py_nonempty_tokens(t):
+            w = w.replace(_S, "")
+            if w:
+                out.extend(enc_word(w))
+        return {out_col: out, f"n_{out_col}": len(out)}
 
-        def enc_word(w):
-            got = memo.get(w)
-            if got is None:
-                sym = "  ".join(_S + c + _S for c in w)
-                for pat, rep in reps:
-                    sym = sym.replace(pat, rep)
-                got = [p.replace(_S, "") for p in sym.split("  ")]
-                if len(memo) >= _MEMO_CAP:
-                    memo.clear()
-                memo[w] = got
-            return got
-
-        def enc_text(t):
-            if t is None:
-                return None
-            # Spark trim() strips ASCII spaces only — not \t/\n
-            toks = ws.split(t.lower().strip(" "))
-            out = []
-            for w in toks:
-                s = w.replace(_S, "")
-                if s:
-                    out.extend(enc_word(s))
-            return out
-
-        for pdf in batches:
-            encoded = [enc_text(t) for t in pdf[text_col]]
-            pdf = pdf.copy()
-            pdf[out_col] = encoded
-            # size(NULL) is NULL in Spark 3+ — mirror it (object dtype
-            # keeps the Nones through the Arrow conversion)
-            import pandas as pd
-
-            pdf[f"n_{out_col}"] = pd.Series(
-                [None if e is None else len(e) for e in encoded],
-                index=pdf.index,
-                dtype="object",
-            )
-            yield pdf
-
-    return spread(df).mapInPandas(run, out_schema)
+    return arrow_stage(spread(df), df.columns, [text_col], out_schema, run)
 
 
 def bpe_vocab(df: DataFrame, merges: DataFrame,
@@ -1074,8 +972,6 @@ def bpe_vocab(df: DataFrame, merges: DataFrame,
     0..C-1, then each merged symbol takes C + rank. Model-table sized
     (alphabet + merges); the base-character scan is one distinct over
     exploded characters, collected driver-side like every K-row model."""
-    from .text import nonempty_tokens_col
-
     # distinct WORDS first (map-side-combined, vocabulary-sized), then
     # explode characters of the tiny word set — the chars of distinct
     # words are exactly the chars of all words, and the per-character
@@ -1227,8 +1123,6 @@ def chunk_documents(
     empty/whitespace docs contribute no chunks."""
     if overlap >= chunk_size:
         raise ValueError("overlap must be smaller than chunk_size")
-    from .text import nonempty_tokens_col
-
     step = chunk_size - overlap
     toks = nonempty_tokens_col(F.col(text_col))
     d = df.select(F.col(id_col), toks.alias("__toks")).filter(
@@ -1280,8 +1174,6 @@ def mix_corpus(
     driver-side arithmetic, and the filter is a broadcast join on the
     source plus the shuffle-free hash compare. Adds a ``rate`` column
     (rounded to 6)."""
-    from .text import token_count
-
     stats = (
         df.groupBy(source_col)
         .agg(F.sum(token_count(F.col(text_col))).alias("__T"))
@@ -1867,14 +1759,13 @@ def wordpiece_apply(
     WHOLE word into ``unk`` (never a partial emission). Completes the
     tokenizer family next to the BPE train/apply/id surfaces.
 
-    Scale shape (round 6): ONE Arrow-batched stage — documents cross
+    Scale shape (round 6): ONE ``arrow_stage`` pass — documents cross
     the Python boundary whole (one row per doc instead of one per
-    token), the word split uses the exact Java-``\\s``-class replica
-    shared with the apply_bpe Arrow path (split parity with every
-    oracle), the max-munch loop runs once per UNIQUE word via a
-    per-task memo (Zipf corpora re-encode almost nothing), and the
-    output is assembled column-wise. No shuffle, no posexplode.
-    Returns relational rows (id, wpos, pos, piece)."""
+    token), the words are ``py_nonempty_tokens`` (split parity with
+    every oracle), the max-munch loop runs once per UNIQUE word via a
+    per-task memo (Zipf corpora re-encode almost nothing), and each
+    document's pieces come back as one array that ``inline`` expands.
+    No shuffle. Returns relational rows (id, wpos, pos, piece)."""
     if not vocab:
         raise ValueError("vocab must be non-empty")
     if any(p.startswith("##") and len(p) == 2 for p in vocab):
@@ -1883,17 +1774,15 @@ def wordpiece_apply(
     max_len = max(
         len(p) - 2 if p.startswith("##") else len(p) for p in vocab
     )
-    id_type = df.schema[id_col].dataType
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
+    piece_t = T.StructType(
         [
-            T.StructField(id_col, id_type),
             T.StructField("wpos", T.IntegerType()),
             T.StructField("pos", T.IntegerType()),
             T.StructField("piece", T.StringType()),
         ]
+    )
+    out_schema = T.StructType(
+        [df.schema[id_col], T.StructField("__wp", T.ArrayType(piece_t))]
     )
 
     def encode(word: str) -> "list[str]":
@@ -1915,50 +1804,20 @@ def wordpiece_apply(
             first = False
         return pieces
 
-    def run(batches):
-        import re
+    memo: dict = {}
 
-        ws = re.compile(r"[ \t\n\x0b\f\r]+")  # Java \s, exactly
-        memo: dict = {}
-
-        def enc_memo(w):
+    def run(t):
+        rows = []
+        for wpos, w in enumerate(py_nonempty_tokens(t) or ()):
             got = memo.get(w)
             if got is None:
-                got = encode(w)
-                memo[w] = got
-            return got
+                got = memo[w] = encode(w)
+            rows.extend((wpos, pos, piece) for pos, piece in enumerate(got))
+        return {"__wp": rows}
 
-        for b in batches:
-            ids: list = []
-            wposs: list = []
-            poss: list = []
-            pieces: list = []
-            for did, t in zip(b[id_col].values, b[text_col].values):
-                if t is None:
-                    continue
-                # Spark trim() strips ASCII spaces only — not \t/\n
-                wpos = 0
-                for w in ws.split(t.lower().strip(" ")):
-                    if not w:
-                        continue
-                    for pos, piece in enumerate(enc_memo(w)):
-                        ids.append(did)
-                        wposs.append(wpos)
-                        poss.append(pos)
-                        pieces.append(piece)
-                    wpos += 1
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "wpos": wposs,
-                    "pos": poss,
-                    "piece": pieces,
-                }
-            )
-
-    return spread(df.select(id_col, text_col)).mapInPandas(
-        run, out_schema
-    )
+    return arrow_stage(
+        spread(df.select(id_col, text_col)), [id_col], [text_col], out_schema, run
+    ).select(id_col, F.inline("__wp"))
 
 
 def winsorize(

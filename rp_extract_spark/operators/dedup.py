@@ -28,7 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .._prims import md5_hex, md5_int, spread
+from .._prims import arrow_stage, md5_hex, md5_int, spread
+from .text import py_tokens, tokens_col
 
 logger = logging.getLogger(__name__)
 
@@ -888,18 +889,13 @@ _VERIFY_LOG = (
     "overflow_buckets=%d candidate_pairs=%d verified_pairs=%d"
 )
 
-# Java's \s, which Spark's split(..., '\s+') uses: ASCII whitespace
-# only — Python's \s also splits on NBSP, U+2028, \x1c-\x1f, ...
-_JAVA_WS = re.compile(r"[ \t\n\x0B\f\r]+")
-
-
 def _word_grams(text: str | None, n: int) -> frozenset[str]:
     """Driver twin of one ``_candidate_grams`` row, given the text's
-    Spark ``lower(trim(text))``: Java's ``\\s`` split keeping leading
-    and trailing empty tokens (``split(..., -1)``), n-grams joined by
+    Spark ``lower(trim(text))`` (``py_tokens`` of it is its
+    ``tokens_col``: trim and lower are idempotent), n-grams joined by
     one space, one gram of all the tokens when there are fewer than n.
     A NULL text gives Spark's answer for it, the one empty gram."""
-    toks = _JAVA_WS.split(text or "")
+    toks = py_tokens(text or "")
     return frozenset(" ".join(toks[i:i + n]) for i in range(max(len(toks) - n, 0) + 1))
 
 
@@ -1339,8 +1335,11 @@ def _candidate_grams(
     corpus-wide burned ~the whole verify budget (33.9s of the 40.7s
     minhash_dedup_verified wall at sf1.0 was corpus-wide gram
     construction for 2.6k pairs). The HOF runs after ``_prims.spread``:
-    a one-split input would otherwise build every array in one task."""
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    a one-split input would otherwise build every array in one task.
+    The tokens are projected once, in their own Project, and the HOF
+    reads that column: a split inside the lambda runs once per gram
+    index, W splits of a W-word document."""
+    toks = F.col("__toks")
     grams = F.array_distinct(
         F.transform(
             F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0))),
@@ -1351,6 +1350,7 @@ def _candidate_grams(
     return (
         spread(df.select(id_col, text_col))
         .join(ids, id_col, "left_semi")
+        .select(F.col(id_col), tokens_col(F.col(text_col)).alias("__toks"))
         .select(F.col(id_col), grams.alias("grams"))
     )
 
@@ -1654,40 +1654,23 @@ def dedup_substrings(
     trade). Reassembly moved to the same Arrow path: a per-row kept-
     position set replaces the O(tokens x removals) array_contains
     filter."""
-    import pandas as pd
+    import hashlib
 
     gram_schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("pos", T.IntegerType()),
-            T.StructField("__d", T.BinaryType()),
-        ]
+        [df.schema[id_col], T.StructField("__ds", T.ArrayType(T.BinaryType()))]
     )
 
-    def gram_rows(batches):
-        import hashlib
-
-        for b in batches:
-            ids: list = []
-            poss: list = []
-            ds: list = []
-            for did, t in zip(b[id_col].values, b[text_col].values):
-                if t is None:
-                    continue
-                tk = t.split(" ")
-                for p in range(len(tk) - (n - 1)):
-                    ids.append(did)
-                    poss.append(p)
-                    ds.append(
-                        hashlib.md5(
-                            " ".join(tk[p : p + n]).encode("utf-8")
-                        ).digest()
-                    )
-            yield pd.DataFrame({id_col: ids, "pos": poss, "__d": ds})
+    def gram_rows(t):
+        if t is None:
+            return {}
+        tk = t.split(" ")
+        return {"__ds": [hashlib.md5(" ".join(tk[p : p + n]).encode("utf-8")).digest()
+                         for p in range(len(tk) - (n - 1))]}
 
     grams = (
-        spread(df.select(id_col, text_col))
-        .mapInPandas(gram_rows, gram_schema)
+        arrow_stage(spread(df.select(id_col, text_col)), [id_col], [text_col],
+                    gram_schema, gram_rows)
+        .select(id_col, F.posexplode("__ds").alias("pos", "__d"))
         .persist()
     )
     # groupBy + join, NOT a window over the digest: a mega-duplicated
@@ -1729,37 +1712,21 @@ def dedup_substrings(
             T.StructField("n_removed", T.IntegerType()),
         ]
     )
-    out_names = [f.name for f in out_schema.fields]
 
-    def reassemble(batches):
-        for b in batches:
-            clean: list = []
-            ntok: list = []
-            nrem: list = []
-            for t, rmv in zip(b[text_col].values, b["__rm"].values):
-                rset = set() if rmv is None else set(int(i) for i in rmv)
-                if t is None:
-                    clean.append(None)
-                    ntok.append(None)
-                    nrem.append(len(rset))
-                    continue
-                tk = t.split(" ")
-                clean.append(
-                    " ".join(
-                        w for i, w in enumerate(tk) if i not in rset
-                    )
-                    if rset
-                    else t
-                )
-                ntok.append(len(tk))
-                nrem.append(len(rset))
-            o = b.drop(columns=["__rm"])
-            o[out_col] = clean
-            o["n_tokens"] = ntok
-            o["n_removed"] = nrem
-            yield o[out_names]
+    def reassemble(t, rmv):
+        rset = set() if rmv is None else {int(i) for i in rmv}
+        if t is None:
+            return {"n_removed": len(rset)}
+        tk = t.split(" ")
+        return {
+            out_col: " ".join(w for i, w in enumerate(tk) if i not in rset)
+            if rset else t,
+            "n_tokens": len(tk),
+            "n_removed": len(rset),
+        }
 
-    return joined.mapInPandas(reassemble, out_schema)
+    return arrow_stage(joined, df.columns, [text_col, "__rm"], out_schema,
+                       reassemble)
 
 
 def multi_signal_dedup(

@@ -170,6 +170,7 @@ def streaming_image_dedup(
             images.schema["image_id"],
             T.StructField(hash_type, T.LongType(), True),
             images.schema[ts_col],
+            T.StructField("err", T.StringType(), True),
         ]
     )
 
@@ -178,7 +179,7 @@ def streaming_image_dedup(
 
     hashed = arrow_stage(
         images, ["image_id", ts_col], ["bytes", "fmt"], schema, fn
-    ).filter(F.col(hash_type).isNotNull())
+    ).filter(F.col("err").isNull()).drop("err")
     return streaming_dedup(
         hashed,
         key_col=hash_type,
@@ -521,6 +522,7 @@ GRID_HASH_SCHEMA = T.StructType(
         T.StructField("image_id", T.StringType(), False),
         T.StructField("__h", T.LongType(), True),
         T.StructField("__grid", T.ArrayType(T.IntegerType()), True),
+        T.StructField("err", T.StringType(), True),
     ]
 )
 
@@ -565,7 +567,7 @@ def phash_dedup_verified(
 
     hashed = arrow_stage(
         images, ["image_id"], ["bytes", "fmt"], GRID_HASH_SCHEMA, fn
-    ).filter(F.col("__h").isNotNull())
+    ).filter(F.col("err").isNull()).drop("err")
     cand = hamming64_candidates(
         hashed.select("image_id", "__h"), "__h", "image_id", max_hamming
     )

@@ -416,36 +416,16 @@ def dedup_frames(
     grid_sse is NULL for each video's first sampled frame."""
     frames = sample_video_frames(videos, every_n=every_n)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for vid, idx, fb, err in zip(
-                b["video_id"].values, b["frame_idx"].values,
-                b["frame_bytes"].values, b["err"].values,
-            ):
-                if err is not None:
-                    rows.append({"video_id": vid, "frame_idx": int(idx),
-                                 "g": None, "err": err})
-                    continue
-                try:
-                    sig = block_mean_resize(gray(fb, "jpeg"), grid, grid)
-                    rows.append(
-                        {"video_id": vid, "frame_idx": int(idx),
-                         "g": [int(v) for v in sig.ravel()], "err": None}
-                    )
-                except Exception as e:  # noqa: BLE001
-                    rows.append({"video_id": vid, "frame_idx": int(idx),
-                                 "g": None,
-                                 "err": f"{type(e).__name__}: {e}"})
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in FRAME_SIG_SCHEMA.fields]
-            )
+    def fn(fb):
+        sig = block_mean_resize(gray(fb, "jpeg"), grid, grid)
+        return {"g": [int(v) for v in sig.ravel()]}
 
     from pyspark.sql.window import Window
 
-    sigs = frames.mapInPandas(run, FRAME_SIG_SCHEMA).filter(
-        F.col("err").isNull()
-    )
+    sigs = arrow_stage(
+        frames.filter(F.col("err").isNull()), ["video_id", "frame_idx"],
+        ["frame_bytes"], FRAME_SIG_SCHEMA, fn,
+    ).filter(F.col("err").isNull())
     w = Window.partitionBy("video_id").orderBy("frame_idx")
     prev = F.lag("g").over(w)
     sse = F.aggregate(

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from .._prims import broadcast_topk
+from .._prims import broadcast_topk, collect_bounded
 
 logger = logging.getLogger(__name__)
 
@@ -1006,71 +1006,26 @@ def pq_fit(
         pts.unpersist()
 
 
-def _pq_code_expr(vec: Column, model_rows, m: int, d: int) -> Column:
-    """codes array<int>: per subspace, argmin squared distance over the
-    INLINED codebook (ties to the smallest label) — a pure projection,
-    no join, no shuffle; the codebook is m*k tiny literal arrays."""
-    by_sub: dict[int, list] = {}
-    for r in model_rows:
-        by_sub.setdefault(int(r["sub"]), []).append(r)
-    codes = []
-    for s in range(m):
-        sv = F.slice(vec, s * d + 1, d)
-        cands = F.array(*[
-            F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        sv,
-                        F.array(*[F.lit(float(x)) for x in r["centroid"]]),
-                        lambda x, c: (x - c) * (x - c),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ).alias("d"),
-                F.lit(int(r["centroid_label"])).alias("code"),
-            )
-            for r in sorted(
-                by_sub[s], key=lambda r: int(r["centroid_label"])
-            )
-        ])
-        codes.append(F.sort_array(cands)[0]["code"])
-    return F.array(*codes)
-
-
 def pq_encode(
     df: DataFrame,
     model: DataFrame,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    method: str = "arrow",
 ) -> DataFrame:
     """(id, codes array<int>): nearest codebook entry per subspace.
     The codebook is collected (m*k rows — a model, not data) and
     shipped to every task, so encoding is ONE shuffle-free scan: the
     pattern that turns a 100 TB float store into an m-byte-per-vector
-    code table in a single pass.
-
-    ``method='arrow'`` (default, the scale path): an Arrow-batched
-    stage computes all m*k squared distances per BATCH with one
-    matmul per subspace (||x||^2 - 2 X C^T + ||c||^2) and takes the
-    row-wise argmin — no per-row allocation, measured ~15x the
-    throughput of the expression path at 64-dim/4x16 codebooks.
-    ``method='sql'``: the codebook inlined as literals into a pure
-    codegen'd projection (zero Python anywhere) — the plan the
-    oracles replay term-for-term; use it when a Python worker pool is
-    unavailable or the projection must stay inside one codegen stage.
-    Tie rule both paths: smallest label wins (argmin first-hit over
-    label-sorted codebooks == sort_array (dist, code) order)."""
-    rows = model.collect()
+    code table in a single pass. An Arrow-batched stage computes all
+    m*k squared distances per BATCH with one matmul per subspace
+    (||x||^2 - 2 X C^T + ||c||^2) and takes the row-wise argmin — no
+    per-row allocation, measured ~15x the throughput of an inlined-
+    literal expression plan at 64-dim/4x16 codebooks. Tie rule:
+    smallest label wins (argmin first-hit over label-sorted
+    codebooks)."""
+    rows = collect_bounded(model, "pq_encode")
     m = 1 + max(int(r["sub"]) for r in rows)
     d = len(rows[0]["centroid"])
-    if method == "sql":
-        v = F.col(vec_col).cast("array<double>")
-        return df.select(
-            F.col(id_col), _pq_code_expr(v, rows, m, d).alias("codes")
-        )
-    if method != "arrow":
-        raise ValueError(f"unknown pq_encode method {method!r}")
     by_sub: dict[int, list] = {}
     for r in rows:
         by_sub.setdefault(int(r["sub"]), []).append(r)

@@ -9,10 +9,13 @@ by the driver.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from .._prims import md5_hex, md5_int, spread
+from .._prims import arrow_stage, md5_hex, md5_int, spread
 
 # minimal public stopword lists (top function words per language)
 STOPWORDS = {
@@ -34,6 +37,31 @@ def nonempty_tokens_col(text: Column) -> Column:
     tokenizer change here in sync with the oracle SQL tokenizer
     (plans/driver_queries._SQL_NTOK family)."""
     return F.filter(tokens_col(text), lambda w: w != "")
+
+
+# The body of Java's \s class, which Spark's split(..., '\s+') uses:
+# ASCII whitespace only. Python's \s also matches NBSP, U+2028,
+# \x1c-\x1f and more, so every Python replay of a Spark tokenization
+# splits on this class, never on \s.
+JAVA_WS = r" \t\n\x0b\f\r"
+_JAVA_WS_RUN = re.compile(f"[{JAVA_WS}]+")
+
+
+def py_tokens(text: str | None) -> list[str] | None:
+    """Python twin of ``tokens_col``: Spark ``trim`` (ASCII spaces
+    only), ``lower``, then a Java-``\\s`` split that keeps leading and
+    trailing empty tokens, as ``split(..., -1)`` does. NULL gives
+    None."""
+    if text is None:
+        return None
+    return _JAVA_WS_RUN.split(text.strip(" ").lower())
+
+
+def py_nonempty_tokens(text: str | None) -> list[str] | None:
+    """Python twin of ``nonempty_tokens_col``. NULL gives None."""
+    if text is None:
+        return None
+    return [w for w in py_tokens(text) if w]
 
 
 def token_count(text: Column) -> Column:
@@ -60,8 +88,7 @@ def analyze_documents(df: DataFrame, text_col: str = "text") -> DataFrame:
     association order), so emitted values are bit-identical, and NULL
     text propagates NULL through them exactly as before (lang_guess
     stays 'und' for NULL — the old when-chain's behavior)."""
-    import pandas as pd
-    from pyspark.sql import types as T
+    import hashlib
 
     t = F.col(text_col)
     out_schema = T.StructType(
@@ -76,66 +103,33 @@ def analyze_documents(df: DataFrame, text_col: str = "text") -> DataFrame:
             T.StructField("__ad_nraw", T.IntegerType()),
         ]
     )
-    names = [f.name for f in out_schema.fields]
     sw_sets = {lang: frozenset(ws) for lang, ws in STOPWORDS.items()}
-    langs = list(STOPWORDS)
     bpe_punct = set(".,;:!?()[]")
     ratio_punct = set(".,;:!?()[]\"'")
 
-    def counts(batches):
-        import hashlib
-        import re
+    def counts(txt):
+        if txt is None:
+            return {"lang_guess": "und"}
+        toks = py_tokens(txt)  # raw split, empties kept
+        best, best_lang = 0, "und"
+        for lang, sw in sw_sets.items():
+            h = sum(1 for w in toks if w in sw)
+            if lang == "en":
+                hits_en = h
+            if h > best:  # earlier languages win ties
+                best, best_lang = h, lang
+        return {
+            "n_tokens": len(toks) if txt.strip(" ") else 0,
+            "n_tokens_bpe": sum((len(w) + 3) // 4 for w in toks)
+            + sum(1 for c in txt if c in bpe_punct),
+            "lang_guess": best_lang,
+            "fingerprint": hashlib.md5(" ".join(toks).encode("utf-8")).hexdigest(),
+            "__ad_npq": sum(1 for c in txt if c in ratio_punct),
+            "__ad_hits": hits_en,
+            "__ad_nraw": len(toks),
+        }
 
-        ws = re.compile(r"[ \t\n\x0b\f\r]+")  # Java \s, exactly
-        for b in batches:
-            cols: dict[str, list] = {
-                "n_tokens": [], "n_tokens_bpe": [], "lang_guess": [],
-                "fingerprint": [], "__ad_npq": [], "__ad_hits": [],
-                "__ad_nraw": [],
-            }
-            for txt in b[text_col].values:
-                if txt is None:
-                    cols["n_tokens"].append(None)
-                    cols["n_tokens_bpe"].append(None)
-                    cols["lang_guess"].append("und")
-                    cols["fingerprint"].append(None)
-                    cols["__ad_npq"].append(None)
-                    cols["__ad_hits"].append(None)
-                    cols["__ad_nraw"].append(None)
-                    continue
-                s0 = txt.strip(" ")  # Spark trim: ASCII spaces only
-                toks = ws.split(s0.lower())  # raw split, empties kept
-                cols["__ad_nraw"].append(len(toks))
-                cols["n_tokens"].append(0 if not s0 else len(toks))
-                n_bpe_p = sum(1 for c in txt if c in bpe_punct)
-                cols["n_tokens_bpe"].append(
-                    sum((len(w) + 3) // 4 for w in toks) + n_bpe_p
-                )
-                cols["__ad_npq"].append(
-                    sum(1 for c in txt if c in ratio_punct)
-                )
-                best, best_lang = 0, "und"
-                hits_en = 0
-                for lang in langs:
-                    sw = sw_sets[lang]
-                    h = sum(1 for w in toks if w in sw)
-                    if lang == "en":
-                        hits_en = h
-                    if h > best:  # earlier languages win ties
-                        best, best_lang = h, lang
-                cols["__ad_hits"].append(hits_en)
-                cols["lang_guess"].append(best_lang)
-                cols["fingerprint"].append(
-                    hashlib.md5(
-                        ws.sub(" ", s0.lower()).encode("utf-8")
-                    ).hexdigest()
-                )
-            o = b.copy()
-            for k, v in cols.items():
-                o[k] = pd.Series(v, index=b.index, dtype="object")
-            yield o[names]
-
-    base = spread(df).mapInPandas(counts, out_schema)
+    base = arrow_stage(spread(df), df.columns, [text_col], out_schema, counts)
     stop = F.col("__ad_hits") / F.greatest(F.col("__ad_nraw"), F.lit(1))
     punct = F.col("__ad_npq") / F.greatest(F.length(t), F.lit(1))
     len_score = F.least(F.col("n_tokens") / F.lit(100.0), F.lit(1.0))
@@ -183,10 +177,10 @@ def pattern_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-# PII redaction (corpus sanitization before training) — chained JVM
-# regexp_replace; patterns restricted to syntax that behaves
-# identically under Java regex (Spark) and RE2 (DuckDB oracle): plain
-# char classes, no lookaround/backrefs. Order matters (URLs first so
+# PII redaction (corpus sanitization before training); patterns
+# restricted to syntax that behaves identically under Java regex,
+# Python re (redact_pii) and RE2 (DuckDB oracle): plain char classes,
+# no lookaround/backrefs. Order matters (URLs first so
 # their digits never count as phones); each kind is counted on the
 # text as it stands BEFORE that kind's replacement.
 PII_PATTERNS: "list[tuple[str, str, str]]" = [
@@ -217,54 +211,29 @@ def redact_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
     one engine-specific class, Java ``\\s`` inside the URL negation,
     is spelled out byte-for-byte. NULL text yields NULL counts and
     NULL redacted text, as before."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    # Java \s is [ \t\n\x0b\f\r]; Python \s is wider — substitute the
-    # explicit class so the URL pattern matches identically
-    py_patterns = [
-        (kind, pat.replace(r"[^\s\x0b]", "[^ \t\n\x0b\f\r]"), token)
+    # Java \s is JAVA_WS; Python \s is wider — substitute the explicit
+    # class so the URL pattern matches identically
+    compiled = [
+        (f"n_{kind}", re.compile(pat.replace(r"[^\s\x0b]", f"[^{JAVA_WS}]")),
+         token)
         for kind, pat, token in PII_PATTERNS
     ]
     out_schema = T.StructType(
         list(df.schema.fields)
-        + [
-            T.StructField(f"n_{kind}", T.IntegerType())
-            for kind, _, _ in PII_PATTERNS
-        ]
+        + [T.StructField(name, T.IntegerType()) for name, _, _ in compiled]
         + [T.StructField("text_redacted", T.StringType())]
     )
-    names = [f.name for f in out_schema.fields]
 
-    def redact(batches):
-        import re
+    def redact(t):
+        if t is None:
+            return {}
+        out = {}
+        for name, rx, token in compiled:
+            t, out[name] = rx.subn(token, t)
+        out["text_redacted"] = t
+        return out
 
-        compiled = [
-            (kind, re.compile(pat), token) for kind, pat, token in py_patterns
-        ]
-        for b in batches:
-            counts: dict[str, list] = {kind: [] for kind, _, _ in compiled}
-            redacted: list = []
-            for t in b[text_col].values:
-                if t is None:
-                    for kind, _, _ in compiled:
-                        counts[kind].append(None)
-                    redacted.append(None)
-                    continue
-                cur = t
-                for kind, rx, token in compiled:
-                    cur, n = rx.subn(token, cur)
-                    counts[kind].append(n)
-                redacted.append(cur)
-            o = b.copy()
-            for kind, _, _ in compiled:
-                o[f"n_{kind}"] = pd.Series(
-                    counts[kind], index=b.index, dtype="object"
-                )
-            o["text_redacted"] = redacted
-            yield o[names]
-
-    return spread(df).mapInPandas(redact, out_schema)
+    return arrow_stage(spread(df), df.columns, [text_col], out_schema, redact)
 
 
 def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -287,66 +256,33 @@ def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     in the same engine as before). NULL text yields NULL counts, and
     NULL propagates through the expressions exactly as the old NULL
     arrays did."""
-    import pandas as pd
-    from pyspark.sql import types as T
+    from collections import Counter
 
     out_schema = T.StructType(
         list(df.schema.fields)
         + [
-            T.StructField("__rs_n", T.IntegerType()),
-            T.StructField("__rs_nd", T.IntegerType()),
-            T.StructField("__rs_nl", T.IntegerType()),
-            T.StructField("__rs_nld", T.IntegerType()),
-            T.StructField("__rs_best", T.IntegerType()),
-            T.StructField("__rs_ng", T.IntegerType()),
+            T.StructField(c, T.IntegerType())
+            for c in ("__rs_n", "__rs_nd", "__rs_nl", "__rs_nld", "__rs_best",
+                      "__rs_ng")
         ]
     )
-    names = [f.name for f in out_schema.fields]
 
-    def counts(batches):
-        import re
-        from collections import Counter
+    def counts(t):
+        if t is None:
+            return {}
+        toks = py_nonempty_tokens(t)
+        lines = [x for x in (s.strip(" ") for s in t.split("\n")) if x]
+        two = len(toks) >= 2
+        return {
+            "__rs_n": len(toks),
+            "__rs_nd": len(set(toks)),
+            "__rs_nl": len(lines),
+            "__rs_nld": len(set(lines)),
+            "__rs_best": max(Counter(zip(toks, toks[1:])).values()) if two else 0,
+            "__rs_ng": len(toks) - 1 if two else 0,
+        }
 
-        ws = re.compile(r"[ \t\n\x0b\f\r]+")  # Java \s, exactly
-        for b in batches:
-            n_l: list = []
-            nd_l: list = []
-            nl_l: list = []
-            nld_l: list = []
-            best_l: list = []
-            ng_l: list = []
-            for t in b[text_col].values:
-                if t is None:
-                    n_l.append(None)
-                    nd_l.append(None)
-                    nl_l.append(None)
-                    nld_l.append(None)
-                    best_l.append(None)
-                    ng_l.append(None)
-                    continue
-                toks = [w for w in ws.split(t.lower().strip(" ")) if w]
-                lines = [x for x in (s.strip(" ") for s in t.split("\n")) if x]
-                n_l.append(len(toks))
-                nd_l.append(len(set(toks)))
-                nl_l.append(len(lines))
-                nld_l.append(len(set(lines)))
-                if len(toks) >= 2:
-                    c = Counter(zip(toks, toks[1:]))
-                    best_l.append(max(c.values()))
-                    ng_l.append(len(toks) - 1)
-                else:
-                    best_l.append(0)
-                    ng_l.append(0)
-            o = b.copy()
-            o["__rs_n"] = pd.Series(n_l, index=b.index, dtype="object")
-            o["__rs_nd"] = pd.Series(nd_l, index=b.index, dtype="object")
-            o["__rs_nl"] = pd.Series(nl_l, index=b.index, dtype="object")
-            o["__rs_nld"] = pd.Series(nld_l, index=b.index, dtype="object")
-            o["__rs_best"] = pd.Series(best_l, index=b.index, dtype="object")
-            o["__rs_ng"] = pd.Series(ng_l, index=b.index, dtype="object")
-            yield o[names]
-
-    with_counts = spread(df).mapInPandas(counts, out_schema)
+    with_counts = arrow_stage(spread(df), df.columns, [text_col], out_schema, counts)
     n = F.col("__rs_n")
     nl = F.col("__rs_nl")
     dup_token_frac = F.when(n == 0, F.lit(0.0)).otherwise(
@@ -568,8 +504,7 @@ def hash_embed(
     the ORIGINAL Spark expressions over the exact integer counts, so
     every emitted value is bit-identical. Empty and NULL documents
     yield zero vectors, as before."""
-    import pandas as pd
-    from pyspark.sql import types as T
+    import hashlib
 
     cnt_schema = T.StructType(
         [
@@ -577,39 +512,24 @@ def hash_embed(
             T.StructField("__cnts", T.ArrayType(T.LongType()), False),
         ]
     )
+    memo: dict = {}  # token -> bucket, filled on the executor
 
-    def bucket_counts(batches):
-        import hashlib
-        import re
+    def bidx(tok):
+        got = memo.get(tok)
+        if got is None:
+            got = int(hashlib.md5(tok.encode("utf-8")).hexdigest()[:8], 16) % dim
+            memo[tok] = got
+        return got
 
-        ws = re.compile(r"[ \t\n\x0b\f\r]+")  # Java \s, exactly
-        memo: dict = {}
+    def bucket_counts(t):
+        c = [0] * dim
+        for w in py_nonempty_tokens(t) or ():
+            c[bidx(w)] += 1
+        return {"__cnts": c}
 
-        def bidx(tok):
-            got = memo.get(tok)
-            if got is None:
-                got = (
-                    int(hashlib.md5(tok.encode("utf-8")).hexdigest()[:8], 16)
-                    % dim
-                )
-                memo[tok] = got
-            return got
-
-        for b in batches:
-            ids: list = []
-            cnts: list = []
-            for did, t in zip(b[id_col].values, b[text_col].values):
-                c = [0] * dim
-                if t is not None:
-                    for w in ws.split(t.lower().strip(" ")):
-                        if w:
-                            c[bidx(w)] += 1
-                ids.append(did)
-                cnts.append(c)
-            yield pd.DataFrame({id_col: ids, "__cnts": cnts})
-
-    vecs = spread(df.select(id_col, text_col)).mapInPandas(
-        bucket_counts, cnt_schema
+    vecs = arrow_stage(
+        spread(df.select(id_col, text_col)), [id_col], [text_col], cnt_schema,
+        bucket_counts,
     )
     v = F.transform(F.col("__cnts"), lambda x: x.cast("double"))
     norm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))

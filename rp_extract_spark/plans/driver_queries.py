@@ -1139,10 +1139,7 @@ def q_multilabel_roundtrip(spark, sf):
             for l in langs
         ]
     )
-    # pid-scoped so concurrent harness runs cannot collide
-    path = os.path.join(
-        tempfile.gettempdir(), f"rp_extract_spark_mlc_table_{os.getpid()}"
-    )
+    path = os.path.join(_scratch_dir("mlc_table_"), "table")
     write_multi_class_table(tbl, path)
     return read_multi_class_file(spark, path).orderBy("id")
 
@@ -1715,8 +1712,7 @@ def q_incremental_resume(spark, sf):
     d = _t(spark, sf, "documents").select(
         F.col("doc_id").alias("image_id"), F.length("text").alias("n_chars_f")
     )
-    out = os.path.join(tempfile.gettempdir(), f"rp_resume_q_{os.getpid()}")
-    shutil.rmtree(out, ignore_errors=True)
+    out = _scratch_dir("resume_q_")
     write_snapshot(d.filter(F.col("image_id") < 300), out, ts_col=None)
     incremental_extract(spark, d, out, lambda df: df)   # picks up the rest
     incremental_extract(spark, d, out, lambda df: df)   # idempotent: +0
@@ -2630,9 +2626,7 @@ def q_hdf5_roundtrip(spark, sf):
         F.col("embedding").alias("vec"),
         F.col("label").alias("lbl"),
     )
-    path = os.path.join(
-        tempfile.gettempdir(), f"rp_extract_spark_h5_{os.getpid()}.ssd"
-    )
+    path = os.path.join(_scratch_dir("h5_"), "features.ssd")
     write_h5_features(src, path, id2_col="lbl", vec_type="ssd")
     back = read_h5_features(spark, path + ".h5")
     return back.select(
@@ -2786,7 +2780,7 @@ def q_bpe_encode(spark, sf):
     oracle reuses the unrolled training CTEs and, instead of replay,
     JOINS each document's words to the final merge state s3 (training
     already symbolized every vocabulary word), which must agree with
-    the Spark side's chained-replace re-application."""
+    the Spark side's per-word literal-replace re-application."""
     from ..operators.curation import apply_bpe, train_bpe
 
     d = _t(spark, sf, "documents")

@@ -10,9 +10,11 @@ carries its decode error as
 ``ValueError: quarantined row (bytes is NULL)``.
 
 ``quality_gate_audio`` maps the same err rows to ``decode_error``
-(tests/test_audio_gate.py); ``tile_images``, ``sample_video_frames`` and
-``dedup_frames`` keep their own loops (their error rows carry sentinel
-indices or an upstream err).
+(tests/test_audio_gate.py); ``dedup_frames`` runs the stage over the
+frames ``sample_video_frames`` decoded without error;
+``tile_images`` and ``sample_video_frames`` keep their own loops (their
+error rows carry sentinel indices). A stage whose schema has no ``err``
+field lets ``fn``'s exception fail the task.
 """
 
 from datetime import datetime
@@ -180,6 +182,25 @@ def test_streaming_image_dedup_drops_bad_records(spark, tmp_path):
     px = decode_image(_good_png(0), "png").astype(np.uint8)
     assert [(r.image_id, r.key, r.first_ts) for r in rows] == [
         ("good0", im.dhash64(px), t0)]
+
+
+def test_fn_error_without_err_field_raises(spark):
+    """No ``err`` field: the exception fails the job instead of coming
+    out as an all-NULL row."""
+    from pyspark.sql import types as T
+
+    def fn(data, fmt):
+        return {"w": _prims.gray(data, fmt).shape[1]}
+
+    schema = T.StructType([T.StructField("image_id", T.StringType()),
+                           T.StructField("w", T.IntegerType())])
+    out = _prims.arrow_stage(_images(spark, ("good", "null")), ["image_id"],
+                             ["bytes", "fmt"], schema, fn)
+    with pytest.raises(Exception, match="quarantined row"):
+        out.collect()
+    good = _prims.arrow_stage(_images(spark, ("good",)), ["image_id"],
+                              ["bytes", "fmt"], schema, fn)
+    assert [tuple(r) for r in good.collect()] == [("good0", 32)]
 
 
 def test_gray_rejects_null_payload():

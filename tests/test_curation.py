@@ -307,10 +307,10 @@ def test_decontaminate_ngram_hand_computed(spark):
     assert kept_all == ["c1", "c2", "c3"]
 
 
-def test_apply_bpe_arrow_matches_chained(spark):
-    """The Arrow (mapInPandas) path and the chained-JVM-replace path
-    are the same function — compare them on mixed whitespace,
-    sentinel-bearing tokens, empties, and a null text."""
+def test_apply_bpe_whitespace_and_sentinel_edge_cases(spark):
+    """Mixed Java whitespace, sentinel-bearing tokens, blank, empty and
+    NULL texts. The expected rows are what the JVM replace plan (split
+    on ``\\s+``, one literal replace per merge) produced for them."""
     from rp_extract_spark.operators.curation import apply_bpe, train_bpe
 
     corpus = spark.createDataFrame(
@@ -321,14 +321,18 @@ def test_apply_bpe_arrow_matches_chained(spark):
         [("d1", "newest low\t lower\nwidest"),
          ("d2", "  ath  at\x1fth  "),
          ("d3", "   "),
-         ("d4", "")],
+         ("d4", ""),
+         ("d5", None)],
         "doc_id string, text string")
-    chained = apply_bpe(
-        probe, merges, chained_max=64
-    ).orderBy("doc_id").collect()
-    arrow = apply_bpe(probe, merges, chained_max=0).orderBy("doc_id").collect()
-    assert [(r.doc_id, r.bpe_tokens, r.n_bpe_tokens) for r in chained] == \
-           [(r.doc_id, r.bpe_tokens, r.n_bpe_tokens) for r in arrow]
+    got = apply_bpe(probe, merges).orderBy("doc_id").collect()
+    assert [(r.doc_id, r.bpe_tokens, r.n_bpe_tokens) for r in got] == [
+        ("d1", ["n", "ewest", "lo", "w", "lo", "w", "e", "r", "w", "i", "d",
+                "est"], 12),
+        ("d2", ["a", "t", "h", "a", "t", "t", "h"], 7),
+        ("d3", [], 0),
+        ("d4", [], 0),
+        ("d5", None, None),
+    ]
 
 
 def test_apply_bpe_large_merge_list_bounded_plan(spark):

@@ -426,6 +426,42 @@ def test_word_grams_twin_matches_spark(spark, n):
         assert got[i] == frozenset(grams), (_TOKENIZER_TEXTS[i], got[i], grams)
 
 
+def test_py_tokens_twin_matches_spark(spark):
+    """``py_tokens`` and ``py_nonempty_tokens`` equal Spark's
+    ``tokens_col`` and ``nonempty_tokens_col`` on whitespace, trim,
+    case-mapping, empty and NULL edge cases."""
+    from rp_extract_spark.operators.text import (
+        nonempty_tokens_col, py_nonempty_tokens, py_tokens, tokens_col,
+    )
+
+    df = spark.createDataFrame(list(enumerate(_TOKENIZER_TEXTS)),
+                               "doc_id long, text string")
+    rows = df.select("doc_id", tokens_col(F.col("text")).alias("toks"),
+                     nonempty_tokens_col(F.col("text")).alias("words")).collect()
+    assert len(rows) == len(_TOKENIZER_TEXTS)
+    for r in rows:
+        text = _TOKENIZER_TEXTS[r.doc_id]
+        assert py_tokens(text) == r.toks, (text, r.toks)
+        assert py_nonempty_tokens(text) == r.words, (text, r.words)
+
+
+def test_java_whitespace_class_spelled_once():
+    """The Java ``\\s`` class is written once in the package, in
+    ``operators/text.py``; every Python tokenizer reuses it."""
+    import pathlib
+    import re
+
+    import rp_extract_spark
+
+    root = pathlib.Path(rp_extract_spark.__file__).parent
+    hits = [
+        (str(p.relative_to(root)), n)
+        for p in sorted(root.rglob("*.py"))
+        if (n := len(re.findall(r"x0b\\f\\r", p.read_text(), re.I)))
+    ]
+    assert hits == [("operators/text.py", 1)], hits
+
+
 def _chain_docs(rng, n_chains, depth, n_single, words=60, vocab=400):
     """Texts: ``n_chains`` near-duplicate chains of ``depth`` (two words
     change per step), then ``n_single`` unrelated singletons."""

@@ -34,8 +34,7 @@ def _rng_vectors(n, dim, seed=7):
     return np.random.RandomState(seed).randn(n, dim).round(3)
 
 
-@pytest.mark.parametrize("method", ["arrow", "sql"])
-def test_pq_encode_matches_numpy_argmin(spark, method):
+def test_pq_encode_matches_numpy_argmin(spark):
     dim, m, k = 8, 2, 3
     vecs = _rng_vectors(20, dim)
     cbs = {
@@ -43,8 +42,7 @@ def test_pq_encode_matches_numpy_argmin(spark, method):
             for lab in range(k)}
         for s in range(m)
     }
-    out = pq_encode(_vec_df(spark, vecs), _model_df(spark, cbs),
-                    method=method).collect()
+    out = pq_encode(_vec_df(spark, vecs), _model_df(spark, cbs)).collect()
     assert len(out) == 20
     d = dim // m
     for r in out:
@@ -123,18 +121,15 @@ def test_pq_fit_dim_guard(spark):
         pq_fit(_vec_df(spark, _rng_vectors(4, 6)), m=4, k=2, iters=1)
 
 
-@pytest.mark.parametrize("method", ["arrow", "sql"])
-def test_pq_encode_plan_is_shuffle_free(spark, method):
+def test_pq_encode_plan_is_shuffle_free(spark):
     cbs = {0: {0: [0.0, 0.0], 1: [1.0, 1.0]},
            1: {0: [0.0, 0.0], 1: [1.0, 1.0]}}
     df = _vec_df(spark, _rng_vectors(4, 4))
     plan = (
-        pq_encode(df, _model_df(spark, cbs), method=method)
+        pq_encode(df, _model_df(spark, cbs))
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Exchange" not in plan
-    if method == "sql":
-        assert "ArrowEvalPython" not in plan and "MapInPandas" not in plan
 
 
 def test_ivfpq_full_probe_equals_pq(spark):

@@ -100,16 +100,28 @@ def test_oracles_subset_of_queries():
 
 def test_query_scratch_dirs_removed_at_exit(tmp_path):
     """The directories queries write into share one per-process root,
-    which is gone once the process exits."""
+    which is gone once the process exits. The inputs are the prefixes
+    the registry passes to ``_scratch_dir``; no query builds its own
+    path under the temp directory."""
+    import inspect
     import os
+    import re
     import subprocess
     import sys
 
+    from rp_extract_spark.plans import driver_queries
+
+    src = inspect.getsource(driver_queries)
+    prefixes = sorted(set(re.findall(r'_scratch_dir\("(\w+)"\)', src)))
+    assert {"mlc_table_", "resume_q_", "h5_"} <= set(prefixes), prefixes
+    assert src.count("tempfile.gettempdir()") == 0
     code = ("from rp_extract_spark.plans.driver_queries import _scratch_dir\n"
-            "a, b = _scratch_dir('x_'), _scratch_dir('y_')\n"
-            "assert a != b and os.path.dirname(a) == os.path.dirname(b)\n"
-            "open(os.path.join(a, 'f'), 'w').write('1')\n"
-            "print(os.path.dirname(a))\n")
+            f"dirs = [_scratch_dir(p) for p in {prefixes!r}]\n"
+            "assert len(set(dirs)) == len(dirs)\n"
+            "assert len({os.path.dirname(d) for d in dirs}) == 1\n"
+            "for d in dirs:\n"
+            "    open(os.path.join(d, 'f'), 'w').write('1')\n"
+            "print(os.path.dirname(dirs[0]))\n")
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out = subprocess.run([sys.executable, "-c", "import os\n" + code], cwd=root,
                          capture_output=True, text=True, check=True,
