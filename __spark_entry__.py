@@ -54,7 +54,9 @@ def entry(spark: SparkSession) -> DataFrame:
         )
     )
 
-    feats, _bad = quarantine(extract_features(images))
+    feats, _bad = quarantine(
+        extract_features(images, families=("rp", "ssd", "rh"))
+    )
     joined = asof_join(
         feats, captions, on="entity_id", left_ts="ts", right_ts="caption_ts",
         values=["caption"], suffix="_asof",

@@ -5,8 +5,8 @@ Re-expresses the descriptor-pipeline semantics of
 Statistical Spectrum Descriptor families, reference at
 ``/root/reference/rp_extract.py``) as a Spark-first engine:
 
-* **Kernel layer** — vectorized numpy inside Arrow-batched pandas UDFs
-  (``mapInPandas``): decode image bytes, bark-style band aggregation,
+* **Kernel layer** — vectorized numpy inside Arrow-batched Python
+  stages (``_prims.arrow_stage`` on ``mapInArrow``): decode image bytes, bark-style band aggregation,
   psychoacoustic transforms (dB/phon/sone), 7-stat descriptors, 2nd-FFT
   modulation energies. No per-row Python.
 * **Relational layer** — DataFrame/SQL: as-of (point-in-time) joins,

@@ -1,9 +1,12 @@
 """Physical shapes the operators share, each implemented once.
 
-- ``arrow_stage``: the per-record Python stage (decode, caption and
-  document passes). Project the key and input columns (so parquet
-  prunes the rest), run one ``mapInPandas`` stage, call a per-record
-  function. With an ``err`` field in the schema, failures are isolated
+- ``arrow_stage``: the per-record Python stage (decode, descriptor
+  extraction, caption and document passes). Project the key and input
+  columns (so parquet prunes the rest), run one ``mapInArrow`` stage,
+  call a per-record function; keys pass through as Arrow arrays and
+  each value field is built as one Arrow array. Its batch form adds a
+  callable over the records of one Arrow batch (the batched descriptor
+  kernel). With an ``err`` field in the schema, failures are isolated
   per record — one corrupt blob yields an ``err`` row and never fails
   the batch (the reference's decode loop, rp_extract_batch.py:421-425);
   without one, the exception fails the task.
@@ -40,6 +43,11 @@ from .codecs import decode_image, to_gray
 
 QUARANTINED = "quarantined row (bytes is NULL)"
 
+# rows of an Arrow batch an ``arrow_stage`` holds in Python at once:
+# the session's batches (session.ARROW_BATCH_ROWS) are cut to this, so
+# a worker's decoded payloads and output vectors stay bounded
+STAGE_SLICE_ROWS = 256
+
 # most rows any operator collects to the driver: a kNN query side
 # (which rides every task closure) or a K-row model table
 COLLECT_CAP = 100_000
@@ -50,56 +58,100 @@ def arrow_stage(
     key_cols: Sequence[str],
     in_cols: Sequence[str],
     schema: T.StructType,
-    fn: Callable[..., dict],
+    fn: Callable,
+    batch: Callable[[list], Sequence[dict]] | None = None,
 ) -> DataFrame:
-    """``df.select(*key_cols, *in_cols).mapInPandas(...)`` with one
+    """``df.select(*key_cols, *in_cols).mapInArrow(...)`` with one
     output row per input row: the ``key_cols`` values plus the value
     fields of ``fn(*in_values)`` (a field ``fn`` leaves out is NULL). A
-    column may be both a key and an input. A stage that emits k rows
-    per record returns an array field, which the caller expands with
-    ``explode``, ``inline`` or ``posexplode``.
+    column may be both a key and an input. ``fn`` gets each input's
+    Python value (``to_pylist``: bytes, str, int, list; None for NULL).
+    A stage that emits k rows per record returns an array field, which
+    the caller expands with ``explode``, ``inline`` or ``posexplode``.
 
-    When ``fn`` raises and the schema has an ``err`` field, the row
-    keeps its keys, ``err`` holds ``"<ExceptionClass>: <message>"``
-    and every other field is NULL. With no ``err`` field the exception
-    propagates and fails the task; a caller that drops bad records
-    adds an ``err`` field and filters on ``err IS NULL``.
+    Batch form: with ``batch``, ``fn`` maps a record to an intermediate
+    value (a decoded image) and ``batch(values)`` maps the values of
+    the records of one slice (below) that ``fn`` took, in order, to one
+    output dict each (a kernel vectorized across records). When
+    ``batch`` raises, it is re-run on each record alone, so one record
+    that breaks it costs one err row, as a failing ``fn`` does.
 
-    Key columns pass through as the batch's own series; value fields
-    are object columns, so a nullable int64 (a 64-bit hash next to an
-    err row) reaches Arrow exactly instead of through float64."""
+    When ``fn`` (or the lone-record ``batch``) raises and the schema
+    has an ``err`` field, the row keeps its keys, ``err`` holds
+    ``"<ExceptionClass>: <message>"`` and every other field is NULL.
+    With no ``err`` field the exception propagates and fails the task;
+    a caller that drops bad records adds an ``err`` field and filters
+    on ``err IS NULL``.
+
+    Each Arrow batch is taken in slices of ``STAGE_SLICE_ROWS`` rows,
+    one output batch per slice. Key columns pass through as the slice's
+    own Arrow arrays; each value field is one ``pa.array`` of its Spark
+    type, so a nullable int64 stays exact and a vector field is built
+    from the returned arrays without boxing their elements."""
     key_cols, in_cols = tuple(key_cols), tuple(in_cols)
     names = schema.fieldNames()
+    types = {f.name: to_arrow_type(f.dataType) for f in schema.fields}
     values = [n for n in names if n not in key_cols]
-    null_row = dict.fromkeys(values)
     isolate = "err" in values
 
-    def one(iv) -> dict:
-        try:
-            return {**null_row, **fn(*iv)}
-        except Exception as e:  # noqa: BLE001
-            if not isolate:
-                raise
-            return {**null_row, "err": f"{type(e).__name__}: {e}"}
+    def each(f: Callable, records) -> list:
+        out = []
+        for r in records:
+            try:
+                out.append(f(*r))
+            except Exception as e:  # noqa: BLE001 — per-record isolation
+                if not isolate:
+                    raise
+                out.append(_Failed(err=f"{type(e).__name__}: {e}"))
+        return out
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = [one(iv) for iv in zip(*[b[c].values for c in in_cols])]
-            out = pd.DataFrame(rows, columns=values, dtype=object)
-            for c in key_cols:
-                out[c] = b[c].to_numpy()
-            yield out[names]
+    def rows(b: pa.RecordBatch) -> list:
+        got = each(fn, zip(*[b.column(c).to_pylist() for c in in_cols]))
+        if batch is None:
+            return got
+        ok = [i for i, g in enumerate(got) if not isinstance(g, _Failed)]
+        try:
+            done = list(batch([got[i] for i in ok]))
+        except Exception:  # noqa: BLE001 — re-run per record below
+            done = each(lambda v: batch([v])[0], [(got[i],) for i in ok])
+        for i, d in zip(ok, done):
+            got[i] = d
+        return got
+
+    def column(b: pa.RecordBatch, recs: list, n: str) -> pa.Array:
+        if n in key_cols:
+            a = b.column(n)
+            return a if a.type == types[n] else a.cast(types[n])
+        return pa.array([r.get(n) for r in recs], type=types[n])
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for whole in batches:
+            for at in range(0, whole.num_rows, STAGE_SLICE_ROWS):
+                b = whole.slice(at, STAGE_SLICE_ROWS)
+                recs = rows(b)
+                yield pa.RecordBatch.from_arrays(
+                    [column(b, recs, n) for n in names], names=names)
 
     cols = list(dict.fromkeys(key_cols + in_cols))
-    return df.select(*cols).mapInPandas(run, schema)
+    return df.select(*cols).mapInArrow(run, schema)
+
+
+class _Failed(dict):
+    """The output row of a record ``arrow_stage`` isolated: only ``err``."""
+
+
+def decode(data, fmt: str) -> np.ndarray:
+    """Decode one image payload; a NULL payload (a row quarantined
+    upstream) raises."""
+    if data is None:
+        raise ValueError(QUARANTINED)
+    return decode_image(bytes(data), fmt)
 
 
 def gray(data, fmt: str, dtype=np.uint8) -> np.ndarray:
     """Decode one image payload to a grayscale ``dtype`` array; a NULL
-    payload (a row quarantined upstream) raises."""
-    if data is None:
-        raise ValueError(QUARANTINED)
-    return to_gray(decode_image(bytes(data), fmt)).astype(dtype)
+    payload raises."""
+    return to_gray(decode(data, fmt)).astype(dtype)
 
 
 def moments(px: np.ndarray) -> dict:

@@ -1,7 +1,7 @@
 """Descriptor kernel: RP / RH / SSD / MVD analogs over decoded images.
 
-This is the numpy "kernel layer" that runs inside Arrow-batched pandas
-UDFs.  It re-expresses the per-segment pipeline of the reference
+This is the numpy "kernel layer" that runs inside the Arrow-batched
+Python stages.  It re-expresses the per-segment pipeline of the reference
 (``/root/reference/rp_extract.py:529-760``) over an image graft where a
 decoded grayscale pixel matrix ``(h, w)`` plays the role the power
 spectrogram ``(n_freq, n_frames)`` plays in the reference (SURVEY.md
@@ -78,6 +78,12 @@ LOUDN_FREQ = np.array(
      2000, 2515, 3162, 3976, 5000, 7071, 10000, 11890, 14140, 15500],
     dtype=np.float64,
 )
+
+# The per-segment descriptor families, in output order. A caller may ask
+# for a subset: the kernel then computes only what those need, as the
+# reference computes only the families its extract_* flags ask for
+# (rp_extract.py:383-391).
+FAMILIES = ("rp", "ssd", "rh", "rh2", "mvd")
 
 # Bark band upper limits (Hz) (rp_extract.py:43)
 BARK_LIMITS = np.array(
@@ -197,6 +203,18 @@ def fluctuation_curve(n: int = MOD_AMPL_LIMIT, res: float = MOD_FREQ_RES) -> np.
 FLUCT_CURVE = fluctuation_curve()
 
 
+def families_of(families) -> tuple[str, ...]:
+    """``families`` in ``FAMILIES`` order; an unknown name or an empty
+    set raises."""
+    unknown = sorted(set(families) - set(FAMILIES))
+    if unknown or not families:
+        raise ValueError(
+            f"families must be a non-empty subset of {FAMILIES}, "
+            f"got {tuple(families)}"
+        )
+    return tuple(f for f in FAMILIES if f in families)
+
+
 def _flatten_f(m: np.ndarray) -> np.ndarray:
     """Fortran-order flatten of the last two axes, per image
     (rp_extract.py:451 output contract)."""
@@ -215,6 +233,7 @@ def _pipeline(
     do_transform_phon: bool,
     do_transform_sone: bool,
     fluctuation_strength_weighting: bool,
+    families: tuple[str, ...] = FAMILIES,
 ) -> dict[str, np.ndarray]:
     """Shared kernel over (h, w) or a same-shape stack (n, h, w).
 
@@ -238,6 +257,7 @@ def _pipeline(
     return _from_banded(
         matrix, mod_ampl_limit, spectral_masking, do_transform_db,
         do_transform_phon, do_transform_sone, fluctuation_strength_weighting,
+        families=families,
     )
 
 
@@ -250,12 +270,14 @@ def _from_banded(
     do_transform_sone: bool,
     fluctuation_strength_weighting: bool,
     mod_freq_res: float = MOD_FREQ_RES,
+    families: tuple[str, ...] = FAMILIES,
 ) -> dict[str, np.ndarray]:
     """Stages 3-8 (masking → sone → SSD → 2nd FFT → RP/RH/MVD) over an
     already band-aggregated matrix — shared by the image graft and the
     true audio path (which differ only in how the banded sonogram is
     produced). ``mod_freq_res`` parameterizes the fluctuation-weighting
-    axis (samplerate/segment_size, rp_extract.py:730)."""
+    axis (samplerate/segment_size, rp_extract.py:730). Only the
+    ``families`` asked for are computed and returned."""
     from .stats import stat_features_nd
 
     w = matrix.shape[-1]
@@ -269,8 +291,10 @@ def _from_banded(
             if do_transform_sone:
                 matrix = transform_sone(matrix)
 
+    out = {}
     # 7. SSD
-    ssd = stat_features_nd(matrix)  # (..., bands, 7)
+    if "ssd" in families:
+        out["ssd"] = _flatten_f(stat_features_nd(matrix))  # (..., bands, 7)
 
     # 8. 2nd FFT across band rows (reference loops per band,
     # rp_extract.py:700-706; axis-batched FFT is the vectorized form)
@@ -282,24 +306,24 @@ def _from_banded(
     spectra = np.fft.fft(matrix, n=fft_size, axis=-1) / SECOND_FFT_DIVISOR
     mags = np.abs(spectra[..., 1 : mod_ampl_limit + 1])  # DC excluded
 
-    rh = mags.sum(axis=-2)  # before weighting (rp_extract.py:719-721)
-    mvd = stat_features_nd(np.swapaxes(mags, -1, -2))  # (..., limit, 7)
+    if "rh" in families:
+        # before weighting (rp_extract.py:719-721)
+        out["rh"] = mags.sum(axis=-2).astype(np.float64)
+    if "mvd" in families:
+        # (..., limit, 7)
+        out["mvd"] = _flatten_f(stat_features_nd(np.swapaxes(mags, -1, -2)))
 
-    rp = mags
-    if fluctuation_strength_weighting:
-        rp = rp * fluctuation_curve(mod_ampl_limit, mod_freq_res)
-
-    # RH option 2: band-sum AFTER fluctuation weighting
-    # (extract_rh2, rp_extract.py:745-747)
-    rh2 = rp.sum(axis=-2)
-
-    return {
-        "rp": _flatten_f(rp),
-        "ssd": _flatten_f(ssd),
-        "rh": rh.astype(np.float64),
-        "rh2": rh2.astype(np.float64),
-        "mvd": _flatten_f(mvd),
-    }
+    if "rp" in families or "rh2" in families:
+        rp = mags
+        if fluctuation_strength_weighting:
+            rp = rp * fluctuation_curve(mod_ampl_limit, mod_freq_res)
+        if "rp" in families:
+            out["rp"] = _flatten_f(rp)
+        if "rh2" in families:
+            # RH option 2: band-sum AFTER fluctuation weighting
+            # (extract_rh2, rp_extract.py:745-747)
+            out["rh2"] = rp.sum(axis=-2).astype(np.float64)
+    return {k: out[k] for k in families}
 
 
 def extract_segment_features(
@@ -312,11 +336,13 @@ def extract_segment_features(
     do_transform_phon: bool = True,
     do_transform_sone: bool = True,
     fluctuation_strength_weighting: bool = True,
+    families=FAMILIES,
 ) -> dict[str, np.ndarray]:
     """Run the full per-segment pipeline on one decoded image.
 
     Returns flattened float64 vectors: ``rp`` (n_bands*limit, F-order),
-    ``ssd`` (n_bands*7), ``rh`` (limit,), ``mvd`` (limit*7).
+    ``ssd`` (n_bands*7), ``rh`` (limit,), ``rh2`` (limit,), ``mvd``
+    (limit*7) — those of them ``families`` names, computed alone.
     The shared prefix (scaled sonogram → sone matrix) is computed once
     for all feature families (the reference's operator-gating fusion,
     SURVEY.md O3)."""
@@ -326,7 +352,7 @@ def extract_segment_features(
     return _pipeline(
         gray, n_bands, mod_ampl_limit, transform_bark, spectral_masking,
         do_transform_db, do_transform_phon, do_transform_sone,
-        fluctuation_strength_weighting,
+        fluctuation_strength_weighting, families_of(families),
     )
 
 
@@ -334,32 +360,36 @@ def extract_segment_features_batch(
     pixel_list: list[np.ndarray],
     n_bands: int = N_BANDS,
     mod_ampl_limit: int = MOD_AMPL_LIMIT,
+    families=FAMILIES,
     **flags,
 ) -> list[dict[str, np.ndarray]]:
     """Batched kernel: group images by shape, run each group as one
     stacked (n, h, w) pipeline (vectorized FFT/matmul/stats across
     images), scatter results back in input order. Identical numerics
-    to the per-image path."""
+    to the per-image path, ``families`` included."""
+    families = families_of(families)
     by_shape: dict[tuple[int, int], list[int]] = {}
-    grays: list[np.ndarray] = []
     for i, px in enumerate(pixel_list):
-        g = px.astype(np.float64)
-        if g.ndim == 3:
-            g = g.mean(axis=2)
-        grays.append(g)
-        by_shape.setdefault(g.shape, []).append(i)
+        by_shape.setdefault(px.shape[:2], []).append(i)
     out: list[dict[str, np.ndarray] | None] = [None] * len(pixel_list)
-    # cap stacked-group size (2^22 elements ≈ 32 MB float64 per stack):
-    # bounds worker temporaries regardless of the caller's Arrow batch
-    # size AND keeps the working set near-LLC-resident — measured ~2x
-    # faster than 2^24 when the host throttles DRAM bandwidth, within
-    # noise of it when unthrottled
-    biggest = max((g.size for g in grays), default=1)
-    max_group = max(1, (1 << 22) // biggest)
-    for shape, idxs in by_shape.items():
+    for (h, w), idxs in by_shape.items():
+        # cap each stack at 2^18 elements (2 MB float64): worker memory
+        # stays bounded whatever the caller's Arrow batch size, and
+        # transform_phon peaks at ~11x its input. On 1024 fixture images
+        # (one BLAS thread, min of 5, four interleaved runs) this took
+        # 0.44-0.54 ms/image and grew the process 23 MB; one 2^22 cap
+        # over the largest image took 0.55-0.61 ms/image and grew it
+        # 85 MB.
+        max_group = max(1, (1 << 18) // (h * w))
         for start in range(0, len(idxs), max_group):
             chunk = idxs[start : start + max_group]
-            stack = np.stack([grays[i] for i in chunk])
+            # float64 grays exist one stack at a time, never for the
+            # whole batch
+            stack = np.empty((len(chunk), h, w))
+            for j, i in enumerate(chunk):
+                px = pixel_list[i]
+                # channel mixdown (rp_extract.py:477-481)
+                stack[j] = px.astype(np.float64).mean(axis=2) if px.ndim == 3 else px
             feats = _pipeline(
                 stack, n_bands, mod_ampl_limit,
                 flags.get("transform_bark", True),
@@ -368,6 +398,7 @@ def extract_segment_features_batch(
                 flags.get("do_transform_phon", True),
                 flags.get("do_transform_sone", True),
                 flags.get("fluctuation_strength_weighting", True),
+                families,
             )
             for j, i in enumerate(chunk):
                 out[i] = {k: feats[k][j] for k in feats}

@@ -1,10 +1,11 @@
 """Feature-extraction operator: decode + descriptor kernel, fused.
 
-One ``mapInPandas`` stage computes the shared prefix (decode → scaled
-band matrix) once and emits all requested feature families — the
-Spark-side form of the reference's operator gating where one sonogram
-feeds RP+SSD+RH (rp_extract.py:398-408, SURVEY.md O3). Per-record
-error isolation follows the reference's batch loop
+One ``_prims.arrow_stage`` (``mapInArrow``) computes the shared prefix
+(decode → scaled band matrix) once and emits the requested feature
+families — the Spark-side form of the reference's operator gating where
+one sonogram feeds RP+SSD+RH and only the families its ``extract_*``
+flags ask for are computed (rp_extract.py:383-408, SURVEY.md O3).
+Per-record error isolation follows the reference's batch loop
 (rp_extract_batch.py:421-425): a bad image never fails the stage; it
 yields null features and a populated ``err`` column for quarantine.
 
@@ -16,7 +17,7 @@ not expressible with builtin aggs without exploding 1440-wide arrays).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
@@ -24,29 +25,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..codecs import decode_image
+from .._prims import arrow_stage, decode
 from ..functions.kernel import (
+    FAMILIES,
     aggregate_segments,
-    extract_segment_features,
     extract_segment_features_batch,
+    families_of,
 )
 
 _ARR = T.ArrayType(T.DoubleType())
-
-SEGMENT_FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("entity_id", T.StringType(), False),
-        T.StructField("ts", T.TimestampType(), False),
-        T.StructField("image_id", T.StringType(), False),
-        T.StructField("rp", _ARR, True),
-        T.StructField("ssd", _ARR, True),
-        T.StructField("rh", _ARR, True),
-        T.StructField("rh2", _ARR, True),
-        T.StructField("mvd", _ARR, True),
-        T.StructField("caption", T.StringType(), True),
-        T.StructField("err", T.StringType(), True),
-    ]
-)
 
 ENTITY_FEATURE_SCHEMA = T.StructType(
     [
@@ -63,71 +50,46 @@ ENTITY_FEATURE_SCHEMA = T.StructType(
 )
 
 
-def extract_features(images: DataFrame) -> DataFrame:
+def extract_features(
+    images: DataFrame, families: Sequence[str] = FAMILIES
+) -> DataFrame:
     """Per-segment (per-image) feature extraction.
 
     Input: the input_hint table (+ entity_id, ts). Output: one row per
-    image with rp/ssd/rh/mvd vectors, caption passed through, err null
-    on success. Catalyst prunes unused input columns from the parquet
-    scan because mapInPandas declares its input projection explicitly.
+    image with one vector column per family in ``families`` (default
+    all five: rp/ssd/rh/rh2/mvd), caption passed through, err null on
+    success. The kernel computes only the families asked for, so a
+    query that reads rp/ssd/rh neither computes nor ships rh2/mvd.
+    Catalyst prunes unused input columns from the parquet scan because
+    the stage declares its input projection explicitly.
+
+    Each image decodes on its own (a bad payload is one err row, a
+    NULL one reads ``quarantined row (bytes is NULL)``); the images one
+    Arrow batch decoded run through the batched kernel together.
 
     The PSNR>=40dB lossy-decode gate is a *fixture-level* invariant
     (the original pixels exist only test-side); see
     tests/test_codecs.py::test_lossy_psnr_gate.
     """
-    cols = ["entity_id", "ts", "image_id", "bytes", "fmt", "caption"]
+    families = families_of(families)
+    schema = T.StructType(
+        [
+            T.StructField("entity_id", T.StringType(), False),
+            T.StructField("ts", T.TimestampType(), False),
+            T.StructField("image_id", T.StringType(), False),
+            *[T.StructField(f, _ARR, True) for f in families],
+            T.StructField("caption", T.StringType(), True),
+            T.StructField("err", T.StringType(), True),
+        ]
+    )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            n = len(b)
-            errs: list[str | None] = [None] * n
-            pixels: list = [None] * n
-            ok: list[int] = []
-            # decode with per-record isolation
-            for i, (data, fmt) in enumerate(zip(b["bytes"].values, b["fmt"].values)):
-                try:
-                    pixels[i] = decode_image(
-                        bytes(data) if data is not None else b"", fmt
-                    )
-                    ok.append(i)
-                except Exception as e:  # noqa: BLE001 — per-record isolation
-                    errs[i] = f"{type(e).__name__}: {e}"
-            # batched kernel over decodable images (grouped by shape);
-            # kernel errors (e.g. too-small images) fall back per image
-            feats: dict[str, list] = {
-                k: [None] * n for k in ("rp", "ssd", "rh", "rh2", "mvd")
-            }
-            if ok:
-                try:
-                    results = extract_segment_features_batch(
-                        [pixels[i] for i in ok]
-                    )
-                except Exception:
-                    results = []
-                    for i in ok:
-                        try:
-                            results.append(extract_segment_features(pixels[i]))
-                        except Exception as e:  # noqa: BLE001
-                            errs[i] = f"{type(e).__name__}: {e}"
-                            results.append(None)
-                for i, f in zip(ok, results):
-                    if f is not None:
-                        for k in feats:
-                            feats[k][i] = f[k]
-            out = {
-                "entity_id": b["entity_id"],
-                "ts": b["ts"],
-                "image_id": b["image_id"],
-                **feats,
-                "caption": b["caption"],
-                "err": errs,
-            }
-            yield pd.DataFrame(
-                out,
-                columns=[f.name for f in SEGMENT_FEATURE_SCHEMA.fields],
-            )
+    def kernel(pixels: list) -> list[dict]:
+        return extract_segment_features_batch(pixels, families=families)
 
-    return images.select(*cols).mapInPandas(run, SEGMENT_FEATURE_SCHEMA)
+    return arrow_stage(
+        images, ["entity_id", "ts", "image_id", "caption"], ["bytes", "fmt"],
+        schema, decode, batch=kernel,
+    )
 
 
 def quarantine(features: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -142,7 +104,16 @@ def aggregate_entity_features(segment_features: DataFrame) -> DataFrame:
     """Per-entity aggregation: median(rp, rh), mean(ssd, mvd), temporal
     7-stat (tssd, trh). Shuffles once on entity_id; each group is the
     entity's segment list ordered by ts (order matters only for
-    determinism of the temporal stats' time axis)."""
+    determinism of the temporal stats' time axis). The input must carry
+    all five families (``extract_features``' default); a narrower one
+    raises before any task runs."""
+    missing = [f for f in FAMILIES if f not in segment_features.columns]
+    if missing:
+        raise ValueError(
+            f"aggregate_entity_features needs every descriptor family; "
+            f"the input lacks {missing} (extract_features(families=...) "
+            f"left them out)"
+        )
 
     def agg(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf[pdf["err"].isnull()]

@@ -1213,7 +1213,7 @@ def q_feature_extract(spark, sf):
     from ..sources.images import images_df
 
     imgs = images_df(spark, 96, seed=42)
-    feats = extract_features(imgs)
+    feats = extract_features(imgs, families=("rp", "ssd", "rh"))
     # T2 argmax analog: peak modulation bin -> BPM on the reference axis
     from ..functions.kernel import MOD_FREQ_RES
 

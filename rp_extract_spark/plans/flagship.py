@@ -27,7 +27,10 @@ def flagship(
     images = images_df(spark, n_images, seed=seed)
     captions = captions_df(spark, n_images, seed=seed)
 
-    feats, _bad = quarantine(extract_features(images))
+    # rh2 and mvd are never read: the kernel neither computes nor ships them
+    feats, _bad = quarantine(
+        extract_features(images, families=("rp", "ssd", "rh"))
+    )
     joined = asof_join(
         feats,
         captions,

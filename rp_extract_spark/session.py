@@ -11,12 +11,11 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Arrow batch sizing: measured on the extraction stage, 1024-row
-# batches cut the Arrow<->JVM conversion cost of the wide feature
-# vectors by ~40% vs 256. Memory per in-flight batch stays modest
-# (~5 KB encoded bytes + ~17 KB output vectors per row ≈ 23 MB);
-# decoded pixels are processed per shape-group inside the UDF and
-# never materialize for the whole batch at once.
+# Arrow batch sizing: rows per batch the JVM sends to every Python
+# stage. ``_prims.arrow_stage`` works through each batch
+# ``STAGE_SLICE_ROWS`` (256) rows at a time and the batched kernel
+# stacks at most 2^18 pixels, so their Python memory does not grow
+# with this value.
 ARROW_BATCH_ROWS = 1024
 
 

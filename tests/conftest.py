@@ -1,4 +1,5 @@
 import os
+import shutil
 import sys
 
 import pytest
@@ -25,3 +26,4 @@ def spark():
     )
     yield s
     s.stop()
+    shutil.rmtree(wh, ignore_errors=True)

@@ -337,7 +337,7 @@ def test_apply_bpe_whitespace_and_sentinel_edge_cases(spark):
 
 def test_apply_bpe_large_merge_list_bounded_plan(spark):
     """A production-sized merge list (1,000 merges) must run with a
-    constant-depth plan (one MapInPandas stage), not 1,000 chained
+    constant-depth plan (one MapInArrow stage), not 1,000 chained
     replace expressions."""
     import io
     from contextlib import redirect_stdout
@@ -358,7 +358,7 @@ def test_apply_bpe_large_merge_list_bounded_plan(spark):
     with redirect_stdout(buf):
         out.explain("formatted")
     plan = buf.getvalue()
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan and "MapInPandas" not in plan
     assert len(plan) < 20_000  # 1,000 chained replaces would dwarf this
     rows = {r.text: r.bpe_tokens for r in out.collect()}
     assert rows["newest low"] == ["n", "e", "w", "est", "lo", "w"]

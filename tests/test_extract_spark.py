@@ -93,3 +93,133 @@ def test_captions_fixture(spark):
     assert len(rows) > 0
     keys = [(r.entity_id, r.caption_ts) for r in rows]
     assert len(keys) == len(set(keys))  # unique per (entity, ts)
+
+
+# ------------------------------------------------ descriptor families
+
+NARROW = ("rp", "ssd", "rh")
+
+
+def test_narrow_families_equal_default(spark, images):
+    full = {r.image_id: r for r in extract_features(images).collect()}
+    narrow = extract_features(images, families=NARROW)
+    assert narrow.columns == ["entity_id", "ts", "image_id", *NARROW,
+                              "caption", "err"]
+    rows = narrow.collect()
+    assert len(rows) == len(full)
+    for r in rows:
+        want = full[r.image_id]
+        assert r.err is None and r.caption == want.caption
+        for k in NARROW:
+            assert getattr(r, k) == getattr(want, k), (r.image_id, k)
+
+
+def test_kernel_family_subsets_equal_full_call():
+    import itertools
+    import os
+
+    from rp_extract_spark.functions.kernel import (
+        FAMILIES,
+        extract_segment_features_batch,
+    )
+
+    with np.load(os.path.join(os.path.dirname(__file__), "golden",
+                              "kernel.npz")) as z:
+        pixels = [z[f"px{i}"] for i in range(12)]
+    # an RGB image stacks with the gray image of its (h, w) after mixdown
+    pixels.append(np.stack([pixels[0], pixels[0][::-1], 255 - pixels[0]], -1))
+    single = [extract_segment_features(px) for px in pixels]
+    batch = extract_segment_features_batch(pixels)
+    for s, b in zip(single, batch):
+        for k in FAMILIES:
+            np.testing.assert_allclose(b[k], s[k], rtol=1e-12, atol=0)
+    for r in range(1, len(FAMILIES) + 1):
+        for sub in itertools.combinations(FAMILIES, r):
+            got_s = [extract_segment_features(px, families=sub) for px in pixels]
+            got_b = extract_segment_features_batch(pixels, families=sub)
+            for full, got in ((single, got_s), (batch, got_b)):
+                for f, g in zip(full, got):
+                    assert tuple(g) == sub
+                    for k in sub:
+                        assert np.array_equal(f[k], g[k]), (sub, k)
+
+
+def test_unknown_family_rejected(spark, images):
+    with pytest.raises(ValueError, match="families"):
+        extract_features(images, families=("rp", "tssd"))
+    with pytest.raises(ValueError, match="families"):
+        extract_features(images, families=())
+
+
+def test_aggregate_rejects_narrowed_input(spark, images):
+    with pytest.raises(ValueError, match=r"\['rh2', 'mvd'\]"):
+        aggregate_entity_features(extract_features(images, families=NARROW))
+
+
+# ------------------------------------ per-record isolation in one batch
+
+KINDS = ("good", "small", "trunc", "null", "junk")
+
+
+def _payloads():
+    from rp_extract_spark.codecs import encode_png
+
+    rng = np.random.default_rng(7)
+    good = encode_png(rng.integers(0, 256, (48, 96), dtype=np.uint8))
+    # decodes, but too narrow for the 60-bin 2nd FFT: the batched
+    # kernel raises and is re-run per image
+    small = encode_png(rng.integers(0, 256, (16, 16), dtype=np.uint8))
+    return {"good": good, "small": small, "trunc": good[: len(good) // 2],
+            "null": None, "junk": b"nope"}
+
+
+def _mixed(spark, kinds):
+    from datetime import datetime
+
+    p = _payloads()
+    return spark.createDataFrame(
+        [("e0", datetime(2024, 1, 1, 0, i), k,
+          None if p[k] is None else bytearray(p[k]), "png", f"cap {k}")
+         for i, k in enumerate(kinds)],
+        "entity_id string, ts timestamp, image_id string, bytes binary, "
+        "fmt string, caption string",
+    ).coalesce(1)
+
+
+def _err(kind):
+    data = _payloads()[kind]
+    if data is None:
+        return "ValueError: quarantined row (bytes is NULL)"
+    try:
+        extract_segment_features(decode_image(data, "png"))
+    except Exception as e:  # noqa: BLE001
+        return f"{type(e).__name__}: {e}"
+    raise AssertionError(f"{kind} payload extracted")
+
+
+def test_bad_payloads_isolated_in_one_batch(spark):
+    def run(kinds):
+        return {r.image_id: r.asDict()
+                for r in extract_features(_mixed(spark, kinds)).collect()}
+
+    alone = run(("good",))
+    mixed = run(KINDS)
+    assert sorted(mixed) == sorted(KINDS)
+    assert mixed["good"] == alone["good"] and mixed["good"]["err"] is None
+    for kind in KINDS[1:]:
+        row = mixed[kind]
+        assert row["err"] == _err(kind), kind
+        assert row["caption"] == f"cap {kind}" and row["entity_id"] == "e0"
+        assert all(row[k] is None for k in ("rp", "ssd", "rh", "rh2", "mvd"))
+
+
+def test_extract_plan_is_one_arrow_stage(spark):
+    import io
+    from contextlib import redirect_stdout
+
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        extract_features(_mixed(spark, KINDS), families=NARROW).explain(
+            "formatted")
+    plan = buf.getvalue()
+    assert "MapInArrow" in plan and "MapInPandas" not in plan
