@@ -15,6 +15,11 @@
 - ``spread``: round-robin a one-split input before a CPU-bound stage.
 - ``collect_bounded``: a driver collect of a side assumed small, with
   one cap.
+- ``partial_sums``: the one distributed step of every model fit
+  (centroids, Lloyd iterations, logistic gradients, covariance) —
+  each task folds its vector batches into numpy sums per key, the
+  driver adds the task rows in partition order; ``local_frame`` hands
+  the fitted model back as a local relation.
 - ``broadcast_topk``: exact per-query top-k of a small query side
   against a corpus — the collected queries ride the task closure, each
   task scores its corpus rows with numpy and keeps its local top-k.
@@ -27,12 +32,15 @@
 from __future__ import annotations
 
 import hashlib
+import pickle
+from collections import Counter
 from collections.abc import Callable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyspark import TaskContext
 from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -302,6 +310,88 @@ def collect_bounded(df: DataFrame, op: str) -> list[Row]:
             f"(_prims.COLLECT_CAP)"
         )
     return rows
+
+
+def local_frame(spark, rows: list, schema: T.StructType | str) -> DataFrame:
+    """``spark.createDataFrame(rows, schema)`` built through Arrow as a
+    local relation: using it runs no Spark job, where a list goes
+    through ``parallelize`` and costs a job on every use."""
+    if not rows:
+        return spark.createDataFrame([], schema)
+    return spark.createDataFrame(pd.DataFrame(rows, dtype=object), schema)
+
+
+def partial_sums(
+    df: DataFrame,
+    in_cols: Sequence[str | Column],
+    fn: Callable[..., dict],
+    op: str,
+) -> tuple[int | None, dict]:
+    """Sums per key over every vector of ``df``, in one Spark job:
+    ``(D, sums)``, or ``(None, {})`` when no vector is non-NULL.
+
+    ``in_cols[0]`` names the vector column (cast to ``array<double>``).
+    ``fn(x, *cols)`` maps one Arrow batch — its vectors as an (n, D)
+    float64 matrix, the other columns' Python values — to ``{key:
+    tuple of numpy arrays}``. Each task adds up its batches key by key
+    into one row (``mapInArrow``, no exchange); the driver adds the
+    task rows in partition-id order, so a fit is bit-reproducible on a
+    given partitioning.
+
+    The input rule of every fit: NULL vectors are skipped. D is the
+    length of the first non-NULL vector in partition order; any other
+    length raises ``ValueError("<op>: N rows have a vector length other
+    than D …")`` on the driver, N counted in the same job. More than
+    ``COLLECT_CAP`` keys raise a ``ValueError`` naming ``op``."""
+    def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        lens, acc = Counter(), {}
+        for b in batches:
+            n = pc.fill_null(pc.list_value_length(b.column(0)), -1).to_numpy()
+            lens.update(n[n >= 0].tolist())
+            dim = next(iter(lens), None)  # Counter keeps first-seen order
+            keep = n == dim
+            if not keep.any():
+                continue
+            x = b.column(0).filter(pa.array(keep)).flatten()
+            cols = [c.filter(pa.array(keep)).to_pylist() for c in b.columns[1:]]
+            _add(acc, fn(x.to_numpy(zero_copy_only=False)
+                         .reshape(keep.sum(), dim), *cols))
+            if len(acc) > COLLECT_CAP:
+                acc = None
+                break
+        if lens:
+            yield pa.RecordBatch.from_pydict({
+                "part": [TaskContext.get().partitionId()],
+                "blob": [pickle.dumps((lens, acc))],
+            })
+
+    tasks = sorted(
+        df.select(F.col(in_cols[0]).cast("array<double>"), *in_cols[1:])
+        .mapInArrow(fold, "part long, blob binary").collect())
+    dim, total, ragged, over = None, {}, 0, False
+    for _, blob in tasks:
+        lens, acc = pickle.loads(blob)
+        dim = next(iter(lens)) if dim is None else dim
+        ragged += sum(c for ln, c in lens.items() if ln != dim)
+        over = over or acc is None
+        if not (ragged or over):
+            over = len(_add(total, acc)) > COLLECT_CAP
+    if ragged:
+        raise ValueError(
+            f"{op}: {ragged} rows have a vector length other than {dim} "
+            f"(the first non-NULL vector's)")
+    if over:
+        raise ValueError(
+            f"{op}: more than {COLLECT_CAP} keys to collect on the driver "
+            f"(_prims.COLLECT_CAP)")
+    return dim, total
+
+
+def _add(acc: dict, sums: dict) -> dict:
+    """Add ``sums``' tuples into ``acc`` key by key; returns ``acc``."""
+    for k, t in sums.items():
+        acc[k] = t if k not in acc else tuple(a + b for a, b in zip(acc[k], t))
+    return acc
 
 
 def broadcast_topk(

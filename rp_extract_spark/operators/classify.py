@@ -4,20 +4,26 @@ rp_classify.py:162-352) re-expressed as DataFrame ops.
 The reference pickles an sklearn SVM; the engine-side equivalents are
 the relational pieces: z-score standardization (classes.zscore), label
 encoding (classes.label_encode), fold assignment, and a
-nearest-centroid model — train = one groupBy producing an element-wise
-mean vector per class (a tiny broadcastable dimension), predict = the
-collected K-row model + a per-batch numpy arg-min distance. Everything
-scales: the model is K rows; scoring is one scan.
+nearest-centroid model — train = one ``_prims.partial_sums`` job
+summing the vectors per class (a tiny broadcastable dimension), predict
+= the collected K-row model + a per-batch numpy arg-min distance
+(``nearest_centroid``, shared with ``lloyd_fit``). Everything scales:
+the model is K rows; scoring is one scan.
 """
 
 from __future__ import annotations
 
+from collections import Counter
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from .._prims import collect_bounded, md5_hex, md5_int
+from .._prims import (collect_bounded, local_frame, md5_hex, md5_int,
+                      partial_sums)
 
 
 def _sq_dist(a: Column, b: Column) -> Column:
@@ -41,25 +47,93 @@ def assign_folds(df: DataFrame, id_col: str, k: int = 5,
     return df.withColumn(out, F.pmod(F.xxhash64(F.col(id_col)), F.lit(k)))
 
 
+def _sums_by(keys: list, x: np.ndarray) -> dict:
+    """{key: (sum of the rows of ``x`` with that key, their count)},
+    added in row order as SQL ``sum`` adds a partition (NULL: a key)."""
+    index: dict = {}
+    codes = np.array([index.setdefault(k, len(index)) for k in keys],
+                     dtype=np.int64)
+    acc = np.zeros((len(index), x.shape[1]))
+    np.add.at(acc, codes, x)
+    cnt = np.bincount(codes, minlength=len(index))
+    return {k: (acc[i], cnt[i]) for k, i in index.items()}
+
+
 def train_centroids(
     df: DataFrame, vec_col: str = "embedding", label_col: str = "label"
 ) -> DataFrame:
-    """Element-wise mean vector per class. Exploding K*dim rows keeps
-    the agg exact and fully distributed; the result is K rows."""
-    dim = len(df.select(vec_col).first()[0])
-    exploded = df.select(
-        label_col, F.posexplode(F.col(vec_col).cast("array<double>"))
-    )
-    return (
-        exploded.groupBy(label_col, "pos")
-        .agg(F.avg("col").alias("v"))
-        .groupBy(label_col)
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "v"))).alias("__pv"))
-        .select(
-            F.col(label_col).alias("centroid_label"),
-            F.transform("__pv", lambda s: s["v"]).alias("centroid"),
-        )
-    )
+    """Element-wise mean vector per class from one
+    ``_prims.partial_sums`` job (NULL vectors skipped, ragged ones and
+    no vector at all raise): the K-row (centroid_label, centroid) model,
+    ``centroid_label`` in the label column's type."""
+    op = "train_centroids"
+    dim, sums = partial_sums(df, [vec_col, label_col],
+                             lambda x, y: _sums_by(y, x), op)
+    if dim is None:
+        raise ValueError(f"{op}: no non-NULL vectors")
+    label = df.schema[label_col].dataType.simpleString()
+    schema = f"centroid_label {label}, centroid array<double>"
+    return local_frame(df.sparkSession, [
+        (k, (s / n).tolist()) for k, (s, n) in sums.items()], schema)
+
+
+def codebook(centroids) -> tuple[np.ndarray, np.ndarray]:
+    """(label, vector) pairs as ``nearest_centroid`` takes them: the
+    labels in ascending order and their vectors as matrix rows."""
+    pairs = sorted(centroids, key=lambda p: p[0])
+    return (np.array([p[0] for p in pairs], dtype=object),
+            np.array([p[1] for p in pairs], dtype=np.float64))
+
+
+def nearest_centroid(x: np.ndarray, cmat: np.ndarray):
+    """Per row of ``x``: the index of the nearest row of ``cmat`` by
+    ``((x - c)**2).sum(axis=1)``, and that squared distance. argmin
+    takes the first minimum, so with ``cmat`` in ascending label order
+    (``codebook``) bit-equal distances go to the smaller label — the
+    (distance ASC, label ASC) order the DuckDB oracles replay."""
+    d2 = np.empty((x.shape[0], cmat.shape[0]))
+    for i in range(cmat.shape[0]):
+        diff = x - cmat[i]
+        d2[:, i] = (diff * diff).sum(axis=1)
+    best = np.argmin(d2, axis=1)
+    return best, d2[np.arange(len(best)), best]
+
+
+def lloyd_fit(
+    df: DataFrame, vec: Column, model: list, iters: int, op: str
+) -> list:
+    """``iters`` Lloyd iterations over the persisted ``vec`` column,
+    each one ``_prims.partial_sums`` job. ``model`` is one ``codebook``
+    per equal-width slice of the vector (k-means: one; PQ: m). Each
+    slice goes to its nearest centroid; the next model is each label's
+    mean, a label with no points dropped. It stays on the driver, so
+    no iteration carries the last one's lineage."""
+    d, m = model[0][1].shape[1], len(model)
+
+    def fold(x, model):
+        if x.shape[1] != d * m:
+            return {}  # partial_sums or the check below raises
+        out = {}
+        for s, (labels, cmat) in enumerate(model):
+            xs = x[:, s * d:(s + 1) * d]
+            keys = labels[nearest_centroid(xs, cmat)[0]].tolist()
+            out.update(((s, k), t) for k, t in _sums_by(keys, xs).items())
+        return out
+
+    pts = df.select(vec.alias("__v")).persist()
+    try:
+        for _ in range(iters):
+            dim, sums = partial_sums(
+                pts, ["__v"], lambda x, model=model: fold(x, model), op)
+            if dim != d * m:
+                raise ValueError(f"{op}: no non-NULL vectors" if dim is None
+                                 else f"{op}: the vectors have length {dim}, "
+                                 f"the model {d * m}")
+            model = [codebook((k, t / n) for (s, k), (t, n) in sums.items()
+                              if s == sub) for sub in range(m)]
+    finally:
+        pts.unpersist()
+    return model
 
 
 def predict_centroids(
@@ -79,11 +153,7 @@ def predict_centroids(
     orders is the fixture-margin contract the DuckDB oracles rely on.
     Rows whose vector is NULL or not the centroid dimension get no
     row — the corpus-row policy of ``_prims.broadcast_topk``."""
-    import numpy as np
-    import pandas as pd
-
-    rows = sorted(collect_bounded(centroids, "predict_centroids"),
-                  key=lambda r: r["centroid_label"])
+    rows = collect_bounded(centroids, "predict_centroids")
     id_type = df.schema[id_col].dataType
     out_schema = T.StructType(
         [
@@ -96,8 +166,7 @@ def predict_centroids(
     spark = df.sparkSession
     if not rows:
         return spark.createDataFrame([], out_schema)
-    labels = np.array([r["centroid_label"] for r in rows], dtype=object)
-    cmat = np.array([r["centroid"] for r in rows], dtype=np.float64)
+    labels, cmat = codebook((r["centroid_label"], r["centroid"]) for r in rows)
     dim = cmat.shape[1]
 
     def assign(batches):
@@ -109,16 +178,12 @@ def predict_centroids(
             if not ok.any():
                 continue
             x = np.stack([np.asarray(v, dtype=np.float64) for v in vals[ok]])
-            d2 = np.empty((x.shape[0], cmat.shape[0]))
-            for i in range(cmat.shape[0]):
-                diff = x - cmat[i]
-                d2[:, i] = (diff * diff).sum(axis=1)
-            best = np.argmin(d2, axis=1)
+            best, d2 = nearest_centroid(x, cmat)
             yield pd.DataFrame(
                 {
                     id_col: b[id_col].values[ok],
                     "predicted_label": labels[best],
-                    "distance": np.sqrt(d2[np.arange(len(best)), best]),
+                    "distance": np.sqrt(d2),
                 }
             )
 
@@ -225,26 +290,21 @@ def train_multilabel_centroids(
 ) -> DataFrame:
     """One-vs-rest nearest-centroid training over a 0/1 multi-label
     matrix (the reference wraps its SVM in OneVsRestClassifier,
-    rp_classify.py:51-52). One distributed pass: explode (category,
-    y∈{0,1}) pairs, element-wise mean per (category, y). Model =
-    2·n_categories rows — broadcastable."""
-    cats = F.array(*[
-        F.struct(F.lit(c).alias("category"), F.col(c).cast("int").alias("y"))
-        for c in label_cols
-    ])
-    stacked = (
-        df.select(F.col(vec_col).cast("array<double>").alias("__v"),
-                  F.explode(cats).alias("c"))
-        .select(F.col("c.category").alias("category"), F.col("c.y").alias("y"),
-                F.posexplode("__v"))
-    )
-    return (
-        stacked.groupBy("category", "y", "pos")
-        .agg(F.avg("col").alias("v"))
-        .groupBy("category", "y")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "v"))).alias("__pv"))
-        .select("category", "y", F.transform("__pv", lambda s: s["v"]).alias("centroid"))
-    )
+    rp_classify.py:51-52): ``train_centroids`` keyed by (category, y),
+    all categories in one job. Model = 2·n_categories rows."""
+    op = "train_multilabel_centroids"
+
+    def fold(x, *ys):
+        return {(c, k): t for c, y in zip(label_cols, ys)
+                for k, t in _sums_by(y, x).items()}
+
+    dim, sums = partial_sums(
+        df, [vec_col, *[F.col(c).cast("int") for c in label_cols]], fold, op)
+    if dim is None:
+        raise ValueError(f"{op}: no non-NULL vectors")
+    return local_frame(
+        df.sparkSession, [(c, y, (s / n).tolist()) for (c, y), (s, n) in sums.items()],
+        "category string, y int, centroid array<double>")
 
 
 def predict_multilabel(
@@ -309,89 +369,42 @@ def train_logreg_ovr(
     margin-based linear classifier is the closest Spark-idiomatic,
     oracle-checkable substitute, trained jointly for every class).
 
-    Each iteration is ONE distributed aggregation: the (n_classes x
-    dim+1) weight matrix rides the task closure, each task computes
-    residuals sigmoid(X.W^T) - Y and the partial gradient sum
-    R^T.X for its partition as two BLAS calls (round 6 — this replaces
-    a crossJoin + posexplode that materialized rows x classes x dims
-    exploded rows per iteration through interpreted HOF dot products),
-    and the tiny (class, pos, partial) table is summed and collected,
-    with the mean division applied driver-side (the same
-    collect-the-K-row-model discipline as kmeans_fit, so plan depth
-    stays constant across iterations — no lineage bomb). Summation
-    order changes at the float ulp level only — the oracle retrains in
-    DuckDB with its own order, so ranks/rounded outputs are
-    margin-protected exactly as before. Features are augmented with a
-    constant-1 bias dimension. Rows with a NULL vector are skipped; a
-    vector whose length differs from the first row's raises a
-    ``ValueError`` with the count of such rows. Returns (class_label,
-    weights) with len(weights) == dim+1."""
-    import numpy as np
-    import pandas as pd
-
-    spark = df.sparkSession
-    v = F.concat(F.col(vec_col).cast("array<double>"), F.array(F.lit(1.0)))
-    pts = (
-        df.select(F.col(label_col).cast("string").alias("__y"), v.alias("__v"))
-        .filter(F.col("__v").isNotNull())  # NULL vectors contributed
-        # nothing to the old avg-gradient either (avg skips NULLs)
-        .persist()
-    )
+    One ``_prims.partial_sums`` job counts the rows per class, then
+    each iteration is ONE more: the (n_classes x dim+1) weight matrix
+    rides the task closure, each batch computes residuals
+    sigmoid(X.W^T) - Y and its gradient sum R^T.X as two BLAS calls,
+    and the driver adds the task sums and divides by n (plan depth
+    stays constant — no lineage bomb). The oracle retrains in DuckDB
+    with its own summation order, so ranks/rounded outputs are
+    margin-protected. Features are augmented with a constant-1 bias
+    dimension. NULL vectors are skipped, ragged ones raise, no vector
+    gives an empty model. Returns (class_label, weights) with
+    len(weights) == dim+1."""
+    op = "train_logreg_ovr"
+    pts = df.select(F.col(vec_col).alias("__v"),
+                    F.col(label_col).cast("string").alias("__y")).persist()
     try:
-        first = pts.first()
-        if first is None:
-            return spark.createDataFrame(
-                [], "class_label string, weights array<double>"
-            )
-        dim = len(first["__v"])
-        classes = sorted(r["__y"] for r in pts.select("__y").distinct().collect())
+        dim, counts = partial_sums(
+            pts, ["__v", "__y"],
+            lambda x, y: {k: (c,) for k, c in Counter(y).items()}, op)
+        classes = sorted(counts)  # none: no vector, an empty model
         cindex = {c: i for i, c in enumerate(classes)}
-        n_total, n_ragged = pts.agg(
-            F.count(F.lit(1)),
-            F.count(F.when(F.size("__v") != dim, 1)),
-        ).first()
-        if n_ragged:
-            raise ValueError(
-                f"train_logreg_ovr: {n_ragged} rows have a vector length "
-                f"other than {dim - 1} (the first row's)"
-            )
-        weights = np.zeros((len(classes), dim))
+        n_total = sum(c for (c,) in counts.values())
+        weights = np.zeros((len(classes), (dim or 0) + 1))
         eye = np.eye(len(classes))
-        for _ in range(iters):
-            wmat = weights.copy()
+        for _ in range(iters if classes else 0):
 
-            def partials(batches, W=wmat):
-                acc = np.zeros_like(W)
-                seen = False
-                for b in batches:
-                    x = np.stack(
-                        [np.asarray(r, dtype=np.float64) for r in b["__v"].values]
-                    )
-                    y = eye[[cindex[s] for s in b["__y"].values]]
-                    r = 1.0 / (1.0 + np.exp(-(x @ W.T))) - y
-                    acc += r.T @ x
-                    seen = True
-                if not seen:
-                    return
-                ci, pos = np.divmod(
-                    np.arange(acc.size, dtype=np.int64), acc.shape[1]
-                )
-                yield pd.DataFrame(
-                    {"ci": ci, "pos": pos, "s": acc.ravel()}
-                )
+            def grad(x, y, W=weights.copy()):
+                x = np.hstack([x, np.ones((len(x), 1))])
+                r = 1.0 / (1.0 + np.exp(-(x @ W.T))) - eye[[cindex[s] for s in y]]
+                return {0: (r.T @ x,)}
 
-            grad = (
-                pts.mapInPandas(partials, "ci int, pos int, s double")
-                .groupBy("ci", "pos")
-                .agg(F.sum("s").alias("g"))
-                .collect()
-            )
-            for r in grad:
-                weights[r["ci"], r["pos"]] -= lr * (r["g"] / n_total)
+            _, g = partial_sums(pts, ["__v", "__y"], grad, op)
+            weights -= lr * (g[0][0] / n_total)
     finally:
         pts.unpersist()
-    return spark.createDataFrame(
-        [(c, [float(x) for x in weights[i]]) for i, c in enumerate(classes)],
+    return local_frame(
+        df.sparkSession, [(c, weights[i].tolist()) for i, c in enumerate(classes)],
         "class_label string, weights array<double>",
     )
 
@@ -411,9 +424,6 @@ def predict_logreg(
     so bit-equal score ties break to the smallest label. Rows whose
     vector is NULL or not the model dimension get no row — the
     corpus-row policy of ``_prims.broadcast_topk``."""
-    import numpy as np
-    import pandas as pd
-
     rows = sorted(collect_bounded(model, "predict_logreg"),
                   key=lambda r: r["class_label"])
     id_type = df.schema[id_col].dataType

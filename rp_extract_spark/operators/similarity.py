@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from .._prims import broadcast_topk, collect_bounded
+from .._prims import broadcast_topk, collect_bounded, local_frame, partial_sums
 
 logger = logging.getLogger(__name__)
 
@@ -611,57 +611,61 @@ def kmeans_fit(
     seed: int = 29,
     init: DataFrame | None = None,
 ) -> DataFrame:
-    """Lloyd's k-means in pure DataFrame ops: seed centroids from a
-    deterministic hash-sample of rows (or take ``init`` — a
-    (centroid_label, centroid) DataFrame — verbatim, e.g. table rows
-    for an SQL-reproducible quantizer), then iterate (assign via
-    broadcast arg-min, recompute element-wise means). The model stays
-    K rows; each iteration is one broadcast join + one explode/agg."""
-    from .classify import predict_centroids, train_centroids
+    """Lloyd's k-means: seed centroids from a deterministic hash-sample
+    of rows (or take ``init`` — a (centroid_label, centroid) DataFrame
+    — verbatim, e.g. table rows for an SQL-reproducible quantizer),
+    then run ``iters`` Lloyd iterations, each ONE job
+    (``classify.lloyd_fit``; ties to the smaller string label). NULL
+    vectors are skipped; ragged ones and no vector at all raise."""
+    if init is not None:
+        init = init.select(F.lit(0).alias("sub"), "centroid_label", "centroid")
+    rows = _fit_codebooks(df, vec_col, id_col, 1, k, iters, seed, init,
+                          "kmeans_fit")
+    return local_frame(df.sparkSession, [r[1:] for r in rows],
+                       "centroid_label string, centroid array<double>")
+
+
+def _fit_codebooks(df, vec_col, id_col, m, k, iters, seed, init, op):
+    """kmeans_fit / pq_fit: (sub, label, centroid) rows of ``m``
+    codebooks trained together by ``classify.lloyd_fit``."""
+    from .classify import codebook, lloyd_fit
 
     v = F.col(vec_col).cast("array<double>")
-    spark = df.sparkSession
     if init is not None:
-        seeded = init.select(
-            F.col("centroid_label").cast("string").alias("centroid_label"),
-            F.col("centroid").cast("array<double>").alias("centroid"),
-        )
+        rows = init.select(
+            F.col("sub").cast("int"),
+            F.col("centroid_label").cast("string"),
+            F.col("centroid").cast("array<double>"),
+        ).collect()
+        model = [codebook((r[1], r[2]) for r in rows if r[0] == s)
+                 for s in range(m)]
     else:
         # Deterministic seeding: the k rows with the smallest seeded
         # hash, via orderBy+limit (TakeOrderedAndProject: each partition
         # keeps its local top-k, the driver merges k*nPart candidates).
         # NEVER a row_number() over an unpartitioned window — that sorts
         # the whole corpus on one partition: a job-killer at scale.
-        seed_rows = (
-            df.select(F.col(id_col), v.alias("__v"))
+        seeds = [
+            list(r["__v"])
+            for r in df.select(F.col(id_col), v.alias("__v"))
+            .filter(F.col("__v").isNotNull())
             .withColumn("__h", F.xxhash64(F.col(id_col), F.lit(seed)))
             .orderBy("__h", id_col)
             .limit(k)
             .collect()
-        )
-        seeded = spark.createDataFrame(
-            [(str(i + 1), list(r["__v"])) for i, r in enumerate(seed_rows)],
-            schema="centroid_label string, centroid array<double>",
-        )
-    pts = df.select(F.col(id_col), v.alias(vec_col)).persist()
-    try:
-        # materialize the K seed rows on the driver: each iteration's
-        # centroids must NOT carry the previous iteration's lineage, or
-        # iteration i+1 re-executes iterations 1..i (recompute bomb at
-        # scale). The model is K rows — driver round-trip is free.
-        centroids = seeded
-        for _ in range(iters):
-            rows = centroids.collect()
-            centroids = spark.createDataFrame(rows, schema=centroids.schema)
-            assigned = predict_centroids(
-                pts, centroids, vec_col=vec_col, id_col=id_col
-            ).withColumnRenamed("predicted_label", "label")
-            joined = pts.join(assigned.select(id_col, "label"), id_col)
-            centroids = train_centroids(joined, vec_col=vec_col, label_col="label")
-        rows = centroids.collect()
-        return spark.createDataFrame(rows, schema=centroids.schema)
-    finally:
-        pts.unpersist()
+        ]
+        if not seeds:
+            raise ValueError(f"{op}: no non-NULL vectors")
+        dim = len(seeds[0])  # other lengths: the first pass raises
+        if dim % m:
+            raise ValueError(f"dim {dim} not divisible by m={m}")
+        d = dim // m
+        model = [codebook((str(c + 1), r[s * d:(s + 1) * d])
+                          for c, r in enumerate(seeds) if len(r) == dim)
+                 for s in range(m)]
+    model = lloyd_fit(df, v, model, iters, op)
+    return [(s, lab, c.tolist()) for s, (labels, cmat) in enumerate(model)
+            for lab, c in zip(labels, cmat)]
 
 
 def ivf_build(
@@ -731,46 +735,18 @@ def covariance_matrix(
     vec_col: str = "embedding",
 ):
     """One-pass distributed covariance of a vector column — the scale
-    shape for PCA over 10^12 embeddings: each Arrow batch computes a
-    LOCAL Gramian + sum + count with numpy (dim x dim floats, batch
-    size independent), the driver adds the P partial matrices and
-    finishes cov = E[xxᵀ] - μμᵀ (population, ddof=0). NEVER the
-    posexplode-pairs form: exploding dim² rows per vector is a x4096
-    blowup at dim 64. Returns (mu, cov, n) as numpy arrays."""
-    import numpy as np
-    import pandas as pd
-
-    def partials(batches):
-        for b in batches:
-            if not len(b):
-                continue
-            x = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in b[vec_col].values]
-            )
-            yield pd.DataFrame(
-                {
-                    "n": [x.shape[0]],
-                    "s": [x.sum(axis=0).tolist()],
-                    "g": [(x.T @ x).ravel().tolist()],
-                }
-            )
-
-    rows = (
-        df.select(vec_col)
-        .mapInPandas(partials, "n long, s array<double>, g array<double>")
-        .collect()
-    )
-    if not rows:
+    shape for PCA over 10^12 embeddings: one ``_prims.partial_sums``
+    job, each batch a LOCAL Gramian + sum + count with numpy (dim x dim
+    floats, batch size independent), finished on the driver as cov =
+    E[xxᵀ] - μμᵀ (population, ddof=0). NEVER the posexplode-pairs
+    form: exploding dim² rows per vector is a x4096 blowup at dim 64.
+    NULL vectors are skipped, ragged ones raise. Returns (mu, cov, n)."""
+    dim, sums = partial_sums(
+        df, [vec_col], lambda x: {0: (len(x), x.sum(axis=0), x.T @ x)},
+        "covariance_matrix")
+    if dim is None:
         raise ValueError("covariance of an empty DataFrame")
-    import numpy as np
-
-    n = sum(r.n for r in rows)
-    dim = len(rows[0].s)
-    s = np.zeros(dim)
-    g = np.zeros((dim, dim))
-    for r in rows:
-        s += np.asarray(r.s)
-        g += np.asarray(r.g).reshape(dim, dim)
+    n, s, g = sums[0]
     mu = s / n
     cov = g / n - np.outer(mu, mu)
     return mu, cov, n
@@ -915,95 +891,15 @@ def pq_fit(
 
     Returns an (sub int, centroid_label string, centroid
     array<double>) model of m*k rows. All m subspaces train in the
-    SAME distributed pass — one assignment join + one mean agg per
-    Lloyd iteration regardless of m — and the model is driver-
-    materialized between iterations (kmeans_fit's lineage rule: no
-    recompute bomb). ``init`` takes (sub, centroid_label, centroid)
+    SAME job per Lloyd iteration, whatever m (``classify.lloyd_fit``,
+    kmeans_fit's rules). ``init`` takes (sub, centroid_label, centroid)
     rows verbatim for an SQL-reproducible quantizer (the pq_topk
     oracle's path); otherwise seeds are the sub-slices of the k rows
-    with the smallest seeded hash, same TakeOrdered discipline as
-    kmeans_fit."""
-    spark = df.sparkSession
-    dim = len(df.select(F.col(vec_col)).first()[0])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    d = dim // m
-    v = F.col(vec_col).cast("array<double>")
-    subs = df.select(
-        F.col(id_col),
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(s).alias("sub"),
-                    F.slice(v, s * d + 1, d).alias("sv"),
-                )
-                for s in range(m)
-            ])
-        ).alias("b"),
-    ).select(id_col, F.col("b.sub").alias("sub"), F.col("b.sv").alias("sv"))
-    if init is not None:
-        model = init.select(
-            F.col("sub").cast("int"),
-            F.col("centroid_label").cast("string").alias("centroid_label"),
-            F.col("centroid").cast("array<double>").alias("centroid"),
-        )
-        model = spark.createDataFrame(model.collect(), schema=model.schema)
-    else:
-        seed_rows = (
-            df.select(F.col(id_col), v.alias("__v"))
-            .withColumn("__h", F.xxhash64(F.col(id_col), F.lit(seed)))
-            .orderBy("__h", id_col)
-            .limit(k)
-            .collect()
-        )
-        model = spark.createDataFrame(
-            [
-                (s, str(c + 1), list(r["__v"])[s * d:(s + 1) * d])
-                for s in range(m)
-                for c, r in enumerate(seed_rows)
-            ],
-            schema="sub int, centroid_label string, centroid array<double>",
-        )
-    pts = subs.persist()
-    try:
-        for _ in range(iters):
-            dist = F.aggregate(
-                F.zip_with("sv", "centroid", lambda x, c: (x - c) * (x - c)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            assigned = (
-                pts.join(F.broadcast(model), "sub")
-                .withColumn("__d", dist)
-                .withColumn(
-                    "__r",
-                    F.row_number().over(
-                        Window.partitionBy(id_col, "sub").orderBy(
-                            F.col("__d").asc(), F.col("centroid_label").asc()
-                        )
-                    ),
-                )
-                .filter(F.col("__r") == 1)
-            )
-            new_model = (
-                assigned.select(
-                    "sub", "centroid_label",
-                    F.posexplode("sv").alias("pos", "x"),
-                )
-                .groupBy("sub", "centroid_label", "pos")
-                .agg(F.avg("x").alias("mu"))
-                .groupBy("sub", "centroid_label")
-                .agg(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("pos", "mu"))),
-                        lambda s: s["mu"],
-                    ).alias("centroid")
-                )
-            )
-            model = spark.createDataFrame(new_model.collect(), schema=model.schema)
-        return model
-    finally:
-        pts.unpersist()
+    with the smallest seeded hash, as in kmeans_fit."""
+    rows = _fit_codebooks(df, vec_col, id_col, m, k, iters, seed, init,
+                          "pq_fit")
+    return local_frame(df.sparkSession, rows,
+                       "sub int, centroid_label string, centroid array<double>")
 
 
 def pq_encode(

@@ -4942,7 +4942,7 @@ def q_pq_trained_topk(spark, sf):
     discipline): pq_fit runs 2 Lloyd iterations per subspace from
     fixed table-row seeds, and the oracle unrolls the SAME iterations
     as generated DuckDB CTEs (assignment tiebreak distance ASC, label
-    ASC — exactly pq_fit's window order; per-position avg means), then
+    ASC — pq_fit's nearest_centroid argmin; per-position avg means), then
     replays encode + ADC + the top-k cut. Training, not just serving,
     is in the hard signal."""
     from ..operators.similarity import pq_encode, pq_fit, pq_topk

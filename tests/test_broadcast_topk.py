@@ -1,7 +1,8 @@
 """The four kNN operators on _prims.broadcast_topk: generic ids, the
 bounded query collect, partition-independent results on tied and
 degenerate vectors; plus the classify model-table contracts
-(bounded collects, ragged logreg vectors, centroid label type)."""
+(bounded collects, the NULL / ragged vector rule of the fits on
+_prims.partial_sums, centroid label type)."""
 
 import numpy as np
 import pytest
@@ -12,13 +13,18 @@ from rp_extract_spark import _prims
 from rp_extract_spark.operators.classify import (
     predict_centroids,
     predict_logreg,
+    train_centroids,
     train_logreg_ovr,
+    train_multilabel_centroids,
 )
 from rp_extract_spark.operators.similarity import (
+    covariance_matrix,
     dim_truncation_recall,
     hard_negatives,
+    kmeans_fit,
     knn_join,
     knn_label_spread,
+    pq_fit,
 )
 
 SCHEMA = "vec_id {}, label int, embedding array<double>"
@@ -110,22 +116,61 @@ def test_model_table_collects_are_bounded(spark, monkeypatch):
     with pytest.raises(ValueError, match=r"^predict_centroids: more than 3"):
         predict_centroids(e, cent)
     assert predict_centroids(e, cent.limit(3)).count() == 36
+    # a fit's partial sums are bounded the same way, per key
+    with pytest.raises(ValueError, match=r"^train_centroids: more than 3 keys"):
+        train_centroids(e.withColumn("label", F.col("vec_id") % 4))
+    assert train_centroids(e).count() == 3
 
 
 # ------------------------------------------------ classify contracts
 
 
-def test_train_logreg_rejects_ragged_vectors(spark):
-    rows = [("a", [1.0, 0.0, 0.0]), ("b", [0.0, 1.0, 0.0]),
-            ("a", None), ("b", [0.0, 1.0])]
-    df = spark.createDataFrame(rows, "label string, embedding array<double>")
+FITS = {
+    "train_logreg_ovr": lambda df: train_logreg_ovr(df, iters=1),
+    "train_centroids": train_centroids,
+    "train_multilabel_centroids": lambda df: train_multilabel_centroids(
+        df.withColumn("is_a", (F.col("label") == "a").cast("int")),
+        label_cols=["is_a"]),
+    "kmeans_fit": lambda df: kmeans_fit(df, k=2, iters=2),
+    "pq_fit": lambda df: pq_fit(df, m=2, k=2, iters=2),
+    "covariance_matrix": covariance_matrix,
+}
+
+
+def _fitted(out):
+    if isinstance(out, tuple):  # covariance_matrix: (mu, cov, n)
+        return [np.asarray(x).tolist() for x in out]
+    return sorted(map(repr, out.collect()))
+
+
+@pytest.mark.parametrize("fit", sorted(FITS))
+def test_fit_rejects_ragged_vectors(spark, fit):
+    """The input rule of every fit on _prims.partial_sums: a NULL
+    vector is skipped (the fit equals the fit without it, bit for bit)
+    and a vector of another length than the first non-NULL one raises
+    on the driver with the count of such rows."""
+    rng = np.random.default_rng(7)
+    good = [(i, "ab"[i % 2], [float(x) for x in rng.normal(size=4)])
+            for i in range(20)]
+    schema = "vec_id long, label string, embedding array<double>"
+    with_null = spark.createDataFrame(good + [(20, "a", None)], schema)
+    ragged = spark.createDataFrame(
+        good + [(20, "a", None), (21, "b", [0.5, 1.5])], schema)
+    run = FITS[fit]
+    assert _fitted(run(with_null.coalesce(1))) == _fitted(
+        run(spark.createDataFrame(good, schema).coalesce(1)))
     with pytest.raises(ValueError,
-                       match=r"1 rows have a vector length other than 3"):
-        train_logreg_ovr(df.coalesce(1), iters=1)
-    # NULL vectors alone are skipped, not rejected
-    assert train_logreg_ovr(df.filter(F.size("embedding") != 2)
-                            .union(df.filter(F.col("embedding").isNull())),
-                            iters=1).count() == 2
+                       match=rf"^{fit}: 1 rows have a vector length other than 4"):
+        run(ragged.coalesce(1))
+    # no non-NULL vector: an empty logreg model, an error elsewhere
+    nulls = spark.createDataFrame([(0, "a", None)], schema)
+    if fit == "train_logreg_ovr":
+        assert run(nulls).count() == 0
+    else:
+        empty = ("covariance of an empty DataFrame"
+                 if fit == "covariance_matrix" else f"{fit}: no non-NULL vectors")
+        with pytest.raises(ValueError, match=f"^{empty}$"):
+            run(nulls)
 
 
 def test_predict_centroids_keeps_label_type(spark):

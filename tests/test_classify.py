@@ -39,6 +39,15 @@ def test_train_predict(spark, clustered):
         axis=0,
     )
     assert np.allclose(ca, mean_a)
+    # reference: Spark SQL's per-position avg, bit-equal on one partition
+    one = clustered.coalesce(1)
+    ref = (one.select("label", F.posexplode("embedding"))
+           .groupBy("label", "pos").agg(F.avg("col").alias("m"))
+           .groupBy("label")
+           .agg(F.sort_array(F.collect_list(F.struct("pos", "m"))).alias("pm")))
+    assert {r.centroid_label: r.centroid
+            for r in train_centroids(one).collect()} == {
+        r.label: [p.m for p in r.pm] for r in ref.collect()}
     preds = predict_centroids(clustered, cent)
     joined = preds.join(clustered.select("vec_id", "label"), "vec_id")
     acc = joined.filter(F.col("predicted_label") == F.col("label")).count() / 90

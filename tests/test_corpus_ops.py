@@ -254,13 +254,24 @@ def test_ivf_topk(spark, emb):
 def test_kmeans_lineage_truncated(spark, emb):
     """Iteration i+1's plan must not re-execute iteration i: the fitted
     centroids come back as a driver-materialized local relation (the
-    model is K rows), not a join tree over the corpus."""
+    model is K rows), not a join tree over the corpus. Lloyd rules: a
+    bit-equal distance tie goes to the smaller string label ("10"
+    before "2"), and a label that gets no points leaves the model."""
     from rp_extract_spark.operators.similarity import kmeans_fit
 
     cent = kmeans_fit(emb, k=4, iters=3)
     plan = cent._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan and "Exchange" not in plan
     assert cent.count() == 4
+
+    pts = spark.createDataFrame(
+        [(0, [0.0, 0.0]), (1, [0.0, 0.0]), (2, [5.0, 5.0])],
+        "vec_id long, embedding array<double>")
+    init = spark.createDataFrame(
+        [("10", [1.0, 1.0]), ("2", [-1.0, -1.0]), ("3", [6.0, 6.0])],
+        "centroid_label string, centroid array<double>")
+    got = kmeans_fit(pts, iters=1, init=init).collect()
+    assert sorted(map(tuple, got)) == [("10", [0.0, 0.0]), ("3", [5.0, 5.0])]
 
 
 def test_ivf_build_probe(spark, emb):

@@ -16,6 +16,11 @@ from rp_extract_spark.operators.classify import (
     train_centroids,
     train_logreg_ovr,
 )
+from rp_extract_spark.operators.similarity import (
+    covariance_matrix,
+    kmeans_fit,
+    pq_fit,
+)
 
 
 def _clusters(spark, n_per=40, dim=8, sep=4.0, seed=3):
@@ -69,12 +74,28 @@ def test_logreg_beats_or_matches_centroid_on_fixture(spark):
     assert acc_lr >= acc_c, (acc_lr, acc_c)
 
 
-def test_logreg_deterministic(spark):
+DETERMINISTIC_FITS = {
+    "train_logreg_ovr": lambda df: train_logreg_ovr(df, iters=4),
+    "kmeans_fit": lambda df: kmeans_fit(df, k=3, iters=3),
+    "pq_fit": lambda df: pq_fit(df, m=4, k=3, iters=3),
+    "covariance_matrix": lambda df: covariance_matrix(df)[:2],
+}
+
+
+@pytest.mark.parametrize("fit", sorted(DETERMINISTIC_FITS))
+def test_fit_deterministic(spark, fit):
+    """Two runs of a fit on the same 4-partition input give bit-equal
+    models: _prims.partial_sums adds the task sums in partition order."""
     df = _clusters(spark, n_per=20)
-    w1 = {r.class_label: r.weights for r in train_logreg_ovr(df, iters=4).collect()}
-    w2 = {r.class_label: r.weights for r in train_logreg_ovr(df, iters=4).collect()}
-    for c in w1:
-        assert np.allclose(w1[c], w2[c], rtol=0, atol=0)  # bit-identical
+    assert df.rdd.getNumPartitions() == 4
+
+    def model():
+        out = DETERMINISTIC_FITS[fit](df)
+        if isinstance(out, tuple):
+            return [a.tobytes() for a in out]
+        return sorted(tuple(r) for r in out.collect())
+
+    assert model() == model()  # bit-identical
 
 
 def test_logreg_empty_input(spark):

@@ -7,8 +7,11 @@ hot keys producing correct results.
 """
 
 import io
+import itertools
 from contextlib import redirect_stdout
 
+import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from rp_extract_spark.plans.driver_queries import (
@@ -25,6 +28,33 @@ def _plan(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+_GROUPS = itertools.count()
+
+
+def _jobs(spark, fn) -> tuple[int, list[str]]:
+    """Run ``fn`` under a job group of its own: the number of Spark
+    jobs it ran and the executed plans of the SQL executions those jobs
+    belong to (read from the SQL status store once the listener bus
+    has drained)."""
+    sc = spark.sparkContext
+    group = f"plan-quality-{next(_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+    keys = spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+    ex = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = [
+        x.physicalPlanDescription()
+        for x in (ex.apply(i) for i in range(ex.size()))
+        if jobs & {int(j) for j in keys(x.jobs().keySet())}
+    ]
+    return len(jobs), plans
 
 
 def test_filter_pushdown_to_parquet(spark):
@@ -197,21 +227,44 @@ def test_kmeans_seeding_no_global_window(spark):
     """Regression (round-3 verdict): centroid seeding must be a
     distributed TakeOrdered (orderBy+limit), never row_number() over an
     unpartitioned window — that sorts the whole corpus on ONE partition.
-    The seed plan is inside kmeans_fit; assert the equivalent seed query
-    shape and that fitting never emits a Window operator."""
+    Read off the plans kmeans_fit actually runs: the seed job is a
+    TakeOrderedAndProject and no job of the fit has a Window."""
     from rp_extract_spark.operators.similarity import kmeans_fit
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    seed_plan = _plan(
-        emb.select("vec_id")
-        .withColumn("__h", F.xxhash64("vec_id", F.lit(29)))
-        .orderBy("__h", "vec_id")
-        .limit(4)
-    )
-    assert "TakeOrderedAndProject" in seed_plan
-    assert "Window" not in seed_plan
-    cent = kmeans_fit(emb, k=4, iters=1)
-    assert cent.count() <= 4
+    out = []
+    _, plans = _jobs(spark, lambda: out.append(kmeans_fit(emb, k=4, iters=1)))
+    assert any("TakeOrderedAndProject" in p for p in plans)
+    assert not any("Window" in p for p in plans)
+    assert out[0].count() <= 4
+
+
+def _fit_iters(name):
+    from rp_extract_spark.operators.classify import train_logreg_ovr
+    from rp_extract_spark.operators.similarity import kmeans_fit, pq_fit
+
+    return {
+        "kmeans_fit": lambda df, n: kmeans_fit(df, k=4, iters=n),
+        "pq_fit": lambda df, n: pq_fit(df, m=4, k=4, iters=n),
+        "train_logreg_ovr": lambda df, n: train_logreg_ovr(df, iters=n),
+    }[name]
+
+
+@pytest.mark.parametrize("fit", ["kmeans_fit", "pq_fit", "train_logreg_ovr"])
+def test_fit_one_job_per_iteration(spark, fit):
+    """Each Lloyd iteration of kmeans_fit / pq_fit and each gradient
+    step of train_logreg_ovr is exactly one Spark job (one
+    ``_prims.partial_sums`` fold), and no job of the fit has a Window,
+    a Generate (posexplode) or an Exchange in its plan."""
+    run = _fit_iters(fit)
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    n1, _ = _jobs(spark, lambda: run(emb, 1))
+    n2, plans = _jobs(spark, lambda: run(emb, 2))
+    assert n2 == n1 + 1, (n1, n2)
+    assert len(plans) == n2
+    for p in plans:
+        assert "Window" not in p and "Generate" not in p
+        assert "Exchange" not in p
 
 
 def test_paragraph_dedup_digest_shuffle_only(spark):
@@ -231,29 +284,21 @@ def test_paragraph_dedup_digest_shuffle_only(spark):
 
 
 def test_covariance_no_pair_explosion(spark):
-    """covariance_matrix must run as one Arrow stage emitting partial
-    Gramians — never a posexplode self-join that blows up dim^2 rows
-    per vector."""
+    """covariance_matrix must run as ONE job emitting partial Gramians —
+    never a posexplode self-join that blows up dim^2 rows per vector:
+    its executed plan has no Generate and no Exchange, and the result
+    is exact."""
     from rp_extract_spark.operators.similarity import covariance_matrix
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    # the physical shape is visible on the partials DataFrame the
-    # operator builds; easiest check: run it and confirm the result is
-    # exact while the input explain contains a single MapInPandas
-    import io
-    from contextlib import redirect_stdout
-
-    import numpy as np
-
-    mu, cov, n = covariance_matrix(emb)
+    out = []
+    n_jobs, plans = _jobs(spark, lambda: out.append(covariance_matrix(emb)))
+    assert n_jobs == 1 and len(plans) == 1
+    assert "MapInArrow" in plans[0]
+    assert "Generate" not in plans[0] and "Exchange" not in plans[0]
+    _mu, cov, _n = out[0]
     X = np.stack([np.asarray(r.embedding, float) for r in emb.collect()])
     assert np.allclose(cov, np.cov(X.T, ddof=0), atol=1e-10)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        emb.select("embedding").mapInPandas(
-            lambda it: it, emb.select("embedding").schema
-        ).explain("formatted")
-    assert "PosExplode" not in buf.getvalue()
 
 
 def test_salted_asof_splits_hot_entity(spark):

@@ -115,6 +115,14 @@ def test_pq_fit_recovers_separable_blobs(spark):
         for got, want in zip(cents, exp):
             assert np.allclose(got, want, atol=0.2)
 
+    # per subspace, a bit-equal distance tie goes to the smaller string
+    # label ("10" before "2") and a label with no points leaves the model
+    cbs = {s: {10: [1.0], 2: [-1.0], 3: [6.0]} for s in range(2)}
+    model = pq_fit(_vec_df(spark, np.array([[0.0, 0.0], [0.0, 0.0], [5.0, 5.0]])),
+                   m=2, iters=1, init=_model_df(spark, cbs))
+    assert sorted(map(tuple, model.collect())) == [
+        (s, lab, c) for s in range(2) for lab, c in (("10", [0.0]), ("3", [5.0]))]
+
 
 def test_pq_fit_dim_guard(spark):
     with pytest.raises(ValueError, match="not divisible"):
