@@ -9,7 +9,9 @@
   kernel). With an ``err`` field in the schema, failures are isolated
   per record — one corrupt blob yields an ``err`` row and never fails
   the batch (the reference's decode loop, rp_extract_batch.py:421-425);
-  without one, the exception fails the task.
+  without one, the exception fails the task. ``expand`` turns a
+  one-to-many stage's array field back into rows, one err row per
+  isolated record.
 - ``global_rank``: exact ordered positions and running sums without a
   global window (segment positions, batch and shard offsets).
 - ``spread``: round-robin a one-split input before a CPU-bound stage.
@@ -142,6 +144,19 @@ def arrow_stage(
 
     cols = list(dict.fromkeys(key_cols + in_cols))
     return df.select(*cols).mapInArrow(run, schema)
+
+
+def expand(col: str, elem: T.StructType, **sentinel) -> Column:
+    """``F.inline`` of the ``array<elem>`` field ``col`` of a
+    one-to-many ``arrow_stage``: one row per element. A record the
+    stage isolated has a NULL array and gives exactly one row, its
+    ``elem`` fields NULL except those named in ``sentinel``
+    (``ty=-1``); a good record with an empty array gives no row."""
+    err_row = F.struct(*[
+        F.lit(sentinel.get(f.name)).cast(f.dataType).alias(f.name)
+        for f in elem.fields
+    ])
+    return F.inline(F.coalesce(F.col(col), F.array(err_row)))
 
 
 class _Failed(dict):

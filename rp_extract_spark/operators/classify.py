@@ -596,12 +596,12 @@ def auc_roc(
             pid_base.append((pid, base))
             base += c
         if base == 0:
-            return spark.createDataFrame(
-                [(0, 0, 0, None)],
+            return local_frame(
+                spark, [(0, 0, 0, None)],
                 schema="n bigint, n_pos bigint, n_neg bigint, auc_u bigint",
             )
-        base_df = spark.createDataFrame(
-            pid_base, schema="__pid int, __base bigint"
+        base_df = local_frame(
+            spark, pid_base, schema="__pid int, __base bigint"
         )
         w = Window.partitionBy("__pid").orderBy(F.col("__s").asc())
         cum = (
@@ -627,8 +627,8 @@ def auc_roc(
         nt = int(row["__nt"] or 0)
         nn = nt - p
         auc_u = ((r2 - p * (p + 1)) * g) // (2 * p * nn) if p and nn else None
-        return spark.createDataFrame(
-            [(nt, p, nn, auc_u)],
+        return local_frame(
+            spark, [(nt, p, nn, auc_u)],
             schema="n bigint, n_pos bigint, n_neg bigint, auc_u bigint",
         )
     finally:
@@ -683,8 +683,8 @@ def roc_points(
         F.min("score").alias("__lo"), F.max("score").alias("__hi")
     ).collect()[0]
     if mm["__lo"] is None:
-        return spark.createDataFrame(
-            [],
+        return local_frame(
+            spark, [],
             schema="score bigint, n_ge bigint, tp bigint, fp bigint,"
             " tpr_u bigint, fpr_u bigint",
         )
@@ -709,8 +709,8 @@ def roc_points(
         base_p += bp
     n_tot, p_tot = base_n, base_p
     n_neg = n_tot - p_tot
-    base_df = spark.createDataFrame(
-        bases, schema="__bk int, __bn bigint, __bp bigint"
+    base_df = local_frame(
+        spark, bases, schema="__bk int, __bn bigint, __bp bigint"
     )
     w = Window.partitionBy("__bk").orderBy(F.col("score").desc())
     cum = (
@@ -794,8 +794,8 @@ def average_precision(
         )
         n = sum(c for _, c, _ in crows)
         if n == 0:
-            return spark.createDataFrame(
-                [(0, 0, None)], schema="n bigint, n_pos bigint, ap_u bigint"
+            return local_frame(
+                spark, [(0, 0, None)], "n bigint, n_pos bigint, ap_u bigint"
             )
         base_r, base_p = 0, 0
         bases = []
@@ -803,8 +803,8 @@ def average_precision(
             bases.append((pid, base_r, base_p))
             base_r += c
             base_p += cp
-        base_df = spark.createDataFrame(
-            bases, schema="__pid int, __br bigint, __bp bigint"
+        base_df = local_frame(
+            spark, bases, schema="__pid int, __br bigint, __bp bigint"
         )
         w = Window.partitionBy("__pid").orderBy(
             F.col("__s").desc(), F.col("__id").asc()
@@ -828,8 +828,8 @@ def average_precision(
         )
         p = int(row["__p"] or 0)
         ap_u = int(row["__sum"]) // p if p else None
-        return spark.createDataFrame(
-            [(n, p, ap_u)], schema="n bigint, n_pos bigint, ap_u bigint"
+        return local_frame(
+            spark, [(n, p, ap_u)], "n bigint, n_pos bigint, ap_u bigint"
         )
     finally:
         t.unpersist(blocking=False)
@@ -1118,7 +1118,8 @@ def clustering_agreement(
         cells.unpersist()
     t = n * (n - 1) // 2
     rand_u = ((t + 2 * s_ab - s_a - s_b) * grain) // t if t else 0
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         [(n, t, int(s_ab), int(s_a), int(s_b), int(rand_u))],
         "n bigint, t_pairs bigint, s_ab bigint, s_a bigint,"
         " s_b bigint, rand_u bigint",
@@ -1165,8 +1166,8 @@ def pair_prf(
     prec = (tp * grain) // pp if pp else 0
     rec = (tp * grain) // ap if ap else 0
     f1 = (2 * tp * grain) // (pp + ap) if (pp + ap) else 0
-    return df.sparkSession.createDataFrame(
-        [(n, tp, pp, ap, prec, rec, f1)],
+    return local_frame(
+        df.sparkSession, [(n, tp, pp, ap, prec, rec, f1)],
         "n bigint, tp bigint, pred_pairs bigint, true_pairs bigint,"
         " precision_u bigint, recall_u bigint, f1_u bigint",
     )

@@ -6,9 +6,10 @@ image graft decodes to the banded sonogram, these operators cover the
 corpus-side curation the reference leaves to its caller).
 
 Design rules shared by every operator here:
-- one Arrow-batched ``mapInPandas`` decode stage, no shuffle — each
-  operator is a stateless scan; grouping (dedup) happens AFTER the
-  hash scan on 8-byte values, so image bytes never cross an exchange;
+- one ``mapInArrow`` decode stage (``_prims.arrow_stage``), no
+  shuffle — each operator is a stateless scan; grouping (dedup)
+  happens AFTER the hash scan on 8-byte values, so image bytes never
+  cross an exchange;
 - per-record error isolation (err column) — one corrupt blob never
   kills a 100-TB scan. ``_prims.arrow_stage`` is the single home of
   that rule (projection, batch loop, err row); each operator supplies
@@ -32,15 +33,13 @@ same 64 bits both for Spark and for the closed-form SQL replay):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .._prims import arrow_stage, gray, md5_digits, md5_hex, md5_int, moments
+from .._prims import (arrow_stage, expand, gray, md5_digits, md5_hex, md5_int,
+                      moments)
 from ..codecs import encode_png
 from .multimodal import block_mean_resize
 
@@ -153,7 +152,7 @@ def streaming_image_dedup(
     ttl_minutes: int = 0,
 ) -> DataFrame:
     """Streaming analog of ``phash_dedup(max_hamming=0)``: the Arrow
-    hash stage runs per micro-batch (mapInPandas is streaming-
+    hash stage runs per micro-batch (mapInArrow is streaming-
     compatible), then keyed state emits the FIRST image per 64-bit
     perceptual hash and drops replays, carrying the winning image_id.
     Exact-hash tier only — Hamming band tiers need the batch path
@@ -455,6 +454,7 @@ TILE_SCHEMA = T.StructType(
         T.StructField("err", T.StringType(), True),
     ]
 )
+_TILE = T.StructType(TILE_SCHEMA.fields[1:-1])  # one tile: ty .. bytes
 
 
 def tile_images(
@@ -474,47 +474,27 @@ def tile_images(
     the expensive materialization). Errors quarantine per record with
     ty = tx = -1."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, data, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                try:
-                    px = gray(data, fmt)
-                    h, w = px.shape
-                    for ty in range(h // tile_h):
-                        for tx in range(w // tile_w):
-                            t = px[
-                                ty * tile_h : (ty + 1) * tile_h,
-                                tx * tile_w : (tx + 1) * tile_w,
-                            ]
-                            flat = t.ravel().astype(np.int64)
-                            rows.append(
-                                {
-                                    "image_id": iid, "ty": ty, "tx": tx,
-                                    "px_sum": int(flat.sum()),
-                                    "px_sq_sum": int((flat * flat).sum()),
-                                    "px_min": int(flat.min()),
-                                    "px_max": int(flat.max()),
-                                    "bytes": encode_png(np.ascontiguousarray(t))
-                                    if emit_bytes
-                                    else None,
-                                    "err": None,
-                                }
-                            )
-                except Exception as e:  # noqa: BLE001
-                    rows.append(
-                        {
-                            "image_id": iid, "ty": -1, "tx": -1,
-                            "px_sum": None, "px_sq_sum": None, "px_min": None,
-                            "px_max": None, "bytes": None,
-                            "err": f"{type(e).__name__}: {e}",
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in TILE_SCHEMA.fields])
+    def fn(data, fmt):
+        px = gray(data, fmt)
+        tiles = []
+        for ty in range(px.shape[0] // tile_h):
+            for tx in range(px.shape[1] // tile_w):
+                t = px[ty * tile_h : (ty + 1) * tile_h,
+                       tx * tile_w : (tx + 1) * tile_w]
+                flat = t.ravel().astype(np.int64)
+                tiles.append((
+                    ty, tx, int(flat.sum()), int((flat * flat).sum()),
+                    int(flat.min()), int(flat.max()),
+                    encode_png(np.ascontiguousarray(t)) if emit_bytes else None,
+                ))
+        return {"tiles": tiles}
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(run, TILE_SCHEMA)
+    schema = T.StructType([TILE_SCHEMA["image_id"],
+                           T.StructField("tiles", T.ArrayType(_TILE)),
+                           TILE_SCHEMA["err"]])
+    return arrow_stage(
+        images, ["image_id"], ["bytes", "fmt"], schema, fn
+    ).select("image_id", expand("tiles", _TILE, ty=-1, tx=-1), "err")
 
 
 GRID_HASH_SCHEMA = T.StructType(

@@ -1,26 +1,23 @@
 """Multimodal column operators: opaque binary payloads + typed metadata.
 
 Images/audio/video ride as ``binary`` columns; decode / resize /
-frame-sample run as Arrow-batched ``mapInPandas`` stages. The image
-path is fully real (in-repo PNG + baseline JPEG codecs); the audio
-path decodes RIFF/WAVE PCM for real (in-repo codec, codecs/wav.py —
-the reference's primary input format); only COMPRESSED audio (MP3/AAC
-→ ffmpeg) and video container demuxing remain honest stubs behind the
-real Spark plumbing (schema, partitioning, UDF signature, batch shape,
-per-record quarantine are production-shaped and tested).
+frame-sample each run as one ``_prims.arrow_stage`` pass (mapInArrow,
+per-record quarantine); a stage that emits k rows per record (frames,
+pixels) returns an array field the caller expands. The image path is
+fully real (in-repo PNG + baseline JPEG codecs); audio decodes
+RIFF/WAVE PCM, FLAC and MPEG-1 Layer III in-repo; video demuxes
+MJPEG-in-AVI for real (codecs/avi.py). Only AAC-class audio and
+H.264-class video need ffmpeg, absent here: they raise per record.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .._prims import QUARANTINED, arrow_stage, gray
+from .._prims import QUARANTINED, arrow_stage, expand, gray
 from ..codecs import encode_png
 
 
@@ -132,13 +129,17 @@ FRAME_SCHEMA = T.StructType(
         T.StructField("err", T.StringType(), True),
     ]
 )
+_FRAME = T.StructType(FRAME_SCHEMA.fields[1:-1])  # frame_idx, frame_bytes
 
 
 def demux_video(data: bytes) -> list[bytes]:
     """Video demux dispatch: MJPEG-in-AVI payloads demux for REAL
     (codecs/avi.py — RIFF walk, frames are baseline JPEGs our codec
     decodes); the legacy FVID fixture container stays readable; other
-    codecs (H.264/VP9) genuinely need ffmpeg and raise."""
+    codecs (H.264/VP9) genuinely need ffmpeg and raise. A NULL payload
+    (a row quarantined upstream) raises."""
+    if data is None:
+        raise ValueError(QUARANTINED)
     if data[:4] == b"RIFF" and data[8:12] == b"AVI ":
         from ..codecs.avi import demux_avi
 
@@ -152,33 +153,16 @@ def sample_video_frames(videos: DataFrame, every_n: int = 30) -> DataFrame:
     stays supported; anything else is per-record quarantined (real
     H.264-class codecs need ffmpeg, absent here)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for vid, data in zip(b["video_id"].values, b["bytes"].values):
-                try:
-                    frames = demux_video(bytes(data))
-                    for i in range(0, len(frames), every_n):
-                        rows.append(
-                            {
-                                "video_id": vid,
-                                "frame_idx": i,
-                                "frame_bytes": frames[i],
-                                "err": None,
-                            }
-                        )
-                except Exception as e:  # noqa: BLE001
-                    rows.append(
-                        {
-                            "video_id": vid,
-                            "frame_idx": -1,
-                            "frame_bytes": None,
-                            "err": f"{type(e).__name__}: {e}",
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in FRAME_SCHEMA.fields])
+    def fn(data):
+        frames = demux_video(data)
+        return {"frames": [(i, frames[i])
+                           for i in range(0, len(frames), every_n)]}
 
-    return videos.select("video_id", "bytes").mapInPandas(run, FRAME_SCHEMA)
+    schema = T.StructType([FRAME_SCHEMA["video_id"],
+                           T.StructField("frames", T.ArrayType(_FRAME)),
+                           FRAME_SCHEMA["err"]])
+    return arrow_stage(videos, ["video_id"], ["bytes"], schema, fn).select(
+        "video_id", expand("frames", _FRAME, frame_idx=-1), "err")
 
 
 _VID_MARKER = b"FVID"
@@ -254,13 +238,11 @@ def extract_features_audio(clips: DataFrame) -> DataFrame:
     return arrow_stage(clips, ["clip_id"], ["bytes"], AUDIO_DESCRIPTOR_SCHEMA, fn)
 
 
-PIXEL_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id", T.StringType(), False),
-        T.StructField("y", T.IntegerType(), False),
-        T.StructField("x", T.IntegerType(), False),
-        T.StructField("val", T.IntegerType(), False),
-    ]
+# image_pixels' stage: one int array per output column, no err field
+_PIXEL_ARRAYS = T.StructType(
+    [T.StructField("image_id", T.StringType(), False)]
+    + [T.StructField(c, T.ArrayType(T.IntegerType(), False))
+       for c in ("y", "x", "val")]
 )
 
 
@@ -271,35 +253,18 @@ def image_pixels(images: DataFrame) -> DataFrame:
     deliberate 1→(h*w) row explosion; use on small/resized images (the
     oracle path), never on a raw 100-TB corpus."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids, ys, xs, vals = [], [], [], []
-            for iid, data, fmt in zip(
-                b["image_id"].values, b["bytes"].values, b["fmt"].values
-            ):
-                if data is None:
-                    # error-isolated upstream row (e.g. resize_images
-                    # quarantine output): skip, never abort the stage
-                    continue
-                px = gray(data, fmt)
-                h, w = px.shape
-                yy, xx = np.mgrid[0:h, 0:w]
-                ids.extend([iid] * (h * w))
-                ys.append(yy.ravel())
-                xs.append(xx.ravel())
-                vals.append(px.ravel())
-            yield pd.DataFrame(
-                {
-                    "image_id": ids,
-                    "y": np.concatenate(ys) if ys else np.array([], dtype=int),
-                    "x": np.concatenate(xs) if xs else np.array([], dtype=int),
-                    "val": np.concatenate(vals) if vals else np.array([], dtype=int),
-                }
-            )
+    def fn(data, fmt):
+        if data is None:
+            # error-isolated upstream row (e.g. resize_images
+            # quarantine output): no pixels, never abort the stage
+            return {}
+        px = gray(data, fmt)
+        yy, xx = np.mgrid[0 : px.shape[0], 0 : px.shape[1]]
+        return {"y": yy.ravel(), "x": xx.ravel(), "val": px.ravel()}
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        run, PIXEL_SCHEMA
-    )
+    return arrow_stage(
+        images, ["image_id"], ["bytes", "fmt"], _PIXEL_ARRAYS, fn
+    ).select("image_id", F.inline(F.arrays_zip("y", "x", "val")))
 
 
 AUDIO_GATE_SCHEMA = T.StructType(

@@ -752,6 +752,12 @@ def covariance_matrix(
     return mu, cov, n
 
 
+_PCA_MODEL_SCHEMA = (
+    "component int, eigenvalue double, explained_var_ratio double, "
+    "mu array<double>, loadings array<double>"
+)
+
+
 def pca_fit(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -784,11 +790,7 @@ def pca_fit(
                 v.tolist(),
             )
         )
-    return df.sparkSession.createDataFrame(
-        rows,
-        "component int, eigenvalue double, explained_var_ratio double, "
-        "mu array<double>, loadings array<double>",
-    )
+    return local_frame(df.sparkSession, rows, _PCA_MODEL_SCHEMA)
 
 
 def pca_fit_power(
@@ -831,11 +833,7 @@ def pca_fit_power(
         rows.append(
             (c, lam, lam / total if total else 0.0, mu.tolist(), v.tolist())
         )
-    return df.sparkSession.createDataFrame(
-        rows,
-        "component int, eigenvalue double, explained_var_ratio double, "
-        "mu array<double>, loadings array<double>",
-    )
+    return local_frame(df.sparkSession, rows, _PCA_MODEL_SCHEMA)
 
 
 def pca_transform(

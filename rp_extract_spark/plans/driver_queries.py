@@ -21,9 +21,10 @@ from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-from .._prims import md5_hex, md5_int, spread
+from .._prims import arrow_stage, md5_hex, md5_int, spread
 from ..operators.asof import asof_join
 from ..operators.classes import label_encode, prune_min_instances
 from ..operators.similarity import topk_similar
@@ -1649,35 +1650,28 @@ def q_image_formats(spark, sf):
         gen, "img_id long, fmt string, dispatch_fmt string, bytes binary"
     )
 
-    def dec(batches):
-        for b in batches:
-            rows = []
-            for iid, name, dfmt, data in zip(
-                b["img_id"], b["fmt"], b["dispatch_fmt"], b["bytes"]
-            ):
-                i = int(iid)
-                try:
-                    px = decode_image(bytes(data), dfmt)
-                    # floor(x*1e4+0.5)/1e4, NOT round(): Python rounds
-                    # half-even while DuckDB rounds half-away; pixel
-                    # means (sum/1280) can land exactly on 4th-decimal
-                    # ties. Values are non-negative so floor+0.5 is
-                    # half-away on both sides.
-                    m4 = float(np.floor(np.mean(px) * 1e4 + 0.5) / 1e4)
-                    rows.append({
-                        "img_id": i, "fmt": name, "ok": 1,
-                        "psnr_ok": int(psnr(_formula(i), px) >= 40.0),
-                        "mean_px": None if name == "jpeg" else m4,
-                    })
-                except Exception:  # noqa: BLE001
-                    rows.append({"img_id": i, "fmt": name, "ok": 0,
-                                 "psnr_ok": 0, "mean_px": None})
-            yield pd.DataFrame(rows)
+    def dec(i, name, dfmt, data):
+        px = decode_image(data, dfmt)
+        # floor(x*1e4+0.5)/1e4, NOT round(): Python rounds half-even
+        # while DuckDB rounds half-away; pixel means (sum/1280) can land
+        # exactly on 4th-decimal ties. Values are non-negative so
+        # floor+0.5 is half-away on both sides.
+        m4 = float(np.floor(np.mean(px) * 1e4 + 0.5) / 1e4)
+        return {"psnr_ok": int(psnr(_formula(i), px) >= 40.0),
+                "mean_px": None if name == "jpeg" else m4}
 
-    out = imgs.mapInPandas(
-        dec, "img_id long, fmt string, ok int, psnr_ok int, mean_px double"
+    out = arrow_stage(
+        imgs, ["img_id", "fmt"], ["img_id", "fmt", "dispatch_fmt", "bytes"],
+        T.StructType([imgs.schema["img_id"], imgs.schema["fmt"],
+                      T.StructField("psnr_ok", T.IntegerType()),
+                      T.StructField("mean_px", T.DoubleType()),
+                      T.StructField("err", T.StringType())]),
+        dec,
     )
-    return out.orderBy("img_id")
+    return out.select(
+        "img_id", "fmt", F.col("err").isNull().cast("int").alias("ok"),
+        F.coalesce("psnr_ok", F.lit(0)).alias("psnr_ok"), "mean_px",
+    ).orderBy("img_id")
 
 
 ORACLE_IMAGE_FORMATS = """
@@ -1738,6 +1732,7 @@ def q_video_frames(spark, sf):
     import pandas as pd
 
     from ..codecs.avi import encode_mjpeg_avi
+    from ..codecs.jpeg import decode_jpeg
     from ..operators.multimodal import sample_video_frames
 
     def gen(batches):
@@ -1755,27 +1750,18 @@ def q_video_frames(spark, sf):
     videos = spark.range(8).mapInPandas(gen, "video_id string, bytes binary")
     sampled = sample_video_frames(videos, every_n=2)
 
-    def dec(batches):
-        from ..codecs.jpeg import decode_jpeg
+    def dec(fb):
+        px = decode_jpeg(fb)
+        u = np.unique(px)
+        return {"h": px.shape[0], "w": px.shape[1],
+                "px_const": int(u[0]) if len(u) == 1 else -1}
 
-        for b in batches:
-            rows = []
-            for vid, idx, fb in zip(
-                b["video_id"], b["frame_idx"], b["frame_bytes"]
-            ):
-                px = decode_jpeg(bytes(fb))
-                u = np.unique(px)
-                rows.append({
-                    "video_id": vid,
-                    "frame_idx": int(idx),
-                    "h": int(px.shape[0]),
-                    "w": int(px.shape[1]),
-                    "px_const": int(u[0]) if len(u) == 1 else -1,
-                })
-            yield pd.DataFrame(rows)
-
-    out = sampled.mapInPandas(
-        dec, "video_id string, frame_idx int, h int, w int, px_const int"
+    out = arrow_stage(
+        sampled, ["video_id", "frame_idx"], ["frame_bytes"],
+        T.StructType([sampled.schema["video_id"], sampled.schema["frame_idx"]]
+                     + [T.StructField(c, T.IntegerType())
+                        for c in ("h", "w", "px_const")]),
+        dec,
     )
     return out.orderBy("video_id", "frame_idx")
 

@@ -146,7 +146,10 @@ def read_h5_features(spark: SparkSession, path: str,
     bound per-task memory at the session level —
     spark.sql.files.maxPartitionBytes=16m keeps few files per
     partition and spark.sql.execution.arrow.maxRecordsPerBatch low
-    (e.g. 32) keeps few whole-file rows per Arrow batch."""
+    (e.g. 32) keeps few whole-file rows per Arrow batch. It stays off
+    ``_prims.arrow_stage``: each file yields its own frame, so a fat
+    file's decoded rows never share memory with the other files of
+    its batch, where the stage holds a whole 256-row slice."""
     src = spark.read.format("binaryFile")
     if not path.endswith(".h5"):
         src = src.option("pathGlobFilter", "*.h5")

@@ -24,12 +24,13 @@ import io
 import json
 import os
 import tarfile
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .._prims import arrow_stage, expand
 
 MANIFEST_SCHEMA = T.StructType(
     [
@@ -128,43 +129,18 @@ def read_webdataset(spark: SparkSession, path_glob: str) -> DataFrame:
     (binaryFile source, predicate/glob pushdown); a corrupt shard
     yields a single err row (per-file isolation). Reassemble samples
     by grouping on ``key`` or pivoting ``ext``."""
-    files = spark.read.format("binaryFile").load(path_glob)
+    def fn(content):
+        with tarfile.open(fileobj=io.BytesIO(content), mode="r") as tf:
+            members = []
+            for m in tf.getmembers():
+                if m.isfile():
+                    stem, dot, ext = m.name.rpartition(".")
+                    members.append((stem if dot else m.name,
+                                    ext if dot else "",
+                                    tf.extractfile(m).read()))
+        return {"members": members}
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for path, content in zip(b["path"].values, b["content"].values):
-                shard = os.path.basename(str(path))
-                try:
-                    with tarfile.open(
-                        fileobj=io.BytesIO(bytes(content)), mode="r"
-                    ) as tf:
-                        for m in tf.getmembers():
-                            if not m.isfile():
-                                continue
-                            stem, dot, ext = m.name.rpartition(".")
-                            rows.append(
-                                {
-                                    "shard": shard,
-                                    "key": stem if dot else m.name,
-                                    "ext": ext if dot else "",
-                                    "data": tf.extractfile(m).read(),
-                                    "err": None,
-                                }
-                            )
-                except Exception as e:  # noqa: BLE001
-                    rows.append(
-                        {
-                            "shard": shard, "key": None, "ext": None,
-                            "data": None,
-                            "err": f"{type(e).__name__}: {e}",
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in MEMBER_SCHEMA.fields]
-            )
-
-    return files.select("path", "content").mapInPandas(run, MEMBER_SCHEMA)
+    return _untar(spark, path_glob, MEMBER_SCHEMA, fn)
 
 
 VERIFY_SCHEMA = T.StructType(
@@ -196,56 +172,34 @@ def verify_webdataset(
     must reconcile (missing / extra / miscounted shards flagged).
     Distributed: one binaryFile scan, one row per shard; the optional
     manifest join broadcasts (one row per shard — tiny)."""
-    files = spark.read.format("binaryFile").load(path_glob).select(
-        "path", "content")
+    def fn(raw):
+        with tarfile.open(fileobj=io.BytesIO(raw), mode="r") as tf:
+            members = [m for m in tf.getmembers() if m.isfile()]
+        names, keys, payload, end = set(), set(), 0, 0
+        for m in members:
+            payload += int(m.size)
+            end = max(end, int(m.offset_data)
+                      + ((int(m.size) + 511) // 512) * 512)
+            key, dot, _ext = m.name.rpartition(".")
+            if not dot:
+                raise ValueError(f"member without extension: {m.name!r}")
+            if m.name in names:
+                raise ValueError(f"duplicate member {m.name!r}")
+            names.add(m.name)
+            keys.add(key)
+        # end-of-archive marker: >= two zero blocks after the last
+        # member — a block-boundary truncation parses as a valid
+        # SHORTER tar without this
+        if len(raw) < end + 1024 or any(raw[end:end + 1024]):
+            raise ValueError("missing end-of-archive marker (torn write)")
+        return {"ok": 1, "n_samples": len(keys), "n_members": len(members),
+                "payload_bytes": payload}
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for path, content in zip(b["path"].values, b["content"].values):
-                shard = os.path.basename(str(path))
-                try:
-                    raw = bytes(content)
-                    with tarfile.open(
-                        fileobj=io.BytesIO(raw), mode="r"
-                    ) as tf:
-                        members = [m for m in tf.getmembers() if m.isfile()]
-                        names = set()
-                        keys = set()
-                        payload = 0
-                        end = 0
-                        for m in members:
-                            payload += int(m.size)
-                            end = max(end, int(m.offset_data)
-                                      + ((int(m.size) + 511) // 512) * 512)
-                            key, dot, _ext = m.name.rpartition(".")
-                            if not dot:
-                                raise ValueError(
-                                    f"member without extension: {m.name!r}")
-                            if m.name in names:
-                                raise ValueError(
-                                    f"duplicate member {m.name!r}")
-                            names.add(m.name)
-                            keys.add(key)
-                    # end-of-archive marker: >= two zero blocks after
-                    # the last member — a block-boundary truncation
-                    # parses as a valid SHORTER tar without this
-                    if len(raw) < end + 1024 or any(
-                            raw[end:end + 1024]):
-                        raise ValueError(
-                            "missing end-of-archive marker (torn write)")
-                    rows.append({"shard": shard, "ok": 1,
-                                 "n_samples": len(keys),
-                                 "n_members": len(members),
-                                 "payload_bytes": payload, "err": None})
-                except Exception as e:  # noqa: BLE001
-                    rows.append({"shard": shard, "ok": 0, "n_samples": None,
-                                 "n_members": None, "payload_bytes": None,
-                                 "err": f"{type(e).__name__}: {e}"})
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in VERIFY_SCHEMA.fields])
-
-    out = files.mapInPandas(run, VERIFY_SCHEMA)
+    # an err row is ok = 0 before the manifest join, which reads a NULL
+    # ok as "missing on disk"
+    out = arrow_stage(
+        _shards(spark, path_glob), ["shard"], ["content"], VERIFY_SCHEMA, fn
+    ).withColumn("ok", F.coalesce("ok", F.lit(0)))
     if manifest is None:
         return out
     m = manifest.select(
@@ -290,41 +244,33 @@ def index_webdataset(spark: SparkSession, path_glob: str) -> DataFrame:
     members, payload at header + 512 — which is exactly how the
     oracle replays it from the member sizes alone. Corrupt shards
     yield one err row (per-file isolation)."""
-    files = spark.read.format("binaryFile").load(path_glob)
+    def fn(content):
+        with tarfile.open(fileobj=io.BytesIO(content), mode="r") as tf:
+            return {"members": [
+                (m.name, int(m.offset), int(m.offset_data), int(m.size))
+                for m in tf.getmembers() if m.isfile()
+            ]}
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for path, content in zip(b["path"].values, b["content"].values):
-                shard = os.path.basename(str(path))
-                try:
-                    with tarfile.open(
-                        fileobj=io.BytesIO(bytes(content)), mode="r"
-                    ) as tf:
-                        for m in tf.getmembers():
-                            if not m.isfile():
-                                continue
-                            rows.append(
-                                {
-                                    "shard": shard,
-                                    "member": m.name,
-                                    "offset": int(m.offset),
-                                    "data_offset": int(m.offset_data),
-                                    "size": int(m.size),
-                                    "err": None,
-                                }
-                            )
-                except Exception as e:  # noqa: BLE001
-                    rows.append(
-                        {
-                            "shard": shard, "member": None,
-                            "offset": None, "data_offset": None,
-                            "size": None,
-                            "err": f"{type(e).__name__}: {e}",
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in INDEX_SCHEMA.fields]
-            )
+    return _untar(spark, path_glob, INDEX_SCHEMA, fn)
 
-    return files.select("path", "content").mapInPandas(run, INDEX_SCHEMA)
+
+def _shards(spark: SparkSession, path_glob: str) -> DataFrame:
+    """(shard, content): one row per shard file, ``shard`` its base
+    name."""
+    return spark.read.format("binaryFile").load(path_glob).select(
+        F.regexp_extract("path", "[^/]*$", 0).alias("shard"), "content")
+
+
+def _untar(spark: SparkSession, path_glob: str, schema: T.StructType,
+           fn) -> DataFrame:
+    """One row per tar member of every shard, ``schema``'s (shard,
+    *member fields, err): ``fn(content)`` returns the shard's
+    ``{"members": [tuple of member fields]}``. A shard ``fn`` fails on
+    gives one row, its member fields NULL (per-file isolation)."""
+    member = T.StructType(schema.fields[1:-1])
+    stage = T.StructType([schema["shard"],
+                          T.StructField("members", T.ArrayType(member)),
+                          schema["err"]])
+    return arrow_stage(_shards(spark, path_glob), ["shard"], ["content"],
+                       stage, fn).select("shard", expand("members", member),
+                                         "err")

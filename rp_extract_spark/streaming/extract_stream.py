@@ -9,8 +9,9 @@ to the feature store. ``Trigger.AvailableNow`` gives batch-incremental
 runs (process everything new, then stop) — the direct equivalent of
 re-running the reference with ``append_diff``.
 
-The same ``mapInPandas`` kernel runs unchanged on the streaming
-DataFrame — the operator is engine-agnostic by construction.
+The same ``_prims.arrow_stage`` pass (``mapInArrow``) runs unchanged on
+the streaming DataFrame — the operator is engine-agnostic by
+construction.
 """
 
 from __future__ import annotations

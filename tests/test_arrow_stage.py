@@ -11,10 +11,12 @@ carries its decode error as
 
 ``quality_gate_audio`` maps the same err rows to ``decode_error``
 (tests/test_audio_gate.py); ``dedup_frames`` runs the stage over the
-frames ``sample_video_frames`` decoded without error;
-``tile_images`` and ``sample_video_frames`` keep their own loops (their
-error rows carry sentinel indices). A stage whose schema has no ``err``
-field lets ``fn``'s exception fail the task.
+frames ``sample_video_frames`` decoded without error. The one-to-many
+stages (``tile_images``, ``sample_video_frames``) return an array per
+record that ``_prims.expand`` turns back into rows: a good record keeps
+its rows and each bad record gives exactly one err row carrying the
+sentinel indices (``ty = tx = -1``, ``frame_idx = -1``). A stage whose
+schema has no ``err`` field lets ``fn``'s exception fail the task.
 """
 
 from datetime import datetime
@@ -25,6 +27,7 @@ from pyspark.sql import functions as F
 
 from rp_extract_spark import _prims
 from rp_extract_spark.codecs import decode_image, encode_png
+from rp_extract_spark.codecs.avi import encode_mjpeg_avi
 from rp_extract_spark.codecs.wav import encode_wav
 from rp_extract_spark.operators import images as im
 from rp_extract_spark.operators import multimodal as mm
@@ -149,6 +152,66 @@ def test_bad_records_are_isolated(spark, name):
     values = set(alone["good"]) - set(keys) - {"err"}
     for kind in ("trunc", "null", "junk"):
         assert all(mixed[kind][c] is None for c in values), kind
+
+
+def _good_video() -> bytes:
+    return encode_mjpeg_avi(
+        [np.full((16, 16), 40 * k, np.uint8) for k in range(5)], fps=10)
+
+
+def _videos(spark, kinds=KINDS):
+    good = _good_video()
+    payload = {"good": good, "trunc": good[:30], "null": None,
+               "junk": b"nope"}
+    return spark.createDataFrame(
+        [(f"{k}0", None if payload[k] is None else bytearray(payload[k]))
+         for k in kinds],
+        "video_id string, bytes binary").coalesce(1)
+
+
+def _video_err(kind: str) -> str:
+    data = {"trunc": _good_video()[:30], "junk": b"nope"}[kind]
+    try:
+        mm.demux_video(data)
+    except Exception as e:  # noqa: BLE001
+        return f"{type(e).__name__}: {e}"
+    raise AssertionError(f"{kind} payload demuxed")
+
+
+# name -> (build over the kinds, key column, sentinel index columns,
+# expected err of a truncated / junk payload)
+EXPANDING = {
+    "tile_images": (
+        lambda spark, kinds: im.tile_images(_images(spark, kinds)),
+        "image_id", ("ty", "tx"), _image_err),
+    "sample_video_frames": (
+        lambda spark, kinds: mm.sample_video_frames(
+            _videos(spark, kinds), every_n=2),
+        "video_id", ("frame_idx",), _video_err),
+}
+
+
+@pytest.mark.parametrize("name", sorted(EXPANDING))
+def test_one_to_many_bad_records_give_one_err_row(spark, name):
+    build, key, idx, err = EXPANDING[name]
+
+    def run(kinds):
+        out = {}
+        for r in build(spark, kinds).collect():
+            out.setdefault(r[key].rstrip("0123456789"), []).append(r.asDict())
+        return out
+
+    alone = run(("good",))
+    mixed = run(KINDS)
+    assert sorted(mixed) == sorted(KINDS)
+    assert len(alone["good"]) > 1 and mixed["good"] == alone["good"]
+    assert all(r["err"] is None for r in mixed["good"])
+    for kind in ("trunc", "null", "junk"):
+        [row] = mixed[kind]  # exactly one row per bad record
+        assert row["err"] == (NULL_ERR if kind == "null" else err(kind))
+        assert [row[c] for c in idx] == [-1] * len(idx), kind
+        assert all(v is None for c, v in row.items()
+                   if c not in (key, "err", *idx)), kind
 
 
 def test_phash_dedup_verified_drops_bad_records(spark):

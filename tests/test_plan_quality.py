@@ -8,6 +8,7 @@ hot keys producing correct results.
 
 import io
 import itertools
+import tarfile
 from contextlib import redirect_stdout
 
 import numpy as np
@@ -221,6 +222,42 @@ def test_h5_scan_is_shuffle_free(spark, tmp_path):
     plan = _plan(read_h5_features(spark, str(tmp_path / "s.h5")))
     assert "Exchange" not in plan
     assert "FlatMapGroupsInPandas" not in plan  # mapInPandas, no grouping
+
+
+def _one_to_many(spark, tmp_path, name):
+    from rp_extract_spark.codecs import encode_png
+    from rp_extract_spark.operators import images as im
+    from rp_extract_spark.operators import multimodal as mm
+    from rp_extract_spark.sources.webdataset import read_webdataset
+
+    png = encode_png(np.zeros((32, 32), dtype=np.uint8))
+    imgs = spark.createDataFrame(
+        [("a", bytearray(png), "png")],
+        "image_id string, bytes binary, fmt string")
+    if name == "tile_images":
+        return im.tile_images(imgs)
+    if name == "image_pixels":
+        return mm.image_pixels(imgs)
+    if name == "sample_video_frames":
+        video = mm.fake_video_bytes([np.zeros((8, 8), dtype=np.uint8)])
+        return mm.sample_video_frames(spark.createDataFrame(
+            [("v", bytearray(video))], "video_id string, bytes binary"))
+    with tarfile.open(tmp_path / "s.tar", "w") as tf:
+        info = tarfile.TarInfo("a.png")
+        info.size = len(png)
+        tf.addfile(info, io.BytesIO(png))
+    return read_webdataset(spark, str(tmp_path / "*.tar"))
+
+
+@pytest.mark.parametrize("name", ["tile_images", "sample_video_frames",
+                                  "image_pixels", "read_webdataset"])
+def test_one_to_many_stage_is_arrow_then_generate(spark, tmp_path, name):
+    """The one-to-many stages run one ``mapInArrow`` pass per record and
+    expand its array field with a Generate — no pandas batch loop and
+    no Exchange."""
+    plan = _plan(_one_to_many(spark, tmp_path, name))
+    assert "MapInArrow" in plan and "Generate" in plan
+    assert "MapInPandas" not in plan and "Exchange" not in plan
 
 
 def test_kmeans_seeding_no_global_window(spark):
