@@ -46,7 +46,7 @@ from pyspark import TaskContext
 from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
 from pyspark.sql.window import Window
 
 from .codecs import decode_image, to_gray
@@ -330,9 +330,13 @@ def collect_bounded(df: DataFrame, op: str) -> list[Row]:
 def local_frame(spark, rows: list, schema: T.StructType | str) -> DataFrame:
     """``spark.createDataFrame(rows, schema)`` built through Arrow as a
     local relation: using it runs no Spark job, where a list goes
-    through ``parallelize`` and costs a job on every use."""
+    through ``parallelize`` and costs a job on every use. No rows is an
+    empty Arrow table of the schema's types, a local relation too."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
     if not rows:
-        return spark.createDataFrame([], schema)
+        return spark.createDataFrame(to_arrow_schema(schema).empty_table(),
+                                     schema)
     return spark.createDataFrame(pd.DataFrame(rows, dtype=object), schema)
 
 
@@ -469,7 +473,7 @@ def broadcast_topk(
     )
     rows = [r for r in collect_bounded(queries, op) if r[1] is not None]
     if not rows:
-        return queries.sparkSession.createDataFrame([], schema)
+        return local_frame(queries.sparkSession, [], schema)
     dim = len(rows[0][1])
     rows = [r for r in rows if len(r[1]) == dim]
     qm = np.array([r[1] for r in rows], dtype=np.float64)

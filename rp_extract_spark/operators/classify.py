@@ -165,7 +165,7 @@ def predict_centroids(
     )
     spark = df.sparkSession
     if not rows:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     labels, cmat = codebook((r["centroid_label"], r["centroid"]) for r in rows)
     dim = cmat.shape[1]
 
@@ -436,7 +436,7 @@ def predict_logreg(
     )
     spark = df.sparkSession
     if not rows:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     labels = np.array([r["class_label"] for r in rows])
     wmat = np.array([r["weights"] for r in rows], dtype=np.float64)
     dim = wmat.shape[1]

@@ -1507,6 +1507,24 @@ def q_embedding_dedup(spark, sf):
     return embedding_cosine_dedup(e, threshold=0.98).orderBy("vec_id")
 
 
+# the synthesized audio and video tables the multimodal queries decode
+_CLIPS = T.StructType([T.StructField("clip_id", T.StringType()),
+                       T.StructField("bytes", T.BinaryType())])
+_VIDEOS = T.StructType([T.StructField("video_id", T.StringType()),
+                        T.StructField("bytes", T.BinaryType())])
+
+
+def _embedding_clips(spark, sf, encode):
+    """One clip per embedding row, muxed on executors: ``clip_id`` is
+    the ``vec_id`` as a string, ``bytes`` is ``encode(vec_id,
+    vector)``."""
+    e = _t(spark, sf, "embeddings").select("vec_id", "embedding")
+    return arrow_stage(
+        spread(e), (), ("vec_id", "embedding"), _CLIPS,
+        lambda vid, v: {"clip_id": str(vid), "bytes": encode(vid, v)},
+    )
+
+
 def q_audio_roundtrip(spark, sf):
     """Multimodal audio path, ORACLED: each embedding vector is muxed
     into a float32 WAV (exact roundtrip), decoded back through the
@@ -1515,29 +1533,12 @@ def q_audio_roundtrip(spark, sf):
     codec + the Arrow plumbing end-to-end against an independent
     recomputation."""
     import numpy as np
-    import pandas as pd
 
     from ..codecs.wav import encode_wav
     from ..operators.multimodal import analyze_audio
 
-    e = _t(spark, sf, "embeddings")
-
-    def gen(batches):
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "clip_id": b["vec_id"].astype(str),
-                    "bytes": [
-                        encode_wav(np.asarray(v, dtype=np.float32), 8000,
-                                   samplewidth=4)
-                        for v in b["embedding"].values
-                    ],
-                }
-            )
-
-    clips = spread(e.select("vec_id", "embedding")).mapInPandas(
-        gen, "clip_id string, bytes binary"
-    )
+    clips = _embedding_clips(spark, sf, lambda vid, v: encode_wav(
+        np.asarray(v, dtype=np.float32), 8000, samplewidth=4))
     out = analyze_audio(clips)
     return out.select(
         F.col("clip_id").cast("bigint").alias("clip_id"),
@@ -1565,28 +1566,22 @@ def q_audio_descriptors(spark, sf):
     (rows-only; numeric parity vs the reference's own rp_extract() is
     pytest-enforced in test_audio_parity.py)."""
     import numpy as np
-    import pandas as pd
 
     from ..codecs.wav import encode_wav
     from ..operators.multimodal import extract_features_audio
 
-    def gen(batches):
-        for b in batches:
-            ids, blobs = [], []
-            for i in b["id"].values:
-                i = int(i)
-                sr = 11025
-                t = np.arange(int(13.0 * sr)) / sr
-                x = (
-                    0.4 * np.sin(2 * np.pi * (180 + 20 * i) * t)
-                    + 0.2 * np.sign(np.sin(2 * np.pi * (1.5 + 0.25 * i) * t))
-                )
-                x = (x / np.max(np.abs(x)) * 0.9).astype(np.float32)
-                ids.append(f"clip{i:03d}")
-                blobs.append(encode_wav(x, sr, samplewidth=4))
-            yield pd.DataFrame({"clip_id": ids, "bytes": blobs})
+    def clip(i):
+        sr = 11025
+        t = np.arange(int(13.0 * sr)) / sr
+        x = (
+            0.4 * np.sin(2 * np.pi * (180 + 20 * i) * t)
+            + 0.2 * np.sign(np.sin(2 * np.pi * (1.5 + 0.25 * i) * t))
+        )
+        x = (x / np.max(np.abs(x)) * 0.9).astype(np.float32)
+        return {"clip_id": f"clip{i:03d}",
+                "bytes": encode_wav(x, sr, samplewidth=4)}
 
-    clips = spark.range(6).mapInPandas(gen, "clip_id string, bytes binary")
+    clips = arrow_stage(spark.range(6), (), ("id",), _CLIPS, clip)
     out = extract_features_audio(clips)
     peak_bin = F.array_position("rh", F.array_max("rh"))
     return out.select(
@@ -1613,7 +1608,6 @@ def q_image_formats(spark, sf):
     real JPEG the check is the PSNR>=40 gate (its numerics are
     interop-tested against javax.imageio in pytest)."""
     import numpy as np
-    import pandas as pd
 
     from ..codecs import decode_image, encode_jpeg, encode_png, psnr
     from ..codecs.bmp import encode_bmp
@@ -1634,21 +1628,14 @@ def q_image_formats(spark, sf):
         yy, xx = np.mgrid[0:H, 0:W]
         return ((i * 31 + xx * 7 + yy * 13) % 256).astype(np.uint8)
 
-    def gen(batches):
-        for b in batches:
-            rows = []
-            for i in b["id"].values:
-                i = int(i)
-                name = names[i % 5]
-                dispatch_fmt, enc = encoders[name]
-                rows.append({"img_id": i, "fmt": name,
-                             "dispatch_fmt": dispatch_fmt,
-                             "bytes": enc(_formula(i))})
-            yield pd.DataFrame(rows)
+    def img(i):
+        name = names[i % 5]
+        dispatch_fmt, enc = encoders[name]
+        return {"img_id": i, "fmt": name, "dispatch_fmt": dispatch_fmt,
+                "bytes": enc(_formula(i))}
 
-    imgs = spark.range(20).mapInPandas(
-        gen, "img_id long, fmt string, dispatch_fmt string, bytes binary"
-    )
+    imgs = arrow_stage(spark.range(20), (), ("id",), T.StructType.fromDDL(
+        "img_id long, fmt string, dispatch_fmt string, bytes binary"), img)
 
     def dec(i, name, dfmt, data):
         px = decode_image(data, dfmt)
@@ -1729,25 +1716,18 @@ def q_video_frames(spark, sf):
     the exact pixel constant from the formula. Verifies mux → RIFF
     demux → frame order → JPEG decode end to end."""
     import numpy as np
-    import pandas as pd
 
     from ..codecs.avi import encode_mjpeg_avi
     from ..codecs.jpeg import decode_jpeg
     from ..operators.multimodal import sample_video_frames
 
-    def gen(batches):
-        for b in batches:
-            vids, blobs = [], []
-            for i in b["id"].values:
-                frames = [
-                    np.full((16, 16), (10 * int(i) + 7 * k) % 256, dtype=np.uint8)
-                    for k in range(6)
-                ]
-                vids.append(f"v{int(i):03d}")
-                blobs.append(encode_mjpeg_avi(frames, fps=10))
-            yield pd.DataFrame({"video_id": vids, "bytes": blobs})
+    def video(i):
+        frames = [np.full((16, 16), (10 * i + 7 * k) % 256, dtype=np.uint8)
+                  for k in range(6)]
+        return {"video_id": f"v{i:03d}",
+                "bytes": encode_mjpeg_avi(frames, fps=10)}
 
-    videos = spark.range(8).mapInPandas(gen, "video_id string, bytes binary")
+    videos = arrow_stage(spark.range(8), (), ("id",), _VIDEOS, video)
     sampled = sample_video_frames(videos, every_n=2)
 
     def dec(fb):
@@ -3367,33 +3347,15 @@ def q_flac_decode(spark, sf):
     same quantization — the lossless roundtrip makes the comparison
     exact, verifying codec + Arrow plumbing end to end."""
     import numpy as np
-    import pandas as pd
 
     from ..codecs.flac import encode_flac
     from ..operators.multimodal import analyze_audio
 
-    e = _t(spark, sf, "embeddings")
-
-    def gen(batches):
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "clip_id": b["vec_id"].astype(str),
-                    "bytes": [
-                        encode_flac(
-                            np.floor(
-                                np.asarray(v, dtype=np.float64) * 30000 + 0.5
-                            ).astype(np.int64),
-                            16000, bits=16, blocksize=256,
-                        )
-                        for v in b["embedding"].values
-                    ],
-                }
-            )
-
-    clips = spread(e.select("vec_id", "embedding")).mapInPandas(
-        gen, "clip_id string, bytes binary"
-    )
+    clips = _embedding_clips(spark, sf, lambda vid, v: encode_flac(
+        np.floor(np.asarray(v, dtype=np.float64) * 30000 + 0.5)
+        .astype(np.int64),
+        16000, bits=16, blocksize=256,
+    ))
     out = analyze_audio(clips)
     return out.select(
         F.col("clip_id").cast("bigint").alias("clip_id"),
@@ -4747,33 +4709,21 @@ def q_audio_quality_gate(spark, sf):
     roundtrip (the audio_roundtrip precedent). RMS/peak ride along at
     floor(x*1e6+0.5)."""
     import numpy as np
-    import pandas as pd
 
     from ..codecs.wav import encode_wav
     from ..operators.multimodal import quality_gate_audio
 
-    e = _t(spark, sf, "embeddings")
+    def clip(vid, v):
+        a = np.asarray(v, dtype=np.float32)
+        if vid % 5 == 0:
+            a = a * np.float32(64.0)
+        elif vid % 7 == 0:
+            a = a * np.float32(2.0 ** -20)
+        elif vid % 11 == 0:
+            a = a[:8]
+        return encode_wav(a, 8000, samplewidth=4)
 
-    def gen(batches):
-        for b in batches:
-            ids, blobs = [], []
-            for vid, v in zip(b["vec_id"].values, b["embedding"].values):
-                vid = int(vid)
-                a = np.asarray(v, dtype=np.float32)
-                if vid % 5 == 0:
-                    a = a * np.float32(64.0)
-                elif vid % 7 == 0:
-                    a = a * np.float32(2.0 ** -20)
-                elif vid % 11 == 0:
-                    a = a[:8]
-                ids.append(str(vid))
-                blobs.append(encode_wav(a, 8000, samplewidth=4))
-            yield pd.DataFrame({"clip_id": ids, "bytes": blobs})
-
-    clips = spread(e.select("vec_id", "embedding")).mapInPandas(
-        gen, "clip_id string, bytes binary"
-    )
-    g = quality_gate_audio(clips)
+    g = quality_gate_audio(_embedding_clips(spark, sf, clip))
     u = lambda c: F.floor(F.col(c) * 1e6 + F.lit(0.5)).cast("long")  # noqa: E731
     return g.select(
         F.col("clip_id").cast("bigint").alias("clip_id"),
@@ -8658,34 +8608,24 @@ def q_frame_dedup(spark, sf):
     exactly at q97; the 8x8 grid SSE and the keep decision replay
     closed-form in DuckDB via a lag window over the formula."""
     import numpy as np
-    import pandas as pd
 
     from ..codecs.avi import encode_mjpeg_avi
     from ..operators.multimodal import dedup_frames
 
-    def gen(batches):
-        for b in batches:
-            vids, blobs = [], []
-            for i in b["id"].values:
-                i = int(i)
-                frames = [
-                    np.full(
-                        (16, 16),
-                        (
-                            10 * i
-                            + 7 * (k // 2)
-                            + (1 if (k % 2 == 1 and i % 3 == 0) else 0)
-                        )
-                        % 256,
-                        dtype=np.uint8,
-                    )
-                    for k in range(6)
-                ]
-                vids.append(f"v{i:03d}")
-                blobs.append(encode_mjpeg_avi(frames, fps=10))
-            yield pd.DataFrame({"video_id": vids, "bytes": blobs})
+    def video(i):
+        frames = [
+            np.full(
+                (16, 16),
+                (10 * i + 7 * (k // 2)
+                 + (1 if (k % 2 == 1 and i % 3 == 0) else 0)) % 256,
+                dtype=np.uint8,
+            )
+            for k in range(6)
+        ]
+        return {"video_id": f"v{i:03d}",
+                "bytes": encode_mjpeg_avi(frames, fps=10)}
 
-    videos = spark.range(8).mapInPandas(gen, "video_id string, bytes binary")
+    videos = arrow_stage(spark.range(8), (), ("id",), _VIDEOS, video)
     return dedup_frames(videos, every_n=1, grid=8, thr=100).orderBy(
         "video_id", "frame_idx"
     )
@@ -9068,34 +9008,31 @@ def q_audio_dedup(spark, sf):
     recursive-CTE component merge — equivalent to the 4x16 pigeonhole
     banding because Hamming <= 2 < 4 bands guarantees a shared band."""
     import numpy as np
-    import pandas as pd
 
     from ..codecs.wav import encode_wav
     from ..operators.multimodal import audio_dedup
 
-    e = _t(spark, sf, "embeddings")
+    def pair(vid, v):
+        if vid % 2 != 0:
+            return {"clips": []}
+        a = np.asarray(v, dtype=np.float32)
+        p = a.copy()
+        k = (vid // 2) % len(p)
+        p[k] = p[k] * np.float32(2.0)
+        return {"clips": [
+            {"clip_id": str(vid), "bytes": encode_wav(a, 8000, samplewidth=4)},
+            {"clip_id": str(vid + 1),
+             "bytes": encode_wav(p, 8000, samplewidth=4)},
+        ]}
 
-    def gen(batches):
-        for b in batches:
-            ids, blobs = [], []
-            for vid, v in zip(b["vec_id"].values, b["embedding"].values):
-                vid = int(vid)
-                if vid % 2 != 0:
-                    continue
-                a = np.asarray(v, dtype=np.float32)
-                ids.append(str(vid))
-                blobs.append(encode_wav(a, 8000, samplewidth=4))
-                p = a.copy()
-                k = (vid // 2) % len(p)
-                p[k] = p[k] * np.float32(2.0)
-                ids.append(str(vid + 1))
-                blobs.append(encode_wav(p, 8000, samplewidth=4))
-            yield pd.DataFrame({"clip_id": ids, "bytes": blobs})
-
-    clips = spread(e.select("vec_id", "embedding")).mapInPandas(
-        gen, "clip_id string, bytes binary"
+    e = _t(spark, sf, "embeddings").select("vec_id", "embedding")
+    pairs = arrow_stage(
+        spread(e), (), ("vec_id", "embedding"),
+        T.StructType([T.StructField(
+            "clips", T.ArrayType(_CLIPS, containsNull=False))]),
+        pair,
     )
-    out = audio_dedup(clips, max_hamming=2)
+    out = audio_dedup(pairs.select(F.inline("clips")), max_hamming=2)
     return out.select(
         "clip_id",
         F.lpad(F.bin(F.col("fp")), 64, "0").alias("fp_bits"),

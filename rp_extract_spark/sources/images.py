@@ -5,10 +5,11 @@ The authoritative input shape comes from BASELINE.json ``input_hint``:
 caption string, phash bigint)`` plus the temporal columns
 ``entity_id``/``ts`` that drive the as-of/window layer.
 
-Generation is **distributed**: rows are synthesized on executors via
-``mapInPandas`` over ``spark.range(n)``, seeded per row id, so the same
-(id → row) mapping holds at any partitioning and any scale — no
-driver-side materialization, no wall-clock, no external data. This is
+Generation is **distributed**: each table is one ``_prims.arrow_stage``
+over ``spark.range(n)`` (captions: over the entity ids) with a per-row
+function seeded by the row id, so the same (id → row) mapping holds at
+any partitioning and any scale — no driver-side materialization, no
+wall-clock, no external data. This is
 the scale path: synthesizing 10^8 rows is an embarrassingly parallel
 map over a range scan.
 """
@@ -16,14 +17,16 @@ map over a range scan.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable
+from datetime import datetime, timedelta
 from functools import lru_cache
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .._prims import arrow_stage
 from ..codecs import encode_jpeg, encode_lossy, encode_png
 
 IMAGE_SCHEMA = T.StructType(
@@ -48,7 +51,19 @@ CAPTION_SCHEMA = T.StructType(
     ]
 )
 
-_BASE_TS = np.datetime64("2024-01-01T00:00:00")
+# the closed-form PNG fixtures (formula_images_df and its variants)
+PNG_SCHEMA = T.StructType(
+    [
+        T.StructField("image_id", T.StringType(), False),
+        T.StructField("bytes", T.BinaryType(), False),
+        T.StructField("w", T.IntegerType(), False),
+        T.StructField("h", T.IntegerType(), False),
+        T.StructField("fmt", T.StringType(), False),
+    ]
+)
+
+# the fixture's time origin, a UTC instant (the session time zone is UTC)
+_BASE_TS = datetime(2024, 1, 1)
 _W_CYCLE = [64, 96, 128, 256]
 _H_CYCLE = [48, 64, 128]
 _WORDS = ["alpha", "bravo", "charlie", "delta", "echo", "foxtrot", "golf", "hotel"]
@@ -138,61 +153,56 @@ def _cos_col(h: int, p: int) -> np.ndarray:
     return 40 * np.cos(2 * np.pi * np.arange(h) / p)
 
 
-def _make_image_batch(ids: np.ndarray, n_total: int, seed: int, lossy_fraction: float,
-                      hot_phash_fraction: float, hot_entity_fraction: float = 0.0,
-                      ) -> pd.DataFrame:
+def _image_row(i: int, n_total: int, seed: int, lossy_fraction: float,
+               hot_phash_fraction: float, hot_entity_fraction: float) -> dict:
+    """Row ``i`` of ``images_df``: a function of (i, n_total, seed and
+    the fractions) alone."""
+    rng = np.random.default_rng(seed + i)
+    w = _W_CYCLE[i % len(_W_CYCLE)]
+    h = _H_CYCLE[i % len(_H_CYCLE)]
+    # structured content: smooth gradient + sinusoid + noise. The two
+    # trig terms depend only on (dim, period) — memoized 1-D rows
+    # broadcast to the same float64 sums as the old mgrid form
+    # (identical op order), computed once per (w|h, period) instead of
+    # once per image (round 6)
+    img = (
+        127.5
+        + _sin_row(w, 8 + i % 23)[None, :]
+        + _cos_col(h, 5 + i % 17)[:, None]
+        + rng.normal(0, 25, (h, w))
+    )
+    px = np.clip(img, 0, 255).astype(np.uint8)
+    lossy = (_h(seed, i, 1) % 1000) < int(lossy_fraction * 1000)
+    if lossy:
+        # every 8th lossy row carries a REAL baseline JPEG (full
+        # entropy coding, codecs/jpeg.py) so the pipeline exercises
+        # the production decode path end-to-end; the rest use the
+        # fast LQ01 fixture codec to keep 30k-image synthesis cheap
+        data = encode_jpeg(px, 97) if i % 8 == 0 else encode_lossy(px)
+    else:
+        data = encode_png(px)
+    phash = compute_phash(px.astype(np.float64))
+    if hot_phash_fraction and (_h(seed, i, 2) % 1000) < int(hot_phash_fraction * 1000):
+        phash = 0x5A5A5A5A  # hot key for skew tests
     n_ent = _entity_count(n_total)
-    cols: dict[str, list] = {
-        "image_id": [], "bytes": [], "w": [], "h": [], "fmt": [],
-        "caption": [], "phash": [], "entity_id": [], "ts": [],
+    ent, k = _entity_of(i, n_ent, hot_entity_fraction, seed)
+    if hot_entity_fraction and ent == 0 and k >= n_ent:
+        # hot-entity rows use a closed-form strictly-increasing
+        # timeline (the O(k) prefix sum would be quadratic here)
+        offset = 86_400 + k * 60
+    else:
+        offset = _ts_offsets(ent, k)
+    return {
+        "image_id": f"img{i:08d}",
+        "bytes": data,
+        "w": w,
+        "h": h,
+        "fmt": "jpeg" if lossy else "png",
+        "caption": f"caption {i} {_WORDS[i % len(_WORDS)]}",
+        "phash": phash,
+        "entity_id": f"e{ent:05d}",
+        "ts": _BASE_TS + timedelta(seconds=offset),
     }
-    for i in ids:
-        i = int(i)
-        rng = np.random.default_rng(seed + i)
-        w = _W_CYCLE[i % len(_W_CYCLE)]
-        h = _H_CYCLE[i % len(_H_CYCLE)]
-        # structured content: smooth gradient + sinusoid + noise. The
-        # two trig terms depend only on (dim, period) — memoized 1-D
-        # rows broadcast to the same float64 sums as the old mgrid
-        # form (identical op order), computed once per (w|h, period)
-        # instead of once per image (round 6)
-        img = (
-            127.5
-            + _sin_row(w, 8 + i % 23)[None, :]
-            + _cos_col(h, 5 + i % 17)[:, None]
-            + rng.normal(0, 25, (h, w))
-        )
-        px = np.clip(img, 0, 255).astype(np.uint8)
-        lossy = (_h(seed, i, 1) % 1000) < int(lossy_fraction * 1000)
-        if lossy:
-            # every 8th lossy row carries a REAL baseline JPEG (full
-            # entropy coding, codecs/jpeg.py) so the pipeline exercises
-            # the production decode path end-to-end; the rest use the
-            # fast LQ01 fixture codec to keep 30k-image synthesis cheap
-            data = encode_jpeg(px, 97) if i % 8 == 0 else encode_lossy(px)
-        else:
-            data = encode_png(px)
-        phash = compute_phash(px.astype(np.float64))
-        if hot_phash_fraction and (_h(seed, i, 2) % 1000) < int(hot_phash_fraction * 1000):
-            phash = 0x5A5A5A5A  # hot key for skew tests
-        ent, k = _entity_of(i, n_ent, hot_entity_fraction, seed)
-        if hot_entity_fraction and ent == 0 and k >= n_ent:
-            # hot-entity rows use a closed-form strictly-increasing
-            # timeline (the O(k) prefix sum would be quadratic here)
-            offset = 86_400 + k * 60
-        else:
-            offset = _ts_offsets(ent, k)
-        ts = _BASE_TS + np.timedelta64(offset, "s")
-        cols["image_id"].append(f"img{i:08d}")
-        cols["bytes"].append(data)
-        cols["w"].append(w)
-        cols["h"].append(h)
-        cols["fmt"].append("jpeg" if lossy else "png")
-        cols["caption"].append(f"caption {i} {_WORDS[i % len(_WORDS)]}")
-        cols["phash"].append(phash)
-        cols["entity_id"].append(f"e{ent:05d}")
-        cols["ts"].append(pd.Timestamp(ts))
-    return pd.DataFrame(cols)
 
 
 def images_df(
@@ -206,20 +216,15 @@ def images_df(
 ) -> DataFrame:
     """Distributed deterministic image table of exactly the input_hint
     shape (+ entity_id/ts)."""
-    n_total = n
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            if len(b):
-                yield _make_image_batch(
-                    b["id"].values, n_total, seed, lossy_fraction,
-                    hot_phash_fraction, hot_entity_fraction,
-                )
+    def row(i: int) -> dict:
+        return _image_row(i, n, seed, lossy_fraction, hot_phash_fraction,
+                          hot_entity_fraction)
 
     # ~64 images per partition, capped: enough tasks to keep every core
     # busy locally; on a real cluster the cap scales with executor count
-    rng_df = spark.range(0, n, numPartitions=partitions or min(max(n // 64, 1), 1024))
-    return rng_df.mapInPandas(gen, IMAGE_SCHEMA)
+    ids = spark.range(0, n, numPartitions=partitions or min(max(n // 64, 1), 1024))
+    return arrow_stage(ids, (), ("id",), IMAGE_SCHEMA, row)
 
 
 def captions_df(spark: SparkSession, n_images: int, seed: int = 42,
@@ -227,39 +232,58 @@ def captions_df(spark: SparkSession, n_images: int, seed: int = 42,
     """Caption timeline (FIXTURES F3): per entity a set of caption
     events at deterministic times straddling the image timestamps —
     strictly-before, exactly-equal, and strictly-after rows (the last
-    must never surface through the as-of join: leakage property)."""
+    must never surface through the as-of join: leakage property).
+    The caption is a function of (entity_id, caption_ts), and that pair
+    is unique: events drawn twice at one time give one row."""
     n_ent = _entity_count(n_images)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for eid in b["id"].values:
-                ent = int(eid)
-                for c in range(per_entity):
-                    # anchor near the entity's image stream: pick an
-                    # image index k and offset −10 min / 0 / +2 min
-                    k = _h(seed, ent, c, 3) % max(n_images // n_ent, 1)
-                    anchor = _ts_offsets(ent, int(k))
-                    mode = c % 3
-                    off = -600 if mode == 0 else (0 if mode == 1 else 120)
-                    ts = _BASE_TS + np.timedelta64(anchor + off, "s")
-                    rows.append(
-                        {
-                            "entity_id": f"e{ent:05d}",
-                            "caption_ts": pd.Timestamp(ts),
-                            "caption": f"cap-e{ent}-{anchor + off}",
-                        }
-                    )
-            df = pd.DataFrame(rows)
-            # keep (entity_id, caption_ts) unique, deterministic winner
-            df = (
-                df.sort_values(["entity_id", "caption_ts", "caption"])
-                .drop_duplicates(["entity_id", "caption_ts"], keep="last")
-            )
-            yield df
+    def entity(ent: int) -> dict:
+        offsets = set()
+        for c in range(per_entity):
+            # anchor near the entity's image stream: pick an image
+            # index k and offset −10 min / 0 / +2 min
+            k = _h(seed, ent, c, 3) % max(n_images // n_ent, 1)
+            mode = c % 3
+            offsets.add(_ts_offsets(ent, k)
+                        + (-600 if mode == 0 else (0 if mode == 1 else 120)))
+        return {"captions": [
+            {"entity_id": f"e{ent:05d}",
+             "caption_ts": _BASE_TS + timedelta(seconds=off),
+             "caption": f"cap-e{ent}-{off}"}
+            for off in sorted(offsets)
+        ]}
 
-    rng_df = spark.range(0, n_ent, numPartitions=min(max(n_ent // 32, 1), 32))
-    return rng_df.mapInPandas(gen, CAPTION_SCHEMA)
+    ids = spark.range(0, n_ent, numPartitions=min(max(n_ent // 32, 1), 32))
+    per = T.StructType([T.StructField(
+        "captions", T.ArrayType(CAPTION_SCHEMA, containsNull=False))])
+    return arrow_stage(ids, (), ("id",), per, entity).select(
+        F.inline("captions"))
+
+
+def _png_df(spark: SparkSession, n: int,
+            pixels: Callable[[int], np.ndarray]) -> DataFrame:
+    """Image ``i`` of ``n`` is the PNG of the 2-D array ``pixels(i)``
+    (values in 0..255), ``w`` and ``h`` its shape. Distributed, same
+    scale path as ``images_df``."""
+
+    def row(i: int) -> dict:
+        px = pixels(i)
+        return {
+            "image_id": f"img{i:08d}",
+            "bytes": encode_png(px.astype(np.uint8)),
+            "w": px.shape[1],
+            "h": px.shape[0],
+            "fmt": "png",
+        }
+
+    ids = spark.range(0, n, numPartitions=min(max(n // 16, 1), 32))
+    return arrow_stage(ids, (), ("id",), PNG_SCHEMA, row)
+
+
+def _formula(i: int, h: int, w: int, stride: int, mod: int) -> np.ndarray:
+    """``(i*stride + x*7 + y*13) % mod`` on an h x w canvas (int64)."""
+    yy, xx = np.mgrid[0:h, 0:w]
+    return (i * stride + xx * 7 + yy * 13) % mod
 
 
 def formula_images_df(spark: SparkSession, n: int) -> DataFrame:
@@ -269,39 +293,22 @@ def formula_images_df(spark: SparkSession, n: int) -> DataFrame:
     rng-noise images of ``images_df``. Encoded as real PNGs so the
     decode → transform → encode pipeline is exercised end to end;
     dimensions follow the same ``_W_CYCLE``/``_H_CYCLE`` as the main
-    fixture. Distributed generation, same scale path as images_df."""
+    fixture."""
+    return _png_df(spark, n, lambda i: _formula(
+        i, _H_CYCLE[i % len(_H_CYCLE)], _W_CYCLE[i % len(_W_CYCLE)], 31, 256))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for i in b["id"].values:
-                i = int(i)
-                w = _W_CYCLE[i % len(_W_CYCLE)]
-                h = _H_CYCLE[i % len(_H_CYCLE)]
-                yy, xx = np.mgrid[0:h, 0:w]
-                px = ((i * 31 + xx * 7 + yy * 13) % 256).astype(np.uint8)
-                rows.append(
-                    {
-                        "image_id": f"img{i:08d}",
-                        "bytes": encode_png(px),
-                        "w": w,
-                        "h": h,
-                        "fmt": "png",
-                    }
-                )
-            yield pd.DataFrame(rows)
 
-    schema = T.StructType(
-        [
-            T.StructField("image_id", T.StringType(), False),
-            T.StructField("bytes", T.BinaryType(), False),
-            T.StructField("w", T.IntegerType(), False),
-            T.StructField("h", T.IntegerType(), False),
-            T.StructField("fmt", T.StringType(), False),
-        ]
-    )
-    rng_df = spark.range(0, n, numPartitions=min(max(n // 16, 1), 32))
-    return rng_df.mapInPandas(gen, schema)
+def _variant(px: np.ndarray, v: int) -> np.ndarray:
+    """Variant ``v`` of a base canvas, in place: v1 adds 128 (mod 256)
+    to pixel (0, 0), v2 to pixels (0, 0) and (2, 0), v3 to every odd
+    row; any other ``v`` leaves the base."""
+    if v in (1, 2):
+        px[0, 0] = (px[0, 0] + 128) % 256
+    if v == 2:
+        px[2, 0] = (px[2, 0] + 128) % 256
+    if v == 3:
+        px[1::2, :] = (px[1::2, :] + 128) % 256
+    return px
 
 
 def near_dup_images_df(spark: SparkSession, n: int) -> DataFrame:
@@ -321,41 +328,8 @@ def near_dup_images_df(spark: SparkSession, n: int) -> DataFrame:
     propagate_min_ids hits its round cap). Scale benchmarks use
     seeded-random bases instead (BENCH/BASELINE.md, "Image-dedup
     scaling")."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for i in b["id"].values:
-                i = int(i)
-                g, v = divmod(i, 3)
-                yy, xx = np.mgrid[0:16, 0:16]
-                px = ((g * 37 + xx * 7 + yy * 13) % 251).astype(np.int64)
-                if v >= 1:
-                    px[0, 0] = (px[0, 0] + 128) % 256
-                if v == 2:
-                    px[2, 0] = (px[2, 0] + 128) % 256
-                rows.append(
-                    {
-                        "image_id": f"img{i:08d}",
-                        "bytes": encode_png(px.astype(np.uint8)),
-                        "w": 16,
-                        "h": 16,
-                        "fmt": "png",
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    schema = T.StructType(
-        [
-            T.StructField("image_id", T.StringType(), False),
-            T.StructField("bytes", T.BinaryType(), False),
-            T.StructField("w", T.IntegerType(), False),
-            T.StructField("h", T.IntegerType(), False),
-            T.StructField("fmt", T.StringType(), False),
-        ]
-    )
-    rng_df = spark.range(0, n, numPartitions=min(max(n // 16, 1), 32))
-    return rng_df.mapInPandas(gen, schema)
+    return _png_df(spark, n, lambda i: _variant(
+        _formula(i // 3, 16, 16, 37, 251), i % 3))
 
 
 def verified_dup_images_df(spark: SparkSession, n: int) -> DataFrame:
@@ -382,43 +356,8 @@ def verified_dup_images_df(spark: SparkSession, n: int) -> DataFrame:
 
     ORACLE-SCALE ONLY (n <= ~40), same cycling caveat as
     near_dup_images_df; scale benchmarks use seeded-random bases."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for i in b["id"].values:
-                i = int(i)
-                g, v = divmod(i, 4)
-                yy, xx = np.mgrid[0:16, 0:16]
-                px = ((g * 41 + xx * 7 + yy * 13) % 251).astype(np.int64)
-                if v in (1, 2):
-                    px[0, 0] = (px[0, 0] + 128) % 256
-                if v == 2:
-                    px[2, 0] = (px[2, 0] + 128) % 256
-                if v == 3:
-                    px[1::2, :] = (px[1::2, :] + 128) % 256
-                rows.append(
-                    {
-                        "image_id": f"img{i:08d}",
-                        "bytes": encode_png(px.astype(np.uint8)),
-                        "w": 16,
-                        "h": 16,
-                        "fmt": "png",
-                    }
-                )
-            yield pd.DataFrame(rows)
-
-    schema = T.StructType(
-        [
-            T.StructField("image_id", T.StringType(), False),
-            T.StructField("bytes", T.BinaryType(), False),
-            T.StructField("w", T.IntegerType(), False),
-            T.StructField("h", T.IntegerType(), False),
-            T.StructField("fmt", T.StringType(), False),
-        ]
-    )
-    rng_df = spark.range(0, n, numPartitions=min(max(n // 16, 1), 32))
-    return rng_df.mapInPandas(gen, schema)
+    return _png_df(spark, n, lambda i: _variant(
+        _formula(i // 4, 16, 16, 41, 251), i % 4))
 
 
 def gate_images_df(spark: SparkSession, n: int) -> DataFrame:
@@ -429,40 +368,13 @@ def gate_images_df(spark: SparkSession, n: int) -> DataFrame:
     dimension cycles exercise resolution and aspect gates. Exactly
     recomputable in SQL (one CASE over the formula)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for i in b["id"].values:
-                i = int(i)
-                w = _W_CYCLE[i % len(_W_CYCLE)]
-                h = _H_CYCLE[i % len(_H_CYCLE)]
-                if i % 5 == 4:
-                    px = np.full((h, w), (i * 31) % 256, dtype=np.uint8)
-                else:
-                    yy, xx = np.mgrid[0:h, 0:w]
-                    px = ((i * 31 + xx * 7 + yy * 13) % 256).astype(np.uint8)
-                rows.append(
-                    {
-                        "image_id": f"img{i:08d}",
-                        "bytes": encode_png(px),
-                        "w": w,
-                        "h": h,
-                        "fmt": "png",
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def pixels(i: int) -> np.ndarray:
+        h, w = _H_CYCLE[i % len(_H_CYCLE)], _W_CYCLE[i % len(_W_CYCLE)]
+        if i % 5 == 4:
+            return np.full((h, w), (i * 31) % 256)
+        return _formula(i, h, w, 31, 256)
 
-    schema = T.StructType(
-        [
-            T.StructField("image_id", T.StringType(), False),
-            T.StructField("bytes", T.BinaryType(), False),
-            T.StructField("w", T.IntegerType(), False),
-            T.StructField("h", T.IntegerType(), False),
-            T.StructField("fmt", T.StringType(), False),
-        ]
-    )
-    rng_df = spark.range(0, n, numPartitions=min(max(n // 16, 1), 32))
-    return rng_df.mapInPandas(gen, schema)
+    return _png_df(spark, n, pixels)
 
 
 def curation_images_df(spark: SparkSession, n: int) -> DataFrame:
@@ -484,43 +396,11 @@ def curation_images_df(spark: SparkSession, n: int) -> DataFrame:
     Every pixel exactly recomputable in SQL; per-group widths make the
     final aspect-bucket stage non-degenerate. ORACLE-SCALE ONLY."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for i in b["id"].values:
-                i = int(i)
-                g, v = divmod(i, 5)
-                w = [16, 20, 24][g % 3]
-                if v == 4:
-                    px = np.full((16, w), (g * 41) % 251, dtype=np.int64)
-                else:
-                    yy, xx = np.mgrid[0:16, 0:w]
-                    px = ((g * 41 + xx * 7 + yy * 13) % 251).astype(np.int64)
-                    if v in (1, 2):
-                        px[0, 0] = (px[0, 0] + 128) % 256
-                    if v == 2:
-                        px[2, 0] = (px[2, 0] + 128) % 256
-                    if v == 3:
-                        px[1::2, :] = (px[1::2, :] + 128) % 256
-                rows.append(
-                    {
-                        "image_id": f"img{i:08d}",
-                        "bytes": encode_png(px.astype(np.uint8)),
-                        "w": w,
-                        "h": 16,
-                        "fmt": "png",
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def pixels(i: int) -> np.ndarray:
+        g, v = divmod(i, 5)
+        w = [16, 20, 24][g % 3]
+        if v == 4:
+            return np.full((16, w), (g * 41) % 251)
+        return _variant(_formula(g, 16, w, 41, 251), v)
 
-    schema = T.StructType(
-        [
-            T.StructField("image_id", T.StringType(), False),
-            T.StructField("bytes", T.BinaryType(), False),
-            T.StructField("w", T.IntegerType(), False),
-            T.StructField("h", T.IntegerType(), False),
-            T.StructField("fmt", T.StringType(), False),
-        ]
-    )
-    rng_df = spark.range(0, n, numPartitions=min(max(n // 16, 1), 32))
-    return rng_df.mapInPandas(gen, schema)
+    return _png_df(spark, n, pixels)

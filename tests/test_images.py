@@ -652,3 +652,69 @@ def test_quality_gate_works_on_streams(spark, tmp_path):
     assert "low_entropy" in got["img00000004"].reject_reasons
     assert not got["img00000000"].passes  # w=64 < 96
     assert got["img00000001"].passes
+
+
+# --------------------------------------------------------- source fixtures
+
+_IMAGE_COLS = [
+    ("image_id", "string", False), ("bytes", "binary", True),
+    ("w", "int", True), ("h", "int", True), ("fmt", "string", True),
+    ("caption", "string", True), ("phash", "bigint", True),
+    ("entity_id", "string", False), ("ts", "timestamp", False),
+]
+_PNG_COLS = [
+    ("image_id", "string", False), ("bytes", "binary", False),
+    ("w", "int", False), ("h", "int", False), ("fmt", "string", False),
+]
+_CAPTION_COLS = [
+    ("entity_id", "string", False), ("caption_ts", "timestamp", False),
+    ("caption", "string", False),
+]
+
+# (fixture call, row count, sha256 prefix of the rows in key order,
+# exact schema): any moved byte, row or nullability fails
+_FIXTURE_PINS = {
+    "images_df": (
+        lambda s, m: m.images_df(s, 48), 48, "f565f7fdf70cb009", _IMAGE_COLS),
+    "images_df_hot": (
+        lambda s, m: m.images_df(s, 48, hot_phash_fraction=0.2,
+                                 hot_entity_fraction=0.3, partitions=3),
+        48, "630fb28f196f5087", _IMAGE_COLS),
+    "captions_df": (
+        lambda s, m: m.captions_df(s, 3200), 2135, "31d7f633a79b5870",
+        _CAPTION_COLS),
+    "formula_images_df": (
+        lambda s, m: m.formula_images_df(s, 12), 12, "17aa88c841e853cd",
+        _PNG_COLS),
+    "near_dup_images_df": (
+        lambda s, m: m.near_dup_images_df(s, 18), 18, "afece9ee66577187",
+        _PNG_COLS),
+    "verified_dup_images_df": (
+        lambda s, m: m.verified_dup_images_df(s, 16), 16, "88eb6677694dcfab",
+        _PNG_COLS),
+    "gate_images_df": (
+        lambda s, m: m.gate_images_df(s, 15), 15, "7b904d9120ffcfcf",
+        _PNG_COLS),
+    "curation_images_df": (
+        lambda s, m: m.curation_images_df(s, 20), 20, "3fe9438e662b7763",
+        _PNG_COLS),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_FIXTURE_PINS))
+def test_source_fixture_is_pinned(spark, name):
+    import hashlib
+
+    from rp_extract_spark.sources import images as src
+
+    make, n_rows, digest, cols = _FIXTURE_PINS[name]
+    df = make(spark, src)
+    assert [(f.name, f.dataType.simpleString(), f.nullable)
+            for f in df.schema] == cols
+    # image tables are keyed by image_id; captions by all three columns
+    key = ["image_id"] if cols is not _CAPTION_COLS else [c[0] for c in cols]
+    h = hashlib.sha256()
+    rows = df.orderBy(*key).collect()
+    for r in rows:
+        h.update(repr(tuple(r)).encode())
+    assert (len(rows), h.hexdigest()[:16]) == (n_rows, digest)

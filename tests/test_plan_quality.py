@@ -499,3 +499,61 @@ def test_roc_points_no_range_exchange(spark):
     spec_lines = [ln for ln in plan.splitlines()
                   if "windowspecdefinition" in ln]
     assert spec_lines and all("__bk" in ln for ln in spec_lines)
+
+
+def test_empty_roc_points_runs_no_job(spark):
+    """An empty ROC table is an empty local relation: collecting it
+    runs no Spark job (a ``createDataFrame([])`` RDD would run one)."""
+    from rp_extract_spark.operators.classify import roc_points
+
+    df = spark.range(10).select(
+        F.lit(None).cast("long").alias("score_u"), F.lit(1).alias("label"))
+    out = roc_points(df, "score_u", "label")
+    n_jobs, _ = _jobs(spark, out.collect)
+    assert n_jobs == 0
+    assert out.collect() == []
+
+
+# Every ``.mapInPandas(`` call left in the package, by module and
+# top-level function, with why it is not on ``_prims.arrow_stage``.
+_MAP_IN_PANDAS_SITES = {
+    ("operators/classify.py", "predict_centroids"):
+        "batch-vectorized scorer: one numpy argmin per Arrow batch",
+    ("operators/classify.py", "predict_logreg"):
+        "batch-vectorized scorer: one GEMM per Arrow batch",
+    ("operators/similarity.py", "pq_encode"):
+        "batch-vectorized scorer: one matmul per subspace per Arrow batch",
+    ("sources/sklearn_models.py", "classify_vectors"):
+        "batch-vectorized scorer: the pickled model scores a batch at once",
+    ("operators/dedup.py", "minhash_signatures"):
+        "signature pass on dedup_chains' hot path: hashes a batch at once",
+    ("operators/dedup.py", "simhash_signatures"):
+        "signature pass on dedup_chains' hot path: hashes a batch at once",
+    ("sources/webdataset.py", "write_webdataset"):
+        "tar writer: one shard file per partition, not one row per record",
+    ("sources/hdf5.py", "read_h5_features"):
+        "fat-file reader: one input path fans out to a frame of rows",
+}
+
+
+def test_map_in_pandas_sites_are_the_argued_ones():
+    """A new hand-rolled ``mapInPandas`` loop has to be argued for here;
+    a per-record pass belongs on ``_prims.arrow_stage``."""
+    import ast
+    import pathlib
+
+    import rp_extract_spark
+
+    root = pathlib.Path(rp_extract_spark.__file__).parent
+    sites = []
+    for path in sorted(root.rglob("*.py")):
+        for top in ast.parse(path.read_text()).body:
+            sites += [
+                (path.relative_to(root).as_posix(),
+                 getattr(top, "name", "<module>"))
+                for node in ast.walk(top)
+                if isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "mapInPandas"
+            ]
+    assert sorted(sites) == sorted(_MAP_IN_PANDAS_SITES)

@@ -56,6 +56,21 @@ def test_pq_encode_matches_numpy_argmin(spark):
             assert r["codes"][s] == exp
 
 
+def test_pq_encode_skips_null_and_wrong_length_vectors(spark):
+    """A NULL vector and a vector shorter than m*d get no row and fail
+    no task; the good rows still encode."""
+    cbs = {0: {0: [0.0, 0.0], 1: [1.0, 1.0]},
+           1: {0: [0.0, 0.0], 1: [1.0, 1.0]}}
+    df = spark.createDataFrame(
+        [(0, [0.1, 0.0, 0.9, 1.0]), (1, None), (2, [0.9, 1.0]),
+         (3, [1.0, 0.8, 0.0, 0.2])],
+        "vec_id long, embedding array<double>",
+    )
+    out = pq_encode(df, _model_df(spark, cbs)).orderBy("vec_id").collect()
+    assert [(r["vec_id"], r["codes"]) for r in out] == [(0, [0, 1]),
+                                                        (3, [1, 0])]
+
+
 def test_pq_topk_matches_numpy_adc(spark):
     dim, m, k = 8, 2, 3
     vecs = _rng_vectors(30, dim, seed=11)
